@@ -48,6 +48,22 @@ object SparkEntry {
     df
   }
 
+  /** The lakehouse queries' table root for scale-factor dir `dir`: a
+    * sub-dir of one temp dir per JVM, deleted at exit — so two processes
+    * running the same scale factor (a test run and a Verify run) never
+    * share table dirs and delete each other's files mid-read. */
+  private def tableRoot(dir: String): String =
+    tablesTmp.resolve(dir.replaceAll("[^A-Za-z0-9]", "_")).toString
+
+  private lazy val tablesTmp: java.nio.file.Path = {
+    import java.nio.file.{Files, Path}
+    val d = Files.createTempDirectory("graft_tables")
+    sys.addShutdownHook(scala.util.Try(Files.walk(d)
+      .sorted(java.util.Comparator.reverseOrder[Path]())
+      .forEach(p => Files.delete(p))))
+    d
+  }
+
   /** Scoped SQL-conf override: set, build (DataFrame construction analyzes
     * eagerly, so analyzer-time confs are consumed inside the scope),
     * restore the prior value — no leak into later queries on the session. */
@@ -246,7 +262,7 @@ object SparkEntry {
       val target = orders.filter(col("o_orderkey") % 3 =!= 0)
       val source = orders.filter(col("o_orderkey") % 2 === 0)
         .withColumn("o_totalprice", col("o_totalprice") * 2)
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val t = LakeTable(s, root, "orders_merge", Seq("o_orderkey"))
       t.create(target)
       t.upsert(source)
@@ -269,7 +285,7 @@ object SparkEntry {
       val target = orders.filter(col("o_orderkey") % 3 =!= 0)
       val batch = orders.filter(col("o_orderkey") % 2 === 0)
         .withColumn("o_totalprice", col("o_totalprice") * 2)
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val t = LakeTable(s, root, "orders_merge_del", Seq("o_orderkey"))
       t.create(target)
       t.upsertWithDelete(batch, col("o_orderkey") % 7 === 0)
@@ -294,7 +310,7 @@ object SparkEntry {
       val target = orders.filter(col("o_orderkey") % 3 =!= 0)
       val source = orders.filter(col("o_orderkey") % 2 === 0)
         .withColumn("o_totalprice", col("o_totalprice") * 2)
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val t = LakeTable(s, root, "orders_time_travel", Seq("o_orderkey"))
       t.create(target)
       t.upsert(source)
@@ -323,7 +339,7 @@ object SparkEntry {
         .withColumn("o_year", year(col("o_orderdate")))
       val source = orders.filter(col("o_year") === 1995 && col("o_orderkey") % 2 === 0)
         .withColumn("o_totalprice", col("o_totalprice") * 2)
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val t = LakeTable(s, root, "orders_merge_pruned", Seq("o_orderkey"),
         partitionCols = Seq("o_year"))
       t.create(orders)
@@ -337,7 +353,7 @@ object SparkEntry {
     // row-level DML (Delta parity): DELETE low-value F orders, UPDATE the
     // priority of the largest ones, then summarize the final table state
     "q_delete_update" -> ((s, dir) => {
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val t = LakeTable(s, root, "orders_dml", Seq("o_orderkey"))
       t.create(Tables.load(s, dir, "orders"))
       t.delete(col("o_orderstatus") === "F" && col("o_totalprice") < 50000)
@@ -353,7 +369,7 @@ object SparkEntry {
     // (p_size, p_retailprice); content must be unchanged, which is what
     // the oracle checks (layout is asserted in LakeTableSpec)
     "q_zorder" -> ((s, dir) => {
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val t = LakeTable(s, root, "part_z", Seq("p_partkey"))
       t.create(Tables.load(s, dir, "part")
         .select("p_partkey", "p_size", "p_retailprice"))
@@ -749,7 +765,7 @@ object SparkEntry {
     // DedupIndexSpec pins through updates.
     "q_dedup_index" -> ((s, dir) => {
       val all = docs(s, dir).select("doc_id", "text")
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val t = LakeTable(s, root, "didx_docs", Seq("doc_id"),
         changeFeed = true)
       t.drop()
@@ -778,7 +794,7 @@ object SparkEntry {
     // must never change answers.
     "q_dedup_index_pruned" -> ((s, dir) => {
       val all = docs(s, dir).select("doc_id", "text")
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       // the DOCS table's id-hash layout is owned by the Bucketed handle
       // (every write stamps __db; modulus derived from the FULL corpus
       // count and frozen in meta — DocBuckets.sized drops any previous
@@ -817,7 +833,7 @@ object SparkEntry {
     // is exactly the property worth benching on the oracle-compared row.
     "q_stream_dedup_index" -> ((s, dir) => {
       val all = docs(s, dir).select("doc_id", "text")
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val b = graft.table.DocBuckets.sized(s, root, "sdidx_docs",
         "doc_id", all.count(), all.filter(col("doc_id") % 3 === 1))
       val di = graft.table.DedupIndex(s, root, "sdidx",
@@ -1239,7 +1255,7 @@ object SparkEntry {
       val target = orders.filter(col("o_orderkey") % 3 =!= 0)
       val source = orders.filter(col("o_orderkey") % 2 === 0)
         .withColumn("o_totalprice", col("o_totalprice") * 2)
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val t = LakeTable(s, root, "orders_ivm", Seq("o_orderkey"),
         changeFeed = true) // write-time CDF: maintenance never diffs snapshots
       val v = LakeTable(s, root, "orders_ivm_view", Seq("o_custkey"))
@@ -1271,7 +1287,7 @@ object SparkEntry {
       val target = orders.filter(col("o_orderkey") % 3 =!= 0)
       val source = orders.filter(col("o_orderkey") % 2 === 0)
         .withColumn("o_totalprice", col("o_totalprice") * 2)
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val t = LakeTable(s, root, "orders_ivmmm", Seq("o_orderkey"),
         changeFeed = true)
       val v = LakeTable(s, root, "orders_ivmmm_view", Seq("o_custkey"))
@@ -1307,7 +1323,7 @@ object SparkEntry {
       val target = orders.filter(col("o_orderkey") % 3 =!= 0)
       val source = orders.filter(col("o_orderkey") % 2 === 0)
         .withColumn("o_totalprice", col("o_totalprice") * 2)
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val t = LakeTable(s, root, "orders_mv", Seq("o_orderkey"),
         changeFeed = true)
       val v = LakeTable(s, root, "orders_mv_view", Seq("o_custkey"))
@@ -1344,7 +1360,7 @@ object SparkEntry {
       val target = orders.filter(col("o_orderkey") % 3 =!= 0)
       val source = orders.filter(col("o_orderkey") % 2 === 0)
         .withColumn("o_totalprice", col("o_totalprice") * 2)
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val t = LakeTable(s, root, "orders_mvr", Seq("o_orderkey"),
         changeFeed = true)
       val v = LakeTable(s, root, "orders_mvr_view",
@@ -1382,7 +1398,7 @@ object SparkEntry {
     "q_mv_distinct" -> ((s, dir) => {
       val orders = Tables.load(s, dir, "orders")
       graft.plans.GraftOptimizations.install(s)
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val t = LakeTable(s, root, "orders_mvd", Seq("o_orderkey"),
         changeFeed = true)
       val aux = LakeTable(s, root, "orders_mvd_aux",
@@ -1426,7 +1442,7 @@ object SparkEntry {
     "q_mv_avg" -> ((s, dir) => {
       val orders = Tables.load(s, dir, "orders")
       graft.plans.GraftOptimizations.install(s)
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val t = LakeTable(s, root, "orders_mva", Seq("o_orderkey"),
         changeFeed = true)
       val aux = LakeTable(s, root, "orders_mva_aux", Seq("o_custkey", "__v"))
@@ -1470,7 +1486,7 @@ object SparkEntry {
     "q_mv_avg_double" -> ((s, dir) => {
       val orders = Tables.load(s, dir, "orders")
       graft.plans.GraftOptimizations.install(s)
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val t = LakeTable(s, root, "orders_mvad", Seq("o_orderkey"),
         changeFeed = true)
       val aux = LakeTable(s, root, "orders_mvad_aux", Seq("o_custkey", "__v"))
@@ -1513,7 +1529,7 @@ object SparkEntry {
       val customer = Tables.load(s, dir, "customer")
         .withColumnRenamed("c_custkey", "o_custkey")
       graft.plans.GraftOptimizations.install(s)
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val f = LakeTable(s, root, "mvj_fact", Seq("o_orderkey"),
         changeFeed = true)
       val d = LakeTable(s, root, "mvj_dim", Seq("o_custkey"),
@@ -1558,7 +1574,7 @@ object SparkEntry {
       val target = orders.filter(col("o_orderkey") % 3 =!= 0)
       val source = orders.filter(col("o_orderkey") % 2 === 0)
         .withColumn("o_totalprice", col("o_totalprice") * 2)
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val t = graft.table.LakeTable(s, root, "orders_ivmd", Seq("o_orderkey"),
         changeFeed = true)
       val aux = graft.table.LakeTable(s, root, "orders_ivmd_aux",
@@ -1586,7 +1602,7 @@ object SparkEntry {
     // decimal sums.
     "q_ivm_moments" -> ((s, dir) => {
       val orders = Tables.load(s, dir, "orders")
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val t = graft.table.LakeTable(s, root, "orders_ivmm", Seq("o_orderkey"),
         changeFeed = true)
       val v = graft.table.LakeTable(s, root, "orders_ivmm_view",
@@ -1626,7 +1642,7 @@ object SparkEntry {
     // Oracle = the full statsView recompute over the replayed state.
     "q_ivm_stats" -> ((s, dir) => {
       val orders = Tables.load(s, dir, "orders")
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val t = graft.table.LakeTable(s, root, "orders_ivmst", Seq("o_orderkey"),
         changeFeed = true)
       val v = graft.table.LakeTable(s, root, "orders_ivmst_view",
@@ -1659,7 +1675,7 @@ object SparkEntry {
     // = the fullStatsView recompute over the replayed final state.
     "q_ivm_full" -> ((s, dir) => {
       val orders = Tables.load(s, dir, "orders")
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val t = graft.table.LakeTable(s, root, "orders_ivmfl", Seq("o_orderkey"),
         changeFeed = true)
       val aux = graft.table.LakeTable(s, root, "orders_ivmfl_aux",
@@ -1696,7 +1712,7 @@ object SparkEntry {
       val orders = Tables.load(s, dir, "orders")
       val customer = Tables.load(s, dir, "customer")
         .withColumnRenamed("c_custkey", "o_custkey")
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val f = graft.table.LakeTable(s, root, "ivmj_fact", Seq("o_orderkey"),
         changeFeed = true)
       val d = graft.table.LakeTable(s, root, "ivmj_dim", Seq("o_custkey"),
@@ -1732,7 +1748,7 @@ object SparkEntry {
       val orders = Tables.load(s, dir, "orders")
       val customer = Tables.load(s, dir, "customer")
         .withColumnRenamed("c_custkey", "o_custkey")
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val f = graft.table.LakeTable(s, root, "ivmjm_fact", Seq("o_orderkey"),
         changeFeed = true)
       val d = graft.table.LakeTable(s, root, "ivmjm_dim", Seq("o_custkey"),
@@ -1767,7 +1783,7 @@ object SparkEntry {
     // the good-writes-only replay (the rejected write left no trace).
     "q_check_constraint" -> ((s, dir) => {
       val orders = Tables.load(s, dir, "orders")
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val t = graft.table.LakeTable(s, root, "orders_chk", Seq("o_orderkey"))
       t.drop()
       t.create(orders.filter(col("o_orderkey") % 3 =!= 0))
@@ -1796,7 +1812,7 @@ object SparkEntry {
       val target = orders.filter(col("o_orderkey") % 3 =!= 0)
       val source = orders.filter(col("o_orderkey") % 2 === 0)
         .withColumn("o_totalprice", col("o_totalprice") * 2)
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val t = graft.table.LakeTable(s, root, "orders_stream_cdc",
         Seq("o_orderkey"), changeFeed = true)
       t.drop()
@@ -1820,7 +1836,7 @@ object SparkEntry {
       val target = orders.filter(col("o_orderkey") % 3 =!= 0)
       val source = orders.filter(col("o_orderkey") % 2 === 0)
         .withColumn("o_totalprice", col("o_totalprice") * 2)
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val t = graft.table.LakeTable(s, root, "orders_sivmc",
         Seq("o_orderkey"), changeFeed = true)
       val v = graft.table.LakeTable(s, root, "orders_sivmc_view",
@@ -1846,7 +1862,7 @@ object SparkEntry {
     // in-stream). Oracle = the full min/max recompute replay.
     "q_stream_ivm_minmax" -> ((s, dir) => {
       val orders = Tables.load(s, dir, "orders")
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val t = graft.table.LakeTable(s, root, "orders_sivmm",
         Seq("o_orderkey"), changeFeed = true)
       val v = graft.table.LakeTable(s, root, "orders_sivmm_view",
@@ -1873,7 +1889,7 @@ object SparkEntry {
     // recompute oracle.
     "q_stream_ivm_stats" -> ((s, dir) => {
       val orders = Tables.load(s, dir, "orders")
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val t = graft.table.LakeTable(s, root, "orders_sivst",
         Seq("o_orderkey"), changeFeed = true)
       val v = graft.table.LakeTable(s, root, "orders_sivst_view",
@@ -1905,7 +1921,7 @@ object SparkEntry {
     // semantics.
     "q_stream_ivm_full" -> ((s, dir) => {
       val orders = Tables.load(s, dir, "orders")
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val t = graft.table.LakeTable(s, root, "orders_sivfl",
         Seq("o_orderkey"), changeFeed = true)
       val aux = graft.table.LakeTable(s, root, "orders_sivfl_aux",
@@ -1941,7 +1957,7 @@ object SparkEntry {
       val orders = Tables.load(s, dir, "orders")
       val customer = Tables.load(s, dir, "customer")
         .withColumnRenamed("c_custkey", "o_custkey")
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val f = graft.table.LakeTable(s, root, "sivmj_fact", Seq("o_orderkey"),
         changeFeed = true)
       val d = graft.table.LakeTable(s, root, "sivmj_dim", Seq("o_custkey"),
@@ -1983,7 +1999,7 @@ object SparkEntry {
       val orders = Tables.load(s, dir, "orders")
       val customer = Tables.load(s, dir, "customer")
         .withColumnRenamed("c_custkey", "o_custkey")
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val f = graft.table.LakeTable(s, root, "sivmjm_fact", Seq("o_orderkey"),
         changeFeed = true)
       val d = graft.table.LakeTable(s, root, "sivmjm_dim", Seq("o_custkey"),
@@ -2026,7 +2042,7 @@ object SparkEntry {
       val orders = Tables.load(s, dir, "orders")
       val customer = Tables.load(s, dir, "customer")
         .withColumnRenamed("c_custkey", "o_custkey")
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val f = graft.table.LakeTable(s, root, "sivmjd_fact", Seq("o_orderkey"),
         changeFeed = true)
       val d = graft.table.LakeTable(s, root, "sivmjd_dim", Seq("o_custkey"),
@@ -2067,7 +2083,7 @@ object SparkEntry {
     // same three merges relationally
     "q_feed_compact" -> ((s, dir) => {
       val orders = Tables.load(s, dir, "orders")
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val t = LakeTable(s, root, "fc_base", Seq("o_orderkey"),
         changeFeed = true)
       val vw = LakeTable(s, root, "fc_view", Seq("o_custkey"))
@@ -2095,7 +2111,7 @@ object SparkEntry {
       val target = orders.filter(col("o_orderkey") % 3 =!= 0)
       val source = orders.filter(col("o_orderkey") % 2 === 0)
         .withColumn("o_totalprice", col("o_totalprice") * 2)
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val t = LakeTable(s, root, "orders_cdc", Seq("o_orderkey"))
       t.create(target)
       t.upsert(source)
@@ -2290,7 +2306,7 @@ object SparkEntry {
     // deletes must equal the brute-force ranking.
     "q_ann_index" -> ((s, dir) => {
       val e = emb(s, dir).select("vec_id", "embedding")
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       // the vector table's id-hash layout is owned by the Bucketed
       // handle (modulus derived from corpus rows, writes stamp __db) so
       // the maintainer's touched-vector fetch — the one remaining
@@ -2321,7 +2337,7 @@ object SparkEntry {
     // exercises the sidecar commit ordering end to end.
     "q_stream_ann_index" -> ((s, dir) => {
       val e = emb(s, dir).select("vec_id", "embedding")
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val b = graft.table.DocBuckets.sized(s, root, "sannq_docs",
         "vec_id", e.count(), e.filter(col("vec_id") % 3 =!= 0))
       val ai = graft.table.AnnIndex(s, root, "sannq", nCells = 8,
@@ -3133,7 +3149,7 @@ object SparkEntry {
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("ts"), col("value"))
         .withColumn("__ord", struct(col("ts"), col("event_id")))
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val t = graft.table.LakeTable(s, root, "events_stream_upsert",
         Seq("user_id", "event_type"))
       t.create(graft.ops.CoreOps.latestWins(Seq("user_id", "event_type"), "__ord")(
@@ -3153,7 +3169,7 @@ object SparkEntry {
     // the stored view (foreachBatch IVM) — the final view must equal
     // the full recompute over ALL events, which is the oracle
     "q_stream_ivm" -> ((s, dir) => {
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val v = graft.table.LakeTable(s, root, "events_stream_ivm_view",
         Seq("user_id"))
       v.drop()
@@ -3813,7 +3829,7 @@ object SparkEntry {
       val source = base.filter(col("o_orderkey") % 2 === 0)
         .withColumn("o_channel",
           when(col("o_orderkey") % 4 === 0, lit("web")).otherwise(lit("store")))
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val t = LakeTable(s, root, "orders_evolve", Seq("o_orderkey"))
       t.create(target)
       t.upsert(source)
@@ -3827,7 +3843,7 @@ object SparkEntry {
     "q_cdc_delete" -> ((s, dir) => {
       val orders = Tables.load(s, dir, "orders")
       val target = orders.filter(col("o_orderkey") % 3 =!= 0)
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val t = LakeTable(s, root, "orders_cdcdel", Seq("o_orderkey"))
       t.create(target)
       t.delete(col("o_orderkey") % 5 === 0)
@@ -4098,7 +4114,7 @@ object SparkEntry {
       val batch2 = base.filter(col("o_orderkey") % 3 === 0)
         .withColumn("o_totalprice", col("o_totalprice") * 2) // changed
         .unionByName(base.filter(col("o_orderkey") % 3 === 1)) // unchanged
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val t = LakeTable(s, root, "orders_scd2", Seq("o_orderkey"))
       t.drop() // fresh history per run
       val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
@@ -4118,7 +4134,7 @@ object SparkEntry {
         .filter(col("o_orderkey") < 500)
       val batch2 = base.filter(col("o_orderkey") % 3 === 0)
         .withColumn("o_totalprice", col("o_totalprice") * 2)
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val t = LakeTable(s, root, "orders_scd2l", Seq("o_orderkey"))
       t.drop()
       val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
@@ -4851,7 +4867,7 @@ object SparkEntry {
       val target = orders.filter(col("o_orderkey") % 3 =!= 0)
       val source = orders.filter(col("o_orderkey") % 2 === 0)
         .withColumn("o_totalprice", col("o_totalprice") * 2)
-      val root = s"/tmp/graft_tables/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = tableRoot(dir)
       val t = LakeTable(s, root, "orders_table_diff", Seq("o_orderkey"))
       t.create(target)
       t.upsert(source)

@@ -3,8 +3,9 @@ package graft.table
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.Comparator
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 
 import graft.ops.CoreOps
 
@@ -48,10 +49,12 @@ import graft.ops.CoreOps
   * partition and silently breaks merge-key uniqueness — only set it
   * for genuinely key-derived layouts.
   */
-final class LakeTable(spark: SparkSession, root: String, name: String,
-    mergeKeys: Seq[String], partitionCols: Seq[String] = Nil,
+final class LakeTable(private val spark: SparkSession, private val root: String,
+    private val name: String, mergeKeys: Seq[String],
+    private val partitionCols: Seq[String] = Nil,
     keepVersions: Int = 2, changeFeed: Boolean = false,
     partitionsFromKeys: Boolean = false) {
+  import LakeTable.{deleteRecursively, listing}
 
   private val HiveNullPart = "__HIVE_DEFAULT_PARTITION__"
 
@@ -172,23 +175,6 @@ final class LakeTable(spark: SparkSession, root: String, name: String,
   private def unescapeJson(s: String): String =
     s.replace("\\\"", "\"").replace("\\\\", "\\")
 
-  private def stageFeed(feed: DataFrame): Unit = {
-    deleteRecursively(feedStagingDir)
-    feed.write.mode("overwrite")
-      // no _SUCCESS marker: the pointer swap is this table's commit
-      // marker (see writeTo)
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .parquet(feedStagingDir.toString)
-    // schema fingerprint (underscore file, invisible to parquet): lets
-    // the epoch-grouping replay reader key each dir with one tiny text
-    // read instead of a parquet footer probe — on a 1,000-version
-    // catch-up that is the difference between O(versions) footer
-    // probes (tens of ms each) and O(versions) microsecond file reads,
-    // with footers then touched only once per EPOCH
-    Files.writeString(feedStagingDir.resolve("_schema_fp"),
-      schemaFingerprint(feed.schema))
-  }
-
   /** Nullability-free schema rendering used both as the fp-file content
     * and as the footer-probe fallback key — the two MUST render
     * identically so a mixed span (old dirs without the file, new dirs
@@ -216,202 +202,8 @@ final class LakeTable(spark: SparkSession, root: String, name: String,
       if (schemaFingerprint(st) == fp) Some(st) else None
     } catch { case _: Throwable => None }
 
-  /** Stage the merged data AND its change feed in ONE Spark action
-    * (unpartitioned tables): both frames ride a single union write,
-    * discriminated by a `__dest` partition column, and the staged
-    * output is then rearranged with same-filesystem renames into the
-    * canonical stagingDir + feedStagingDir layout — publish() and every
-    * reader are untouched. Vs. the two sequential writes this removes
-    * one full write job (driver latency + commit protocol) per
-    * feed-carrying DML — measured ~0.25 s at lab scale, one fewer
-    * job/commit round-trip at any scale — and lets the planner share
-    * runtime-reused exchanges between the merged rewrite and the feed
-    * derivation (both shuffle the target by the merge key).
-    *
-    * Data files physically carry an all-NULL `_change_type` column (the
-    * union's alignment): invisible to every reader, because non-empty
-    * version dirs are served from the committed `_schema_ddl` sidecar
-    * ([[declaredRead]]), which prunes it, and the sidecar is written
-    * from the LOGICAL data schema below. The feed's `_schema_fp` is
-    * written from the union's column order — the order the physical
-    * feed files actually carry.
-    *
-    * Single-partition-column tables fuse too, via the
-    * [[stagePartitionedWithFeed]] twin (round 17); only multi-column
-    * partitioning keeps the two-write path. An EMPTY feed gets an
-    * explicit empty-frame write (the partitioned writer emits no dir
-    * for an empty branch) so feed coverage stays contiguous —
-    * changesSince's fast path depends on it. */
-  private def stageWithFeed(df: DataFrame, feed: DataFrame): Unit = {
-    if (partitionCols.nonEmpty) { stagePartitionedWithFeed(df, feed); return }
-    import org.apache.spark.sql.functions.lit
-    // the discriminator and the CDF type column are RESERVED on the
-    // fused path: a user data column with either name would be silently
-    // replaced (its values stripped from the staged files) — fail
-    // loudly instead, like Delta reserving _change_type on CDF tables
-    require(!df.columns.contains("__dest") &&
-      !df.columns.contains("_change_type"),
-      s"table $name: data columns may not be named __dest or " +
-        "_change_type on a change-feed table (reserved by the fused " +
-        "feed write)")
-    require(!feed.columns.contains("__dest"),
-      s"table $name: feed columns may not be named __dest (reserved)")
-    deleteRecursively(stagingDir)
-    deleteRecursively(feedStagingDir)
-    val fused = df
-      .withColumn("_change_type", lit(null).cast("string"))
-      .withColumn("__dest", lit("data"))
-      .unionByName(feed.withColumn("__dest", lit("feed")),
-        allowMissingColumns = true)
-    fused.write.mode("overwrite")
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .partitionBy("__dest").parquet(stagingDir.toString)
-    val feedSchema = org.apache.spark.sql.types.StructType(
-      fused.schema.fields.filterNot(_.name == "__dest"))
-    val dataPart = stagingDir.resolve("__dest=data")
-    val feedPart = stagingDir.resolve("__dest=feed")
-    if (Files.isDirectory(feedPart))
-      Files.move(feedPart, feedStagingDir, StandardCopyOption.ATOMIC_MOVE)
-    else
-      spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], feedSchema)
-        .write.mode("overwrite")
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .parquet(feedStagingDir.toString)
-    if (Files.isDirectory(dataPart)) {
-      // materialize the listing BEFORE mutating the directory: a
-      // DirectoryStream is only weakly consistent under concurrent
-      // modification, and renaming entries mid-iteration could skip one
-      // on some filesystems (same rule as deleteRecursively's walk)
-      val entries = scala.util.Using.resource(Files.list(dataPart))(
-        _.toArray.toSeq.map(_.asInstanceOf[Path]))
-      entries.foreach(p =>
-        Files.move(p, stagingDir.resolve(p.getFileName.toString)))
-      Files.delete(dataPart)
-    }
-    Files.writeString(feedStagingDir.resolve("_schema_fp"),
-      schemaFingerprint(feedSchema))
-    // sidecar from the schema the data files were PHYSICALLY written
-    // with (the union's coercions included), minus the fused-path
-    // columns — identical to df.schema today, but asserted by
-    // construction rather than assumed: if unionByName ever widened a
-    // data column's type, a df.schema sidecar would make declaredRead
-    // hit a parquet type mismatch on the published version
-    val dataSchema = org.apache.spark.sql.types.StructType(
-      fused.schema.fields.filterNot(f =>
-        f.name == "__dest" || f.name == "_change_type"))
-    Files.writeString(stagingDir.resolve("_schema_ddl"), dataSchema.toDDL)
-    if (exists) writeMeta(stagingDir, readMeta(currentDir))
-  }
-
-  /** The PARTITIONED twin of the fused data+feed write (round 17,
-    * extending round 16's unpartitioned fusion): a single-partition-
-    * column table's merged rewrite and its change feed ride ONE write
-    * action partitioned by (`__dest`, `__fpart`), where `__fpart`
-    * carries the data branch's partition VALUE (cast to string — the
-    * same rendering the Hive partition writer uses) and stays NULL on
-    * the feed branch. The rearrangement renames `__dest=data/__fpart=V`
-    * dirs to the canonical `<pcol>=V` layout and flattens the feed's
-    * single null-part dir into the FLAT feedStagingDir — so every feed
-    * reader (readFeedVersions' multi-path epoch scans,
-    * readChangeFeedStream's file source, compactChangeFeed) sees
-    * exactly the layout the two-write path produced: flat dirs whose
-    * files carry the partition column as a DATA column. That is what
-    * unblocks the fusion the round-16 analysis deferred — the feed
-    * never becomes Hive-partitioned.
-    *
-    * Data files physically carry an all-NULL `_change_type` AND an
-    * all-NULL copy of the partition column (the union's alignment) —
-    * both invisible: `_change_type` is pruned by the sidecar-served
-    * schema, and a partition directory value always takes precedence
-    * over a same-named data column in Spark's file-source resolution
-    * (dataSchema excludes partition-schema names), the same property
-    * [[LakeTable.commitFused]] relies on.
-    *
-    * Tables with MULTIPLE partition columns keep the two-write path
-    * (none of the suite's CDF tables have one; the single `__fpart`
-    * slot would need a tuple encoding). The caller (upsertPruned /
-    * delete / update) still runs its hard-link walk and publish after
-    * this returns — only the two write jobs become one. */
-  private def stagePartitionedWithFeed(df: DataFrame, feed: DataFrame): Unit = {
-    if (partitionCols.size > 1) { writeTo(df, stagingDir); stageFeed(feed); return }
-    import org.apache.spark.sql.functions.lit
-    require(!df.columns.contains("__dest") &&
-      !df.columns.contains("_change_type") &&
-      !df.columns.contains("__fpart"),
-      s"table $name: data columns may not be named __dest, __fpart or " +
-        "_change_type on a change-feed table (reserved by the fused " +
-        "feed write)")
-    require(!feed.columns.contains("__dest") &&
-      !feed.columns.contains("__fpart"),
-      s"table $name: feed columns may not be named __dest/__fpart (reserved)")
-    deleteRecursively(stagingDir)
-    deleteRecursively(feedStagingDir)
-    val pc = partitionCols.head
-    // branch-local shaping only (guide §2.4): the data branch clusters
-    // by partition value — writeTo's optimized-writes repartition — and
-    // the feed branch adds NO shuffle, exactly like stageFeed's bare
-    // write; union concatenates branch partitions, so neither branch
-    // pays an exchange the two-write path didn't
-    val dataBranch = df
-      .withColumn("_change_type", lit(null).cast("string"))
-      .withColumn("__fpart", col(pc).cast("string")).drop(pc)
-      .repartition(col("__fpart"))
-      .withColumn("__dest", lit("data"))
-    val feedBranch = feed
-      .withColumn("__fpart", lit(null).cast("string"))
-      .withColumn("__dest", lit("feed"))
-    val fused = dataBranch.unionByName(feedBranch,
-      allowMissingColumns = true)
-    fused.write.mode("overwrite")
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .partitionBy("__dest", "__fpart").parquet(stagingDir.toString)
-    val feedSchema = org.apache.spark.sql.types.StructType(
-      fused.schema.fields.filterNot(f =>
-        f.name == "__dest" || f.name == "__fpart"))
-    val dataPart = stagingDir.resolve("__dest=data")
-    val feedPart = stagingDir.resolve("__dest=feed")
-      .resolve(s"__fpart=$HiveNullPart")
-    if (Files.isDirectory(feedPart)) {
-      Files.createDirectories(feedStagingDir)
-      val files = scala.util.Using.resource(Files.list(feedPart))(
-        _.toArray.toSeq.map(_.asInstanceOf[Path]))
-      files.foreach(f =>
-        Files.move(f, feedStagingDir.resolve(f.getFileName.toString)))
-    } else
-      spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], feedSchema)
-        .write.mode("overwrite")
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .parquet(feedStagingDir.toString)
-    if (Files.isDirectory(dataPart)) {
-      val parts = scala.util.Using.resource(Files.list(dataPart))(
-        _.toArray.toSeq.map(_.asInstanceOf[Path]))
-        .filter(p => Files.isDirectory(p) &&
-          p.getFileName.toString.startsWith("__fpart="))
-      parts.foreach { d =>
-        val v = d.getFileName.toString.stripPrefix("__fpart=")
-        Files.move(d, stagingDir.resolve(s"$pc=$v"))
-      }
-    }
-    deleteRecursively(stagingDir.resolve("__dest=data"))
-    deleteRecursively(stagingDir.resolve("__dest=feed"))
-    Files.writeString(feedStagingDir.resolve("_schema_fp"),
-      schemaFingerprint(feedSchema))
-    // sidecar from the physically-written types (union coercions
-    // included), with the partition column's field restored from the
-    // feed branch's typed copy — declaredRead reorders it after the
-    // data columns exactly as inference would
-    val dataSchema = org.apache.spark.sql.types.StructType(
-      fused.schema.fields.filterNot(f =>
-        f.name == "__dest" || f.name == "__fpart" ||
-          f.name == "_change_type"))
-    Files.writeString(stagingDir.resolve("_schema_ddl"), dataSchema.toDDL)
-    if (exists) writeMeta(stagingDir, readMeta(currentDir))
-  }
-
   private def upsertFeedEvents(source: DataFrame,
-      srcTuples: Option[Seq[Seq[Option[String]]]] = None): DataFrame = {
+      srcTuples: => Seq[Seq[Option[String]]]): DataFrame = {
     import org.apache.spark.sql.functions.{array, explode, lit, struct, when, xxhash64}
     // the feed join only consults target rows MATCHING source keys, so
     // with a key-derived layout the target cut to the source's
@@ -419,11 +211,9 @@ final class LakeTable(spark: SparkSession, root: String, name: String,
     // pays a full-table read just to stage its feed (the one remaining
     // O(table) term of a key-derived small-batch merge; partition-only
     // predicates prune at the source via driver-side evaluation).
-    // `srcTuples`: the source's partition tuples when the caller
-    // already collected them (upsertPruned computes them once per DML
-    // for the touched set AND both feed cuts — previously three
-    // identical collect jobs per feed-carrying pruned merge)
-    val target = prunedToSourceParts(read, source, srcTuples)
+    // `srcTuples`: the source's partition tuples, shared with the
+    // merge's touched set so a DML collects them at most once
+    val target = prunedToSourceParts(read, srcTuples)
     val allCols = (target.columns ++
       source.columns.filterNot(target.columns.contains)).toIndexedSeq
     val dtypes = (target.schema ++ source.schema)
@@ -438,7 +228,7 @@ final class LakeTable(spark: SparkSession, root: String, name: String,
     def packed(df: DataFrame, row: String, h: String) = align(df).select(
       mergeKeys.map(col) :+ struct(allCols.map(col): _*).as(row) :+
         hashed.as(h): _*)
-    val events = packed(source, "__s", "__hs")
+    packed(source, "__s", "__hs")
       .join(packed(target, "__t", "__ht"), mergeKeys, "left")
       .filter(col("__ht").isNull || col("__hs") =!= col("__ht"))
       .select(explode(
@@ -449,24 +239,19 @@ final class LakeTable(spark: SparkSession, root: String, name: String,
           struct(col("__t").as("r"), lit("update_preimage").as("ct")))))
         .as("__e"))
       .selectExpr("__e.r.*", "__e.ct AS _change_type")
-    events
   }
 
-  /** Target cut to the partitions `source` writes into — LOSSLESS for
+  /** Target cut to the source's partition `tuples` — LOSSLESS for
     * key-lookup purposes when `partitionsFromKeys` holds (a matched
     * target row shares the merge keys, hence the derived partition
-    * value); the identity otherwise. The predicate references only
-    * partition columns, so it prunes at the source via driver-side
-    * partition evaluation. Source partition tuples are a bounded
-    * batch-sized collect. Empty-string values fold into the null
-    * partition on write (Spark's partition-writer rule), so the
-    * read-back side only ever carries null for them. */
-  private def prunedToSourceParts(target: DataFrame, source: DataFrame,
-      precomputed: Option[Seq[Seq[Option[String]]]] = None): DataFrame =
+    * value); the identity otherwise (and `tuples` is never evaluated).
+    * The predicate references only partition columns, so it prunes at
+    * the source via driver-side partition evaluation. */
+  private def prunedToSourceParts(target: DataFrame,
+      tuples: => Seq[Seq[Option[String]]]): DataFrame =
     if (!partitionsFromKeys || partitionCols.isEmpty) target
     else {
       import org.apache.spark.sql.functions.lit
-      val tuples = precomputed.getOrElse(sourcePartTuples(source))
       val pred = tuples.map { tup =>
         partitionCols.zip(tup).map {
           case (c, Some(v)) => col(c).cast("string") === lit(v)
@@ -581,18 +366,18 @@ final class LakeTable(spark: SparkSession, root: String, name: String,
     * absent-key tolerance (forall) would then silently accept a
     * mismatched instance. */
   def create(df: DataFrame, meta: Map[String, String] = Map.empty): Unit =
-    createWithMeta(df, meta)
+    LakeTable.commitFused(Seq(pendingCreate(df, meta)))
 
-  /** The implicit-create path of a meta-carrying merge on a not-yet-
-    * existing table: the `meta` map must land WITH the first version,
-    * not be silently discarded — a streaming maintainer's exactly-once
-    * batch marker dropped here would make the next drain re-apply the
-    * whole batch (double-counting the view it just created). */
-  private def createWithMeta(df: DataFrame, meta: Map[String, String]): Unit = {
-    writeTo(df, stagingDir, carryMeta = false)
-    if (meta.nonEmpty) writeMeta(stagingDir, meta)
-    publish()
-  }
+  /** [[create]] as a pending — also the implicit-create path of a merge
+    * into a not-yet-existing table, where the `meta` map must land WITH
+    * the first version, not be silently discarded: a streaming
+    * maintainer's exactly-once batch marker dropped here would make the
+    * next drain re-apply the whole batch (double-counting the view it
+    * just created). A create records no change feed (coverage starts
+    * after the created version). */
+  private[graft] def pendingCreate(df: DataFrame,
+      meta: Map[String, String] = Map.empty): LakeTable.Pending =
+    LakeTable.Pending(this, clustered(df), None, meta, () => ())
 
   /** Fail like Delta's multiple-source-rows-matched error when a merge
     * source carries more than one row per merge key. The guard RIDES
@@ -633,28 +418,15 @@ final class LakeTable(spark: SparkSession, root: String, name: String,
     * the POSIX analogue of manifest-level file reuse), so MERGE cost is
     * sub-linear in table size and every prior version stays a complete,
     * readable snapshot.
-    */
-  /** `meta` entries are merged into the table's committed metadata in
+    *
+    * `meta` entries are merged into the table's committed metadata in
     * the SAME atomic publish as the merged rows (see the metadata
     * section above) — the transactional hook for exactly-once
     * incremental consumers. */
   def upsert(df: DataFrame, prunePartitions: Boolean = true,
-      meta: Map[String, String] = Map.empty): Unit = {
-    import org.apache.spark.sql.functions.lit
-    if (!exists) { createWithMeta(df, meta); return }
-    enforceConstraints(df, "upsert")
-    if (prunePartitions && partitionCols.nonEmpty)
-      upsertPruned(df, lit(false), meta)
-    else {
-      val merged = CoreOps.antiJoin(mergeKeys, df)(read)
-        .unionByName(df, allowMissingColumns = true)
-      // feed reads still resolve the old pointer (publish comes after)
-      if (changeFeed) stageWithFeed(merged, upsertFeedEvents(df))
-      else writeTo(merged, stagingDir)
-      if (meta.nonEmpty) writeMeta(stagingDir, readMeta(currentDir) ++ meta)
-      publish()
-    }
-  }
+      meta: Map[String, String] = Map.empty): Unit =
+    LakeTable.commitFused(Seq(
+      pendingMerge(df, None, meta, prunePartitions, None, None)))
 
   /** MERGE with `WHEN MATCHED AND <deleteWhen> THEN DELETE` semantics
     * in ONE atomic publish: rows of `df` satisfying `deleteWhen`
@@ -689,8 +461,9 @@ final class LakeTable(spark: SparkSession, root: String, name: String,
     * like [[upsert]] (only partitions holding `df` keys — deletions
     * included — are rewritten; the rest hard-link), which is what lets
     * a bucket-partitioned IVM auxiliary table absorb per-batch merges
-    * at O(touched buckets) instead of a full rewrite. */
-  /** `matchedPartsHint`: a caller-supplied frame of partition-column
+    * at O(touched buckets) instead of a full rewrite.
+    *
+    * `matchedPartsHint`: a caller-supplied frame of partition-column
     * tuples ASSERTED to cover every target partition holding a row
     * whose merge key appears in `df` — it replaces clause (b)'s
     * column-pruned-but-O(table) matched-key scan in the pruned merge.
@@ -705,9 +478,33 @@ final class LakeTable(spark: SparkSession, root: String, name: String,
       deleteWhen: org.apache.spark.sql.Column,
       meta: Map[String, String] = Map.empty,
       prunePartitions: Boolean = true,
-      matchedPartsHint: Option[DataFrame] = None): Unit = {
+      matchedPartsHint: Option[DataFrame] = None): Unit =
+    LakeTable.commitFused(Seq(pendingUpsertWithDelete(df, deleteWhen, meta,
+      prunePartitions, matchedPartsHint)))
+
+  /** [[upsertWithDelete]] as a pending, for callers that commit several
+    * tables in one [[LakeTable.commitFused]] batch.
+    *
+    * `touchedPartsHint`: the caller-supplied COMPLETE touched partition
+    * set of a single-partition-column table — raw column values, None =
+    * the null partition — ASSERTED to equal sourceParts ∪ matchedParts
+    * (the two clauses of [[touchedParts]]). Replaces the merge's
+    * touched-set collect job outright: the index maintainers already
+    * hold the batch's bucket sets from one fused driver collect, and
+    * re-deriving the identical set per merge cost one driver round-trip
+    * each. An INCOMPLETE hint has exactly matchedPartsHint's failure
+    * mode (stale rows stranded in unrewritten partitions) PLUS the
+    * dual: a touched partition the staged write leaves empty vanishes
+    * from the new version — same caller-assertion severity, only pass
+    * provably-exact sets (key-derived layouts, where the source's
+    * partition values are a pure function of the batch ids). */
+  private[graft] def pendingUpsertWithDelete(df: DataFrame,
+      deleteWhen: org.apache.spark.sql.Column,
+      meta: Map[String, String] = Map.empty,
+      prunePartitions: Boolean = true,
+      matchedPartsHint: Option[DataFrame] = None,
+      touchedPartsHint: Option[Seq[Option[String]]] = None): LakeTable.Pending = {
     import org.apache.spark.sql.functions.{coalesce, lit}
-    val del = coalesce(deleteWhen, lit(false))
     // Delta parity (multiple-source-rows-matched error): a source
     // carrying more than one row per merge key — in particular a
     // SURVIVOR and a DELETE-marked row for the same key — would both
@@ -717,168 +514,51 @@ final class LakeTable(spark: SparkSession, root: String, name: String,
     // any IVM consumer). Internal callers feed one row per key by
     // construction (groupBy output); the public path must fail
     // loudly, not corrupt silently.
-    val src = guardUniqueSourceKeys(df, "upsertWithDelete")
-    if (!exists) { createWithMeta(src.filter(!del), meta); return }
-    val survivors = src.filter(!del)
-    enforceConstraints(survivors, "upsertWithDelete")
-    if (prunePartitions && partitionCols.nonEmpty) {
-      upsertPruned(src, del, meta, matchedPartsHint); return
-    }
-    val merged = CoreOps.antiJoin(mergeKeys, src)(read)
-      .unionByName(survivors, allowMissingColumns = true)
-    if (changeFeed) stageWithFeed(merged, feedEventsWithDeletes(src, del))
-    else writeTo(merged, stagingDir)
-    if (meta.nonEmpty) writeMeta(stagingDir, readMeta(currentDir) ++ meta)
-    publish()
+    pendingMerge(guardUniqueSourceKeys(df, "upsertWithDelete"),
+      Some(coalesce(deleteWhen, lit(false))), meta, prunePartitions,
+      matchedPartsHint, touchedPartsHint)
   }
 
-  // ---- fused multi-table commits ----
-  //
-  // A composite maintainer (DedupIndex/AnnIndex maintain, the two-commit
-  // IVM maintainers) commits SEVERAL tables per batch, each commit a
-  // full Spark write job (driver latency + commit protocol — the
-  // per-DML floor MicroBench measured at ~0.3-0.5 s). When the staged
-  // frames are mutually independent — every one derived from PRE-commit
-  // snapshots — the writes can ride ONE union action discriminated by a
-  // (__fdst, __fpart) partition pair and be rearranged into each
-  // table's canonical staging layout with same-filesystem renames, the
-  // wave-5 (round 16) fused feed write generalized across tables. The
-  // pointer swaps stay per-table and stay ORDERED (publish order = the
-  // pending order), so every crash-ordering contract the callers
-  // document (sidecar-before-index, marker-rides-last) is preserved:
-  // the reachable crash states are exactly those of the sequential
-  // form, minus the ones where a later write job fails after an
-  // earlier commit landed (fused staging makes those all-or-nothing).
-
-  /** Everything [[upsertWithDelete]] derives BEFORE its write action:
-    * the merged frame to stage, the sidecar DDL, the final committed
-    * meta map, and the post-stage hard-link work of a pruned merge.
-    * The caller hands a batch of these to [[LakeTable.commitFused]].
-    * Feed-staging tables are refused — the fused write here carries no
-    * CDF branch (none of the multi-commit maintainers' tables record
-    * feeds; a feed-carrying DML already fuses data+feed per-table via
-    * [[stageWithFeed]]). */
-  /** `touchedPartsHint`: the caller-supplied COMPLETE touched partition
-    * set of a single-partition-column table — raw column values, None =
-    * the null partition — ASSERTED to equal sourceParts ∪ matchedParts
-    * (the two clauses of [[touchedParts]]). Replaces the merge's
-    * touched-set collect job outright: the index maintainers already
-    * hold the batch's bucket sets from one fused driver collect, and
-    * re-deriving the identical set per merge cost one driver round-trip
-    * each. An INCOMPLETE hint has exactly [[upsertWithDelete]]'s
-    * matchedPartsHint failure mode (stale rows stranded in unrewritten
-    * partitions) PLUS the dual: a touched partition the staged write
-    * leaves empty vanishes from the new version — same caller-assertion
-    * severity, only pass provably-exact sets (key-derived layouts,
-    * where the source's partition values are a pure function of the
-    * batch ids). */
-  private[graft] def pendingUpsertWithDelete(df: DataFrame,
-      deleteWhen: org.apache.spark.sql.Column,
-      meta: Map[String, String] = Map.empty,
-      prunePartitions: Boolean = true,
-      matchedPartsHint: Option[DataFrame] = None,
-      touchedPartsHint: Option[Seq[Option[String]]] = None): LakeTable.Pending = {
-    import org.apache.spark.sql.functions.{coalesce, lit}
-    require(!changeFeed, s"table $name: fused multi-table commits do " +
-      "not stage change feeds — use upsertWithDelete directly")
+  /** The one MERGE builder behind [[upsert]] (`del` = None: no
+    * uniqueness guard, no delete clause, no delete-feed branch) and
+    * [[upsertWithDelete]].
+    *
+    * Partition pruning is SAFE over the full partition tuple: the
+    * touched set is (a) every partition the source writes into, UNION
+    * (b) every partition holding a target row whose merge key appears
+    * in the source. (b) is what makes pruning safe: a key whose
+    * partition value changed between target and source (e.g. an
+    * order's date corrected) must have its OLD partition rewritten too,
+    * or the stale row survives and MERGE key uniqueness breaks. Delta's
+    * MERGE matches keys across all partitions for the same reason. A
+    * deleted key's target partitions are exactly clause (b)'s, so they
+    * rewrite (without the deleted row) while untouched partitions
+    * hard-link. Under `partitionsFromKeys` (b) ⊆ (a) is a theorem and
+    * the batch's partition tuples — collected at most ONCE per DML —
+    * serve the touched set and both feed cuts. */
+  private def pendingMerge(src: DataFrame,
+      del: Option[org.apache.spark.sql.Column], meta: Map[String, String],
+      prunePartitions: Boolean, matchedPartsHint: Option[DataFrame],
+      touchedPartsHint: Option[Seq[Option[String]]]): LakeTable.Pending = {
     require(touchedPartsHint.isEmpty || partitionCols.size == 1,
       s"table $name: touchedPartsHint is single-partition-column only")
-    val del = coalesce(deleteWhen, lit(false))
-    val src = guardUniqueSourceKeys(df, "upsertWithDelete")
-    if (!exists) {
-      val frame = src.filter(!del)
-      return LakeTable.Pending(this, frame, frame.schema.toDDL, meta,
-        () => ())
-    }
-    val survivors = src.filter(!del)
-    enforceConstraints(survivors, "upsertWithDelete")
-    if (prunePartitions && partitionCols.nonEmpty) {
-      val donor = currentDir
-      val target = read
-      val touched = touchedPartsHint match {
+    val survivors = del.fold(src)(d => src.filter(!d))
+    if (!exists) return pendingCreate(survivors, meta)
+    enforceConstraints(survivors, if (del.isEmpty) "upsert" else "upsertWithDelete")
+    val target = read
+    lazy val srcTuples = sourcePartTuples(src)
+    val touched = Option.when(prunePartitions && partitionCols.nonEmpty)(
+      touchedPartsHint match {
         case Some(vs) => vs.map(v => encDriver(Seq(v))).toSet
-        case None     => touchedParts(src, target, matchedPartsHint)
-      }
-      val touchedTarget =
-        target.filter(encTuple(target).isin(touched.toSeq: _*))
-      val merged = CoreOps.antiJoin(mergeKeys, src)(touchedTarget)
-        .unionByName(survivors, allowMissingColumns = true)
-      LakeTable.Pending(this, merged, merged.schema.toDDL,
-        readMeta(currentDir) ++ meta,
-        () => linkUntouched(donor, donor, 0, Nil, touched, encDriver))
-    } else {
-      val merged = CoreOps.antiJoin(mergeKeys, src)(read)
-        .unionByName(survivors, allowMissingColumns = true)
-      LakeTable.Pending(this, merged, merged.schema.toDDL,
-        readMeta(currentDir) ++ meta, () => ())
-    }
-  }
-
-  /** [[create]] as a pending (first-load / DDL-replace semantics:
-    * committed metadata is NOT carried forward, `meta` commits
-    * atomically with the staged version). Change-feed tables are FINE
-    * here — a create never stages a feed epoch (coverage starts after
-    * the created version), and the fused rearrange sweeps any stale
-    * staged feed exactly like [[writeTo]]. */
-  private[graft] def pendingCreate(df: DataFrame,
-      meta: Map[String, String] = Map.empty): LakeTable.Pending =
-    LakeTable.Pending(this, df, df.schema.toDDL, meta, () => ())
-
-  // companion-side accessors (constructor params are object-private)
-  private[table] def fusedName: String = name
-  private[table] def fusedRoot: String = root
-  private[table] def fusedPartCols: Seq[String] = partitionCols
-  private[table] def fusedMergeKeys: Seq[String] = mergeKeys
-
-  /** Move this table's `__fdst=<name>` slice of a fused staged write
-    * into the canonical staging layout ([[stageWithFeed]]'s rename
-    * rearrangement, generalized): `__fpart=V` dirs become `<pcol>=V`
-    * partition dirs, or — unpartitioned tables, where `__fpart` is a
-    * constant — their files are flattened into the staging root.
-    * Flattened names are re-prefixed with the `__fpart` value so the
-    * rearrangement stays collision-free for ANY discriminator choice,
-    * not just the current constant. Listings are materialized before
-    * any rename. */
-  private[table] def rearrangeFused(scratch: Path, ddl: String,
-      metaMap: Map[String, String]): Unit = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    deleteRecursively(stagingDir)
-    // same stale-feed sweep as writeTo: a fused commit must not publish
-    // a feed staged by an aborted earlier operation
-    deleteRecursively(feedStagingDir)
-    Files.createDirectories(stagingDir)
-    val dest = scratch.resolve(
-      s"__fdst=${ExternalCatalogUtils.escapePathName(name)}")
-    if (Files.isDirectory(dest)) {
-      val parts = scala.util.Using.resource(Files.list(dest))(
-        _.toArray.toSeq.map(_.asInstanceOf[Path]))
-        .filter(p => Files.isDirectory(p) &&
-          p.getFileName.toString.startsWith("__fpart="))
-      partitionCols.headOption match {
-        case Some(pc) => parts.foreach { d =>
-          val v = d.getFileName.toString.stripPrefix("__fpart=")
-          Files.move(d, stagingDir.resolve(s"$pc=$v"))
-        }
-        case None => parts.foreach { d =>
-          // one writer TASK can emit one same-named file into EVERY
-          // __fpart dir it holds rows for, so flattening re-prefixes
-          // names with the __fpart value to stay collision-free (the
-          // checksum sidecar's `.<name>.crc` convention is preserved so
-          // the local filesystem's crc lookup still matches)
-          val v = d.getFileName.toString.stripPrefix("__fpart=")
-          val files = scala.util.Using.resource(Files.list(d))(
-            _.toArray.toSeq.map(_.asInstanceOf[Path]))
-          files.foreach { f =>
-            val n = f.getFileName.toString
-            val nn = if (n.startsWith(".")) s".s${v}-${n.stripPrefix(".")}"
-                     else s"s$v-$n"
-            Files.move(f, stagingDir.resolve(nn))
-          }
-        }
-      }
-    }
-    Files.writeString(stagingDir.resolve("_schema_ddl"), ddl)
-    if (metaMap.nonEmpty) writeMeta(stagingDir, metaMap)
+        case None if partitionsFromKeys => srcTuples.map(encDriver).toSet
+        case None => touchedParts(src, target, matchedPartsHint)
+      })
+    val merged = CoreOps.antiJoin(mergeKeys, src)(inParts(target, touched))
+      .unionByName(survivors, allowMissingColumns = true)
+    // feed reads still resolve the old pointer (publish comes after)
+    val feed = Option.when(changeFeed)(del.fold(upsertFeedEvents(src, srcTuples))(
+      feedEventsWithDeletes(src, _, srcTuples)))
+    pendingWrite(merged, feed, meta, touched)
   }
 
   /** Feed for a merge-with-delete batch: survivors produce the usual
@@ -887,39 +567,20 @@ final class LakeTable(spark: SparkSession, root: String, name: String,
     * target match are no-ops, like SQL DELETE. */
   private def feedEventsWithDeletes(df: DataFrame,
       del: org.apache.spark.sql.Column,
-      srcTuples: Option[Seq[Seq[Option[String]]]] = None): DataFrame = {
+      srcTuples: => Seq[Seq[Option[String]]]): DataFrame = {
     import org.apache.spark.sql.functions.lit
     val deletedKeys = df.filter(del).select(mergeKeys.map(col): _*).distinct()
     // same key-derived cut as upsertFeedEvents: deleted keys' target
     // rows live in the batch's partitions. The survivors' cut reuses
     // the FULL batch's tuples — a lossless superset (survivor keys are
-    // batch keys), sparing the third per-DML tuple collect.
-    val delEvents = prunedToSourceParts(read, df, srcTuples)
+    // batch keys).
+    val delEvents = prunedToSourceParts(read, srcTuples)
       .join(deletedKeys, mergeKeys, "left_semi")
       .withColumn("_change_type", lit("delete"))
     upsertFeedEvents(df.filter(!del), srcTuples)
       .unionByName(delEvents, allowMissingColumns = true)
   }
 
-  /** Safe partition-pruned MERGE over the full partition tuple.
-    *
-    * The touched set is (a) every partition the source writes into, UNION
-    * (b) every partition holding a target row whose merge key appears in
-    * the source. (b) is what makes pruning SAFE: a key whose partition
-    * value changed between target and source (e.g. an order's date
-    * corrected) must have its OLD partition rewritten too, or the stale
-    * row survives and MERGE key uniqueness breaks. Delta's MERGE matches
-    * keys across all partitions for the same reason. (b) costs one
-    * column-pruned scan of the target's key+partition columns per merge —
-    * sub-linear in table bytes, the analogue of Delta's touched-file
-    * discovery join.
-    */
-  /** `deleteWhen` extends this to the three-clause MERGE: `source` rows
-    * satisfying it remove their target matches instead of upserting.
-    * The touched-set rule is unchanged and remains safe — a deleted
-    * key's target partitions are exactly clause (b)'s matched-key
-    * partitions, so they rewrite (without the deleted row) while
-    * untouched partitions hard-link. */
   /** Injective partition-tuple → string encoding used ONLY for set
     * membership (both sides use URLEncoder conventions, so it need not
     * match the Hive directory escaping): each value url-encoded, null
@@ -928,7 +589,7 @@ final class LakeTable(spark: SparkSession, root: String, name: String,
     * '/'. `encTuple` is the frame-side expression (references only
     * partition columns — prunes at the source), `encDriver` the
     * driver-side twin over decoded directory values. */
-  private def encTuple(df: DataFrame): org.apache.spark.sql.Column = {
+  private def encTuple: org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions.{coalesce, concat_ws, length, lit, url_encode, when}
     concat_ws("/", partitionCols.map { c =>
       val sc = col(c).cast("string")
@@ -944,95 +605,56 @@ final class LakeTable(spark: SparkSession, root: String, name: String,
 
   /** Bounded driver-side collect: partition-VALUE tuples, not rows —
     * source partitions ∪ matched-key target partitions in ONE action.
-    * With `partitionsFromKeys` the second term is skipped: the
-    * partition value being a pure function of the merge keys makes
-    * matched-key target partitions ⊆ source partitions a theorem (a
-    * matched row shares the keys, hence the derived partition), so
-    * clause (b)'s column-pruned-but-O(table) key scan — the slim
-    * residual the dedupidxp ladder measured growing with the corpus —
-    * adds nothing and is provably safe to drop. */
+    * Clause (b) comes from the hint when the caller supplied a cheaper
+    * authority (see [[upsertWithDelete]]), else from one column-pruned
+    * scan of the target's key+partition columns — sub-linear in table
+    * bytes, the analogue of Delta's touched-file discovery join. */
   private def touchedParts(source: DataFrame, target: DataFrame,
       matchedPartsHint: Option[DataFrame]): Set[String] = {
-    val sourceParts = source.select(encTuple(source).as("__p"))
-    if (partitionsFromKeys)
-      sourceParts.distinct().collect().map(_.getString(0)).toSet
-    else {
-      // clause (b): matched-key target partitions — from the hint
-      // when the caller supplied a cheaper authority (see the
-      // upsertWithDelete doc), else the column-pruned target key scan
-      val matchedParts = matchedPartsHint match {
-        case Some(h) => h.select(encTuple(h).as("__p"))
-        case None => target
-          .join(source.select(mergeKeys.map(col): _*).distinct(),
-            mergeKeys, "left_semi")
-          .select(encTuple(target).as("__p"))
-      }
-      sourceParts.unionByName(matchedParts).distinct()
-        .collect().map(_.getString(0)).toSet
-    }
+    val matchedParts = matchedPartsHint.getOrElse(target
+      .join(source.select(mergeKeys.map(col): _*).distinct(),
+        mergeKeys, "left_semi"))
+    source.select(encTuple.as("__p"))
+      .unionByName(matchedParts.select(encTuple.as("__p"))).distinct()
+      .collect().map(_.getString(0)).toSet
   }
 
-  private def upsertPruned(source: DataFrame,
-      deleteWhen: org.apache.spark.sql.Column,
-      meta: Map[String, String] = Map.empty,
-      matchedPartsHint: Option[DataFrame] = None): Unit = {
-    val donor = currentDir
-    val target = read
-    // key-derived layouts: collect the batch's partition tuples ONCE —
-    // the touched set (below) and the feed derivation's two target
-    // cuts (prunedToSourceParts) all need exactly this set, and each
-    // previously ran its own collect job (~3 identical driver
-    // round-trips per feed-carrying pruned DML)
-    val srcTuples: Option[Seq[Seq[Option[String]]]] =
-      if (partitionsFromKeys) Some(sourcePartTuples(source)) else None
-    val touched = srcTuples match {
-      // partitionsFromKeys: touched = source partitions exactly
-      // (touchedParts' own fast path, served from the shared collect)
-      case Some(t) => t.map(encDriver).toSet
-      case None    => touchedParts(source, target, matchedPartsHint)
-    }
-    val touchedTarget = target.filter(encTuple(target).isin(touched.toSeq: _*))
-    val merged = CoreOps.antiJoin(mergeKeys, source)(touchedTarget)
-      .unionByName(source.filter(!deleteWhen), allowMissingColumns = true)
-    // feed-carrying pruned merges fuse the rewrite and the feed into
-    // one write action (stagePartitionedWithFeed); reads still resolve
-    // the old pointer either way
-    if (changeFeed)
-      stageWithFeed(merged, feedEventsWithDeletes(source, deleteWhen, srcTuples))
-    else writeTo(merged, stagingDir)
-    if (meta.nonEmpty) writeMeta(stagingDir, readMeta(currentDir) ++ meta)
-    // Hard-link untouched leaf partition dirs from the donor version into
-    // staging: metadata-only (no bytes copied), and because hard links
-    // survive unlinking of the original path, the donor stays a complete
-    // snapshot and version pruning can delete old dirs safely. Dir names
-    // follow Hive encoding: `<pcol>=<escaped value>` nested per partition
-    // column, null written as __HIVE_DEFAULT_PARTITION__.
-    linkUntouched(donor, donor, 0, Nil, touched, encDriver)
-    publish()
-  }
+  /** The partition tuples holding >= 1 row of `df` matching `cond` —
+    * one bounded collect (a DELETE/UPDATE's touched set). */
+  private def partsMatching(df: DataFrame,
+      cond: org.apache.spark.sql.Column): Set[String] =
+    df.filter(cond).select(encTuple.as("__p")).distinct()
+      .collect().map(_.getString(0)).toSet
 
-  /** Recursively walk the donor's Hive-style partition directory tree and
-    * hard-link every LEAF partition dir (depth == partitionCols.size)
-    * whose decoded tuple is not in the touched set. */
-  private def linkUntouched(donorRoot: Path, dir: Path, depth: Int,
-      prefix: Seq[Option[String]], touched: Set[String],
-      enc: Seq[Option[String]] => String): Unit = {
+  /** `df` cut to the touched partitions (all of it when unpruned). */
+  private def inParts(df: DataFrame, touched: Option[Set[String]]): DataFrame =
+    touched.fold(df)(t => df.filter(encTuple.isin(t.toSeq: _*)))
+
+  /** Hard-link untouched leaf partition dirs from the donor version into
+    * staging: metadata-only (no bytes copied), and because hard links
+    * survive unlinking of the original path, the donor stays a complete
+    * snapshot and version pruning can delete old dirs safely. The walk
+    * follows the Hive layout — `<pcol>=<escaped value>` nested per
+    * partition column, null as __HIVE_DEFAULT_PARTITION__ — and links
+    * every LEAF dir whose decoded tuple is not in the touched set. */
+  private def linkUntouched(donor: Path, touched: Set[String]): Unit = {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    scala.util.Using.resource(Files.list(dir))(_.forEach { p =>
-      val n = p.getFileName.toString
-      if (Files.isDirectory(p) && n.startsWith(s"${partitionCols(depth)}=")) {
-        val raw = n.stripPrefix(s"${partitionCols(depth)}=")
-        val value: Option[String] =
-          if (raw == HiveNullPart) None
-          else Some(ExternalCatalogUtils.unescapePathName(raw))
-        val tup = prefix :+ value
-        if (depth == partitionCols.size - 1) {
-          val dst = stagingDir.resolve(donorRoot.relativize(p).toString)
-          if (!touched.contains(enc(tup)) && !Files.exists(dst))
-            linkTree(p, dst)
-        } else linkUntouched(donorRoot, p, depth + 1, tup, touched, enc)
+    def walk(dir: Path, depth: Int, prefix: Seq[Option[String]]): Unit =
+      listing(dir).foreach { p =>
+        val n = p.getFileName.toString
+        if (Files.isDirectory(p) && n.startsWith(s"${partitionCols(depth)}=")) {
+          val raw = n.stripPrefix(s"${partitionCols(depth)}=")
+          val tup = prefix :+ (if (raw == HiveNullPart) None
+            else Some(ExternalCatalogUtils.unescapePathName(raw)))
+          if (depth < partitionCols.size - 1) walk(p, depth + 1, tup)
+          else {
+            val dst = stagingDir.resolve(donor.relativize(p).toString)
+            if (!touched.contains(encDriver(tup)) && !Files.exists(dst))
+              linkTree(p, dst)
+          }
+        }
       }
-    })
+    walk(donor, 0, Nil)
   }
 
   /** Recursively hard-link a directory tree (same filesystem). The object-
@@ -1046,43 +668,30 @@ final class LakeTable(spark: SparkSession, root: String, name: String,
     }
   }
 
-  /** `optimizeLayout` (default on): partitioned writes first hash-
-    * repartition on the partition columns — Delta's "optimized writes".
-    * Without it, every task writes a file into every partition dir it
-    * sees a row for (tasks × partitions small files: a 2,048-partition
-    * table written by 32 tasks measured 65k files and an 18-minute
-    * write in the round-13 dedupidxp probe); with it, each partition's
-    * rows land in one task → ~one file per partition, and the
-    * per-publish hard-link walk stays O(partitions). Layout-authored
-    * writes (compact's file-count contract, Z-order's range clustering)
-    * pass false — re-shuffling would destroy the layout they exist to
-    * produce. */
-  private def writeTo(df: DataFrame, dir: Path,
-      carryMeta: Boolean = true, optimizeLayout: Boolean = true): Unit = {
-    deleteRecursively(dir)
-    // a write path that doesn't stage its own feed (create, scd2) must
-    // not publish a STALE one from an aborted earlier operation
-    deleteRecursively(feedStagingDir)
-    val out =
-      if (optimizeLayout && partitionCols.nonEmpty)
-        df.repartition(partitionCols.map(col): _*)
-      else df
-    // No _SUCCESS marker: LakeTable's commit marker is the atomic
-    // CURRENT pointer swap, not the Hadoop job-level _SUCCESS file — a
-    // staged dir is invisible until publish() regardless, so the marker
-    // is pure overhead (~100 ms/write measured round 16; at object-store
-    // scale, one fewer PUT per commit).
-    val w = out.write.mode("overwrite")
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(dir.toString)
-    // schema sidecar: what lets readDir serve an EMPTY partitioned
-    // snapshot (the partitioned writer emits no files for one)
-    Files.writeString(dir.resolve("_schema_ddl"), df.schema.toDDL)
-    // committed metadata survives every write EXCEPT create (DDL-replace
-    // resets it); a meta-carrying upsert overwrites this file with the
-    // merged map before publish
-    if (carryMeta && exists) writeMeta(dir, readMeta(currentDir))
+  /** Hash-cluster a frame by the partition columns before it is staged —
+    * Delta's "optimized writes". Without it every task writes a file
+    * into every partition dir it sees a row for (tasks × partitions
+    * small files: a 2,048-partition table written by 32 tasks measured
+    * 65k files and an 18-minute write in the round-13 dedupidxp probe);
+    * with it each partition's rows land in one task → ~one file per
+    * partition, and the per-publish hard-link walk stays O(partitions).
+    * Layout-authored writes (compact's file-count contract, Z-order's
+    * range clustering) skip it — re-shuffling would destroy the layout
+    * they exist to produce. */
+  private def clustered(df: DataFrame): DataFrame =
+    if (partitionCols.isEmpty) df
+    else df.repartition(partitionCols.map(col): _*)
+
+  /** A row-level write's next version: `df` clustered, the committed
+    * meta carried forward with `meta` merged in, and — for a
+    * partition-pruned write — the hard-link walk of every untouched
+    * partition of the current version. */
+  private def pendingWrite(df: DataFrame, feed: Option[DataFrame],
+      meta: Map[String, String],
+      touched: Option[Set[String]]): LakeTable.Pending = {
+    val donor = currentDir
+    LakeTable.Pending(this, clustered(df), feed, readMeta(donor) ++ meta,
+      () => touched.foreach(linkUntouched(donor, _)))
   }
 
   /** Pointer-publish: move the staged write to the next version directory,
@@ -1125,24 +734,15 @@ final class LakeTable(spark: SparkSession, root: String, name: String,
     pruneVersions(v)
   }
 
-  private def allVersions: Seq[Int] =
-    if (!Files.isDirectory(tableDir)) Nil
-    else Files.list(tableDir).toArray.toSeq.map(_.asInstanceOf[Path])
-      .map(_.getFileName.toString)
-      .filter(_.matches("v\\d+"))
-      .map(_.stripPrefix("v").toInt)
-      .sorted
+  private def allVersions: Seq[Int] = versionsIn(tableDir)
 
   /** Versions with a recorded change feed (committed or orphaned). */
-  private def allFeedVersions: Seq[Int] = {
-    val changes = tableDir.resolve("changes")
-    if (!Files.isDirectory(changes)) Nil
-    else Files.list(changes).toArray.toSeq.map(_.asInstanceOf[Path])
-      .map(_.getFileName.toString)
-      .filter(_.matches("v\\d+"))
-      .map(_.stripPrefix("v").toInt)
-      .sorted
-  }
+  private def allFeedVersions: Seq[Int] = versionsIn(tableDir.resolve("changes"))
+
+  private def versionsIn(dir: Path): Seq[Int] =
+    if (!Files.isDirectory(dir)) Nil
+    else listing(dir).map(_.getFileName.toString)
+      .filter(_.matches("v\\d+")).map(_.stripPrefix("v").toInt).sorted
 
   /** Retained PRIOR snapshots — strictly BELOW the current version.
     * A dir beyond the pointer can only be the residue of a crashed
@@ -1180,26 +780,13 @@ final class LakeTable(spark: SparkSession, root: String, name: String,
   def delete(condition: org.apache.spark.sql.Column): Unit = {
     import org.apache.spark.sql.functions.{coalesce, lit}
     val cond = coalesce(condition, lit(false))
-    val cur = read
-    if (partitionCols.isEmpty) {
-      if (changeFeed)
-        stageWithFeed(cur.filter(!cond),
-          cur.filter(cond).withColumn("_change_type", lit("delete")))
-      else writeTo(cur.filter(!cond), stagingDir)
-      publish()
-      return
-    }
-    val donor = currentDir
-    // bounded collect: partition tuples holding >= 1 matching row
-    val touched = cur.filter(cond).select(encTuple(cur).as("__p"))
-      .distinct().collect().map(_.getString(0)).toSet
-    val touchedCur = cur.filter(encTuple(cur).isin(touched.toSeq: _*))
-    if (changeFeed)
-      stageWithFeed(touchedCur.filter(!cond),
-        touchedCur.filter(cond).withColumn("_change_type", lit("delete")))
-    else writeTo(touchedCur.filter(!cond), stagingDir)
-    linkUntouched(donor, donor, 0, Nil, touched, encDriver)
-    publish()
+    val whole = read
+    val touched = Option.when(partitionCols.nonEmpty)(partsMatching(whole, cond))
+    val cur = inParts(whole, touched)
+    LakeTable.commitFused(Seq(pendingWrite(cur.filter(!cond),
+      Option.when(changeFeed)(
+        cur.filter(cond).withColumn("_change_type", lit("delete"))),
+      Map.empty, touched)))
   }
 
   /** Row-level UPDATE: apply the assignments to rows matching the
@@ -1217,14 +804,8 @@ final class LakeTable(spark: SparkSession, root: String, name: String,
     val cond = coalesce(condition, lit(false))
     val pruned = partitionCols.nonEmpty &&
       partitionCols.forall(c => !assignments.contains(c))
-    val donor = if (pruned) currentDir else null
-    val touched: Set[String] =
-      if (!pruned) Set.empty
-      else whole.filter(cond).select(encTuple(whole).as("__p"))
-        .distinct().collect().map(_.getString(0)).toSet
-    val cur =
-      if (pruned) whole.filter(encTuple(whole).isin(touched.toSeq: _*))
-      else whole
+    val touched = Option.when(pruned)(partsMatching(whole, cond))
+    val cur = inParts(whole, touched)
     val updated = cur.select(cur.columns.toIndexedSeq.map { c =>
       assignments.get(c)
         .map(expr => when(cond, expr).otherwise(col(c)).as(c))
@@ -1236,7 +817,7 @@ final class LakeTable(spark: SparkSession, root: String, name: String,
         cur.columns.toIndexedSeq.map { c =>
           assignments.get(c).map(_.as(c)).getOrElse(col(c))
         }: _*), "update")
-    if (changeFeed) {
+    val feed = Option.when(changeFeed) {
       // pre/post images of MATCHED rows whose non-key values actually
       // changed (no-op assignments produce no events, matching the
       // snapshot diff)
@@ -1255,22 +836,14 @@ final class LakeTable(spark: SparkSession, root: String, name: String,
         .withColumn("_change_type", lit("update_preimage"))
       val post = after.join(changedKeys, mergeKeys, "left_semi")
         .withColumn("_change_type", lit("update_postimage"))
-      stageWithFeed(updated, post.unionByName(pre))
-    } else writeTo(updated, stagingDir)
-    if (pruned) linkUntouched(donor, donor, 0, Nil, touched, encDriver)
-    publish()
+      post.unionByName(pre)
+    }
+    LakeTable.commitFused(Seq(pendingWrite(updated, feed, Map.empty, touched)))
   }
 
   /** Small-file compaction (OPTIMIZE without reordering): rewrite the
     * current version into `numFiles` files. Content unchanged. */
-  def compact(numFiles: Int): Unit = {
-    import org.apache.spark.sql.functions.lit
-    writeTo(read.repartition(numFiles), stagingDir, optimizeLayout = false)
-    // layout-only: empty feed keeps changesSince's feed coverage contiguous
-    if (changeFeed)
-      stageFeed(read.limit(0).withColumn("_change_type", lit("insert")))
-    publish()
-  }
+  def compact(numFiles: Int): Unit = commitLayout(read.repartition(numFiles))
 
   /** OPTIMIZE ZORDER analogue: rewrite the current version clustered on
     * the Z-order (Morton) curve of N columns, published as a new
@@ -1292,16 +865,11 @@ final class LakeTable(spark: SparkSession, root: String, name: String,
     val z = ZOrder.interleaveN(cols.zipWithIndex.map { case (c, i) =>
       ZOrder.bin(col(c), col(s"__min$i"), col(s"__max$i"), bits) }, bits)
     val statCols = cols.indices.flatMap(i => Seq(s"__min$i", s"__max$i"))
-    val clustered = cur.crossJoin(broadcast(stats))
+    commitLayout(cur.crossJoin(broadcast(stats))
       .withColumn("__z", z)
       .repartitionByRange(numFiles, col("__z"))
       .sortWithinPartitions("__z")
-      .drop("__z" +: statCols: _*)
-    writeTo(clustered, stagingDir, optimizeLayout = false)
-    if (changeFeed)
-      stageFeed(read.limit(0).withColumn("_change_type",
-        org.apache.spark.sql.functions.lit("insert")))
-    publish()
+      .drop("__z" +: statCols: _*))
   }
 
   def optimizeZorder(c1: String, c2: String, numFiles: Int): Unit =
@@ -1309,6 +877,17 @@ final class LakeTable(spark: SparkSession, root: String, name: String,
 
   def optimizeZorder(c1: String, c2: String): Unit =
     optimizeZorder(Seq(c1, c2), 8)
+
+  /** A layout-only rewrite (compact, Z-order): the layout as authored
+    * (no clustering), meta carried, and on a change-feed table an EMPTY
+    * feed, staged after the data write — no union branch, so the
+    * authored layout reaches the writer untouched. */
+  private def commitLayout(df: DataFrame): Unit = {
+    val feedSchema = read.schema.add("_change_type", "string")
+    LakeTable.commitFused(Seq(LakeTable.Pending(this, df, None,
+      readMeta(currentDir),
+      () => if (changeFeed) LakeTable.finishFeed(this, feedSchema))))
+  }
 
   /** CDC between a retained snapshot and the current version — the Delta
     * Change Data Feed analogue, derivable here because versions are full
@@ -1604,8 +1183,8 @@ final class LakeTable(spark: SparkSession, root: String, name: String,
       .withColumn("__valid_from", lit(asOf))
       .withColumn("__valid_to", lit(null).cast("timestamp"))
       .withColumn("__is_current", lit(true))
-    writeTo(untouched.unionByName(closing).unionByName(inserts), stagingDir)
-    publish()
+    LakeTable.commitFused(Seq(pendingWrite(
+      untouched.unionByName(closing).unionByName(inserts), None, Map.empty, None)))
   }
 
   // ---- CHECK constraints (ALTER TABLE ADD CONSTRAINT analogue) ----
@@ -1804,10 +1383,6 @@ final class LakeTable(spark: SparkSession, root: String, name: String,
     t.publish() // private, but same-class access is fine in Scala
     t
   }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).sorted(Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
 }
 
 object LakeTable {
@@ -1817,31 +1392,57 @@ object LakeTable {
     new LakeTable(spark, root, name, mergeKeys, partitionCols,
       changeFeed = changeFeed, partitionsFromKeys = partitionsFromKeys)
 
-  /** A fully-derived, not-yet-written next version of one table: the
-    * frame to stage, the sidecar DDL, the FINAL committed meta map, and
-    * the post-stage work (a pruned merge's hard-link walk) that must
-    * run after the staged files land and before the pointer swap. See
-    * the fused-commit section in the class. */
+  /** A fully-derived, not-yet-written next version of one table — what
+    * every data write builds: the frame to stage, already shaped by its
+    * builder (row-level writes cluster it by the partition columns,
+    * layout rewrites keep the layout they authored); the change-feed
+    * frame a row-level write records on a change-feed table; the FINAL
+    * committed meta map; and the post-stage work (a pruned write's
+    * hard-link walk, a layout rewrite's empty feed) that runs after the
+    * staged files land and before the pointer swap. The committed `_schema_ddl` sidecar is the
+    * frame's schema. */
   private[graft] final case class Pending(table: LakeTable,
-      frame: DataFrame, schemaDDL: String, metaMap: Map[String, String],
+      frame: DataFrame, feed: Option[DataFrame], metaMap: Map[String, String],
       afterStage: () => Unit)
 
-  /** Commit several pendings with ONE staged write action, then
-    * publish each table in the given order (the order is the callers'
-    * crash contract: hint-consumer before authority, marker last).
+  /** The single commit path: every LakeTable data write — one table's
+    * create / merge / DML / layout rewrite, or a maintainer's batch of
+    * several tables — stages here, then publishes each table in the
+    * given order (the order is the callers' crash contract: hint-
+    * consumer before authority, marker last).
     *
-    * Mechanics: each pending's frame rides a union discriminated by
-    * `__fdst` (the table) and `__fpart` (the table's single partition
-    * column cast to string, or a constant for unpartitioned tables);
-    * each branch is shaped exactly like its sequential writeTo —
-    * partitioned branches cluster by partition value, unpartitioned
-    * branches add NO shuffle — and the staged output is rearranged into
-    * each table's canonical staging dir with same-filesystem renames
-    * ([[LakeTable.rearrangeFused]]). Data files physically carry
-    * all-NULL columns of the OTHER tables in the batch — invisible,
-    * because every version dir is served from its committed
-    * `_schema_ddl` sidecar (the round-16 declaredRead contract, the
-    * same property the fused data+feed write already relies on).
+    * The write is chosen by the number of DESTINATIONS — each pending's
+    * data, plus its change feed as one more, unpartitioned, destination:
+    *  - ONE destination: a plain Hive-partitioned write of the frame
+    *    into the table's staging dir ([[writeTo]]).
+    *  - More: ONE union write, discriminated by `__fdst` (the
+    *    destination's index) and one `__fpart<j>` slot per partition
+    *    level (the table's j-th partition column cast to string — the
+    *    rendering the Hive partition writer uses; NULL beyond a
+    *    destination's own levels), then ONE rename rearrangement
+    *    ([[moveTree]]) into each table's canonical staging dir and FLAT
+    *    feed staging dir. The branches keep their builders' shaping —
+    *    union concatenates branch partitions, so an unpartitioned or feed
+    *    branch flows to the writer unshuffled and a clustered branch
+    *    keeps one task per partition value. (A first cut repartitioned
+    *    the whole union by the discriminators — measured 0.6-0.8x: the
+    *    global exchange serialized the write into the few AQE-coalesced
+    *    partitions at lab scale and adds a full shuffle at ANY scale.)
+    *    An EMPTY feed branch writes no dir; [[finishFeed]] records an
+    *    empty feed for it.
+    *
+    * Data files written by the union physically carry all-NULL columns
+    * of the other destinations (`_change_type`, a same-named copy of a
+    * partition column, other tables' columns) — invisible, because
+    * every version dir is served from its committed `_schema_ddl`
+    * sidecar (the declaredRead contract), and a partition directory
+    * value takes precedence over a same-named data column. A feed's
+    * `_schema_fp` is written in the union's column order — the order
+    * its physical files carry.
+    *
+    * A batch's frames must be mutually independent — each derived from
+    * PRE-commit snapshots — since every destination is written before
+    * the first pointer swap.
     *
     * Crash states: staging is invisible until each table's pointer
     * swap, and the swaps run in pending order, so the reachable states
@@ -1851,93 +1452,129 @@ object LakeTable {
   private[graft] def commitFused(pendings: Seq[Pending]): Unit = {
     import org.apache.spark.sql.functions.{col, lit}
     require(pendings.nonEmpty, "commitFused: no pending commits")
-    if (pendings.sizeIs == 1) { commitOne(pendings.head); return }
-    val names = pendings.map(_.table.fusedName)
-    require(names.distinct.size == names.size,
-      s"commitFused: duplicate tables in one fused commit ($names)")
-    val roots = pendings.map(_.table.fusedRoot).distinct
-    require(roots.size == 1,
-      s"commitFused: tables must share one root (got $roots)")
+    val tables = pendings.map(_.table)
+    require(tables.map(_.name).distinct.size == tables.size,
+      s"commitFused: duplicate tables in one commit (${tables.map(_.name)})")
+    val roots = tables.map(_.root).distinct
+    require(roots.size == 1, s"commitFused: tables must share one root (got $roots)")
+    // the discriminators are RESERVED (a same-named data column would be
+    // replaced, its values stripped from the staged files), and so is a
+    // change-feed write's `_change_type` on its data — fail loudly, like
+    // Delta reserving _change_type on CDF tables
     pendings.foreach { p =>
-      require(p.table.fusedPartCols.size <= 1,
-        s"commitFused: table ${p.table.fusedName} has " +
-          s"${p.table.fusedPartCols.size} partition columns (max 1)")
-      require(!p.frame.columns.contains("__fdst") &&
-        !p.frame.columns.contains("__fpart"),
-        s"commitFused: ${p.table.fusedName}'s frame carries a reserved " +
-          "column (__fdst/__fpart)")
+      val cols = p.frame.columns ++ p.feed.toSeq.flatMap(_.columns)
+      require(!cols.exists(c => c == "__fdst" || c.startsWith("__fpart")) &&
+        !(p.feed.isDefined && p.frame.columns.contains("_change_type")),
+        s"table ${p.table.name}: columns __fdst, __fpart* and (in a " +
+          "change-feed write's data) _change_type are reserved by the staged write")
     }
-    // Shape each branch EXACTLY like its sequential writeTo would
-    // (guide §2.4 — add no shuffle the two-job form didn't pay): a
-    // partitioned branch clusters by its partition value (writeTo's
-    // optimized-writes repartition, one task per partition dir), an
-    // unpartitioned branch stays UNSHUFFLED with a constant __fpart
-    // (union concatenates branch partitions, so its tasks flow straight
-    // to the writer at natural width, as writeTo's bare write does).
-    // A first cut repartitioned the whole union by (__fdst, __fpart)
-    // with a salted __fpart — measured 0.6-0.8x on every unpartitioned
-    // composite: the global exchange serialized the fused write into
-    // the few AQE-coalesced partitions at lab scale and adds a full
-    // shuffle of every branch at ANY scale.
-    val fused = pendings.map { p =>
-      val t = p.table
-      val withPart = t.fusedPartCols.headOption match {
-        case Some(pc) =>
-          p.frame.withColumn("__fpart", col(pc).cast("string")).drop(pc)
-            .repartition(col("__fpart"))
-        case None => p.frame.withColumn("__fpart", lit("0"))
-      }
-      withPart.withColumn("__fdst", lit(t.fusedName))
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
-    // the sidecar each table commits is its PRE-union frame schema, but
-    // the files are physically written with the union's types: a column
-    // name shared across tables at DIFFERENT types would be silently
-    // widened on disk and declaredRead would then hit a parquet type
-    // mismatch on the published version — fail loudly instead (the
-    // multi-table analogue of stageWithFeed's sidecar-from-fused rule;
-    // here the frame schema must stay authoritative because it is what
-    // the sequential path would have committed)
-    locally {
-      // nullability (incl. nested containsNull) is irrelevant — reads
-      // nullable-widen everything; only a physical TYPE change (int
-      // widened to long, decimal precision bumps) breaks the sidecar
-      val fusedTypes =
-        fused.schema.fields.map(f => f.name -> f.dataType.catalogString).toMap
-      pendings.foreach { p =>
-        val pc = p.table.fusedPartCols.headOption
-        p.frame.schema.fields.filterNot(f => pc.contains(f.name)).foreach { f =>
-          require(fusedTypes(f.name) == f.dataType.catalogString,
-            s"commitFused: column ${f.name} of ${p.table.fusedName} is " +
-              s"${f.dataType.catalogString} but another table in the batch " +
-              s"types it ${fusedTypes(f.name)} — the union would widen " +
-              "the physical files away from the committed sidecar schema")
+    // a write that stages no feed must not publish a STALE one from an
+    // aborted earlier operation
+    tables.foreach { t =>
+      deleteRecursively(t.stagingDir); deleteRecursively(t.feedStagingDir) }
+    val dests = pendings.flatMap { p =>
+      (p.frame, p.table.partitionCols, p.table.stagingDir) +:
+        p.feed.map(f => (f, Seq.empty[String], p.table.feedStagingDir)).toSeq
+    }
+    if (dests.sizeIs == 1) { val (df, pcols, dir) = dests.head; writeTo(df, dir, pcols) }
+    else {
+      val slots = tables.map(_.partitionCols.size).max
+      val fused = dests.zipWithIndex.map { case ((df, pcols, _), i) =>
+        pcols.zipWithIndex.foldLeft(df) { case (d, (c, j)) =>
+          d.withColumn(s"__fpart$j", col(c).cast("string"))
+        }.drop(pcols: _*).withColumn("__fdst", lit(i))
+      }.reduce(_.unionByName(_, allowMissingColumns = true))
+      // each sidecar is its PRE-union frame schema, but the files are
+      // physically written with the union's types: a column name shared
+      // across destinations at DIFFERENT types would be silently widened
+      // on disk and declaredRead would then hit a parquet type mismatch
+      // on the published version — fail loudly instead (nullability is
+      // irrelevant: reads nullable-widen everything)
+      val types = fused.schema.map(f => f.name -> f.dataType.catalogString).toMap
+      dests.foreach { case (df, pcols, dir) =>
+        df.schema.filterNot(f => pcols.contains(f.name)).foreach { f =>
+          require(types(f.name) == f.dataType.catalogString,
+            s"commitFused: column ${f.name} staged to ${dir.getFileName} is " +
+              s"${f.dataType.catalogString} but another destination of the " +
+              s"batch types it ${types(f.name)} — the union would widen the " +
+              "physical files away from the committed sidecar schema")
         }
       }
+      // outside the `.staging_*` namespace, so no table's staging dir
+      // can be this batch's scratch
+      val scratch = Paths.get(roots.head, s".fused_${tables.head.name}")
+      writeTo(fused, scratch, "__fdst" +: (0 until slots).map(j => s"__fpart$j"))
+      dests.zipWithIndex.foreach { case ((_, pcols, dir), i) =>
+        val out = scratch.resolve(s"__fdst=$i")
+        if (Files.isDirectory(out)) moveTree(out, dir, pcols, slots)
+      }
+      deleteRecursively(scratch)
+      pendings.foreach(p => p.feed.foreach(f => finishFeed(p.table,
+        StructType(fused.schema.filter(c => f.columns.contains(c.name))))))
     }
-    val scratch = Paths.get(roots.head, ".staging_fused")
-    deleteRecursivelyIn(scratch)
-    fused.write.mode("overwrite")
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .partitionBy("__fdst", "__fpart").parquet(scratch.toString)
-    pendings.foreach(p => p.table.rearrangeFused(scratch, p.schemaDDL,
-      p.metaMap))
-    deleteRecursivelyIn(scratch)
+    pendings.foreach { p =>
+      val dir = p.table.stagingDir
+      Files.createDirectories(dir)
+      // schema sidecar: what lets readDir serve an EMPTY partitioned
+      // snapshot (the partitioned writer emits no files for one)
+      Files.writeString(dir.resolve("_schema_ddl"), p.frame.schema.toDDL)
+      p.table.writeMeta(dir, p.metaMap)
+    }
     pendings.foreach { p => p.afterStage(); p.table.publish() }
   }
 
-  /** The single-pending fallback — the plain one-table staged write. */
-  private def commitOne(p: Pending): Unit = {
-    val t = p.table
-    t.writeTo(p.frame, t.stagingDir, carryMeta = false)
-    if (p.metaMap.nonEmpty) t.writeMeta(t.stagingDir, p.metaMap)
-    p.afterStage()
-    t.publish()
+  /** Complete a table's staged change feed: write its `_schema_fp`,
+    * after staging an EMPTY feed when there is none (a layout rewrite, or
+    * a DML whose feed branch had no rows) — changesSince's feed fast path
+    * needs every version's feed, so coverage must stay contiguous. */
+  private def finishFeed(t: LakeTable, schema: StructType): Unit = {
+    val dir = t.feedStagingDir
+    if (!Files.isDirectory(dir))
+      writeTo(t.spark.createDataFrame(t.spark.sparkContext.emptyRDD[Row], schema),
+        dir, Nil)
+    Files.writeString(dir.resolve("_schema_fp"), t.schemaFingerprint(schema))
   }
 
-  private def deleteRecursivelyIn(p: java.nio.file.Path): Unit =
+  /** Stage `df` as parquet under `dir`, Hive-partitioned by `partitionBy`.
+    * No _SUCCESS marker: LakeTable's commit marker is the atomic CURRENT
+    * pointer swap, not the Hadoop job-level _SUCCESS file — a staged dir
+    * is invisible until publish() regardless, so the marker is pure
+    * overhead (~100 ms/write measured round 16; at object-store scale,
+    * one fewer PUT per commit). */
+  private def writeTo(df: DataFrame, dir: Path, partitionBy: Seq[String]): Unit = {
+    val w = df.write.mode("overwrite")
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
+      .parquet(dir.toString)
+  }
+
+  /** Move one destination's slice of the union write (`__fdst=i`) to its
+    * staging dir: each `__fpart<j>=V` level becomes `<cols(j)>=V` (the
+    * writer escaped V exactly as the Hive layout does), levels beyond
+    * `cols` — all-NULL for this destination — are flattened, and a
+    * subtree with no slot level left moves with ONE rename. */
+  private def moveTree(src: Path, dst: Path, cols: Seq[String], slots: Int): Unit =
+    if (slots == 0) Files.move(src, dst)
+    else listing(src).foreach { d =>
+      if (cols.isEmpty) moveTree(d, dst, Nil, slots - 1)
+      else {
+        Files.createDirectories(dst)
+        val v = d.getFileName.toString.split("=", 2)(1)
+        moveTree(d, dst.resolve(s"${cols.head}=$v"), cols.tail, slots - 1)
+      }
+    }
+
+  /** A directory's entries, materialized BEFORE the caller mutates
+    * anything: a DirectoryStream is only weakly consistent under
+    * concurrent modification, and renaming entries mid-iteration could
+    * skip one on some filesystems. */
+  private def listing(dir: Path): Seq[Path] =
+    scala.util.Using.resource(Files.list(dir))(
+      _.toArray.toSeq.map(_.asInstanceOf[Path]))
+
+  private def deleteRecursively(p: Path): Unit =
     if (Files.exists(p))
-      Files.walk(p).sorted(Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(Files.delete(_))
+      Files.walk(p).sorted(Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
 
   /** Effective-dated lookup against an SCD2 snapshot (as written by
     * `upsertScd2`): each fact row joins the ONE dimension version whose

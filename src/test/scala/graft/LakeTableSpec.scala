@@ -194,63 +194,83 @@ class LakeTableSpec extends SparkSpec {
     assert(prev == Set((1L, "a", "x"), (3L, "c", null)))
   }
 
+  /** A layout-only rewrite on a change-feed table records an EMPTY feed
+    * dir at the version it produced (contiguous feed coverage). */
+  private def assertEmptyFeedRecorded(t: LakeTable, root: String): Unit = {
+    assert(Files.isDirectory(
+      java.nio.file.Paths.get(root, "t", "changes", s"v${t.version}")))
+    assert(t.changesSince(t.version - 1).count() == 0)
+  }
+
   test("compact reduces file count without changing content") {
-    val t = LakeTable(spark, freshRoot, "t", Seq("id"))
-    t.create(df((0L until 50L).map(i => (i, s"v$i", s"p${i % 5}")): _*))
-    val before = rows(t)
-    t.compact(1)
-    assert(rows(t) == before)
-    val files = java.nio.file.Files.list(t.currentDir).toArray
-      .map(_.toString).count(_.endsWith(".parquet"))
-    assert(files == 1)
+    for (changeFeed <- Seq(false, true)) {
+      val root = freshRoot
+      val t = LakeTable(spark, root, "t", Seq("id"), changeFeed = changeFeed)
+      t.create(df((0L until 50L).map(i => (i, s"v$i", s"p${i % 5}")): _*))
+      val before = rows(t)
+      t.compact(1)
+      assert(rows(t) == before)
+      val files = java.nio.file.Files.list(t.currentDir).toArray
+        .map(_.toString).count(_.endsWith(".parquet"))
+      assert(files == 1, s"changeFeed=$changeFeed")
+      if (changeFeed) assertEmptyFeedRecorded(t, root)
+    }
   }
 
   test("optimizeZorder preserves content and clusters both dimensions") {
     import org.apache.spark.sql.functions.{col, input_file_name, max => fmax, min => fmin}
-    val t = LakeTable(spark, freshRoot, "t", Seq("id"))
-    // 32×32 uniform grid, row-major — unclustered on y
-    val grid = (0L until 1024L).map(i => (i, i % 32, i / 32)).toDF("id", "x", "y")
-    t.create(grid)
-    t.optimizeZorder("x", "y", numFiles = 4)
-    val out = t.read.select("id", "x", "y").as[(Long, Long, Long)].collect().toSet
-    assert(out == grid.as[(Long, Long, Long)].collect().toSet) // layout-only change
-    // each file should cover roughly a quadrant of (x, y) space, not a
-    // full-width stripe: avg per-file bounding-box area well under half
-    // the total area
-    val areas = t.read.withColumn("f", input_file_name())
-      .groupBy("f")
-      .agg(((fmax(col("x")) - fmin(col("x"))) *
-        (fmax(col("y")) - fmin(col("y")))).as("area"))
-      .select("area").as[Long].collect()
-    assert(areas.nonEmpty)
-    val full = 31L * 31L
-    assert(areas.sum.toDouble / areas.length <= full / 2.0,
-      s"files not clustered: areas=${areas.toSeq}")
+    for (changeFeed <- Seq(false, true)) {
+      val root = freshRoot
+      val t = LakeTable(spark, root, "t", Seq("id"), changeFeed = changeFeed)
+      // 32×32 uniform grid, row-major — unclustered on y
+      val grid = (0L until 1024L).map(i => (i, i % 32, i / 32)).toDF("id", "x", "y")
+      t.create(grid)
+      t.optimizeZorder("x", "y", numFiles = 4)
+      val out = t.read.select("id", "x", "y").as[(Long, Long, Long)].collect().toSet
+      assert(out == grid.as[(Long, Long, Long)].collect().toSet) // layout-only change
+      // each file should cover roughly a quadrant of (x, y) space, not a
+      // full-width stripe: avg per-file bounding-box area well under half
+      // the total area
+      val areas = t.read.withColumn("f", input_file_name())
+        .groupBy("f")
+        .agg(((fmax(col("x")) - fmin(col("x"))) *
+          (fmax(col("y")) - fmin(col("y")))).as("area"))
+        .select("area").as[Long].collect()
+      assert(areas.length == 4, s"changeFeed=$changeFeed: ${areas.toSeq}")
+      val full = 31L * 31L
+      assert(areas.sum.toDouble / areas.length <= full / 2.0,
+        s"changeFeed=$changeFeed: files not clustered: areas=${areas.toSeq}")
+      if (changeFeed) assertEmptyFeedRecorded(t, root)
+    }
   }
 
   test("optimizeZorder on THREE columns preserves content and clusters each dim") {
     import org.apache.spark.sql.functions.{col, input_file_name, max => fmax, min => fmin}
-    val t = LakeTable(spark, freshRoot, "t", Seq("id"))
-    // 16^3 uniform grid, row-major — unclustered on y and z
-    val grid = (0L until 4096L).map(i => (i, i % 16, (i / 16) % 16, i / 256))
-      .toDF("id", "x", "y", "z")
-    t.create(grid)
-    t.optimizeZorder(Seq("x", "y", "z"), numFiles = 8)
-    val out = t.read.select("id", "x", "y", "z")
-      .as[(Long, Long, Long, Long)].collect().toSet
-    assert(out == grid.as[(Long, Long, Long, Long)].collect().toSet)
-    // per-file bounding box should cover an octant-ish region, not a
-    // full-width slab: avg normalized volume well under half the cube
-    val vols = t.read.withColumn("f", input_file_name())
-      .groupBy("f")
-      .agg((((fmax(col("x")) - fmin(col("x"))) + 1) *
-        ((fmax(col("y")) - fmin(col("y"))) + 1) *
-        ((fmax(col("z")) - fmin(col("z"))) + 1)).as("vol"))
-      .select("vol").as[Long].collect()
-    assert(vols.nonEmpty)
-    val full = 16L * 16L * 16L
-    assert(vols.sum.toDouble / vols.length <= full / 2.0,
-      s"files not clustered: vols=${vols.toSeq}")
+    for (changeFeed <- Seq(false, true)) {
+      val root = freshRoot
+      val t = LakeTable(spark, root, "t", Seq("id"), changeFeed = changeFeed)
+      // 16^3 uniform grid, row-major — unclustered on y and z
+      val grid = (0L until 4096L).map(i => (i, i % 16, (i / 16) % 16, i / 256))
+        .toDF("id", "x", "y", "z")
+      t.create(grid)
+      t.optimizeZorder(Seq("x", "y", "z"), numFiles = 8)
+      val out = t.read.select("id", "x", "y", "z")
+        .as[(Long, Long, Long, Long)].collect().toSet
+      assert(out == grid.as[(Long, Long, Long, Long)].collect().toSet)
+      // per-file bounding box should cover an octant-ish region, not a
+      // full-width slab: avg normalized volume well under half the cube
+      val vols = t.read.withColumn("f", input_file_name())
+        .groupBy("f")
+        .agg((((fmax(col("x")) - fmin(col("x"))) + 1) *
+          ((fmax(col("y")) - fmin(col("y"))) + 1) *
+          ((fmax(col("z")) - fmin(col("z"))) + 1)).as("vol"))
+        .select("vol").as[Long].collect()
+      assert(vols.length == 8, s"changeFeed=$changeFeed: ${vols.toSeq}")
+      val full = 16L * 16L * 16L
+      assert(vols.sum.toDouble / vols.length <= full / 2.0,
+        s"changeFeed=$changeFeed: files not clustered: vols=${vols.toSeq}")
+      if (changeFeed) assertEmptyFeedRecorded(t, root)
+    }
   }
 
   test("pruned upsert: key moving to a new partition leaves no stale row behind") {
@@ -528,12 +548,20 @@ class LakeTableSpec extends SparkSpec {
 
   // ---- write-time change feed (round 9) ----
 
+  /** No residue of the staged union write's discriminators (`__fdst=i`,
+    * `__fpart<j>=V` dirs) anywhere under `dir`. */
+  private def noDiscriminatorDirs(dir: java.nio.file.Path): Boolean =
+    scala.util.Using.resource(Files.walk(dir))(_.noneMatch { p =>
+      val n = p.getFileName.toString
+      n.startsWith("__fdst=") || n.startsWith("__fpart")
+    })
+
   private def changeSet(t: LakeTable, since: Int) =
     t.changesSince(since).select("id", "_change_type", "v")
       .as[(Long, String, String)].collect().toSet
 
   test("fused feed write (round-16 wave 5): the staged layout is the " +
-      "canonical one — no __dest/_change_type leak into reads, an " +
+      "canonical one — no __fdst/_change_type leak into reads, an " +
       "EMPTY-feed DML keeps feed coverage contiguous, and replay " +
       "crosses fused and pre-fused dirs") {
     val root = freshRoot
@@ -543,15 +571,15 @@ class LakeTableSpec extends SparkSpec {
     // fused upsert (data + feed in one action)
     t.upsert(df((2L, "B", "y"), (3L, "c", "z")))
     // reads expose ONLY the logical schema — the physical all-NULL
-    // _change_type alignment column and the __dest discriminator must
+    // _change_type alignment column and the __fdst discriminator must
     // be invisible through every read path
     assert(t.read.columns.toSeq == Seq("id", "v", "p"))
     assert(t.readVersion(t.availableVersions.last).columns.toSeq ==
       Seq("id", "v", "p"))
     assert(rows(t) == Set((1L, "a", "x"), (2L, "B", "y"), (3L, "c", "z")))
     // no stray partition dirs in the published version
-    assert(!Files.isDirectory(t.currentDir.resolve("__dest=data")) &&
-      !Files.isDirectory(t.currentDir.resolve("__dest=feed")))
+    assert(noDiscriminatorDirs(t.currentDir) &&
+      noDiscriminatorDirs(java.nio.file.Paths.get(root, "t", "changes")))
     // NO-OP upsert: zero feed events, but the partitioned-writer-emits-
     // no-dir-for-an-empty-branch case must still record an (empty) feed
     // so coverage stays contiguous for the fast path
@@ -1107,8 +1135,8 @@ class LakeTableSpec extends SparkSpec {
     val cur = t.currentDir
     assert(Files.isDirectory(cur.resolve("p=y")) &&
       Files.isDirectory(cur.resolve("p=z")))
-    assert(!Files.isDirectory(cur.resolve("__dest=data")) &&
-      !Files.isDirectory(cur.resolve("__dest=feed")))
+    assert(noDiscriminatorDirs(cur) &&
+      noDiscriminatorDirs(java.nio.file.Paths.get(root, "t", "changes")))
     // hard-link reuse still applies: untouched p=x rode over from the donor
     assert(Files.isDirectory(cur.resolve("p=x")))
     // NULL partition value lands in the Hive default-partition dir
@@ -1165,8 +1193,9 @@ class LakeTableSpec extends SparkSpec {
     for (t <- Seq(a, b, c))
       assert(!t.read.columns.exists(n => n == "__fdst" || n == "__fpart"),
         s"${t.read.columns.toSeq}")
-    // the shared scratch dir is gone
-    assert(!Files.isDirectory(java.nio.file.Paths.get(root, ".staging_fused")))
+    // the batch's scratch dir (named after its first table) is gone
+    assert(!Files.isDirectory(java.nio.file.Paths.get(root, ".fused_a")))
+    for (t <- Seq(a, b, c)) assert(noDiscriminatorDirs(t.currentDir))
     // pruned merge still hard-links untouched partitions
     assert(Files.isDirectory(c.currentDir.resolve("p=x")) &&
       Files.isDirectory(c.currentDir.resolve("p=z")))
@@ -1227,5 +1256,108 @@ class LakeTableSpec extends SparkSpec {
       LakeTable(spark, root, "z", Seq("id")).pendingCreate(df((7L, "z", "q")))))
     assert(rows(a) == Set((1L, "A", "x"), (2L, "b", "y")))
     assert(a.version == 2)
+  }
+
+  // ---- one commit path: hint equivalence and multi-level feed tables ----
+
+  /** Inodes of every parquet file under each leaf partition dir of a
+    * version, keyed by the leaf's path relative to the version dir. */
+  private def leafInodes(dir: java.nio.file.Path): Map[String, Set[Any]] = {
+    import scala.jdk.CollectionConverters._
+    scala.util.Using.resource(Files.walk(dir))(_.iterator.asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toVector)
+      .groupBy(f => dir.relativize(f.getParent).toString)
+      .map { case (leaf, fs) => leaf -> fs.map(f => Files.getAttribute(f, "unix:ino"): Any).toSet }
+  }
+
+  /** The leaves of `cur` that are hard links of the same leaf in `donor`. */
+  private def linkedLeaves(donor: java.nio.file.Path,
+      cur: java.nio.file.Path): Set[String] = {
+    val before = leafInodes(donor)
+    leafInodes(cur).collect {
+      case (leaf, ino) if before.get(leaf).contains(ino) => leaf }.toSet
+  }
+
+  test("upsertWithDelete matchedPartsHint: a correct hint on a partitioned " +
+      "change-feed table gives the same rows, hard-linked partitions and " +
+      "changesSince as the self-derived merge") {
+    val root = freshRoot
+    def mk(name: String) = LakeTable(spark, root, name, Seq("id"),
+      partitionCols = Seq("p"), changeFeed = true)
+    val hinted = mk("h"); val plain = mk("d")
+    val init = df((1L, "a", "x"), (2L, "b", "y"), (3L, "c", "z"),
+      (4L, "d", "w"), (5L, "e", "v"))
+    hinted.create(init); plain.create(init)
+    val donors = Seq(hinted, plain).map(_.currentDir)
+    val v0 = hinted.version
+    // id 2 MOVES y → u (its old partition y is matched-only), id 3 is
+    // deleted in place, id 6 is new; w and v are untouched
+    val batch = df((2L, "B", "u"), (3L, "dead", "z"), (6L, "f", "x"))
+    val del = col("v") === "dead"
+    // the hint: the target partitions holding the batch's keys (2 in y,
+    // 3 in z; 6 matches nothing)
+    hinted.upsertWithDelete(batch, del,
+      matchedPartsHint = Some(Seq("y", "z").toDF("p")))
+    plain.upsertWithDelete(batch, del)
+    assert(rows(hinted) == rows(plain))
+    assert(rows(hinted) == Set((1L, "a", "x"), (2L, "B", "u"), (4L, "d", "w"),
+      (5L, "e", "v"), (6L, "f", "x")))
+    val linked = Seq(hinted, plain).zip(donors).map { case (t, d) =>
+      linkedLeaves(d, t.currentDir) }
+    assert(linked.head == linked(1))
+    assert(linked.head == Set("p=w", "p=v"), s"${linked.head}")
+    assert(changeSet(hinted, v0) == changeSet(plain, v0))
+    assert(changeSet(hinted, v0) == Set((2L, "update_preimage", "b"),
+      (2L, "update_postimage", "B"), (3L, "delete", "c"), (6L, "insert", "f")))
+  }
+
+  test("two-level-partitioned change-feed table: upsert (a key moving to " +
+      "a new leaf), delete and update keep the y=/m= layout, hard-link " +
+      "untouched leaves, and changesSince equals the snapshot diff") {
+    import java.nio.file.Paths
+    val root = freshRoot
+    def mk(name: String, cdf: Boolean) = LakeTable(spark, root, name,
+      Seq("id"), partitionCols = Seq("y", "m"), changeFeed = cdf)
+    // the change-feed table and a feed-less twin whose changesSince is
+    // the snapshot diff
+    val t = mk("t", cdf = true); val twin = mk("s", cdf = false)
+    def frame(rs: (Long, String, String, String)*) = rs.toDF("id", "v", "y", "m")
+    def all(x: LakeTable) = x.read.select("id", "v", "y", "m")
+      .as[(Long, String, String, String)].collect().toSet
+    def events(x: LakeTable, since: Int) = x.changesSince(since)
+      .select("id", "_change_type", "v", "y", "m")
+      .as[(Long, String, String, String, String)].collect().toSet
+    val init = frame((1L, "a", "y23", "jan"), (2L, "b", "y23", "feb"),
+      (3L, "c", "y24", "jan"), (4L, "d", "y24", "feb"))
+    t.create(init); twin.create(init)
+    /** Apply `op` to both tables; check rows, layout, links and the feed. */
+    def step(op: LakeTable => Unit, linked: Set[String]): Unit = {
+      val (donor, since) = (t.currentDir, t.version)
+      op(t); op(twin)
+      assert(all(t) == all(twin))
+      val leaves = leafInodes(t.currentDir).keySet
+      assert(leaves.forall(_.matches("y=[^/]+/m=[^/]+")), s"$leaves")
+      assert(noDiscriminatorDirs(t.currentDir))
+      assert(linkedLeaves(donor, t.currentDir) == linked)
+      // the feed was recorded (flat) for this version, and answers
+      // changesSince identically to the twin's snapshot diff
+      val feedDir = Paths.get(root, "t", "changes", s"v${t.version}")
+      assert(Files.isDirectory(feedDir))
+      assert(scala.util.Using.resource(Files.list(feedDir))(
+        _.noneMatch(Files.isDirectory(_))), "feed dir must be flat")
+      assert(events(t, since) == events(twin, twin.version - 1))
+      assert(events(t, since).nonEmpty)
+    }
+    // id 1 updated in place, id 2 MOVES feb → a new leaf y25/mar, id 5 new
+    step(_.upsert(frame((1L, "A", "y23", "jan"), (2L, "b", "y25", "mar"),
+      (5L, "e", "y24", "jan"))), linked = Set("y=y24/m=feb"))
+    assert(Files.isDirectory(t.currentDir.resolve("y=y25/m=mar")))
+    assert(!Files.exists(t.currentDir.resolve("y=y23/m=feb")))
+    step(_.delete($"id" === 4L),
+      linked = Set("y=y23/m=jan", "y=y24/m=jan", "y=y25/m=mar"))
+    step(_.update($"id" === 3L, Map("v" -> lit("C"))),
+      linked = Set("y=y23/m=jan", "y=y25/m=mar"))
+    assert(all(t) == Set((1L, "A", "y23", "jan"), (2L, "b", "y25", "mar"),
+      (3L, "C", "y24", "jan"), (5L, "e", "y24", "jan")))
   }
 }
