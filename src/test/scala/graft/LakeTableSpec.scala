@@ -560,8 +560,10 @@ class LakeTableSpec extends SparkSpec {
     t.changesSince(since).select("id", "_change_type", "v")
       .as[(Long, String, String)].collect().toSet
 
+  // `__dest` in the name is the union write's destination discriminator,
+  // whose column is now called `__fdst`
   test("fused feed write (round-16 wave 5): the staged layout is the " +
-      "canonical one — no __fdst/_change_type leak into reads, an " +
+      "canonical one — no __dest/_change_type leak into reads, an " +
       "EMPTY-feed DML keeps feed coverage contiguous, and replay " +
       "crosses fused and pre-fused dirs") {
     val root = freshRoot
