@@ -48,10 +48,12 @@ object SparkEntry {
     df
   }
 
-  /** The lakehouse queries' table root for scale-factor dir `dir`: a
-    * sub-dir of one temp dir per JVM, deleted at exit — so two processes
-    * running the same scale factor (a test run and a Verify run) never
-    * share table dirs and delete each other's files mid-read. */
+  /** The scratch root for scale-factor dir `dir` of every query that
+    * writes files (lake tables, the orchestrator run, format
+    * round-trips, skipping layouts): a sub-dir of one temp dir per JVM,
+    * deleted at exit — so two processes running the same scale factor
+    * (a test run and a Verify run) never share these dirs and delete
+    * each other's files mid-read. */
   private def tableRoot(dir: String): String =
     tablesTmp.resolve(dir.replaceAll("[^A-Za-z0-9]", "_")).toString
 
@@ -188,7 +190,7 @@ object SparkEntry {
     // final merged-table state
     "q_orchestrator" -> ((s, dir) => {
       import graft.pipelines.Orchestrator
-      val root = s"/tmp/graft_orch/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = s"${tableRoot(dir)}/orch"
       Orchestrator.deleteRecursively(root)
       Orchestrator.runAll(s, dir, root)
       def summ(entity: String, keys: Seq[String], keyCol: String) =
@@ -205,7 +207,7 @@ object SparkEntry {
     // → schema-inferred read → aggregate; oracle aggregates the parquet
     // original, so inference + value fidelity are both checked
     "q_json_source" -> ((s, dir) => {
-      val path = s"/tmp/graft_fmt/${dir.replaceAll("[^A-Za-z0-9]", "_")}/orders_json"
+      val path = s"${tableRoot(dir)}/fmt/orders_json"
       Tables.load(s, dir, "orders")
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
         .write.mode("overwrite").json(path)
@@ -218,7 +220,7 @@ object SparkEntry {
 
     // ORC source round-trip (the other built-in columnar format)
     "q_orc_source" -> ((s, dir) => {
-      val path = s"/tmp/graft_fmt/${dir.replaceAll("[^A-Za-z0-9]", "_")}/orders_orc"
+      val path = s"${tableRoot(dir)}/fmt/orders_orc"
       Tables.load(s, dir, "orders")
         .select("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate")
         .write.mode("overwrite").orc(path)
@@ -4182,7 +4184,7 @@ object SparkEntry {
         hdr +: rows.map(r => Seq(r.getLong(0).toString, r.getLong(1).toString,
           r.getDouble(2).toString)).toSeq
       val (even, odd) = src.partition(_.getLong(0) % 2 == 0)
-      val path = s"/tmp/graft_xlsx/${dir.replaceAll("[^A-Za-z0-9]", "_")}/orders.xlsx"
+      val path = s"${tableRoot(dir)}/xlsx/orders.xlsx"
       graft.sources.Xlsx.write(path,
         Seq("even" -> sheet(even), "odd" -> sheet(odd)))
       graft.sources.Xlsx.readAllSheets(s, path)
@@ -4354,7 +4356,7 @@ object SparkEntry {
     // min/max intersect it — result equality is the oracle, file-count
     // pruning is pinned in FileSkippingSpec
     "q_skipping_scan" -> ((s, dir) => {
-      val dst = s"/tmp/graft_skip/${dir.replaceAll("[^A-Za-z0-9]", "_")}/orders"
+      val dst = s"${tableRoot(dir)}/skip/orders"
       Tables.load(s, dir, "orders")
         .repartitionByRange(8, col("o_totalprice"))
         .write.mode("overwrite").parquet(dst)
@@ -4371,7 +4373,7 @@ object SparkEntry {
     // record counts, zero data pages — must equal the real count
     "q_fast_count" -> ((s, dir) => {
       import s.implicits._
-      val dst = s"/tmp/graft_skip/${dir.replaceAll("[^A-Za-z0-9]", "_")}/orders_fc"
+      val dst = s"${tableRoot(dir)}/skip/orders_fc"
       Tables.load(s, dir, "orders").filter(col("o_orderkey") % 3 =!= 0)
         .repartition(8)
         .write.mode("overwrite").parquet(dst)
@@ -4397,7 +4399,7 @@ object SparkEntry {
     // and prune nothing, the Bloom bitmap prunes to ~1 file (pinned in
     // FileSkippingSpec); result equality is the oracle
     "q_bloom_skip" -> ((s, dir) => {
-      val dst = s"/tmp/graft_bloomskip/${dir.replaceAll("[^A-Za-z0-9]", "_")}/orders"
+      val dst = s"${tableRoot(dir)}/bloomskip/orders"
       Tables.load(s, dir, "orders")
         .repartitionByRange(8, col("o_orderdate"))
         .write.mode("overwrite").parquet(dst)
@@ -4413,7 +4415,7 @@ object SparkEntry {
     // in FileSkippingSpec); answer equality is the oracle
     "q_zorder_skip" -> ((s, dir) => {
       import graft.functions.ZOrder
-      val dst = s"/tmp/graft_zskip/${dir.replaceAll("[^A-Za-z0-9]", "_")}/orders"
+      val dst = s"${tableRoot(dir)}/zskip/orders"
       val o = Tables.load(s, dir, "orders")
       val b = o.agg(min(col("o_totalprice")).as("p_lo"),
         max(col("o_totalprice")).as("p_hi"),
@@ -4506,7 +4508,7 @@ object SparkEntry {
     // → distributed binaryFile+DataFileStream read-back
     "q_avro_roundtrip" -> ((s, dir) => {
       import org.apache.avro.Schema.Type
-      val root = s"/tmp/graft_avro/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val root = s"${tableRoot(dir)}/avro"
       val src = Tables.load(s, dir, "nation")
         .select(col("n_nationkey").cast("long"), col("n_name"),
           col("n_regionkey").cast("long"))

@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec, ShuffledHashJoinExec, SortMergeJoinExec}
 
 /** Plan linter: the 100 TB design checklist this repo audits by hand
-  * (PlanAudit) and pins in CI (PlanShapeSpec), packaged as a library API
+  * (PlanDump) and pins in CI (PlanShapeSpec), packaged as a library API
   * over any DataFrame's physical plan. Every rule is a scale smell that
   * is invisible at lab size and dominant at cluster size:
   *

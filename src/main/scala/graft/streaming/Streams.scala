@@ -1,8 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftStreamingBridge, Row, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
+
+import graft.table.{IncrementalView, LakeTable}
 
 /** Structured Streaming coverage (SURVEY.md §2.10): the reference's
   * file-arrival micro-batching mapped to file-source streaming with
@@ -496,22 +499,11 @@ object Streams {
     * every micro-batch is deduplicated on the merge key and upserted into
     * the LakeTable via foreachBatch — idempotent per batch, so at-least-
     * once delivery still yields exactly-once table state. */
-  def upsertStream(streamDf: DataFrame, table: graft.table.LakeTable,
-      mergeKeys: Seq[String], orderCol: String): Unit = {
-    val q = streamDf.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val deduped = graft.ops.CoreOps.latestWins(mergeKeys, orderCol)(batch)
-        table.upsert(deduped)
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    // the MERGE internals are batch executions (listener-visible); this
-    // registers the stream-side micro-batch plan with an active capture
-    // scope so the per-query streaming lint gate sees foreachBatch sinks
-    val qe = org.apache.spark.sql.GraftStreamingBridge.lastExecution(q)
-    drainCapture.get.foreach(buf =>
-      qe.foreach(e => buf += "foreachbatch_upsert" -> e))
-  }
+  def upsertStream(streamDf: DataFrame, table: LakeTable,
+      mergeKeys: Seq[String], orderCol: String): Unit =
+    drain(streamDf, "foreachbatch_upsert") { (batch, _) =>
+      table.upsert(graft.ops.CoreOps.latestWins(mergeKeys, orderCol)(batch))
+    }
 
   /** Streaming SCD Type 2 sink: each micro-batch is deduplicated on the
     * merge key (latest wins) and applied as a history-preserving upsert —
@@ -519,123 +511,56 @@ object Streams {
     * deduplicated batch to its effective timestamp (e.g. its max event
     * time), keeping reruns of a replayed batch idempotent: an identical
     * batch at the same asOf is a no-op by upsertScd2's change detection. */
-  def scd2Stream(streamDf: DataFrame, table: graft.table.LakeTable,
+  def scd2Stream(streamDf: DataFrame, table: LakeTable,
       mergeKeys: Seq[String], orderCol: String, trackCols: Seq[String],
-      asOfForBatch: DataFrame => java.sql.Timestamp): Unit = {
-    val q = streamDf.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val deduped = graft.ops.CoreOps.latestWins(mergeKeys, orderCol)(batch)
-          table.upsertScd2(deduped.drop(orderCol), trackCols,
-            asOfForBatch(deduped))
-        }
+      asOfForBatch: DataFrame => java.sql.Timestamp): Unit =
+    drain(streamDf, "foreachbatch_scd2") { (batch, _) =>
+      if (!batch.isEmpty) {
+        val deduped = graft.ops.CoreOps.latestWins(mergeKeys, orderCol)(batch)
+        table.upsertScd2(deduped.drop(orderCol), trackCols,
+          asOfForBatch(deduped))
       }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val qe = org.apache.spark.sql.GraftStreamingBridge.lastExecution(q)
-    drainCapture.get.foreach(buf =>
-      qe.foreach(e => buf += "foreachbatch_scd2" -> e))
-  }
+    }
 
   /** Streaming incremental view maintenance: every micro-batch of an
-    * APPEND-ONLY stream contributes a pure-insert delta, so the
-    * [[graft.table.IncrementalView]] rule collapses to
+    * APPEND-ONLY stream contributes a pure-insert delta (its rows tagged
+    * `insert`), applied by the batch
+    * [[graft.table.IncrementalView.applySumDelta]] core —
     * (count, exact-decimal sum) per key MERGEd additively into the
     * stored view — a dashboard aggregate kept fresh per batch without
     * re-aggregating history, and without the unbounded operator state a
     * native streaming aggregation would carry on an open key domain
     * (the view table IS the state, and it's spillable/queryable).
-    * Exactly-once under batch REPLAY (Delta's txnAppId/txnVersion
-    * pattern): the last-applied batch id is committed in the view
-    * table's transactional `_meta.json` IN THE SAME atomic publish as
-    * the delta it covers, and already-applied batch ids are skipped —
-    * so at-least-once delivery (a retried/restarted drain) cannot
-    * double-count, and there is no crash window between "apply" and
-    * "remember". `appId` scopes the marker when several streams
-    * maintain one view. As with Delta's pattern, batch ids are only
-    * meaningful within one checkpoint lineage: a production deployment
-    * sets `checkpointLocation` so restarts resume the same numbering;
-    * re-draining the same source state without one is also safe (same
-    * ids, all skipped). */
-  def maintainSumViewStream(streamDf: DataFrame, view: graft.table.LakeTable,
-      keyCols: Seq[String], valueCol: String, appId: String = "ivm"): Unit = {
-    val metaKey = s"ivm_last_batch_$appId"
-    val q = streamDf.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val last = view.meta.get(metaKey).map(_.toLong).getOrElse(-1L)
-        if (batchId > last && !batch.isEmpty) {
-          val delta = batch.groupBy(keyCols.map(col): _*).agg(
-            count(lit(1)).as("d_n"),
-            sum(col(valueCol).cast("decimal(20,4)")).as("d_sum"))
-          val cur = view.read.select(
-            keyCols.map(col) :+ col("n").as("v_n") :+
-              col("sum_value").as("v_sum"): _*)
-          val changed = delta.join(cur, keyCols, "left")
-            .select(keyCols.map(col) ++ Seq(
-              (coalesce(col("v_n"), lit(0L)) + col("d_n")).as("n"),
-              (coalesce(col("v_sum"), lit(0).cast("decimal(30,4)")) +
-                coalesce(col("d_sum"), lit(0).cast("decimal(20,4)")))
-                .cast("decimal(30,4)").as("sum_value")): _*)
-          view.upsert(changed, meta = Map(metaKey -> batchId.toString))
-        }
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val qe = org.apache.spark.sql.GraftStreamingBridge.lastExecution(q)
-    drainCapture.get.foreach(buf =>
-      qe.foreach(e => buf += "foreachbatch_ivm" -> e))
-  }
+    * Exactly-once under batch REPLAY via [[drainMarked]]: the
+    * last-applied batch id commits IN THE SAME atomic publish as the
+    * delta it covers. `appId` scopes the marker when several streams
+    * maintain one view. */
+  def maintainSumViewStream(streamDf: DataFrame, view: LakeTable,
+      keyCols: Seq[String], valueCol: String, appId: String = "ivm"): Unit =
+    drainMarked(streamDf, "foreachbatch_ivm", view,
+      s"ivm_last_batch_$appId") { (batch, _, meta) =>
+      IncrementalView.applySumDelta(
+        batch.withColumn("_change_type", lit("insert")), view, keyCols,
+        valueCol, meta)
+    }
 
   /** The full continuous-IVM loop: subscribe to a base table's CDC
     * stream ([[graft.table.LakeTable.readChangeFeedStream]]) and apply
     * each micro-batch's SIGNED deltas to the stored view — inserts and
     * update post-images count +1/+value, deletes and pre-images
-    * −1/−value, exactly the batch
-    * [[graft.table.IncrementalView.maintainSumView]] rule, so the view
-    * tracks the base through arbitrary DML (not just appends) with no
-    * snapshot reads anywhere: writer → change log → subscriber →
-    * view. Groups whose count reaches zero are deleted. Same
-    * transactional batch-id idempotence as [[maintainSumViewStream]]
-    * (the marker commits WITH the delta), same checkpoint-lineage
-    * scope. */
+    * −1/−value — via the batch [[graft.table.IncrementalView.applySumDelta]]
+    * core, so the view tracks the base through arbitrary DML (not just
+    * appends) with no snapshot reads anywhere: writer → change log →
+    * subscriber → view. Groups whose count reaches zero are deleted in
+    * the same atomic commit that merges the survivors and records the
+    * batch marker ([[drainMarked]]). */
   def maintainSumViewFromChangeFeed(feedStream: DataFrame,
-      view: graft.table.LakeTable, keyCols: Seq[String], valueCol: String,
-      appId: String = "cdc"): Unit = {
-    val metaKey = s"ivm_last_batch_$appId"
-    val q = feedStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val last = view.meta.get(metaKey).map(_.toLong).getOrElse(-1L)
-        if (batchId > last && !batch.isEmpty) {
-          val sign = when(col("_change_type")
-            .isin("insert", "update_postimage"), lit(1L)).otherwise(lit(-1L))
-          val delta = batch.groupBy(keyCols.map(col): _*).agg(
-            sum(sign).as("d_n"),
-            sum(col(valueCol).cast("decimal(20,4)") * sign).as("d_sum"))
-          val cur = view.read.select(
-            keyCols.map(col) :+ col("n").as("v_n") :+
-              col("sum_value").as("v_sum"): _*)
-          val changed = delta.join(cur, keyCols, "left")
-            .select(keyCols.map(col) ++ Seq(
-              (coalesce(col("v_n"), lit(0L)) + col("d_n")).as("n"),
-              (coalesce(col("v_sum"), lit(0).cast("decimal(30,4)")) +
-                coalesce(col("d_sum"), lit(0).cast("decimal(20,4)")))
-                .cast("decimal(30,4)").as("sum_value")): _*)
-            .localCheckpoint(true) // referenced twice in the merge plan
-          // extinct groups (n<=0) are removed in the SAME atomic commit
-          // that merges the survivors and records the batch marker — a
-          // separate delete commit would leave a crash window where the
-          // zombie rows persist forever (the replayed batch is skipped
-          // by its marker, so the delete never re-runs)
-          view.upsertWithDelete(changed, col("n") <= 0L,
-            meta = Map(metaKey -> batchId.toString))
-        }
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val qe = org.apache.spark.sql.GraftStreamingBridge.lastExecution(q)
-    drainCapture.get.foreach(buf =>
-      qe.foreach(e => buf += "foreachbatch_ivm_cdc" -> e))
-  }
+      view: LakeTable, keyCols: Seq[String], valueCol: String,
+      appId: String = "cdc"): Unit =
+    drainMarked(feedStream, "foreachbatch_ivm_cdc", view,
+      s"ivm_last_batch_$appId") { (batch, _, meta) =>
+      IncrementalView.applySumDelta(batch, view, keyCols, valueCol, meta)
+    }
 
   /** Continuous MIN/MAX (+count/sum) view maintenance from the base
     * table's CDC stream: each micro-batch applies the FULL batch
@@ -643,9 +568,7 @@ object Streams {
     * threatened-group rescan against the current base snapshot, atomic
     * merge-with-extinction — via the shared
     * [[graft.table.IncrementalView.applyMinMaxDelta]] core, with the
-    * same transactional batch-id idempotence as
-    * [[maintainSumViewFromChangeFeed]] (marker commits WITH the delta
-    * and the extinction deletes; replayed batches are skipped).
+    * batch-id marker of [[drainMarked]] riding the same commit.
     *
     * Rescan consistency: the rescan reads the base's CURRENT snapshot,
     * which under the AvailableNow drain contract (writes complete, then
@@ -655,24 +578,14 @@ object Streams {
     * of the batch being applied); later batches self-heal it, because
     * any event that invalidates the value re-threatens the group. */
   def maintainMinMaxViewFromChangeFeed(feedStream: DataFrame,
-      base: graft.table.LakeTable, view: graft.table.LakeTable,
+      base: LakeTable, view: LakeTable,
       keyCols: Seq[String], valueCol: String,
-      appId: String = "mmcdc"): Unit = {
-    val metaKey = s"ivm_last_batch_$appId"
-    val q = feedStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val last = view.meta.get(metaKey).map(_.toLong).getOrElse(-1L)
-        if (batchId > last && !batch.isEmpty)
-          graft.table.IncrementalView.applyMinMaxDelta(
-            batch, base.read, view, keyCols, valueCol,
-            meta = Map(metaKey -> batchId.toString))
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val qe = org.apache.spark.sql.GraftStreamingBridge.lastExecution(q)
-    drainCapture.get.foreach(buf =>
-      qe.foreach(e => buf += "foreachbatch_ivm_minmax" -> e))
-  }
+      appId: String = "mmcdc"): Unit =
+    drainMarked(feedStream, "foreachbatch_ivm_minmax", view,
+      s"ivm_last_batch_$appId") { (batch, _, meta) =>
+      IncrementalView.applyMinMaxDelta(
+        batch, base.read, view, keyCols, valueCol, meta)
+    }
 
   /** Continuous FULL-STATS (aux-backed) view maintenance from the base
     * table's CDC stream: each micro-batch applies the two-level rule —
@@ -690,29 +603,19 @@ object Streams {
     * ([[graft.plans.MvRewrite.FullStatsKind]]) streaming-fresh — pair
     * it with the post-drain `annotate` freshness pattern. */
   def maintainFullStatsViewFromChangeFeed(feedStream: DataFrame,
-      aux: graft.table.LakeTable, view: graft.table.LakeTable,
+      aux: LakeTable, view: LakeTable,
       keyCols: Seq[String], valueCol: String, auxBuckets: Int = 0,
-      appId: String = "flcdc"): Unit = {
-    val metaKey = s"ivm_last_batch_$appId"
-    val q = feedStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val last = view.meta.get(metaKey).map(_.toLong).getOrElse(-1L)
-        if (batchId > last && !batch.isEmpty)
-          // spanId scoped by appId: several streams maintaining one
-          // view must not collide on the view's single span marker
-          // (stream B's batch 3 would read stream A's "b3" as
-          // already-applied and silently drop its own events)
-          graft.table.IncrementalView.applyFullStatsDelta(
-            batch, aux, view, keyCols, valueCol, auxBuckets,
-            spanId = s"$appId:b$batchId",
-            meta = Map(metaKey -> batchId.toString))
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val qe = org.apache.spark.sql.GraftStreamingBridge.lastExecution(q)
-    drainCapture.get.foreach(buf =>
-      qe.foreach(e => buf += "foreachbatch_ivm_fullstats" -> e))
-  }
+      appId: String = "flcdc"): Unit =
+    drainMarked(feedStream, "foreachbatch_ivm_fullstats", view,
+      s"ivm_last_batch_$appId") { (batch, batchId, meta) =>
+      // spanId scoped by appId: several streams maintaining one
+      // view must not collide on the view's single span marker
+      // (stream B's batch 3 would read stream A's "b3" as
+      // already-applied and silently drop its own events)
+      IncrementalView.applyFullStatsDelta(
+        batch, aux, view, keyCols, valueCol, auxBuckets,
+        spanId = s"$appId:b$batchId", meta = meta)
+    }
 
   /** Continuous FUSED-STATS view maintenance from the base table's CDC
     * stream: each micro-batch applies the full one-pass stats rule —
@@ -723,24 +626,14 @@ object Streams {
     * batch-id idempotence and rescan-consistency contract as
     * [[maintainMinMaxViewFromChangeFeed]]. */
   def maintainStatsViewFromChangeFeed(feedStream: DataFrame,
-      base: graft.table.LakeTable, view: graft.table.LakeTable,
+      base: LakeTable, view: LakeTable,
       keyCols: Seq[String], valueCol: String,
-      appId: String = "stcdc"): Unit = {
-    val metaKey = s"ivm_last_batch_$appId"
-    val q = feedStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val last = view.meta.get(metaKey).map(_.toLong).getOrElse(-1L)
-        if (batchId > last && !batch.isEmpty)
-          graft.table.IncrementalView.applyStatsDelta(
-            batch, base.read, view, keyCols, valueCol,
-            meta = Map(metaKey -> batchId.toString))
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val qe = org.apache.spark.sql.GraftStreamingBridge.lastExecution(q)
-    drainCapture.get.foreach(buf =>
-      qe.foreach(e => buf += "foreachbatch_ivm_stats" -> e))
-  }
+      appId: String = "stcdc"): Unit =
+    drainMarked(feedStream, "foreachbatch_ivm_stats", view,
+      s"ivm_last_batch_$appId") { (batch, _, meta) =>
+      IncrementalView.applyStatsDelta(
+        batch, base.read, view, keyCols, valueCol, meta)
+    }
 
   /** Continuous near-duplicate index maintenance from the document
     * table's CDC stream: each micro-batch runs the FULL batch rule —
@@ -759,55 +652,35 @@ object Streams {
     * comes from the snapshot, so a batch older than the snapshot
     * converges once the remaining events drain. */
   def maintainDedupIndexFromChangeFeed(feedStream: DataFrame,
-      docsTable: graft.table.LakeTable, di: graft.table.DedupIndex,
-      idCol: String, textCol: String, appId: String = "didxcdc"): Unit = {
-    val metaKey = s"dedupidx_last_batch_$appId"
-    val q = feedStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val last = di.pairs.meta.get(metaKey).map(_.toLong).getOrElse(-1L)
-        if (batchId > last && !batch.isEmpty)
-          di.applyChanges(batch, docsTable.read, idCol, textCol,
-            meta = Map(metaKey -> batchId.toString))
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val qe = org.apache.spark.sql.GraftStreamingBridge.lastExecution(q)
-    drainCapture.get.foreach(buf =>
-      qe.foreach(e => buf += "foreachbatch_dedup_index" -> e))
-  }
+      docsTable: LakeTable, di: graft.table.DedupIndex,
+      idCol: String, textCol: String, appId: String = "didxcdc"): Unit =
+    drainMarked(feedStream, "foreachbatch_dedup_index", di.pairs,
+      s"dedupidx_last_batch_$appId") { (batch, _, meta) =>
+      di.applyChanges(batch, docsTable.read, idCol, textCol, meta = meta)
+    }
 
   /** Continuous IVF-index maintenance from the embedding table's CDC
     * stream: each micro-batch re-assigns only the touched ids against
     * the frozen quantizer via the shared
     * [[graft.table.AnnIndex.applyChanges]] core — streaming and batch
     * index maintenance are one semantics by construction, with the same
-    * batch-id idempotence (marker rides the assignment merge) and
+    * batch-id idempotence (marker rides applyChanges' LAST commit — the
+    * ids sidecar when idParts > 0, hence `markerTable`) and
     * snapshot-consistency contract as the dedup-index drain. */
   def maintainAnnIndexFromChangeFeed(feedStream: DataFrame,
-      docsTable: graft.table.LakeTable, ai: graft.table.AnnIndex,
-      idCol: String, vecCol: String, appId: String = "anncdc"): Unit = {
-    val metaKey = s"annidx_last_batch_$appId"
-    val q = feedStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the marker rides applyChanges' LAST commit (the ids sidecar
-        // when idParts > 0) — read it from the same table
-        val last = ai.markerTable.meta.get(metaKey).map(_.toLong)
-          .getOrElse(-1L)
-        if (batchId > last && !batch.isEmpty)
-          ai.applyChanges(batch, docsTable.read, idCol, vecCol,
-            meta = Map(metaKey -> batchId.toString))
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val qe = org.apache.spark.sql.GraftStreamingBridge.lastExecution(q)
-    drainCapture.get.foreach(buf =>
-      qe.foreach(e => buf += "foreachbatch_ann_index" -> e))
-  }
+      docsTable: LakeTable, ai: graft.table.AnnIndex,
+      idCol: String, vecCol: String, appId: String = "anncdc"): Unit =
+    drainMarked(feedStream, "foreachbatch_ann_index", ai.markerTable,
+      s"annidx_last_batch_$appId") { (batch, _, meta) =>
+      ai.applyChanges(batch, docsTable.read, idCol, vecCol, meta = meta)
+    }
 
   /** Continuous JOIN-view maintenance, fact side: subscribe to the fact
     * table's CDC stream and enrich each SIGNED micro-batch against the
-    * current dim snapshot (stream-static equi-join) before merging the
-    * aggregated deltas — the dF ⋈ D term of
+    * current dim snapshot (stream-static equi-join,
+    * [[graft.table.IncrementalView.enrichFactDelta]]) before merging the
+    * aggregated deltas ([[graft.table.IncrementalView.applyJoinSumRows]])
+    * — the dF ⋈ D term of
     * [[graft.table.IncrementalView.maintainJoinSumView]]'s identity,
     * which is the whole delta while the dim is quiet. Dim churn is the
     * batch maintainer's job between drains — the standard production
@@ -816,93 +689,44 @@ object Streams {
     * [[maintainSumViewFromChangeFeed]] (marker commits WITH the delta;
     * replayed batches are skipped). */
   def maintainJoinSumViewFromChangeFeed(factFeedStream: DataFrame,
-      dim: DataFrame, view: graft.table.LakeTable, joinKeys: Seq[String],
+      dim: DataFrame, view: LakeTable, joinKeys: Seq[String],
       groupKeys: Seq[String], valueCol: String,
-      appId: String = "jvcdc"): Unit = {
-    val metaKey = s"ivm_last_batch_$appId"
-    val q = factFeedStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val last = view.meta.get(metaKey).map(_.toLong).getOrElse(-1L)
-        if (batchId > last && !batch.isEmpty) {
-          val factSide = batch.columns.toSet
-          val dGroup = (joinKeys ++ groupKeys.filterNot(factSide)).distinct
-          val sign = when(col("_change_type")
-            .isin("insert", "update_postimage"), lit(1L)).otherwise(lit(-1L))
-          val delta = batch.withColumn("__w", sign)
-            .join(dim.select(dGroup.map(col): _*), joinKeys)
-            .groupBy(groupKeys.map(col): _*).agg(
-              sum(col("__w")).as("d_n"),
-              sum(col(valueCol).cast("decimal(20,4)") * col("__w"))
-                .as("d_sum"))
-          val cur = view.read.select(
-            groupKeys.map(col) :+ col("n").as("v_n") :+
-              col("sum_value").as("v_sum"): _*)
-          val changed = delta.join(cur, groupKeys, "left")
-            .select(groupKeys.map(col) ++ Seq(
-              (coalesce(col("v_n"), lit(0L)) + col("d_n")).as("n"),
-              (coalesce(col("v_sum"), lit(0).cast("decimal(30,4)")) +
-                coalesce(col("d_sum"), lit(0).cast("decimal(20,4)")))
-                .cast("decimal(30,4)").as("sum_value")): _*)
-            .localCheckpoint(true) // referenced twice in the merge plan
-          // same atomic extinction contract as
-          // maintainSumViewFromChangeFeed: removals ride the marker-
-          // carrying commit, so no crash window can strand n<=0 rows
-          view.upsertWithDelete(changed, col("n") <= 0L,
-            meta = Map(metaKey -> batchId.toString))
-        }
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val qe = org.apache.spark.sql.GraftStreamingBridge.lastExecution(q)
-    drainCapture.get.foreach(buf =>
-      qe.foreach(e => buf += "foreachbatch_ivm_join" -> e))
-  }
+      appId: String = "jvcdc"): Unit =
+    drainMarked(factFeedStream, "foreachbatch_ivm_join", view,
+      s"ivm_last_batch_$appId") { (batch, _, meta) =>
+      IncrementalView.applyJoinSumRows(
+        IncrementalView.enrichFactDelta(batch, dim, joinKeys, groupKeys,
+          valueCol), view, groupKeys, meta)
+    }
 
   /** Continuous JOIN-view MIN/MAX maintenance, fact side: each signed
     * fact micro-batch is enriched against the current dim snapshot
-    * (stream-static equi-join, the dF ⋈ D term) and then runs the FULL
-    * batch join-min/max rule — per-(group, value) netting, insert-side
-    * extrema, threatened-group rescan THROUGH the join (fact snapshot ⋈
-    * dim restricted to the threatened groups' slice, every side under
-    * the measured broadcast gate), atomic merge-with-extinction — via
-    * the shared [[graft.table.IncrementalView.applyJoinMinMaxRows]]
-    * core. Dim churn is the batch maintainer's job between drains (the
-    * standard split, as in [[maintainJoinSumViewFromChangeFeed]]). Same
+    * (the dF ⋈ D term, [[graft.table.IncrementalView.enrichFactDelta]])
+    * and then runs the FULL batch join-min/max rule — per-(group,
+    * value) netting, insert-side extrema, threatened-group rescan
+    * THROUGH the join (fact snapshot ⋈ dim restricted to the threatened
+    * groups' slice, every side under the measured broadcast gate),
+    * atomic merge-with-extinction — via the shared
+    * [[graft.table.IncrementalView.applyJoinMinMaxRows]] core. Dim
+    * churn is the batch maintainer's job between drains (the standard
+    * split, as in [[maintainJoinSumViewFromChangeFeed]]). Same
     * batch-id idempotence (marker rides the merge commit) and the same
     * rescan-consistency contract as [[maintainMinMaxViewFromChangeFeed]]:
     * AvailableNow drains read the final fact snapshot so the drained
     * view equals the recompute; a live stream may briefly surface a
     * rescan-ahead extremum that later batches re-threaten and heal. */
   def maintainJoinMinMaxViewFromChangeFeed(factFeedStream: DataFrame,
-      fact: graft.table.LakeTable, dim: DataFrame,
-      view: graft.table.LakeTable, joinKeys: Seq[String],
+      fact: LakeTable, dim: DataFrame,
+      view: LakeTable, joinKeys: Seq[String],
       groupKeys: Seq[String], valueCol: String,
-      appId: String = "jmmcdc"): Unit = {
-    val metaKey = s"ivm_last_batch_$appId"
-    val q = factFeedStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val last = view.meta.get(metaKey).map(_.toLong).getOrElse(-1L)
-        if (batchId > last && !batch.isEmpty) {
-          val factSide = batch.columns.toSet
-          val dGroup = (joinKeys ++ groupKeys.filterNot(factSide)).distinct
-          val sign = when(col("_change_type")
-            .isin("insert", "update_postimage"), lit(1L)).otherwise(lit(-1L))
-          val rows = batch.withColumn("__w", sign)
-            .join(dim.select(dGroup.map(col): _*), joinKeys)
-            .select(groupKeys.map(col) :+
-              col(valueCol).cast("decimal(20,4)").as("__v") :+
-              col("__w"): _*)
-          graft.table.IncrementalView.applyJoinMinMaxRows(
-            rows, fact.read, dim, view, joinKeys, groupKeys, valueCol,
-            meta = Map(metaKey -> batchId.toString))
-        }
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val qe = org.apache.spark.sql.GraftStreamingBridge.lastExecution(q)
-    drainCapture.get.foreach(buf =>
-      qe.foreach(e => buf += "foreachbatch_ivm_join_minmax" -> e))
-  }
+      appId: String = "jmmcdc"): Unit =
+    drainMarked(factFeedStream, "foreachbatch_ivm_join_minmax", view,
+      s"ivm_last_batch_$appId") { (batch, _, meta) =>
+      IncrementalView.applyJoinMinMaxRows(
+        IncrementalView.enrichFactDelta(batch, dim, joinKeys, groupKeys,
+          valueCol),
+        fact.read, dim, view, joinKeys, groupKeys, valueCol, meta)
+    }
 
   /** Two-feed continuous JOIN-view maintenance (sum): subscribe to
     * BOTH tables' CDC streams — so churn on EITHER side wakes the
@@ -932,13 +756,13 @@ object Streams {
     * versions and no-ops — no separate batch-id bookkeeping needed.
     * `factSince`/`dimSince` seed the markers on the first cycle (the
     * versions the view was initialized from). */
-  def maintainJoinSumViewFromBothFeeds(factT: graft.table.LakeTable,
-      dimT: graft.table.LakeTable, view: graft.table.LakeTable,
+  def maintainJoinSumViewFromBothFeeds(factT: LakeTable,
+      dimT: LakeTable, view: LakeTable,
       joinKeys: Seq[String], groupKeys: Seq[String], valueCol: String,
       factSince: Int, dimSince: Int, appId: String = "jv2cdc"): Unit =
     maintainJoinFromBothFeeds(factT, dimT, view, factSince, dimSince,
       appId, "foreachbatch_ivm_join2") { (fs, ds, meta) =>
-      graft.table.IncrementalView.maintainJoinSumView(factT, dimT, view,
+      IncrementalView.maintainJoinSumView(factT, dimT, view,
         joinKeys, groupKeys, valueCol, fs, ds, meta)
       ()
     }
@@ -953,13 +777,13 @@ object Streams {
     * read the final snapshots, so the drained view equals the
     * recompute; a live stream may briefly surface a rescan-ahead
     * extremum that later cycles re-threaten and heal. */
-  def maintainJoinMinMaxViewFromBothFeeds(factT: graft.table.LakeTable,
-      dimT: graft.table.LakeTable, view: graft.table.LakeTable,
+  def maintainJoinMinMaxViewFromBothFeeds(factT: LakeTable,
+      dimT: LakeTable, view: LakeTable,
       joinKeys: Seq[String], groupKeys: Seq[String], valueCol: String,
       factSince: Int, dimSince: Int, appId: String = "jmm2cdc"): Unit =
     maintainJoinFromBothFeeds(factT, dimT, view, factSince, dimSince,
       appId, "foreachbatch_ivm_join2_minmax") { (fs, ds, meta) =>
-      graft.table.IncrementalView.maintainJoinMinMaxView(factT, dimT, view,
+      IncrementalView.maintainJoinMinMaxView(factT, dimT, view,
         joinKeys, groupKeys, valueCol, fs, ds, meta)
       ()
     }
@@ -970,28 +794,56 @@ object Streams {
     * anything-outstanding guard. Multiple ticks per drain (forced
     * per-file batching, or both feeds landing files) mean the first
     * tick does the work and the rest no-op on the markers. */
-  private def maintainJoinFromBothFeeds(factT: graft.table.LakeTable,
-      dimT: graft.table.LakeTable, view: graft.table.LakeTable,
+  private def maintainJoinFromBothFeeds(factT: LakeTable,
+      dimT: LakeTable, view: LakeTable,
       factSince: Int, dimSince: Int, appId: String, capture: String)(
       applyOnce: (Int, Int, Map[String, String]) => Unit): Unit = {
     val fKey = s"ivm_fact_synced_$appId"
     val dKey = s"ivm_dim_synced_$appId"
     val ticks = factT.readChangeFeedStream.select(lit(1).as("__tick"))
       .unionByName(dimT.readChangeFeedStream.select(lit(1).as("__tick")))
-    val q = ticks.writeStream
-      .foreachBatch { (_: DataFrame, _: Long) =>
-        val m = view.meta
-        val fs = m.get(fKey).map(_.toInt).getOrElse(factSince)
-        val ds = m.get(dKey).map(_.toInt).getOrElse(dimSince)
-        if (fs < factT.version || ds < dimT.version)
-          applyOnce(fs, ds, Map(fKey -> factT.version.toString,
-            dKey -> dimT.version.toString))
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val qe = org.apache.spark.sql.GraftStreamingBridge.lastExecution(q)
-    drainCapture.get.foreach(buf => qe.foreach(e => buf += capture -> e))
+    drain(ticks, capture) { (_, _) =>
+      val m = view.meta
+      val fs = m.get(fKey).map(_.toInt).getOrElse(factSince)
+      val ds = m.get(dKey).map(_.toInt).getOrElse(dimSince)
+      if (fs < factT.version || ds < dimT.version)
+        applyOnce(fs, ds, Map(fKey -> factT.version.toString,
+          dKey -> dimT.version.toString))
+    }
   }
+
+  /** The one table-sink drain: run `f` on every micro-batch of `stream`
+    * (foreachBatch), drain what exists (AvailableNow) and wait. The
+    * batch internals `f` runs are batch executions (listener-visible);
+    * the stream-side micro-batch plan is recorded under `capture` for
+    * an active [[withDrainCapture]] scope, so the per-query streaming
+    * lint gate sees foreachBatch sinks too. */
+  private def drain(stream: DataFrame, capture: String)(
+      f: (DataFrame, Long) => Unit): Unit =
+    awaitDrain(stream.writeStream.foreachBatch(f), capture)
+
+  /** [[drain]] with the batch-id exactly-once guard (Delta's
+    * txnAppId/txnVersion pattern): a batch whose id is not above the
+    * id recorded under `key` in `markerTable`'s `_meta.json`, or which
+    * is empty, is skipped; any other batch is handed to `applyBatch`
+    * with the marker entry `key -> batchId`, which it must commit IN
+    * THE SAME atomic publish as the delta it covers — so at-least-once
+    * delivery (a retried/restarted drain) cannot double-apply, and
+    * there is no crash window between "apply" and "remember". As with
+    * Delta's pattern, batch ids are only meaningful within one
+    * checkpoint lineage: a production deployment sets
+    * `checkpointLocation` so restarts resume the same numbering;
+    * re-draining the same source state without one is also safe (same
+    * ids, all skipped). `markerTable` is by-name: it is resolved per
+    * batch, from the table `applyBatch`'s LAST commit lands in. */
+  private def drainMarked(stream: DataFrame, capture: String,
+      markerTable: => LakeTable, key: String)(
+      applyBatch: (DataFrame, Long, Map[String, String]) => Unit): Unit =
+    drain(stream, capture) { (batch, batchId) =>
+      val last = markerTable.meta.get(key).map(_.toLong).getOrElse(-1L)
+      if (batchId > last && !batch.isEmpty)
+        applyBatch(batch, batchId, Map(key -> batchId.toString))
+    }
 
   /** Drain a streaming DataFrame into an in-memory table and return the
     * result — AvailableNow processes existing files as micro-batches then
@@ -1013,15 +865,22 @@ object Streams {
     * if no batch ran) — micro-batch plans bypass QueryExecutionListener,
     * so this is how the PlanLint gate audits streaming physical plans. */
   def drainWithExecution(streamDf: DataFrame, name: String,
-      mode: OutputMode): (DataFrame,
-        Option[org.apache.spark.sql.execution.QueryExecution]) = {
-    val q = streamDf.writeStream.outputMode(mode)
-      .format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val qe = org.apache.spark.sql.GraftStreamingBridge.lastExecution(q)
-    drainCapture.get.foreach(buf => qe.foreach(e => buf += name -> e))
+      mode: OutputMode): (DataFrame, Option[QueryExecution]) = {
+    val qe = awaitDrain(streamDf.writeStream.outputMode(mode)
+      .format("memory").queryName(name), name)
     (streamDf.sparkSession.table(name), qe)
+  }
+
+  /** Start `writer` with `Trigger.AvailableNow`, wait for it to drain,
+    * and record its last micro-batch QueryExecution under `capture` in
+    * the active [[withDrainCapture]] scope. Every drain starts here. */
+  private def awaitDrain(writer: DataStreamWriter[Row],
+      capture: String): Option[QueryExecution] = {
+    val q = writer.trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    val qe = GraftStreamingBridge.lastExecution(q)
+    drainCapture.get.foreach(buf => qe.foreach(e => buf += capture -> e))
+    qe
   }
 
   // thread-local so nothing is retained outside an explicit capture scope
@@ -1029,7 +888,7 @@ object Streams {
   // for the life of a 131-query bench run)
   private val drainCapture =
     new ThreadLocal[Option[scala.collection.mutable.ArrayBuffer[
-      (String, org.apache.spark.sql.execution.QueryExecution)]]] {
+      (String, QueryExecution)]]] {
       override def initialValue = None
     }
 
@@ -1039,10 +898,9 @@ object Streams {
     * drain happens inside its own construction (every `q_stream_*`
     * entry), where the caller never sees the streaming query object.
     * Nested captures restore the outer scope on exit. */
-  def withDrainCapture[T](action: => T): (T,
-      Seq[(String, org.apache.spark.sql.execution.QueryExecution)]) = {
+  def withDrainCapture[T](action: => T): (T, Seq[(String, QueryExecution)]) = {
     val buf = scala.collection.mutable.ArrayBuffer
-      .empty[(String, org.apache.spark.sql.execution.QueryExecution)]
+      .empty[(String, QueryExecution)]
     val prev = drainCapture.get
     drainCapture.set(Some(buf))
     try { val r = action; (r, buf.toSeq) }

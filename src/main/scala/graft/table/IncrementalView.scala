@@ -159,14 +159,25 @@ object IncrementalView {
       valueCol: String, sinceVersion: Int,
       meta: Map[String, String] = Map.empty): Int = {
     val syncedTo = base.version
-    val ch = base.changesSince(sinceVersion)
-    val sign = when(col("_change_type").isin("insert", "update_postimage"),
-      lit(1L)).otherwise(lit(-1L))
-    val delta = ch.groupBy(keyCols.map(col): _*).agg(
+    applySumDelta(base.changesSince(sinceVersion), view, keyCols, valueCol,
+      meta)
+    syncedTo
+  }
+
+  /** Apply ONE change-event frame to a stored sum view — the whole
+    * [[maintainSumView]] rule (signed per-key deltas, then
+    * [[mergeSumDelta]]), factored out (the [[applyMinMaxDelta]] pattern)
+    * so the streaming subscribers apply identical semantics per
+    * micro-batch with their exactly-once `meta` marker riding the same
+    * commit. An append-only stream tags its rows `insert`. */
+  private[graft] def applySumDelta(events: DataFrame, view: LakeTable,
+      keyCols: Seq[String], valueCol: String,
+      meta: Map[String, String] = Map.empty): Unit = {
+    val sign = LakeTable.changeSign
+    val delta = events.groupBy(keyCols.map(col): _*).agg(
       sum(sign).as("d_n"),
       sum(col(valueCol).cast("decimal(20,4)") * sign).as("d_sum"))
     mergeSumDelta(view, keyCols, delta, meta)
-    syncedTo
   }
 
   /** Apply a (d_n, d_sum) per-group delta frame to a stored sum view:
@@ -235,13 +246,12 @@ object IncrementalView {
       meta: Map[String, String] = Map.empty): Unit = {
     val keys = keyCols.map(col)
     val vDec = col(valueCol).cast("decimal(20,4)")
-    val isIns = col("_change_type").isin("insert", "update_postimage")
     // net per (group, value) first; all-cancelled values (w=0) drop out
     // entirely. NULL values collapse into one group per key — they carry
     // the count/sum contribution but never enter min/max (Spark min/max
     // and least/greatest skip nulls).
     val net = ch.groupBy(keys :+ vDec.as("__v"): _*)
-      .agg(sum(when(isIns, 1L).otherwise(-1L)).as("w"))
+      .agg(sum(LakeTable.changeSign).as("w"))
       .filter(col("w") =!= 0L)
     val delta = net.groupBy(keys: _*).agg(
       sum(col("w")).as("d_n"),
@@ -351,7 +361,7 @@ object IncrementalView {
       keyCols: Seq[String], valueCol: String, sinceVersion: Int): Int = {
     val syncedTo = base.version
     val ch = base.changesSince(sinceVersion)
-    val isIns = col("_change_type").isin("insert", "update_postimage")
+    val isIns = LakeTable.isAddition
     val vDec = col(valueCol).cast("decimal(18,4)")
     // sign the SQUARED term by negation, never multiplication: vDec*vDec
     // is decimal(37,8), and multiplying THAT by a LONG sign overflows
@@ -363,7 +373,7 @@ object IncrementalView {
     // empirically on Spark 4.1.2; pinned by IncrementalViewSpec's 4-dp
     // fixture).
     val delta = ch.groupBy(keyCols.map(col): _*).agg(
-      sum(when(isIns, 1L).otherwise(-1L)).as("d_n"),
+      sum(LakeTable.changeSign).as("d_n"),
       sum(when(isIns, vDec).otherwise(-vDec)).as("d_sum"),
       sum(when(isIns, vDec * vDec).otherwise(-(vDec * vDec))).as("d_sq"))
     val cur = view.read.select(
@@ -439,10 +449,9 @@ object IncrementalView {
       meta: Map[String, String] = Map.empty): Unit = {
     val keys = keyCols.map(col)
     val vDec = col(valueCol).cast("decimal(18,4)")
-    val isIns = col("_change_type").isin("insert", "update_postimage")
     // one feed read, checkpointed, shared by both delta aggregations
     val ch = events
-      .select(keys :+ vDec.as("__v") :+ isIns.as("__ins"): _*)
+      .select(keys :+ vDec.as("__v") :+ LakeTable.isAddition.as("__ins"): _*)
       .localCheckpoint(true)
     val mom = ch.groupBy(keys: _*).agg(
       sum(when(col("__ins"), 1L).otherwise(-1L)).as("d_n"),
@@ -549,9 +558,8 @@ object IncrementalView {
     val auxApplied = aux.exists && aux.meta.get(AuxSpanKey).contains(spanId)
     val keys = keyCols.map(col)
     val ch = base.changesSince(sinceVersion).filter(col(valueCol).isNotNull)
-    val isIns = col("_change_type").isin("insert", "update_postimage")
     val delta = ch.groupBy(keys :+ col(valueCol).as("__v"): _*)
-      .agg(sum(when(isIns, 1L).otherwise(-1L)).as("d_n"))
+      .agg(sum(LakeTable.changeSign).as("d_n"))
     val curAux = aux.read.select(keys :+ col("__v") :+ col("cnt").as("v_cnt"): _*)
     def alive(c: Column): Column = when(c > 0, 1L).otherwise(0L)
     val oldCnt =
@@ -754,7 +762,6 @@ object IncrementalView {
     val auxApplied = aux.exists && aux.meta.get(AuxSpanKey).contains(spanId)
     val keys = keyCols.map(col)
     val vDec = col(valueCol).cast("decimal(18,4)")
-    val isIns = col("_change_type").isin("insert", "update_postimage")
     // frozen-modulus check first (AuxBucketsKey doc): the presence
     // check below survives only as the legacy fallback for auxes
     // created before the key existed — it can't tell buckets=8 from 16
@@ -768,7 +775,7 @@ object IncrementalView {
       s"auxBuckets=$auxBuckets disagrees with the aux table's layout " +
         "(created with a different fullStatsSupportView buckets value?)")
     val ch = events
-      .select(keys :+ vDec.as("__v") :+ isIns.as("__ins"): _*)
+      .select(keys :+ vDec.as("__v") :+ LakeTable.isAddition.as("__ins"): _*)
       .localCheckpoint(true) // one feed read feeds both aggregations
     // top-level moment deltas over ALL rows (null values count in n;
     // n_nonnull's delta restricts the same ±1 rule to non-null values)
@@ -963,6 +970,22 @@ object IncrementalView {
     ((joinKeys ++ fGroup :+ valueCol).distinct, (joinKeys ++ dGroup).distinct)
   }
 
+  /** The dF ⋈ D term: fact change events signed by the feed rule and
+    * enriched against a dim snapshot, as (groupKeys…, `__v`
+    * decimal(20,4), `__w` ±long) rows — the first term of
+    * [[joinDeltaRows]], and the whole delta of a fact-side streaming
+    * drain while the dim is quiet. */
+  private[graft] def enrichFactDelta(factEvents: DataFrame,
+      dimNow: DataFrame, joinKeys: Seq[String], groupKeys: Seq[String],
+      valueCol: String): DataFrame = {
+    val (_, dimProj) =
+      joinSides(factEvents, dimNow, joinKeys, groupKeys, valueCol)
+    factEvents.withColumn("__w", LakeTable.changeSign)
+      .join(dimNow.select(dimProj.map(col): _*), joinKeys)
+      .select(groupKeys.map(col) :+
+        col(valueCol).cast("decimal(20,4)").as("__v") :+ col("__w"): _*)
+  }
+
   /** The three delta terms of Δ(F⋈D) = dF⋈D₁ + F₁⋈dD − dF⋈dD as one
     * signed row frame (groupKeys…, __v, __w) — shared by the sum and
     * min/max join maintainers. A quiet side is ROUTINE in the
@@ -975,19 +998,17 @@ object IncrementalView {
     val dimNow = dimT.read
     val (factProj, dimProj) =
       joinSides(factNow, dimNow, joinKeys, groupKeys, valueCol)
-    val w = when(col("_change_type").isin("insert", "update_postimage"),
-      lit(1L)).otherwise(lit(-1L))
+    val w = LakeTable.changeSign
     val vDec = col(valueCol).cast("decimal(20,4)")
-    val out = groupKeys.map(col) :+ vDec.as("__v") :+ col("__w")
     def changes(t: LakeTable, since: Int): DataFrame =
       if (since >= t.version)
         t.read.limit(0).withColumn("_change_type", lit("insert"))
       else t.changesSince(since)
-    val dF = changes(factT, factSince).withColumn("__w", w)
+    val chF = changes(factT, factSince)
+    val dF = chF.withColumn("__w", w)
     val dD = changes(dimT, dimSince)
       .select((dimProj.map(col) :+ w.as("__w")): _*)
-    val p1 = dF.join(dimNow.select(dimProj.map(col): _*), joinKeys)
-      .select(out: _*)
+    val p1 = enrichFactDelta(chF, dimNow, joinKeys, groupKeys, valueCol)
     // changed-dim keys: broadcast while measured-small (the designed,
     // bounded-churn case — the fact scan then prunes before any
     // shuffle); a pathological full-dim re-homing degrades to a shuffle
@@ -996,7 +1017,7 @@ object IncrementalView {
     val p2 = factNow.select(factProj.map(col): _*)
       .join(broadcastIfSmall(dDKeys), joinKeys, "left_semi")
       .join(dD, joinKeys)
-      .select(out: _*)
+      .select(groupKeys.map(col) :+ vDec.as("__v") :+ col("__w"): _*)
     val p3 = dF.select((factProj.map(col) :+ col("__w").as("__wf")): _*)
       .join(dD.withColumnRenamed("__w", "__wd"), joinKeys)
       .select(groupKeys.map(col) :+ vDec.as("__v") :+
@@ -1015,17 +1036,26 @@ object IncrementalView {
       factSince: Int, dimSince: Int,
       meta: Map[String, String] = Map.empty): (Int, Int) = {
     val syncedTo = (factT.version, dimT.version)
-    val delta = joinDeltaRows(factT, dimT, joinKeys, groupKeys, valueCol,
-        factSince, dimSince)
+    applyJoinSumRows(joinDeltaRows(factT, dimT, joinKeys, groupKeys,
+      valueCol, factSince, dimSince), view, groupKeys, meta)
+    syncedTo
+  }
+
+  /** Apply ONE signed delta-row frame (groupKeys…, `__v`, `__w`) to a
+    * stored join sum view — the aggregation and merge half of
+    * [[maintainJoinSumView]], shared with the fact-side streaming
+    * drain (the [[applyJoinMinMaxRows]] pattern). */
+  private[graft] def applyJoinSumRows(rows: DataFrame, view: LakeTable,
+      groupKeys: Seq[String], meta: Map[String, String] = Map.empty): Unit = {
+    val delta = rows
       .groupBy(groupKeys.map(col): _*)
       .agg(sum(col("__w")).as("d_n"),
         sum(col("__v") * col("__w")).as("d_sum"))
       // net-zero groups (e.g. an update that changed nothing the view
       // sees) never enter the merge
       .filter(col("d_n") =!= 0L ||
-        coalesce(col("d_sum"), lit(0).cast("decimal(30,4)")) =!= lit(0).cast("decimal(30,4)"))
+        coalesce(col("d_sum"), zero30_4) =!= zero30_4)
     mergeSumDelta(view, groupKeys, delta, meta)
-    syncedTo
   }
 
   /** [[joinSumView]] extended with per-group min/max of the fact value

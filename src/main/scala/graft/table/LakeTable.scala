@@ -1090,7 +1090,7 @@ final class LakeTable(private val spark: SparkSession, private val root: String,
     // (post-types last) gives the post-image if the key exists after.
     // One write per version → at most one pre/post pair per (key,
     // version), so (version, typeRank) orders totally per key.
-    val isPre = col("_change_type").isin("delete", "update_preimage")
+    val isPre = !LakeTable.isAddition
     val ord = col("__fv") * 2 + when(isPre, lit(0)).otherwise(lit(1))
     val agg = events
       .select(mergeKeys.map(col) :+
@@ -1100,9 +1100,9 @@ final class LakeTable(private val spark: SparkSession, private val root: String,
       .agg(min_by(col("__e"), col("__o")).as("__f"),
         max_by(col("__e"), col("__o")).as("__l"))
       .withColumn("__pre",
-        when(col("__f.ct").isin("delete", "update_preimage"), col("__f.r")))
+        when(!LakeTable.isAddition(col("__f.ct")), col("__f.r")))
       .withColumn("__post",
-        when(col("__l.ct").isin("insert", "update_postimage"), col("__l.r")))
+        when(LakeTable.isAddition(col("__l.ct")), col("__l.r")))
     // same change-detection hash as the feed writer: only genuinely
     // changed pre/post pairs survive (a value updated then reverted
     // nets to nothing)
@@ -1391,6 +1391,23 @@ object LakeTable {
       partitionsFromKeys: Boolean = false): LakeTable =
     new LakeTable(spark, root, name, mergeKeys, partitionCols,
       changeFeed = changeFeed, partitionsFromKeys = partitionsFromKeys)
+
+  /** A change-feed row ADDS to the table state: an `insert` or an
+    * `update_postimage`. Everything else (`delete`, `update_preimage`)
+    * removes. The one spelling of the rule every feed consumer signs
+    * its deltas with; `changeType` is the column holding the type. */
+  private[graft] def isAddition(
+      changeType: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    changeType.isin("insert", "update_postimage")
+
+  /** [[isAddition]] of a change-feed row's own `_change_type`. */
+  private[graft] def isAddition: org.apache.spark.sql.Column =
+    isAddition(col("_change_type"))
+
+  /** The signed weight of a change-feed row: +1 for an addition
+    * ([[isAddition]]), −1 for a removal. */
+  private[graft] def changeSign: org.apache.spark.sql.Column =
+    org.apache.spark.sql.functions.when(isAddition, 1L).otherwise(-1L)
 
   /** A fully-derived, not-yet-written next version of one table — what
     * every data write builds: the frame to stage, already shaped by its

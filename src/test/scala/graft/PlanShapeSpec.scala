@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Physical-plan pins for the properties PlanAudit inspects manually: the
+/** Physical-plan pins for the properties a PlanDump explain shows: the
   * 100 TB story depends on these staying true, so they are asserted. */
 class PlanShapeSpec extends SparkSpec {
 
