@@ -1,8 +1,10 @@
 package graft
 
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
 /** Dev tool: run named queries and attribute per-JOB wall time to the
@@ -10,9 +12,12 @@ import org.apache.spark.sql.SparkSession
   * stamps on every job) — the "where do the seconds actually go inside a
   * lakehouse composite" probe guide §1 asks for before touching anything.
   *
-  * Output: per query, total sec + the top call sites by summed job wall
-  * time with their job counts. Driver-side gaps (planning, file ops,
-  * commit protocol between jobs) show up as `total - sum(jobs)`.
+  * Output: per query, total sec, scheduled job / stage / task counts
+  * (each eager localCheckpoint is its own job, so the job count is the
+  * direct probe of per-round scheduling overhead vs real shuffle work)
+  * + the top call sites by summed job wall time with their job counts.
+  * Driver-side gaps (planning, file ops, commit protocol between jobs)
+  * show up as `total - sum(jobs)`.
   *
   * `sbt "runMain graft.JobProfileDetail <sfDir> q_a,q_b"`
   */
@@ -22,7 +27,7 @@ object JobProfileDetail {
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val names = if (args.length > 1) args(1).split(",").map(_.trim).toSeq
       else Seq("q_mv_avg")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -39,6 +44,8 @@ object JobProfileDetail {
 
     val starts = TrieMap.empty[Int, (Long, String)]
     val agg = TrieMap.empty[String, (Double, Int)]
+    val stages = new AtomicInteger
+    val tasks = new AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
         val site = Option(j.properties)
@@ -52,6 +59,8 @@ object JobProfileDetail {
           val (s, n) = agg.getOrElse(site, (0.0, 0))
           agg.put(site, (s + sec, n + 1)); ()
         }
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+        { stages.incrementAndGet(); tasks.addAndGet(s.stageInfo.numTasks); () }
     })
 
     // Per-ACTION attribution: every DataFrame action lands here with its
@@ -104,6 +113,7 @@ object JobProfileDetail {
       org.apache.spark.GraftListenerBridge.drainListenerBus(
         spark.sparkContext, 30000)
       agg.clear(); starts.clear(); execAgg.clear()
+      stages.set(0); tasks.set(0)
       streamPhases.clear(); streamBatches = 0
       val t0 = System.nanoTime()
       SparkEntry.queries(n)(spark, sfDir)
@@ -114,7 +124,8 @@ object JobProfileDetail {
       val rows = agg.toSeq.sortBy(-_._2._1)
       val jobSec = rows.map(_._2._1).sum
       val jobs = rows.map(_._2._2).sum
-      println(f"== $n: total $sec%.2f s, $jobs jobs summing $jobSec%.2f s " +
+      println(f"== $n: total $sec%.2f s, $jobs jobs summing $jobSec%.2f s, " +
+        f"${stages.get} stages, ${tasks.get} tasks " +
         f"(driver gap ${sec - jobSec}%.2f s)")
       rows.take(25).foreach { case (site, (s, c)) =>
         println(f"   $s%7.2f s  $c%4d jobs  $site")

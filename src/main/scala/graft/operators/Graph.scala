@@ -186,7 +186,7 @@ object Graph {
     // normalization, not on the raw sums: a raw-score checkpoint re-runs
     // this total aggregation in every consumer of the half-step (the
     // next half-step's join AND the final reconciliation). Measured by
-    // graft.JobProfile at sf0.1 warm: 4.31 s/33 jobs raw-checkpointed vs
+    // graft.JobProfileDetail at sf0.1 warm: 4.31 s/33 jobs raw-checkpointed vs
     // 3.44 s/31 jobs fused — the win is dropping the per-consumer
     // re-aggregation scans of the score vector, which is also what
     // matters at cluster scale. The total and the join side share one

@@ -41,6 +41,20 @@ class PipelinesSpec extends SparkSpec {
     assert(missing.isEmpty, s"oracle without query: $missing")
   }
 
+  test("every query has oracle SQL: the query and oracle key sets are equal") {
+    val noOracle = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
+    assert(noOracle.isEmpty, s"query without oracle SQL: $noOracle")
+  }
+
+  test("the lakehouse family's names are disjoint from SparkEntry's inline " +
+      "names (a name in both would be silently overridden by ++)") {
+    import graft.queries.Lakehouse
+    val q = SparkEntry.inlineQueries.keySet intersect Lakehouse.queries.keySet
+    val o = SparkEntry.inlineOracleSql.keySet intersect Lakehouse.oracleSql.keySet
+    assert(q.isEmpty, s"queries defined twice: $q")
+    assert(o.isEmpty, s"oracle SQL defined twice: $o")
+  }
+
   test("pipelines preserve key uniqueness after dedup") {
     import org.apache.spark.sql.functions._
     val o = graft.pipelines.Pipelines.orders(spark, sf)
