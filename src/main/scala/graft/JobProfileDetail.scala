@@ -4,13 +4,17 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Dev tool: run named queries and attribute per-JOB wall time to the
-  * call site that scheduled it (the `callSite.short` property Spark
-  * stamps on every job) — the "where do the seconds actually go inside a
-  * lakehouse composite" probe guide §1 asks for before touching anything.
+  * call site that scheduled it — the "where do the seconds actually go
+  * inside a lakehouse composite" probe guide §1 asks for before touching
+  * anything. A streaming job carries its call site in the `callSite.short`
+  * job property; a batch job only carries the id of the SQL execution it
+  * runs for (`spark.sql.execution.id`), so it is filed under the call site
+  * of that execution's start event.
   *
   * Output: per query, total sec, scheduled job / stage / task counts
   * (each eager localCheckpoint is its own job, so the job count is the
@@ -43,13 +47,20 @@ object JobProfileDetail {
     }
 
     val starts = TrieMap.empty[Int, (Long, String)]
+    val execSites = TrieMap.empty[String, String]
     val agg = TrieMap.empty[String, (Double, Int)]
     val stages = new AtomicInteger
     val tasks = new AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart =>
+          execSites.put(x.executionId.toString, x.description); ()
+        case _ =>
+      }
       override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val site = Option(j.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short")))
+        val prop = (k: String) => Option(j.properties).flatMap(p => Option(p.getProperty(k)))
+        val site = prop("callSite.short")
+          .orElse(prop("spark.sql.execution.id").flatMap(execSites.get))
           .getOrElse("<none>")
         starts.put(j.jobId, (System.nanoTime(), site)); ()
       }

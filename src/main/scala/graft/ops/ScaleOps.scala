@@ -529,12 +529,15 @@ object ScaleOps {
 
   /** Column profiling — the engine-side analogue of the reference's Glue
     * crawler statistics pass (state_machine.json:69-116): per column,
-    * row/non-null/distinct counts and min/max, computed in ONE aggregate
-    * over the table (Catalyst plans the multi-distinct via Expand) and
-    * unpivoted to long format. min/max are taken in the column's native
-    * ordering and then rendered as strings. Intended for modest column
-    * lists — cost grows with the Expand factor (one duplicate of the
-    * scan's rows per distinct-counted column). */
+    * row/non-null/distinct counts and min/max, unpivoted to long format.
+    * The row and non-null counts and min/max come from ONE aggregate over
+    * the table; each distinct count from its own single-distinct
+    * aggregate, which scans only that column, joined on as a broadcast
+    * one-row frame. (One aggregate holding all the distinct counts would
+    * plan them through an Expand whose column order Catalyst takes from
+    * expression-id hashes, so its plan would depend on what ran earlier
+    * in the JVM.) min/max are taken in the column's native ordering and
+    * then rendered as strings. */
   def profileColumns(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty)
     // names are interpolated into selectExpr below — keep them simple
@@ -543,10 +546,11 @@ object ScaleOps {
     val n = count(lit(1)).as("__n")
     val aggs = cols.flatMap { c => Seq(
       count(col(c)).as(s"__nn_$c"),
-      count_distinct(col(c)).as(s"__nd_$c"),
       min(col(c)).cast("string").as(s"__min_$c"),
       max(col(c)).cast("string").as(s"__max_$c")) }
-    val row = df.agg(n, aggs: _*)
+    val row = cols.foldLeft(df.agg(n, aggs: _*)) { (r, c) =>
+      r.crossJoin(broadcast(df.agg(count_distinct(col(c)).as(s"__nd_$c"))))
+    }
     val stacked = cols.map(c =>
       s"'$c', __n, __nn_$c, __nd_$c, __min_$c, __max_$c").mkString(", ")
     row.selectExpr(s"stack(${cols.size}, $stacked) AS " +

@@ -12,23 +12,8 @@ import graft.table.{IncrementalView, LakeTable}
   * DML / time travel, change feeds, incremental and materialized views,
   * streaming drains into lake tables, the persistent indexes, the
   * orchestrator run, the skipping layouts and the format round-trips.
-  * Each entry holds the function that builds the query and the DuckDB
-  * oracle SQL its result must equal, side by side;
-  * `SparkEntry.queries` / `oracleSql` merge this family's maps with
-  * the queries SparkEntry defines itself.
   */
-object Lakehouse {
-
-  type QueryFn = (SparkSession, String) => DataFrame
-
-  /** One query: the function that builds it, and its oracle SQL. */
-  private final case class Paired(build: QueryFn, sql: String)
-
-  def queries: Map[String, QueryFn] =
-    paired.map { case (n, p) => n -> p.build }.toMap
-
-  def oracleSql: Map[String, String] =
-    paired.map { case (n, p) => n -> p.sql }.toMap
+object Lakehouse extends QueryFamily {
 
   /** Guard for the MV-rewrite queries: fail loudly unless the optimized
     * plan scans ONLY the view's path — so the correctness row proves the
@@ -173,26 +158,7 @@ object Lakehouse {
     * final corpus (docs ≡ 3 mod 7 deleted) — batch, pruned-layout and
     * streaming maintenance must all land on it. */
   private val dedupPairsSql =
-    """WITH toks AS (
-           SELECT doc_id,
-                  list_filter(string_split_regex(lower(trim(text)), '\s+'),
-                              x -> len(x) > 0) AS t
-           FROM documents WHERE doc_id % 7 <> 3),
-         sh AS (
-           SELECT doc_id,
-                  CASE WHEN len(t) >= 3 THEN list_distinct(
-                         [array_to_string(t[i:i+2], ' ')
-                          for i in range(1, len(t) - 1)])
-                       ELSE [array_to_string(t, ' ')] END AS s
-           FROM toks)
-         SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-                ROUND(len(list_intersect(a.s, b.s)) * 1.0 /
-                      (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))), 6)
-                  AS jaccard
-         FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         WHERE len(list_intersect(a.s, b.s)) * 1.0 /
-               (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.7
-         ORDER BY a_id, b_id"""
+    Corpus.shinglePairsSql("documents WHERE doc_id % 7 <> 3")
 
   /** The ANN-index queries' oracle: brute-force top-5 cosine over the
     * final corpus (ids ≡ 4 mod 11 negated, ≡ 3 mod 7 deleted), queried
@@ -228,7 +194,7 @@ object Lakehouse {
          SELECT query_id, rank, neighbor_id, cos FROM ranked
          WHERE rank <= 5 ORDER BY query_id, rank"""
 
-  private val paired: Seq[(String, Paired)] = Seq(
+  protected val paired: Seq[(String, Paired)] = Seq(
 
     // full job orchestration (reference main + Step Functions routing):
     // all three pipelines with reject sinks, one-pass Observation metrics,
@@ -2062,9 +2028,4 @@ object Lakehouse {
                   AS net_price_delta
          FROM d GROUP BY change_type ORDER BY change_type"""),
   )
-
-  // the maps above are built with toMap, which would keep only the last
-  // of two entries with one name
-  require(paired.map(_._1).distinct.size == paired.size,
-    "a lakehouse query name is defined twice")
 }

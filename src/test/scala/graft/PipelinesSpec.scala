@@ -48,11 +48,18 @@ class PipelinesSpec extends SparkSpec {
 
   test("the lakehouse family's names are disjoint from SparkEntry's inline " +
       "names (a name in both would be silently overridden by ++)") {
-    import graft.queries.Lakehouse
-    val q = SparkEntry.inlineQueries.keySet intersect Lakehouse.queries.keySet
-    val o = SparkEntry.inlineOracleSql.keySet intersect Lakehouse.oracleSql.keySet
-    assert(q.isEmpty, s"queries defined twice: $q")
-    assert(o.isEmpty, s"oracle SQL defined twice: $o")
+    // every pair of name sets: the inline maps and each family's
+    import graft.queries.{Corpus, Lakehouse}
+    val sets = Seq(
+      ("inline", SparkEntry.inlineQueries.keySet, SparkEntry.inlineOracleSql.keySet),
+      ("Lakehouse", Lakehouse.queries.keySet, Lakehouse.oracleSql.keySet),
+      ("Corpus", Corpus.queries.keySet, Corpus.oracleSql.keySet))
+    for (Seq((a, qa, oa), (b, qb, ob)) <- sets.combinations(2)) {
+      val q = qa intersect qb
+      val o = oa intersect ob
+      assert(q.isEmpty, s"queries defined in both $a and $b: $q")
+      assert(o.isEmpty, s"oracle SQL defined in both $a and $b: $o")
+    }
   }
 
   test("pipelines preserve key uniqueness after dedup") {
