@@ -64,15 +64,18 @@ object Corpus extends QueryFamily {
   private def jaccardSql(a: String, b: String): String =
     s"len(list_intersect($a, $b)) * 1.0 / (len($a) + len($b) - len(list_intersect($a, $b)))"
 
-  /** `pairs`: every pair of `sh` documents (a_id < b_id) whose shingle
-    * Jaccard is at least 0.7, with that Jaccard rounded to 6 places. */
-  private val pairsCte: String = {
+  /** Every pair of `sh` documents (a_id < b_id) whose shingle Jaccard is
+    * at least 0.7, with that Jaccard rounded to 6 places. */
+  private val pairsSelect: String = {
     val j = jaccardSql("a.s", "b.s")
-    s"""pairs AS (
-           SELECT a.doc_id AS a_id, b.doc_id AS b_id, ROUND($j, 6) AS jaccard
+    s"""SELECT a.doc_id AS a_id, b.doc_id AS b_id, ROUND($j, 6) AS jaccard
            FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-           WHERE $j >= 0.7)"""
+           WHERE $j >= 0.7"""
   }
+
+  /** `pairs`: [[pairsSelect]]. */
+  private val pairsCte = s"""pairs AS (
+           $pairsSelect)"""
 
   /** The near-dup definition every pairs operator must return exactly:
     * all pairs of the documents `from` selects at shingle Jaccard ≥ 0.7
@@ -81,10 +84,14 @@ object Corpus extends QueryFamily {
     s"""WITH ${toksCte("doc_id", from)}, ${shingleCte()}, $pairsCte
          SELECT a_id, b_id, jaccard FROM pairs ORDER BY a_id, b_id"""
 
-  /** `edges` + `reach`: the transitive closure of `pairs` (needs WITH
-    * RECURSIVE). */
+  /** `pairs` + `edges` + `reach`: the transitive closure of
+    * [[pairsSelect]] (needs WITH RECURSIVE). `pairs` is MATERIALIZED:
+    * DuckDB would otherwise inline it into the recursion and recompute
+    * the all-pairs Jaccard join on every step. */
   private val reachCtes =
-    """edges AS (
+    s"""pairs AS MATERIALIZED (
+           $pairsSelect),
+         edges AS (
            SELECT a_id AS src, b_id AS dst FROM pairs
            UNION SELECT b_id, a_id FROM pairs),
          reach(src, dst) AS (
@@ -92,7 +99,7 @@ object Corpus extends QueryFamily {
            UNION
            SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)"""
 
-  /** `reachCtes` + `fam`: each document's family, the least id it
+  /** [[reachCtes]] + `fam`: each document's family, the least id it
     * reaches (itself when it has no pair). */
   private val familyCtes =
     s"""$reachCtes,
@@ -669,7 +676,7 @@ object Corpus extends QueryFamily {
       Dedup.dedupFamilies(d.select("doc_id"), pairs, "doc_id")
         .orderBy("doc_id")
     },
-      s"""WITH RECURSIVE ${toksCte("doc_id")}, ${shingleCte()}, $pairsCte,
+      s"""WITH RECURSIVE ${toksCte("doc_id")}, ${shingleCte()},
          $familyCtes
          SELECT doc_id, family FROM fam ORDER BY doc_id"""),
 
@@ -687,7 +694,7 @@ object Corpus extends QueryFamily {
         .orderBy("doc_id")
     },
       s"""WITH RECURSIVE ${toksCte("doc_id, text, length(text) AS n_char")},
-         ${shingleCte()}, $pairsCte, $familyCtes,
+         ${shingleCte()}, $familyCtes,
          q AS (
            SELECT doc_id,
                   $heuristicQualitySql AS quality
@@ -1403,7 +1410,7 @@ object Corpus extends QueryFamily {
            WHERE doc_id = (SELECT min(doc_id) FROM kept k2
                            WHERE md5(array_to_string(k2.t, ' ')) =
                                  md5(array_to_string(k.t, ' ')))),
-         ${shingleCte("sh", "exact")}, $pairsCte, $reachCtes,
+         ${shingleCte("sh", "exact")}, $reachCtes,
          fam AS (
            SELECT e.doc_id, e.lang, e.score AS quality,
                   least(e.doc_id, coalesce(min(r.dst), e.doc_id)) AS family
@@ -1471,7 +1478,7 @@ object Corpus extends QueryFamily {
         .orderBy("doc_id")
     },
       // q_dedup_families' closure + the md5-threshold split rule
-      s"""WITH RECURSIVE ${toksCte("doc_id")}, ${shingleCte()}, $pairsCte,
+      s"""WITH RECURSIVE ${toksCte("doc_id")}, ${shingleCte()},
          $familyCtes
          SELECT doc_id, family, $familySplitSql
          FROM fam ORDER BY doc_id"""),

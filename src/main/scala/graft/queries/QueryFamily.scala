@@ -31,4 +31,17 @@ abstract class QueryFamily {
 
 object QueryFamily {
   type QueryFn = (SparkSession, String) => DataFrame
+
+  /** Scoped SQL-conf override: set, build (DataFrame construction analyzes
+    * eagerly, so analyzer-time confs are consumed inside the scope),
+    * restore the prior value — no leak into later queries on the session. */
+  def withSQLConf[A](s: SparkSession, key: String, value: String)(body: => A): A = {
+    val prev = s.conf.getOption(key)
+    s.conf.set(key, value)
+    try body
+    finally prev match {
+      case Some(v) => s.conf.set(key, v)
+      case None => s.conf.unset(key)
+    }
+  }
 }

@@ -20,7 +20,7 @@ class AnnIndexSpec extends SparkSpec {
       .sortBy(t => (t._1, t._2))
 
   test("maintained assignments == frozen-quantizer recompute; full probe == brute force") {
-    val root = "/tmp/graft_tables/annidx_spec"
+    val root = s"$tablesRoot/annidx_spec"
     val docs = LakeTable(spark, root, "ann_docs", Seq("vec_id"),
       changeFeed = true)
     docs.drop()
@@ -69,7 +69,7 @@ class AnnIndexSpec extends SparkSpec {
   }
 
   test("search reads ONLY the probed cells' partitions of the inverted file") {
-    val root = "/tmp/graft_tables/annidx_prune"
+    val root = s"$tablesRoot/annidx_prune"
     val docs = LakeTable(spark, root, "annp_docs", Seq("vec_id"),
       changeFeed = true)
     docs.drop()
@@ -109,7 +109,7 @@ class AnnIndexSpec extends SparkSpec {
   test("docParts corpus layout: maintained state unchanged, the vector " +
       "fetch is a partition-PRUNED read, and layout drift fails loudly") {
     import graft.table.DocBuckets
-    val root = "/tmp/graft_tables/annidx_docparts"
+    val root = s"$tablesRoot/annidx_docparts"
     val docs = LakeTable(spark, root, "annd_docs", Seq("vec_id"),
       partitionCols = Seq(DocBuckets.ColName), changeFeed = true,
       partitionsFromKeys = true)
@@ -164,7 +164,7 @@ class AnnIndexSpec extends SparkSpec {
 
   test("idParts sidecar: maintained state unchanged, sidecar == (id, " +
       "cell), id-pruned hint read, crash-state replay, layout guards") {
-    val root = "/tmp/graft_tables/annidx_idparts"
+    val root = s"$tablesRoot/annidx_idparts"
     val docs = LakeTable(spark, root, "anni_docs", Seq("vec_id"),
       changeFeed = true)
     docs.drop()
@@ -236,7 +236,7 @@ class AnnIndexSpec extends SparkSpec {
   test("crash between the assign and sidecar commits with the corpus " +
       "ADVANCING before re-delivery: span tokens detect it, the " +
       "recovery batch drops the hint, and no stale assignment survives") {
-    val root = "/tmp/graft_tables/annidx_crashadv"
+    val root = s"$tablesRoot/annidx_crashadv"
     val docs = LakeTable(spark, root, "annv_docs", Seq("vec_id"),
       changeFeed = true)
     docs.drop()
@@ -305,7 +305,7 @@ class AnnIndexSpec extends SparkSpec {
     assert(AnnIndex.sizedCells(4L) == 2)
     assert(AnnIndex.sizedCells(32000L) == 178)
     assert(AnnIndex.sizedCells(100000000L) == 4096) // clamp engages
-    val root = "/tmp/graft_tables/annidx_auto"
+    val root = s"$tablesRoot/annidx_auto"
     val docs = LakeTable(spark, root, "anna_docs", Seq("vec_id"),
       changeFeed = true)
     docs.drop()
@@ -328,7 +328,7 @@ class AnnIndexSpec extends SparkSpec {
 
   test("streaming drain == batch maintenance across per-file micro-batching; " +
       "replay is a no-op") {
-    val root = "/tmp/graft_tables/annidx_stream"
+    val root = s"$tablesRoot/annidx_stream"
     val docs = LakeTable(spark, root, "anns_docs", Seq("vec_id"),
       changeFeed = true)
     docs.drop()
@@ -371,7 +371,7 @@ class AnnIndexSpec extends SparkSpec {
       "crash between the commits loses the marker WITH the sidecar, " +
       "and the replayed drain re-applies and converges") {
     import graft.table.DocBuckets
-    val root = "/tmp/graft_tables/annidx_streamserv"
+    val root = s"$tablesRoot/annidx_streamserv"
     val b = DocBuckets.bucketed(spark, root, "annss_docs", "vec_id", 8)
     b.drop()
     val ai = AnnIndex(spark, root, "annss", nCells = 8, docParts = 8,

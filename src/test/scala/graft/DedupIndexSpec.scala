@@ -48,7 +48,7 @@ class DedupIndexSpec extends SparkSpec {
   }
 
   test("maintained index+pairs == batch recompute through ingest/update/delete waves") {
-    val root = "/tmp/graft_tables/dedupidx_spec"
+    val root = s"$tablesRoot/dedupidx_spec"
     val docs = LakeTable(spark, root, "didx_docs", Seq("doc_id"),
       changeFeed = true)
     docs.drop()
@@ -92,7 +92,7 @@ class DedupIndexSpec extends SparkSpec {
   test("postings sidecar: equivalence holds through churn, the sidecar " +
       "stays exactly the exploded index, and the probe is a " +
       "partition-PRUNED read") {
-    val root = "/tmp/graft_tables/dedupidx_post"
+    val root = s"$tablesRoot/dedupidx_post"
     val docs = LakeTable(spark, root, "didxp_docs", Seq("doc_id"),
       changeFeed = true)
     docs.drop()
@@ -167,7 +167,7 @@ class DedupIndexSpec extends SparkSpec {
   }
 
   test("rebuilding with postingParts=0 removes the orphaned sidecar") {
-    val root = "/tmp/graft_tables/dedupidx_orphan"
+    val root = s"$tablesRoot/dedupidx_orphan"
     val docs = LakeTable(spark, root, "didxo_docs", Seq("doc_id"),
       changeFeed = true)
     docs.drop()
@@ -189,7 +189,7 @@ class DedupIndexSpec extends SparkSpec {
   test("crash window with the serving sidecar: the reachable " +
       "partial-commit state (sidecar new, index+pairs old) re-runs to " +
       "convergence — the hint's old buckets stay derivable") {
-    val root = "/tmp/graft_tables/dedupidx_crash"
+    val root = s"$tablesRoot/dedupidx_crash"
     val docs = LakeTable(spark, root, "didxc_docs", Seq("doc_id"),
       changeFeed = true)
     docs.drop()
@@ -235,7 +235,7 @@ class DedupIndexSpec extends SparkSpec {
   test("pairParts symmetric layout: canonical equivalence + mirror " +
       "invariant through churn, stale-pair lookup is a partition-PRUNED " +
       "slice, and layout drift fails loudly") {
-    val root = "/tmp/graft_tables/dedupidx_pairparts"
+    val root = s"$tablesRoot/dedupidx_pairparts"
     val docs = LakeTable(spark, root, "didxq_docs", Seq("doc_id"),
       changeFeed = true)
     docs.drop()
@@ -280,7 +280,7 @@ class DedupIndexSpec extends SparkSpec {
   test("pairParts build over a corpus with ZERO near-dup pairs: the " +
       "empty partitioned pairs snapshot is legal, readable, and " +
       "maintainable") {
-    val root = "/tmp/graft_tables/dedupidx_nopairs"
+    val root = s"$tablesRoot/dedupidx_nopairs"
     val docs = LakeTable(spark, root, "didxnp_docs", Seq("doc_id"),
       changeFeed = true)
     docs.drop()
@@ -311,7 +311,7 @@ class DedupIndexSpec extends SparkSpec {
       "before re-delivery: span tokens detect the interrupted span, " +
       "the recovery batch drops the hint, and the sidecar invariant " +
       "still holds") {
-    val root = "/tmp/graft_tables/dedupidx_crashadv"
+    val root = s"$tablesRoot/dedupidx_crashadv"
     val docs = LakeTable(spark, root, "didxv_docs", Seq("doc_id"),
       changeFeed = true)
     docs.drop()
@@ -386,7 +386,7 @@ class DedupIndexSpec extends SparkSpec {
   }
 
   test("re-running the same span converges (crash-replay contract)") {
-    val root = "/tmp/graft_tables/dedupidx_replay"
+    val root = s"$tablesRoot/dedupidx_replay"
     val docs = LakeTable(spark, root, "didxr_docs", Seq("doc_id"),
       changeFeed = true)
     docs.drop()
@@ -408,7 +408,7 @@ class DedupIndexSpec extends SparkSpec {
 
   test("streaming drain from the CDC stream == batch recompute across " +
       "per-file micro-batching; replay is a no-op") {
-    val root = "/tmp/graft_tables/dedupidx_stream"
+    val root = s"$tablesRoot/dedupidx_stream"
     val docs = LakeTable(spark, root, "didxs_docs", Seq("doc_id"),
       changeFeed = true)
     docs.drop()
@@ -446,7 +446,7 @@ class DedupIndexSpec extends SparkSpec {
   test("docParts corpus layout: equivalence through churn, the snapshot " +
       "fetch is a partition-PRUNED read, and layout drift fails loudly") {
     import graft.table.DocBuckets
-    val root = "/tmp/graft_tables/dedupidx_docparts"
+    val root = s"$tablesRoot/dedupidx_docparts"
     val docs = LakeTable(spark, root, "didxd_docs", Seq("doc_id"),
       partitionCols = Seq(DocBuckets.ColName), changeFeed = true,
       partitionsFromKeys = true)
@@ -547,7 +547,7 @@ class DedupIndexSpec extends SparkSpec {
       DedupIndex.Sizing(1 << 20, 400000, 400000))
 
     // autoSized: builds, records the derivation, and converges
-    val root = "/tmp/graft_tables/dedupidx_auto"
+    val root = s"$tablesRoot/dedupidx_auto"
     val docs = LakeTable(spark, root, "didxa_docs", Seq("doc_id"),
       changeFeed = true)
     docs.drop()
@@ -564,7 +564,7 @@ class DedupIndexSpec extends SparkSpec {
   }
 
   test("update that breaks a near-dup pair removes it; one that forms a pair adds it") {
-    val root = "/tmp/graft_tables/dedupidx_edge"
+    val root = s"$tablesRoot/dedupidx_edge"
     val docs = LakeTable(spark, root, "didxe_docs", Seq("doc_id"),
       changeFeed = true)
     docs.drop()
@@ -600,7 +600,7 @@ class DedupIndexSpec extends SparkSpec {
       "loses the marker, and the replayed drain re-applies through the " +
       "span-token recovery") {
     import graft.table.DocBuckets
-    val root = "/tmp/graft_tables/dedupidx_streamserv"
+    val root = s"$tablesRoot/dedupidx_streamserv"
     val b = DocBuckets.bucketed(spark, root, "didxz_docs", "doc_id", 8)
     b.drop()
     val di = DedupIndex(spark, root, "didxz", postingParts = 64,

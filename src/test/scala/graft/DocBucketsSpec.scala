@@ -29,7 +29,7 @@ class DocBucketsSpec extends SparkSpec {
 
   test("Bucketed handle: every write stamps __db, the modulus is frozen " +
       "at create, and a mismatched handle fails loudly") {
-    val root = "/tmp/graft_tables/docbuckets_spec"
+    val root = s"$tablesRoot/docbuckets_spec"
     val b = DocBuckets.bucketed(spark, root, "dbk_docs", "doc_id", 8)
     b.drop()
     val all = Tables.load(spark, sf, "documents").select("doc_id", "text")
@@ -69,7 +69,7 @@ class DocBucketsSpec extends SparkSpec {
 
   test("sized: modulus derived from the full-corpus count, previous " +
       "table dropped, sizing derivation in the create commit's meta") {
-    val root = "/tmp/graft_tables/docbuckets_auto"
+    val root = s"$tablesRoot/docbuckets_auto"
     val all = Tables.load(spark, sf, "documents").select("doc_id", "text")
     // leave a previous-run table with a DIFFERENT modulus and a recorded
     // change feed: sized must drop it (feed replay and layout drift)
@@ -93,7 +93,7 @@ class DocBucketsSpec extends SparkSpec {
 
   test("drop resets the cached layout check: a handle that dropped the " +
       "table re-validates against whatever recreated it") {
-    val root = "/tmp/graft_tables/docbuckets_spec"
+    val root = s"$tablesRoot/docbuckets_spec"
     val all = Tables.load(spark, sf, "documents").select("doc_id", "text")
     val a = DocBuckets.bucketed(spark, root, "dbkd_docs", "doc_id", 8)
     a.drop()
@@ -111,7 +111,7 @@ class DocBucketsSpec extends SparkSpec {
 
   test("first-write-via-merge freezes the modulus: an upsert on a " +
       "not-yet-created table commits the layout key with version 1") {
-    val root = "/tmp/graft_tables/docbuckets_spec"
+    val root = s"$tablesRoot/docbuckets_spec"
     val all = Tables.load(spark, sf, "documents").select("doc_id", "text")
     val b = DocBuckets.bucketed(spark, root, "dbkm_docs", "doc_id", 8)
     b.drop()

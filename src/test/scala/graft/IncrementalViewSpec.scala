@@ -16,7 +16,7 @@ class IncrementalViewSpec extends SparkSpec {
       .as[(Long, Long, java.math.BigDecimal)].collect().toSet
 
   test("maintained view == full recompute across insert/update/delete batches") {
-    val root = "/tmp/graft_tables/ivm_spec"
+    val root = s"$tablesRoot/ivm_spec"
     val base = LakeTable(spark, root, "ivm_base", Seq("id"))
     val view = LakeTable(spark, root, "ivm_view", Seq("k"))
     base.drop(); view.drop()
@@ -41,7 +41,7 @@ class IncrementalViewSpec extends SparkSpec {
   }
 
   test("group extinction: deleting a group's last members removes its row") {
-    val root = "/tmp/graft_tables/ivm_spec2"
+    val root = s"$tablesRoot/ivm_spec2"
     val base = LakeTable(spark, root, "ivm_base2", Seq("id"))
     val view = LakeTable(spark, root, "ivm_view2", Seq("k"))
     base.drop(); view.drop()
@@ -64,7 +64,7 @@ class IncrementalViewSpec extends SparkSpec {
       .as[(Long, Long, String, String, String)].collect().toSet
 
   test("min/max maintained == full recompute incl. extremum deletion") {
-    val root = "/tmp/graft_tables/ivm_mm1"
+    val root = s"$tablesRoot/ivm_mm1"
     val base = LakeTable(spark, root, "mm_base", Seq("id"))
     val view = LakeTable(spark, root, "mm_view", Seq("k"))
     base.drop(); view.drop()
@@ -90,7 +90,7 @@ class IncrementalViewSpec extends SparkSpec {
 
   test("chained maintenance via the RETURNED synced version " +
       "(availableVersions.min is the documented trap)") {
-    val root = "/tmp/graft_tables/ivm_mm2"
+    val root = s"$tablesRoot/ivm_mm2"
     val base = LakeTable(spark, root, "mm_base2", Seq("id"))
     val view = LakeTable(spark, root, "mm_view2", Seq("k"))
     base.drop(); view.drop()
@@ -120,7 +120,7 @@ class IncrementalViewSpec extends SparkSpec {
   test("distinct-count view: transitions only when the LAST instance " +
       "of a value goes (or the first arrives), chained via returned " +
       "versions, group extinction") {
-    val root = "/tmp/graft_tables/ivm_dist"
+    val root = s"$tablesRoot/ivm_dist"
     val base = LakeTable(spark, root, "d_base", Seq("id"))
     val aux = LakeTable(spark, root, "d_aux", Seq("k", "__v"))
     val view = LakeTable(spark, root, "d_view", Seq("k"))
@@ -183,7 +183,7 @@ class IncrementalViewSpec extends SparkSpec {
 
   test("moments view: maintained == recompute through churn and " +
       "extinction; second moment needs no rescan") {
-    val root = "/tmp/graft_tables/ivm_mom"
+    val root = s"$tablesRoot/ivm_mom"
     val base = LakeTable(spark, root, "mom_base", Seq("id"), changeFeed = true)
     val view = LakeTable(spark, root, "mom_view", Seq("k"))
     base.drop(); view.drop()
@@ -218,7 +218,7 @@ class IncrementalViewSpec extends SparkSpec {
 
   test("join view: maintained == recompute through fact churn, then " +
       "simultaneous fact+dim churn, chained via returned versions") {
-    val root = "/tmp/graft_tables/ivm_jv1"
+    val root = s"$tablesRoot/ivm_jv1"
     val f = LakeTable(spark, root, "jv_fact", Seq("id"), changeFeed = true)
     val d = LakeTable(spark, root, "jv_dim", Seq("ck"), changeFeed = true)
     val v = LakeTable(spark, root, "jv_view", Seq("seg"))
@@ -255,7 +255,7 @@ class IncrementalViewSpec extends SparkSpec {
   }
 
   test("join view grouped by a fact-side key (dim as filter)") {
-    val root = "/tmp/graft_tables/ivm_jv2"
+    val root = s"$tablesRoot/ivm_jv2"
     val f = LakeTable(spark, root, "jv_fact2", Seq("id"), changeFeed = true)
     val d = LakeTable(spark, root, "jv_dim2", Seq("ck"), changeFeed = true)
     val v = LakeTable(spark, root, "jv_view2", Seq("ck"))
@@ -282,7 +282,7 @@ class IncrementalViewSpec extends SparkSpec {
 
   test("quiet-dim join maintenance never reads the fact table " +
       "(bytes-read pin on the O(changes) claim)") {
-    val root = "/tmp/graft_tables/ivm_jv4"
+    val root = s"$tablesRoot/ivm_jv4"
     val f = LakeTable(spark, root, "nb_fact", Seq("id"), changeFeed = true)
     val d = LakeTable(spark, root, "nb_dim", Seq("ck"))
     val v = LakeTable(spark, root, "nb_view", Seq("seg"))
@@ -328,7 +328,7 @@ class IncrementalViewSpec extends SparkSpec {
 
   test("join min/max view: extremum deletes rescan through the join; " +
       "same-window cancelled values never tighten") {
-    val root = "/tmp/graft_tables/ivm_jv3"
+    val root = s"$tablesRoot/ivm_jv3"
     val f = LakeTable(spark, root, "jm_fact", Seq("id"), changeFeed = true)
     val d = LakeTable(spark, root, "jm_dim", Seq("ck"), changeFeed = true)
     val v = LakeTable(spark, root, "jm_view", Seq("seg"))
@@ -367,7 +367,7 @@ class IncrementalViewSpec extends SparkSpec {
     // to 6, so 0.0003² (9.0E-8) maintained as 0.000000 — masked by 2-dp
     // money fixtures. 4-dp values with sub-1e-6 squares pin maintained
     // ≡ recomputed bit-for-bit through insert/update/delete batches.
-    val root = "/tmp/graft_tables/ivm_mom4dp"
+    val root = s"$tablesRoot/ivm_mom4dp"
     val base = LakeTable(spark, root, "m4_base", Seq("id"), changeFeed = true)
     val view = LakeTable(spark, root, "m4_view", Seq("k"))
     base.drop(); view.drop()
@@ -403,7 +403,7 @@ class IncrementalViewSpec extends SparkSpec {
     // insert-side extrema unless the maintainer nets per (group, value)
     // first (the round-9 high-severity ADVICE case; the older specs
     // only exercised snapshot-diff tables, which arrive pre-netted)
-    val root = "/tmp/graft_tables/ivm_mmfeed"
+    val root = s"$tablesRoot/ivm_mmfeed"
     val base = LakeTable(spark, root, "mmf_base", Seq("id"), changeFeed = true)
     val view = LakeTable(spark, root, "mmf_view", Seq("k"))
     base.drop(); view.drop()
@@ -433,7 +433,7 @@ class IncrementalViewSpec extends SparkSpec {
 
   test("broadcast gates degrade to shuffle semi-joins past the limit " +
       "with identical results (min/max, join sum, join min/max)") {
-    val root = "/tmp/graft_tables/ivm_gate"
+    val root = s"$tablesRoot/ivm_gate"
     val prev = IncrementalView.broadcastLimit
     IncrementalView.broadcastLimit = 1 // every gate takes the fallback
     try {
@@ -484,7 +484,7 @@ class IncrementalViewSpec extends SparkSpec {
 
   test("fused stats view: one-pass maintenance == recompute through " +
       "4-dp churn, phantom events, extremum deletion, and extinction") {
-    val root = "/tmp/graft_tables/ivm_stats"
+    val root = s"$tablesRoot/ivm_stats"
     val base = LakeTable(spark, root, "st_base", Seq("id"), changeFeed = true)
     val view = LakeTable(spark, root, "st_view", Seq("k"))
     base.drop(); view.drop()
@@ -523,7 +523,7 @@ class IncrementalViewSpec extends SparkSpec {
   test("full stats view (aux-backed): maintained == recompute through " +
       "churn, phantom, extremum deletion, all-non-null-deleted, " +
       "distinct transitions, extinction") {
-    val root = "/tmp/graft_tables/ivm_full"
+    val root = s"$tablesRoot/ivm_full"
     val base = LakeTable(spark, root, "fs_base", Seq("id"), changeFeed = true)
     val aux = LakeTable(spark, root, "fs_aux", Seq("k", "__v"))
     val view = LakeTable(spark, root, "fs_view", Seq("k"))
@@ -574,7 +574,7 @@ class IncrementalViewSpec extends SparkSpec {
 
   test("full stats crash-replay: re-running the same span converges, " +
       "including the crash window between the aux and view commits") {
-    val root = "/tmp/graft_tables/ivm_flreplay"
+    val root = s"$tablesRoot/ivm_flreplay"
     val base = LakeTable(spark, root, "fr_base", Seq("id"), changeFeed = true)
     val aux = LakeTable(spark, root, "fr_aux", Seq("k", "__v"))
     val view = LakeTable(spark, root, "fr_view", Seq("k"))
@@ -621,7 +621,7 @@ class IncrementalViewSpec extends SparkSpec {
 
   test("full stats view with a BUCKETED aux: identical results, " +
       "Hive-partitioned aux layout, pruned per-batch merge") {
-    val root = "/tmp/graft_tables/ivm_fullb"
+    val root = s"$tablesRoot/ivm_fullb"
     val base = LakeTable(spark, root, "fb_base", Seq("id"), changeFeed = true)
     val aux = LakeTable(spark, root, "fb_aux", Seq("k", "__v"),
       partitionCols = Seq("__b"))
@@ -685,7 +685,7 @@ class IncrementalViewSpec extends SparkSpec {
 
   test("full stats maintenance NEVER reads the base (bytes-read pin " +
       "on the aux-answered extremum deletion)") {
-    val root = "/tmp/graft_tables/ivm_full_nb"
+    val root = s"$tablesRoot/ivm_full_nb"
     val base = LakeTable(spark, root, "fnb_base", Seq("id"), changeFeed = true)
     val aux = LakeTable(spark, root, "fnb_aux", Seq("k", "__v"))
     val view = LakeTable(spark, root, "fnb_view", Seq("k"))
@@ -739,7 +739,7 @@ class IncrementalViewSpec extends SparkSpec {
   }
 
   test("min/max extinction + null values never join the extrema") {
-    val root = "/tmp/graft_tables/ivm_mm3"
+    val root = s"$tablesRoot/ivm_mm3"
     val base = LakeTable(spark, root, "mm_base3", Seq("id"))
     val view = LakeTable(spark, root, "mm_view3", Seq("k"))
     base.drop(); view.drop()
@@ -760,7 +760,7 @@ class IncrementalViewSpec extends SparkSpec {
 
   test("a stored sum_sq past decimal(37,8) headroom fails LOUDLY, " +
       "never silently resets to 0") {
-    val root = "/tmp/graft_tables/ivm_ovf"
+    val root = s"$tablesRoot/ivm_ovf"
     val base = LakeTable(spark, root, "ovf_base", Seq("id"))
     val view = LakeTable(spark, root, "ovf_view", Seq("k"))
     base.drop(); view.drop()

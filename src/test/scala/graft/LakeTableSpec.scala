@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit, sum, when}
@@ -14,7 +14,7 @@ class LakeTableSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshRoot: String =
-    Files.createTempDirectory("laketable").toString
+    Files.createTempDirectory(Paths.get(tablesRoot), "laketable").toString
 
   private def rows(t: LakeTable): Set[(Long, String, String)] =
     t.read.select("id", "v", "p").as[(Long, String, String)].collect().toSet

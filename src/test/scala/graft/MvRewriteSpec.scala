@@ -33,7 +33,7 @@ class MvRewriteSpec extends SparkSpec {
   private def vDec = col("v").cast("decimal(20,4)")
 
   private def freshPair(tag: String): (LakeTable, LakeTable) = {
-    val root = s"/tmp/graft_tables/mv_spec_$tag"
+    val root = s"$tablesRoot/mv_spec_$tag"
     val base = LakeTable(spark, root, s"mv_base_$tag", Seq("id"),
       changeFeed = true)
     val view = LakeTable(spark, root, s"mv_view_$tag", Seq("k", "k2"))
@@ -220,7 +220,7 @@ class MvRewriteSpec extends SparkSpec {
 
   test("aggregate-over-join rewrites to the maintained join view") {
     import graft.table.IncrementalView
-    val root = "/tmp/graft_tables/mv_spec_join"
+    val root = s"$tablesRoot/mv_spec_join"
     val fact = LakeTable(spark, root, "mvj_fact", Seq("fid"),
       changeFeed = true)
     val dim = LakeTable(spark, root, "mvj_dim", Seq("jk"),
@@ -292,7 +292,7 @@ class MvRewriteSpec extends SparkSpec {
 
   test("count(distinct) is served by a full-stats view, exact form only") {
     import graft.table.IncrementalView
-    val root = "/tmp/graft_tables/mv_spec_distinct"
+    val root = s"$tablesRoot/mv_spec_distinct"
     val base = LakeTable(spark, root, "mvd_base", Seq("id"),
       changeFeed = true)
     val aux = LakeTable(spark, root, "mvd_aux", Seq("k", "k2", "__v"))
@@ -337,7 +337,7 @@ class MvRewriteSpec extends SparkSpec {
 
   test("multiple views per base: the best fresh container serves each query") {
     import graft.table.IncrementalView
-    val root = "/tmp/graft_tables/mv_spec_multi"
+    val root = s"$tablesRoot/mv_spec_multi"
     val base = LakeTable(spark, root, "mvm_base", Seq("id"),
       changeFeed = true)
     val fine = LakeTable(spark, root, "mvm_fine", Seq("k", "k2"))
@@ -378,7 +378,7 @@ class MvRewriteSpec extends SparkSpec {
   test("a streaming-maintained view serves the rewrite after a " +
       "post-drain annotate") {
     import graft.table.IncrementalView
-    val root = "/tmp/graft_tables/mv_spec_stream"
+    val root = s"$tablesRoot/mv_spec_stream"
     val base = LakeTable(spark, root, "mvs_base", Seq("id"),
       changeFeed = true)
     val view = LakeTable(spark, root, "mvs_view", Seq("k", "k2"))
@@ -409,7 +409,7 @@ class MvRewriteSpec extends SparkSpec {
 
   test("serveDouble registration serves UNCAST double aggregates " +
       "(avg/sum/min/max/count); the strict default still refuses them") {
-    val root = "/tmp/graft_tables/mv_spec_dbl"
+    val root = s"$tablesRoot/mv_spec_dbl"
     val base = LakeTable(spark, root, "mvd_base", Seq("id"),
       changeFeed = true)
     val aux = LakeTable(spark, root, "mvd_aux", Seq("k", "k2", "__v"))
@@ -468,7 +468,7 @@ class MvRewriteSpec extends SparkSpec {
 
   test("avg() and count(col) are served by the full-stats view's " +
       "n_nonnull — correct on null-bearing groups, exact and roll-up") {
-    val root = "/tmp/graft_tables/mv_spec_avg"
+    val root = s"$tablesRoot/mv_spec_avg"
     val base = LakeTable(spark, root, "mva_base", Seq("id"),
       changeFeed = true)
     val aux = LakeTable(spark, root, "mva_aux", Seq("k", "k2", "__v"))
@@ -566,7 +566,7 @@ class MvRewriteSpec extends SparkSpec {
 
   test("multiple JOIN views per (fact, dim): best fresh container wins, " +
       "finer serves the roll-up") {
-    val root = "/tmp/graft_tables/mv_spec_joinmulti"
+    val root = s"$tablesRoot/mv_spec_joinmulti"
     val fact = LakeTable(spark, root, "mvjm_fact", Seq("fid"),
       changeFeed = true)
     val dim = LakeTable(spark, root, "mvjm_dim", Seq("jk"),
@@ -624,7 +624,7 @@ class MvRewriteSpec extends SparkSpec {
     // same rows, written as a PLAIN parquet dir (no v<N> leaf) under a
     // directory that IS registered in the catalog: the rule can parse
     // no version from the scan path, so it must safely never fire
-    val root2 = "/tmp/graft_tables/mv_spec_plainroot"
+    val root2 = s"$tablesRoot/mv_spec_plainroot"
     val fakeBase = LakeTable(spark, root2, "plain_base", Seq("id"))
     val dataDir = s"${fakeBase.tablePath}/data"
     base.read.write.mode("overwrite").parquet(dataDir)

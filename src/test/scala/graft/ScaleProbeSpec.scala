@@ -425,7 +425,7 @@ class ScaleProbeSpec extends SparkSpec {
           col("o_orderstatus"), col("o_totalprice"), col("o_orderdate"),
           col("o_orderpriority"))
       }.reduce(_ unionByName _)
-      val root = "/tmp/graft_tables/probe_spec_ivm"
+      val root = s"$tablesRoot/probe_spec_ivm"
       val t = LakeTable(spark, root, s"b$n", Seq("o_orderkey"),
         changeFeed = true)
       val v = LakeTable(spark, root, s"v$n", Seq("o_custkey"))
@@ -537,7 +537,7 @@ class ScaleProbeSpec extends SparkSpec {
       val base = ScaleProbe.inflate(
         Tables.load(spark, sf, "documents").select("doc_id", "text", "lang"),
         maxId, n).select("doc_id", "text")
-      val root = "/tmp/graft_tables/probe_spec_didx"
+      val root = s"$tablesRoot/probe_spec_didx"
       val t = LakeTable(spark, root, s"pd$n", Seq("doc_id"),
         changeFeed = true)
       t.drop()
@@ -578,7 +578,7 @@ class ScaleProbeSpec extends SparkSpec {
     import graft.table.LakeTable
     val orders = Tables.load(spark, sf, "orders")
     def run(n: Int): (Long, Long, Long) = {
-      val root = "/tmp/graft_tables/probe_spec_feed"
+      val root = s"$tablesRoot/probe_spec_feed"
       val t = LakeTable(spark, root, s"fr$n", Seq("o_orderkey"),
         changeFeed = true)
       t.drop(); t.create(orders)

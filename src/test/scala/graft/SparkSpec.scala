@@ -9,6 +9,9 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sf = "/root/testdata/sf0.001"
 
+  /** This JVM's scratch root for the specs' table dirs. */
+  def tablesRoot: String = SparkSpec.tablesRoot
+
   /** Walk an EXECUTED physical plan including AQE wrappers: a
     * materialized query stage's subtree hangs off `plan`, not
     * `children`, so a plain `collect` over an adaptive plan finds no
@@ -41,6 +44,19 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  /** One temp dir per JVM (`graft_spec_tables*` under java.io.tmpdir),
+    * deleted at exit: two processes running specs (or a spec run and a
+    * Verify run) never share table dirs and delete each other's files
+    * mid-read. */
+  lazy val tablesRoot: String = {
+    import java.nio.file.{Files, Path}
+    val d = Files.createTempDirectory("graft_spec_tables")
+    sys.addShutdownHook(scala.util.Try(Files.walk(d)
+      .sorted(java.util.Comparator.reverseOrder[Path]())
+      .forEach(p => Files.delete(p))))
+    d.toString
+  }
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
