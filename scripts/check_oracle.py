@@ -42,8 +42,8 @@ for name, sql in sorted(oracle.items()):
                  if got[c].dtype.kind != want[c].dtype.kind]
         if kinds:
             print(f"FAIL {name}: dtype kind mismatch {kinds}"); fails += 1; continue
-        g = got[gcols].applymap(norm).values.tolist()
-        w = want[wcols].applymap(norm).values.tolist()
+        g = got[gcols].map(norm).values.tolist()
+        w = want[wcols].map(norm).values.tolist()
         # driver may compare ordered; check both ordered and sorted
         if g == w:
             print(f"OK   {name} ({len(got)} rows)")

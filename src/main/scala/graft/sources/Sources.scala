@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.StructType
   * (declared schema), order_glue_job.py:87 (header CSV),
   * order_glue_job.py:166-174 (rejected JSON sink),
   * order_items_glue_job.py:143 (rejected CSV sink),
-  * order_glue_job.py:180,210 (log text sink, coalesce(1)).
+  * order_glue_job.py:180,210 (log text sink).
   */
 object Sources {
 
@@ -47,10 +47,19 @@ object Sources {
   def writeCsv(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").option("header", "true").csv(path)
 
-  /** K6 — single-file text log output (coalesce(1) compaction: only valid
-    * for bounded logs/metrics, never data-scale output). */
+  /** K6 — single-file text log output, written from the driver: the
+    * lines are already bounded driver data (logs/metrics, never
+    * data-scale output), so a Spark job — the reference's coalesce(1)
+    * text write — would only add its scheduling cost. Same layout as
+    * Spark's text sink in overwrite mode: the dir replaced, one `part-*`
+    * file of newline-terminated lines, no `_SUCCESS` marker. */
   def writeTextLog(spark: SparkSession, lines: Seq[String], path: String): Unit = {
-    import spark.implicits._
-    lines.toDF("log").coalesce(1).write.mode("overwrite").text(path)
+    import java.nio.file.{Files, Path, Paths}
+    val dir = Paths.get(path)
+    if (Files.exists(dir))
+      Files.walk(dir).sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => Files.delete(p))
+    Files.createDirectories(dir)
+    Files.writeString(dir.resolve("part-00000.txt"), lines.map(_ + "\n").mkString)
   }
 }

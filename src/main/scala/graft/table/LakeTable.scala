@@ -28,13 +28,18 @@ import graft.ops.CoreOps
   * of a write leaves the previous pointer and its data fully intact.
   *
   * Scale notes: the anti-join shuffles on the merge key exactly as Delta's
-  * own MERGE does; with a `partitionBy` column the rewrite is a full-table
-  * rewrite, which is the correct baseline without deletion vectors. At
-  * 100 TB you'd bound the rewrite by first computing the touched partition
-  * set from the source (partition pruning on the target scan) — provided
-  * here via `prunePartitions`. Partition columns should be string/date/
-  * integral-valued; null partition values are handled via Hive's
-  * `__HIVE_DEFAULT_PARTITION__` convention.
+  * own MERGE does. The unit of a row-level rewrite is the data FILE
+  * (Delta's file-pruned MERGE/UPDATE/DELETE). Every version dir of an
+  * unpartitioned table carries a `_files` sidecar with each data file's
+  * row count and leading-merge-key [min, max], read from the parquet
+  * footers of the files a commit wrote and carried over for the files it
+  * hard-linked. Such a table holding more than [[LakeTable.RowsPerFile]]
+  * rows keeps one key range per file; a DML rewrites only the files
+  * whose ranges can hold a key it touches and hard-links the rest. A partitioned table rewrites the
+  * files of the partitions it touches (`prunePartitions`), which is the
+  * same file set computed from partition values. Partition columns should
+  * be string/date/integral-valued; null partition values are handled via
+  * Hive's `__HIVE_DEFAULT_PARTITION__` convention.
   *
   * `partitionsFromKeys` is a caller ASSERTION that every partition
   * column's value is a pure function of the merge keys (the
@@ -202,18 +207,11 @@ final class LakeTable(private val spark: SparkSession, private val root: String,
       if (schemaFingerprint(st) == fp) Some(st) else None
     } catch { case _: Throwable => None }
 
-  private def upsertFeedEvents(source: DataFrame,
-      srcTuples: => Seq[Seq[Option[String]]]): DataFrame = {
+  /** Typed upsert events of `source` against `target`, a cut of the
+    * current version that holds every row matching a source key (the
+    * feed join only consults those). */
+  private def upsertFeedEvents(source: DataFrame, target: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{array, explode, lit, struct, when, xxhash64}
-    // the feed join only consults target rows MATCHING source keys, so
-    // with a key-derived layout the target cut to the source's
-    // partitions is lossless — without it every CDF-recording write
-    // pays a full-table read just to stage its feed (the one remaining
-    // O(table) term of a key-derived small-batch merge; partition-only
-    // predicates prune at the source via driver-side evaluation).
-    // `srcTuples`: the source's partition tuples, shared with the
-    // merge's touched set so a DML collects them at most once
-    val target = prunedToSourceParts(read, srcTuples)
     val allCols = (target.columns ++
       source.columns.filterNot(target.columns.contains)).toIndexedSeq
     val dtypes = (target.schema ++ source.schema)
@@ -246,7 +244,9 @@ final class LakeTable(private val spark: SparkSession, private val root: String,
     * target row shares the merge keys, hence the derived partition
     * value); the identity otherwise (and `tuples` is never evaluated).
     * The predicate references only partition columns, so it prunes at
-    * the source via driver-side partition evaluation. */
+    * the source via driver-side partition evaluation. Without it every
+    * change-feed write of a key-derived layout would pay a full-table
+    * read just to stage its feed. */
   private def prunedToSourceParts(target: DataFrame,
       tuples: => Seq[Seq[Option[String]]]): DataFrame =
     if (!partitionsFromKeys || partitionCols.isEmpty) target
@@ -377,7 +377,7 @@ final class LakeTable(private val spark: SparkSession, private val root: String,
     * after the created version). */
   private[graft] def pendingCreate(df: DataFrame,
       meta: Map[String, String] = Map.empty): LakeTable.Pending =
-    LakeTable.Pending(this, clustered(df), None, meta, () => ())
+    LakeTable.Pending(this, clustered(df), None, meta)
 
   /** Fail like Delta's multiple-source-rows-matched error when a merge
     * source carries more than one row per merge key. The guard RIDES
@@ -411,13 +411,25 @@ final class LakeTable(private val spark: SparkSession, private val root: String,
     * i.e. unmatched target rows survive, matched ones are replaced by the
     * source row (UPDATE ALL), unmatched source rows are inserted.
     *
-    * `prunePartitions` (default ON for partitioned tables, matching Delta
-    * MERGE's partition pruning): only the partitions the source touches
-    * are rewritten; untouched partition files are HARD-LINKED from the
-    * previous version into the new one (metadata-only, no data copied —
-    * the POSIX analogue of manifest-level file reuse), so MERGE cost is
-    * sub-linear in table size and every prior version stays a complete,
-    * readable snapshot.
+    * Copy-on-write at FILE granularity, like Delta's MERGE: only the data
+    * files that can hold a source key are rewritten, every other file of
+    * the current version is HARD-LINKED into the new one (metadata-only,
+    * no data copied — the POSIX analogue of manifest-level file reuse),
+    * so MERGE cost is sub-linear in table size and every prior version
+    * stays a complete, readable snapshot.
+    *  - Unpartitioned, more than [[LakeTable.RowsPerFile]] rows: each file
+    *    holds one range of the leading merge key (the `_files` sidecar
+    *    records it). One job over the source (cached, so its lineage runs
+    *    once) finds the ranges its keys fall in; those files are rewritten
+    *    with their survivors plus the source rows of their ranges, and a
+    *    key above the table's max extends the tail file. A rewritten range
+    *    grown past RowsPerFile splits into equal-width sub-ranges. A file
+    *    without recorded stats is always rewritten.
+    *  - Unpartitioned, at most RowsPerFile rows: the whole table rewrites
+    *    (no added job, no shuffle).
+    *  - Partitioned, `prunePartitions` (default ON, Delta MERGE's partition
+    *    pruning): the files of the partitions the source touches are
+    *    rewritten, the files of every other partition hard-link.
     *
     * `meta` entries are merged into the table's committed metadata in
     * the SAME atomic publish as the merged rows (see the metadata
@@ -457,8 +469,8 @@ final class LakeTable(private val spark: SparkSession, private val root: String,
     * Cost: identical to [[upsert]] — one anti-join of the target
     * against `df`'s keys plus the survivors' union; deletions ride the
     * SAME anti-join (a deleted key is simply not re-inserted), so
-    * extinction adds no extra pass. Partitioned tables prune exactly
-    * like [[upsert]] (only partitions holding `df` keys — deletions
+    * extinction adds no extra pass. The rewrite is file-granular exactly
+    * like [[upsert]] (only files that can hold `df` keys — deletions
     * included — are rewritten; the rest hard-link), which is what lets
     * a bucket-partitioned IVM auxiliary table absorb per-batch merges
     * at O(touched buckets) instead of a full rewrite.
@@ -521,63 +533,90 @@ final class LakeTable(private val spark: SparkSession, private val root: String,
 
   /** The one MERGE builder behind [[upsert]] (`del` = None: no
     * uniqueness guard, no delete clause, no delete-feed branch) and
-    * [[upsertWithDelete]].
+    * [[upsertWithDelete]]. The touched set is a set of the current
+    * version's files; every other file hard-links.
     *
-    * Partition pruning is SAFE over the full partition tuple: the
-    * touched set is (a) every partition the source writes into, UNION
-    * (b) every partition holding a target row whose merge key appears
-    * in the source. (b) is what makes pruning safe: a key whose
-    * partition value changed between target and source (e.g. an
-    * order's date corrected) must have its OLD partition rewritten too,
-    * or the stale row survives and MERGE key uniqueness breaks. Delta's
-    * MERGE matches keys across all partitions for the same reason. A
-    * deleted key's target partitions are exactly clause (b)'s, so they
-    * rewrite (without the deleted row) while untouched partitions
-    * hard-link. Under `partitionsFromKeys` (b) ⊆ (a) is a theorem and
-    * the batch's partition tuples — collected at most ONCE per DML —
-    * serve the touched set and both feed cuts. */
+    * Key ranges (unpartitioned tables above RowsPerFile rows): the
+    * candidates are the files of every range holding a source key plus
+    * every file without stats — a superset of the files holding a
+    * matched key, because ranges hold every key of their files.
+    *
+    * Partitions: the touched set is the files of (a) every partition the
+    * source writes into, UNION (b) every partition holding a target row
+    * whose merge key appears in the source. (b) is what makes pruning
+    * safe: a key whose partition value changed between target and source
+    * (e.g. an order's date corrected) must have its OLD partition
+    * rewritten too, or the stale row survives and MERGE key uniqueness
+    * breaks. Delta's MERGE matches keys across all partitions for the
+    * same reason. A deleted key's target partitions are exactly clause
+    * (b)'s, so they rewrite (without the deleted row). Under
+    * `partitionsFromKeys` (b) ⊆ (a) is a theorem and the batch's
+    * partition tuples — collected at most ONCE per DML — serve the
+    * touched set and both feed cuts. */
   private def pendingMerge(src: DataFrame,
       del: Option[org.apache.spark.sql.Column], meta: Map[String, String],
       prunePartitions: Boolean, matchedPartsHint: Option[DataFrame],
       touchedPartsHint: Option[Seq[Option[String]]]): LakeTable.Pending = {
     require(touchedPartsHint.isEmpty || partitionCols.size == 1,
       s"table $name: touchedPartsHint is single-partition-column only")
-    val survivors = del.fold(src)(d => src.filter(!d))
-    if (!exists) return pendingCreate(survivors, meta)
-    enforceConstraints(survivors, if (del.isEmpty) "upsert" else "upsertWithDelete")
-    val target = read
-    lazy val srcTuples = sourcePartTuples(src)
-    val touched = Option.when(prunePartitions && partitionCols.nonEmpty)(
-      touchedPartsHint match {
-        case Some(vs) => vs.map(v => encDriver(Seq(v))).toSet
-        case None if partitionsFromKeys => srcTuples.map(encDriver).toSet
-        case None => touchedParts(src, target, matchedPartsHint)
-      })
-    val merged = CoreOps.antiJoin(mergeKeys, src)(inParts(target, touched))
-      .unionByName(survivors, allowMissingColumns = true)
-    // feed reads still resolve the old pointer (publish comes after)
-    val feed = Option.when(changeFeed)(del.fold(upsertFeedEvents(src, srcTuples))(
-      feedEventsWithDeletes(src, _, srcTuples)))
-    pendingWrite(merged, feed, meta, touched)
+    if (!exists) return pendingCreate(del.fold(src)(d => src.filter(!d)), meta)
+    val op = if (del.isEmpty) "upsert" else "upsertWithDelete"
+    val donor = currentDir
+    def merge(source: DataFrame, cut: DataFrame, feedTarget: DataFrame) = {
+      val survivors = del.fold(source)(d => source.filter(!d))
+      enforceConstraints(survivors, op)
+      val merged = CoreOps.antiJoin(mergeKeys, source)(cut)
+        .unionByName(survivors, allowMissingColumns = true)
+      // feed reads still resolve the old pointer (publish comes after)
+      (merged, Option.when(changeFeed)(del.fold(upsertFeedEvents(source, feedTarget))(
+        feedEventsWithDeletes(source, _, feedTarget))))
+    }
+    keyRanges(donor) match {
+      case Some(kr) if kr.single =>
+        // one range (a load not yet clustered): every file is a candidate
+        // and no probe is needed; the rewrite splits it into key ranges
+        val (merged, feed) = merge(src, read, read)
+        pendingWrite(kr.slotted(merged, kr.sizedFiles(kr.touched(Set(0)))), feed, meta, None)
+      case Some(kr) =>
+        // the source feeds two jobs (the candidate probe, then the
+        // write): cached, so its lineage — and any Observation on it —
+        // runs once
+        val cached = src.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+        val source = if (cached) src.cache() else src
+        val sized = kr.sourceHits(source)
+        val touched = kr.touched(sized.keySet)
+        val cut = inFiles(read, touched)
+        val (merged, feed) = merge(source, cut, cut)
+        pendingWrite(kr.slotted(merged, sized), feed, meta, Some(touched),
+          () => if (cached) source.unpersist())
+      case None =>
+        val target = read
+        lazy val srcTuples = sourcePartTuples(src)
+        val parts = Option.when(prunePartitions && partitionCols.nonEmpty)(
+          touchedPartsHint match {
+            case Some(vs) => vs.map(v => encDriver(Seq(v))).toSet
+            case None if partitionsFromKeys => srcTuples.map(encDriver).toSet
+            case None => touchedParts(src, target, matchedPartsHint)
+          })
+        val (merged, feed) = merge(src, inParts(target, parts),
+          prunedToSourceParts(target, srcTuples))
+        pendingWrite(merged, feed, meta, parts.map(filesInParts(donor, _)))
+    }
   }
 
   /** Feed for a merge-with-delete batch: survivors produce the usual
     * typed upsert events; deletions emit the matched TARGET rows
     * (pre-delete images) as delete events — keys in `df` with no
-    * target match are no-ops, like SQL DELETE. */
+    * target match are no-ops, like SQL DELETE. `target` holds every
+    * current row matching a `df` key (see [[upsertFeedEvents]]). */
   private def feedEventsWithDeletes(df: DataFrame,
-      del: org.apache.spark.sql.Column,
-      srcTuples: => Seq[Seq[Option[String]]]): DataFrame = {
+      del: org.apache.spark.sql.Column, target: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.lit
     val deletedKeys = df.filter(del).select(mergeKeys.map(col): _*).distinct()
-    // same key-derived cut as upsertFeedEvents: deleted keys' target
-    // rows live in the batch's partitions. The survivors' cut reuses
-    // the FULL batch's tuples — a lossless superset (survivor keys are
-    // batch keys).
-    val delEvents = prunedToSourceParts(read, srcTuples)
+    val delEvents = target
       .join(deletedKeys, mergeKeys, "left_semi")
       .withColumn("_change_type", lit("delete"))
-    upsertFeedEvents(df.filter(!del), srcTuples)
+    upsertFeedEvents(df.filter(!del), target)
       .unionByName(delEvents, allowMissingColumns = true)
   }
 
@@ -619,42 +658,218 @@ final class LakeTable(private val spark: SparkSession, private val root: String,
       .collect().map(_.getString(0)).toSet
   }
 
-  /** The partition tuples holding >= 1 row of `df` matching `cond` —
-    * one bounded collect (a DELETE/UPDATE's touched set). */
-  private def partsMatching(df: DataFrame,
-      cond: org.apache.spark.sql.Column): Set[String] =
-    df.filter(cond).select(encTuple.as("__p")).distinct()
-      .collect().map(_.getString(0)).toSet
+  /** The data files (relative to version dir `dir`, whose frame `df`
+    * is) holding >= 1 row matching `cond` — one bounded collect of
+    * `_metadata.file_path` (a DELETE/UPDATE's touched set). */
+  private def filesMatching(dir: Path, df: DataFrame,
+      cond: org.apache.spark.sql.Column): Set[String] = {
+    val base = dir.toAbsolutePath.normalize
+    df.filter(cond).select(col("_metadata.file_path")).distinct().collect()
+      .map(r => base.relativize(Paths.get(new java.net.URI(r.getString(0)))).toString)
+      .toSet
+  }
 
-  /** `df` cut to the touched partitions (all of it when unpruned). */
-  private def inParts(df: DataFrame, touched: Option[Set[String]]): DataFrame =
-    touched.fold(df)(t => df.filter(encTuple.isin(t.toSeq: _*)))
-
-  /** Hard-link untouched leaf partition dirs from the donor version into
-    * staging: metadata-only (no bytes copied), and because hard links
-    * survive unlinking of the original path, the donor stays a complete
-    * snapshot and version pruning can delete old dirs safely. The walk
-    * follows the Hive layout — `<pcol>=<escaped value>` nested per
-    * partition column, null as __HIVE_DEFAULT_PARTITION__ — and links
-    * every LEAF dir whose decoded tuple is not in the touched set. */
-  private def linkUntouched(donor: Path, touched: Set[String]): Unit = {
+  /** The [[encDriver]] encoding of the partition a data file (relative
+    * to its version dir) lies in. The Hive layout nests one
+    * `<pcol>=<escaped value>` dir per partition column, null as
+    * __HIVE_DEFAULT_PARTITION__. */
+  private def partOf(file: String): String = {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    def walk(dir: Path, depth: Int, prefix: Seq[Option[String]]): Unit =
-      listing(dir).foreach { p =>
-        val n = p.getFileName.toString
-        if (Files.isDirectory(p) && n.startsWith(s"${partitionCols(depth)}=")) {
-          val raw = n.stripPrefix(s"${partitionCols(depth)}=")
-          val tup = prefix :+ (if (raw == HiveNullPart) None
-            else Some(ExternalCatalogUtils.unescapePathName(raw)))
-          if (depth < partitionCols.size - 1) walk(p, depth + 1, tup)
-          else {
-            val dst = stagingDir.resolve(donor.relativize(p).toString)
-            if (!touched.contains(encDriver(tup)) && !Files.exists(dst))
-              linkTree(p, dst)
-          }
+    encDriver(file.split('/').toSeq.init.map { d =>
+      val raw = d.split("=", 2)(1)
+      if (raw == HiveNullPart) None else Some(ExternalCatalogUtils.unescapePathName(raw))
+    })
+  }
+
+  /** The data files of version dir `dir` in the partitions `parts`. */
+  private def filesInParts(dir: Path, parts: Set[String]): Set[String] =
+    LakeTable.dataFiles(dir).filter(f => parts.contains(partOf(f))).toSet
+
+  /** `df` cut to the partitions `parts` (all of it when unpruned) — a
+    * partition-column predicate, pruned at the source. */
+  private def inParts(df: DataFrame, parts: Option[Set[String]]): DataFrame =
+    parts.fold(df)(t => df.filter(encTuple.isin(t.toSeq: _*)))
+
+  /** An unpartitioned version's frame `df` cut to the data files `files`
+    * — a `_metadata.file_name` predicate, which Spark applies when it
+    * lists the files, so only those files are read. */
+  private def inFiles(df: DataFrame, files: Set[String]): DataFrame =
+    df.filter(col("_metadata.file_name").isin(files.toSeq: _*))
+
+  /** Hard-link the donor version's `files` (and their checksum files)
+    * into staging: metadata-only (no bytes copied), and because hard
+    * links survive unlinking of the original path, the donor stays a
+    * complete snapshot and version pruning can delete old dirs safely.
+    * Each file keeps its relative path, so a file of an untouched
+    * partition stays in that partition. */
+  private def linkUntouched(donor: Path, files: Seq[String]): Unit =
+    files.foreach { f =>
+      val src = donor.resolve(f)
+      val dst = stagingDir.resolve(f)
+      Files.createDirectories(dst.getParent)
+      Files.createLink(dst, src)
+      val crc = src.resolveSibling(s".${src.getFileName}.crc")
+      if (Files.exists(crc)) Files.createLink(dst.resolveSibling(crc.getFileName), crc)
+    }
+
+  // ---- key-range files: the per-file stats sidecar ----
+  //
+  // `_files` (underscore: invisible to parquet readers) lists one line
+  // per data file of its version dir: `path<TAB>rows[<TAB>min<TAB>max]`,
+  // min/max of the leading merge key, absent when the file holds no
+  // non-null key. Written at commit for an unpartitioned table with an
+  // integral leading key (footer min/max are exact for those; a
+  // partitioned table's unit of rewrite is the partition, found from
+  // partition values); a file with no line — a version written before
+  // the sidecar existed, or a footer without stats — is "unknown" and
+  // always a rewrite candidate.
+
+  private def readStats(dir: Path): Map[String, LakeTable.FileStat] = {
+    val f = dir.resolve("_files")
+    if (!Files.exists(f)) Map.empty
+    else Files.readAllLines(f).toArray.toSeq.map(_.toString).filter(_.nonEmpty)
+      .map { l =>
+        val c = l.split('\t')
+        c(0) -> LakeTable.FileStat(c(1).toLong,
+          Option.when(c.length == 4)((c(2).toLong, c(3).toLong)))
+      }.toMap
+  }
+
+  /** Row count and leading-key range of one parquet file, from its footer
+    * (a driver-side read, no Spark job); None when the footer carries no
+    * statistics for the key. */
+  private def footerStat(f: Path): Option[LakeTable.FileStat] = {
+    import scala.jdk.CollectionConverters._
+    val blocks = scala.util.Using.resource(org.apache.parquet.hadoop.ParquetFileReader
+      .open(new org.apache.parquet.io.LocalInputFile(f)))(_.getFooter.getBlocks.asScala.toSeq)
+    val stats = blocks.map(_.getColumns.asScala
+      .find(_.getPath.toDotString == mergeKeys.head).map(_.getStatistics).orNull)
+    if (stats.exists(s => s == null || s.isEmpty)) None
+    else {
+      val vals = stats.filter(_.hasNonNullValue)
+      def num(o: Any) = o.asInstanceOf[Number].longValue
+      Some(LakeTable.FileStat(blocks.map(_.getRowCount).sum,
+        Option.when(vals.nonEmpty)((vals.map(s => num(s.genericGetMin)).min,
+          vals.map(s => num(s.genericGetMax)).max))))
+    }
+  }
+
+  /** Finish a staged version's files: hard-link the donor's untouched
+    * files, then record `_files` — footer stats of the files this commit
+    * wrote, the donor's lines for the files it linked. */
+  private def stageFiles(schema: StructType, linked: Option[(Path, Seq[String])]): Unit = {
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    val fresh = LakeTable.dataFiles(stagingDir)
+    linked.foreach { case (donor, files) => linkUntouched(donor, files) }
+    val ranged = partitionCols.isEmpty && mergeKeys.headOption.exists(k =>
+      schema.find(_.name == k).exists(f => Seq(LongType, IntegerType, ShortType,
+        ByteType).contains(f.dataType)))
+    if (ranged) {
+      val carried = linked.fold(Map.empty[String, LakeTable.FileStat]) {
+        case (donor, files) => readStats(donor).view.filterKeys(files.toSet).toMap }
+      // footer reads are independent small file reads: run them side by side
+      import scala.concurrent.ExecutionContext.Implicits.global
+      val stats = scala.concurrent.Await.result(scala.concurrent.Future.traverse(fresh)(f =>
+        scala.concurrent.Future(footerStat(stagingDir.resolve(f)).map(f -> _))),
+        scala.concurrent.duration.Duration.Inf).flatten ++ carried
+      if (stats.nonEmpty)
+        Files.write(stagingDir.resolve("_files"), stats.sortBy(_._1).map {
+          case (f, LakeTable.FileStat(n, r)) =>
+            (Seq(f, n.toString) ++ r.toSeq.flatMap { case (a, b) => Seq(a, b).map(_.toString) })
+              .mkString("\t")
+        }.mkString("", "\n", "\n").getBytes("UTF-8"))
+    }
+  }
+
+  /** The current version's data files as disjoint ranges of the leading
+    * merge key — the unit a key-ranged rewrite works in — or None when
+    * the table rewrites whole: partitioned (its unit is the partition),
+    * no stats (a non-integral key, a version written before the sidecar)
+    * or at most [[LakeTable.RowsPerFile]] rows (one file's worth: no
+    * probe job, no shuffle). Files whose [min, max] overlap form ONE
+    * range (a layout rewrite's files may overlap; a key-ranged write's
+    * do not). Files without stats are `unknown`. */
+  private def keyRanges(donor: Path): Option[KeyRanges] = {
+    val stats = readStats(donor)
+    if (partitionCols.nonEmpty || stats.values.map(_.rows).sum <= LakeTable.RowsPerFile)
+      return None
+    val files = LakeTable.dataFiles(donor)
+    val ranges = files.flatMap(f => stats.get(f).flatMap(s => s.range.map((f, s.rows, _))))
+      .sortBy(_._3._1)
+      .foldLeft(Vector.empty[LakeTable.KeyRange]) { case (acc, (f, n, (lo, hi))) =>
+        acc.lastOption match {
+          case Some(r) if lo <= r.hi =>
+            acc.init :+ LakeTable.KeyRange(r.lo, r.hi max hi, r.files :+ (f -> n))
+          case _ => acc :+ LakeTable.KeyRange(lo, hi, Seq(f -> n))
         }
       }
-    walk(donor, 0, Nil)
+    Option.when(ranges.nonEmpty)(new KeyRanges(ranges, files.filterNot(stats.contains)))
+  }
+
+  /** A version's key ranges (sorted, disjoint) and its files without
+    * stats. A key OWNS the range of the last range starting at or below
+    * it (the first range below every start), so a key above the max
+    * lands in the tail range. `sized` maps a range being rewritten to
+    * (rows, lo, hi) of what it will hold. */
+  private final class KeyRanges(ranges: IndexedSeq[LakeTable.KeyRange], unknown: Seq[String]) {
+    private def key = col(mergeKeys.head).cast("long")
+    private val starts = ranges.map(_.lo).toArray
+
+    /** The MERGE's candidate probe — ONE job over the source, no
+      * shuffle: per owning range, the source's row count and key bounds
+      * (partition-local, merged on the driver), widened by the range's
+      * own. */
+    def sourceHits(source: DataFrame): Map[Int, (Long, Long, Long)] = {
+      import spark.implicits._
+      val st = starts // the closure captures the array, not this
+      val hits = LakeTable.rangeHits(st) _
+      source.select(key).as[java.lang.Long].mapPartitions(hits).collect()
+        .groupMapReduce(_._1)(h => (h._2, h._3, h._4)) {
+          case ((n1, a1, b1), (n2, a2, b2)) => (n1 + n2, a1 min a2, b1 max b2) }
+        .map { case (i, (n, a, b)) =>
+          val g = ranges(i)
+          i -> (g.files.map(_._2).sum + n, a min g.lo, b max g.hi)
+        }
+    }
+
+    /** The version is ONE range (its files overlap: a load not yet
+      * clustered) — a MERGE then rewrites all of it without a probe. */
+    def single: Boolean = ranges.size == 1 && unknown.isEmpty
+
+    /** The files of the given ranges plus every file without stats. */
+    def touched(rs: Set[Int]): Set[String] =
+      (rs.toSeq.flatMap(i => ranges(i).files.map(_._1)) ++ unknown).toSet
+
+    /** A DELETE/UPDATE's `sized`: each range holding a touched file, with
+      * the touched files' rows. */
+    def sizedFiles(files: Set[String]): Map[Int, (Long, Long, Long)] =
+      ranges.indices.flatMap { i =>
+        val n = ranges(i).files.filter(f => files(f._1)).map(_._2)
+        Option.when(n.nonEmpty)(i -> (n.sum, ranges(i).lo, ranges(i).hi))
+      }.toMap
+
+    /** `df` tagged with its output file ([[LakeTable.SlotCol]], written
+      * as one more directory level and flattened at commit) and
+      * clustered so each file is written by one task. A `sized` range
+      * splits into ceil(rows / RowsPerFile) equal-width sub-ranges of
+      * [lo, hi] (a range grown past RowsPerFile splits; one below it —
+      * the tail extended by appends — stays one file). A row owned by
+      * any other range (only a file without stats holds such rows) goes
+      * to one extra file. The file is picked by a UDF over driver-built
+      * arrays, so the generated code is the same on every commit and its
+      * compiled class is reused. */
+    def slotted(df: DataFrame, sized: Map[Int, (Long, Long, Long)]): DataFrame = {
+      val parts = ranges.indices.map(i => sized.get(i).fold(0)(s =>
+        math.max(1L, (s._1 + LakeTable.RowsPerFile - 1) / LakeTable.RowsPerFile).toInt))
+      val offset = parts.scanLeft(0)(_ + _)
+      val layout = LakeTable.FileLayout(starts, offset.toArray, parts.toArray,
+        ranges.indices.map(i => sized.get(i).fold(0L)(_._2)).toArray,
+        ranges.indices.map(i => sized.get(i).fold(0L)(_._3)).toArray)
+      val files = offset.last + (if (unknown.nonEmpty) 1 else 0)
+      df.withColumn(LakeTable.SlotCol, org.apache.spark.sql.functions.udf(layout.file _).apply(key))
+        .repartition(files min spark.sparkContext.defaultParallelism max 1,
+          col(LakeTable.SlotCol))
+    }
   }
 
   /** Recursively hard-link a directory tree (same filesystem). The object-
@@ -683,15 +898,16 @@ final class LakeTable(private val spark: SparkSession, private val root: String,
     else df.repartition(partitionCols.map(col): _*)
 
   /** A row-level write's next version: `df` clustered, the committed
-    * meta carried forward with `meta` merged in, and — for a
-    * partition-pruned write — the hard-link walk of every untouched
-    * partition of the current version. */
+    * meta carried forward with `meta` merged in, and — when `touched`
+    * names the files it rewrites — every other file of the current
+    * version hard-linked. `release` runs once the commit is over. */
   private def pendingWrite(df: DataFrame, feed: Option[DataFrame],
-      meta: Map[String, String],
-      touched: Option[Set[String]]): LakeTable.Pending = {
+      meta: Map[String, String], touched: Option[Set[String]],
+      release: () => Unit = () => ()): LakeTable.Pending = {
     val donor = currentDir
     LakeTable.Pending(this, clustered(df), feed, readMeta(donor) ++ meta,
-      () => touched.foreach(linkUntouched(donor, _)))
+      touched.map(t => donor -> LakeTable.dataFiles(donor).filterNot(t)),
+      release = release)
   }
 
   /** Pointer-publish: move the staged write to the next version directory,
@@ -770,42 +986,64 @@ final class LakeTable(private val spark: SparkSession, private val root: String,
     * is NULL, matching SQL DELETE semantics. Published as a new version;
     * the old snapshot stays readable.
     *
-    * On a partitioned table the rewrite is PRUNED (Delta's file-pruned
-    * DELETE): one column-pruned scan finds the partitions holding
-    * matching rows, only those rewrite (minus the matches), untouched
-    * partitions hard-link. Always safe — a DELETE can only remove rows,
-    * never move one across partitions — so unlike the merge's clause
-    * (b) this needs no key-derivation assumption. The feed scan prunes
-    * to the same touched set. */
+    * File-pruned like Delta's DELETE on partitioned tables and on
+    * unpartitioned tables above RowsPerFile rows ([[dmlCut]]): only the
+    * files holding matching rows (on a partitioned table, the files of
+    * their partitions) rewrite, minus the matches; every other file
+    * hard-links. Always safe — a DELETE can only remove rows. The feed
+    * scan reads the same files. */
   def delete(condition: org.apache.spark.sql.Column): Unit = {
     import org.apache.spark.sql.functions.{coalesce, lit}
     val cond = coalesce(condition, lit(false))
-    val whole = read
-    val touched = Option.when(partitionCols.nonEmpty)(partsMatching(whole, cond))
-    val cur = inParts(whole, touched)
-    LakeTable.commitFused(Seq(pendingWrite(cur.filter(!cond),
+    val (touched, cur, shape) = dmlCut(cond, pruned = true)
+    LakeTable.commitFused(Seq(pendingWrite(shape(cur.filter(!cond)),
       Option.when(changeFeed)(
         cur.filter(cond).withColumn("_change_type", lit("delete"))),
       Map.empty, touched)))
   }
 
+  /** A DELETE/UPDATE's touched files, the rows it reads and the shaping
+    * of the rows it writes back. When `pruned` and the table is
+    * partitioned or key-ranged, the touched files come from ONE bounded
+    * collect of the matching rows' `_metadata.file_path` (widened to
+    * their partitions on a partitioned table, whose unit of rewrite is
+    * the partition), only those are read, and a key-ranged table's
+    * rewrite keeps its ranges. Otherwise
+    * (a small unpartitioned table, an UPDATE moving rows across
+    * partitions) the whole table rewrites, with no added job. */
+  private def dmlCut(cond: org.apache.spark.sql.Column, pruned: Boolean):
+      (Option[Set[String]], DataFrame, DataFrame => DataFrame) = {
+    val donor = currentDir
+    val whole = read
+    lazy val kr = keyRanges(donor)
+    if (!pruned || (partitionCols.isEmpty && kr.isEmpty)) (None, whole, identity)
+    else {
+      val files = filesMatching(donor, whole, cond)
+      if (partitionCols.nonEmpty) {
+        val parts = files.map(partOf)
+        (Some(filesInParts(donor, parts)), inParts(whole, Some(parts)), identity)
+      } else
+        (Some(files), inFiles(whole, files), df => kr.get.slotted(df, kr.get.sizedFiles(files)))
+    }
+  }
+
   /** Row-level UPDATE: apply the assignments to rows matching the
     * condition, leave others untouched.
     *
-    * Pruned like [[delete]] when no ASSIGNED column is a partition
+    * File-pruned like [[delete]] when no ASSIGNED column is a partition
     * column (an update then can't move a row across partitions): only
-    * partitions holding matching rows rewrite, the rest hard-link. An
-    * update that assigns a partition column falls back to the full
-    * rewrite — the moved rows must land in their new partitions. */
+    * the files holding matching rows (their partitions' files on a
+    * partitioned table) rewrite, the rest hard-link. An update
+    * that assigns a partition column falls back to the full rewrite —
+    * the moved rows must land in their new partitions. (An update that
+    * moves a row out of its key range stays correct: the rewritten
+    * file's recorded range covers it.) */
   def update(condition: org.apache.spark.sql.Column,
       assignments: Map[String, org.apache.spark.sql.Column]): Unit = {
     import org.apache.spark.sql.functions.{coalesce, lit, when, xxhash64}
-    val whole = read
     val cond = coalesce(condition, lit(false))
-    val pruned = partitionCols.nonEmpty &&
-      partitionCols.forall(c => !assignments.contains(c))
-    val touched = Option.when(pruned)(partsMatching(whole, cond))
-    val cur = inParts(whole, touched)
+    val (touched, cur, shape) =
+      dmlCut(cond, pruned = partitionCols.forall(c => !assignments.contains(c)))
     val updated = cur.select(cur.columns.toIndexedSeq.map { c =>
       assignments.get(c)
         .map(expr => when(cond, expr).otherwise(col(c)).as(c))
@@ -838,7 +1076,7 @@ final class LakeTable(private val spark: SparkSession, private val root: String,
         .withColumn("_change_type", lit("update_postimage"))
       post.unionByName(pre)
     }
-    LakeTable.commitFused(Seq(pendingWrite(updated, feed, Map.empty, touched)))
+    LakeTable.commitFused(Seq(pendingWrite(shape(updated), feed, Map.empty, touched)))
   }
 
   /** Small-file compaction (OPTIMIZE without reordering): rewrite the
@@ -886,7 +1124,7 @@ final class LakeTable(private val spark: SparkSession, private val root: String,
     val feedSchema = read.schema.add("_change_type", "string")
     LakeTable.commitFused(Seq(LakeTable.Pending(this, df, None,
       readMeta(currentDir),
-      () => if (changeFeed) LakeTable.finishFeed(this, feedSchema))))
+      afterStage = () => if (changeFeed) LakeTable.finishFeed(this, feedSchema))))
   }
 
   /** CDC between a retained snapshot and the current version — the Delta
@@ -1409,18 +1647,88 @@ object LakeTable {
   private[graft] def changeSign: org.apache.spark.sql.Column =
     org.apache.spark.sql.functions.when(isAddition, 1L).otherwise(-1L)
 
+  /** Rows per key-range data file: an unpartitioned table above this
+    * many rows is split into key-range files of at most about this many
+    * rows each, and a table at or below it rewrites whole (one file's
+    * worth — the rewrite is cheaper than finding the files to skip). */
+  private[graft] val RowsPerFile = 4096L
+
+  /** The staged frame's output-file column of a key-ranged write — written
+    * as one more directory level, then flattened into the version dir. */
+  private val SlotCol = "__fslot"
+
+  /** One data file's entry in a version's `_files` sidecar: its row count
+    * and leading-merge-key [min, max] (None: no non-null key). */
+  private final case class FileStat(rows: Long, range: Option[(Long, Long)])
+
+  /** One key range: [lo, hi] of the leading merge key and its files
+    * with their row counts. */
+  private final case class KeyRange(lo: Long, hi: Long, files: Seq[(String, Long)])
+
+  /** The range owning key `k` among ranges starting at `starts`: the last
+    * start at or below it, else the first (a null key: the first). */
+  private def owner(starts: Array[Long], k: java.lang.Long): Int =
+    if (k == null) 0
+    else {
+      val at = java.util.Arrays.binarySearch(starts, k.longValue)
+      if (at >= 0) at else math.max(0, -at - 2)
+    }
+
+  /** One partition's share of [[KeyRanges.sourceHits]]: per owning range,
+    * (range, rows, min key, max key) — a range that got null keys only
+    * has (Long.MaxValue, Long.MinValue). */
+  private def rangeHits(starts: Array[Long])(
+      keys: Iterator[java.lang.Long]): Iterator[(Int, Long, Long, Long)] = {
+    val acc = scala.collection.mutable.Map.empty[Int, (Long, Long, Long)]
+    keys.foreach { k =>
+      val i = owner(starts, k)
+      val (n, a, b) = acc.getOrElse(i, (0L, Long.MaxValue, Long.MinValue))
+      acc(i) = if (k == null) (n + 1, a, b) else (n + 1, a min k, b max k)
+    }
+    acc.iterator.map { case (i, (n, a, b)) => (i, n, a, b) }
+  }
+
+  /** Where a key-ranged rewrite puts each row: range i (by [[owner]])
+    * covers output files offset(i) until offset(i) + parts(i), split
+    * equal-width over [lo(i), hi(i)]; a range with parts 0 is not being
+    * rewritten, and its rows go to the file after all others. */
+  private final case class FileLayout(starts: Array[Long], offset: Array[Int],
+      parts: Array[Int], lo: Array[Long], hi: Array[Long]) {
+    def file(k: java.lang.Long): Int = {
+      val i = owner(starts, k)
+      if (parts(i) == 0) offset.last
+      else if (parts(i) == 1 || k == null) offset(i)
+      else offset(i) + math.min(parts(i) - 1, math.max(0,
+        ((k.doubleValue - lo(i)) * parts(i) / (hi(i).toDouble - lo(i) + 1)).toInt))
+    }
+  }
+
+  /** The data files under a version dir, as paths relative to it. */
+  private[graft] def dataFiles(dir: Path): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    scala.util.Using.resource(Files.walk(dir))(_.iterator.asScala
+      .filter { p =>
+        val n = p.getFileName.toString
+        n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_") &&
+          Files.isRegularFile(p)
+      }.map(p => dir.relativize(p).toString).toVector)
+  }
+
   /** A fully-derived, not-yet-written next version of one table — what
     * every data write builds: the frame to stage, already shaped by its
-    * builder (row-level writes cluster it by the partition columns,
-    * layout rewrites keep the layout they authored); the change-feed
-    * frame a row-level write records on a change-feed table; the FINAL
-    * committed meta map; and the post-stage work (a pruned write's
-    * hard-link walk, a layout rewrite's empty feed) that runs after the
-    * staged files land and before the pointer swap. The committed `_schema_ddl` sidecar is the
-    * frame's schema. */
+    * builder (row-level writes cluster it by the partition columns or
+    * into key-range files, layout rewrites keep the layout they
+    * authored); the change-feed frame a row-level write records on a
+    * change-feed table; the FINAL committed meta map; the donor version
+    * dir and its files to hard-link (a file-granular write); the
+    * post-stage work (a layout rewrite's empty feed) that runs after the
+    * staged files land and before the pointer swap; and `release`, run
+    * when the commit is over (a merge's cached source). The committed
+    * `_schema_ddl` sidecar is the frame's schema. */
   private[graft] final case class Pending(table: LakeTable,
       frame: DataFrame, feed: Option[DataFrame], metaMap: Map[String, String],
-      afterStage: () => Unit)
+      linked: Option[(Path, Seq[String])] = None,
+      afterStage: () => Unit = () => (), release: () => Unit = () => ())
 
   /** The single commit path: every LakeTable data write — one table's
     * create / merge / DML / layout rewrite, or a maintainer's batch of
@@ -1467,7 +1775,6 @@ object LakeTable {
     * the span-token recovery contracts (DedupIndex, AnnIndex, the IVM
     * aux/view markers) transfer unchanged. */
   private[graft] def commitFused(pendings: Seq[Pending]): Unit = {
-    import org.apache.spark.sql.functions.{col, lit}
     require(pendings.nonEmpty, "commitFused: no pending commits")
     val tables = pendings.map(_.table)
     require(tables.map(_.name).distinct.size == tables.size,
@@ -1489,13 +1796,24 @@ object LakeTable {
     // aborted earlier operation
     tables.foreach { t =>
       deleteRecursively(t.stagingDir); deleteRecursively(t.feedStagingDir) }
+    // a key-ranged frame's output-file column is one more partition
+    // level of its destination, flattened after the write
     val dests = pendings.flatMap { p =>
-      (p.frame, p.table.partitionCols, p.table.stagingDir) +:
+      (p.frame, p.table.partitionCols ++ Seq(SlotCol).filter(p.frame.columns.contains),
+        p.table.stagingDir) +:
         p.feed.map(f => (f, Seq.empty[String], p.table.feedStagingDir)).toSeq
     }
+    try commitDests(pendings, dests)
+    finally pendings.foreach(_.release())
+  }
+
+  private def commitDests(pendings: Seq[Pending],
+      dests: Seq[(DataFrame, Seq[String], Path)]): Unit = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val tables = pendings.map(_.table)
     if (dests.sizeIs == 1) { val (df, pcols, dir) = dests.head; writeTo(df, dir, pcols) }
     else {
-      val slots = tables.map(_.partitionCols.size).max
+      val slots = dests.map(_._2.size).max
       val fused = dests.zipWithIndex.map { case ((df, pcols, _), i) =>
         pcols.zipWithIndex.foldLeft(df) { case (d, (c, j)) =>
           d.withColumn(s"__fpart$j", col(c).cast("string"))
@@ -1519,7 +1837,7 @@ object LakeTable {
       }
       // outside the `.staging_*` namespace, so no table's staging dir
       // can be this batch's scratch
-      val scratch = Paths.get(roots.head, s".fused_${tables.head.name}")
+      val scratch = Paths.get(tables.head.root, s".fused_${tables.head.name}")
       writeTo(fused, scratch, "__fdst" +: (0 until slots).map(j => s"__fpart$j"))
       dests.zipWithIndex.foreach { case ((_, pcols, dir), i) =>
         val out = scratch.resolve(s"__fdst=$i")
@@ -1532,13 +1850,33 @@ object LakeTable {
     pendings.foreach { p =>
       val dir = p.table.stagingDir
       Files.createDirectories(dir)
+      if (p.frame.columns.contains(SlotCol)) flattenSlots(dir)
       // schema sidecar: what lets readDir serve an EMPTY partitioned
       // snapshot (the partitioned writer emits no files for one)
-      Files.writeString(dir.resolve("_schema_ddl"), p.frame.schema.toDDL)
+      val schema = StructType(p.frame.schema.filterNot(_.name == SlotCol))
+      Files.writeString(dir.resolve("_schema_ddl"), schema.toDDL)
       p.table.writeMeta(dir, p.metaMap)
     }
-    pendings.foreach { p => p.afterStage(); p.table.publish() }
+    pendings.foreach { p =>
+      p.afterStage()
+      p.table.stageFiles(p.frame.schema, p.linked)
+      p.table.publish()
+    }
   }
+
+  /** Move each `__fslot=<s>` dir's files (data and checksum) up into the
+    * staged version dir, prefixed `s<s>-`: one task writes several slots,
+    * so the writer's file names repeat across slot dirs. */
+  private def flattenSlots(dir: Path): Unit =
+    listing(dir).filter(_.getFileName.toString.startsWith(s"$SlotCol=")).foreach { d =>
+      val s = d.getFileName.toString.stripPrefix(s"$SlotCol=")
+      listing(d).foreach { f =>
+        val n = f.getFileName.toString
+        Files.move(f, dir.resolve(
+          if (n.startsWith(".")) s".s$s-${n.drop(1)}" else s"s$s-$n"))
+      }
+      Files.delete(d)
+    }
 
   /** Complete a table's staged change feed: write its `_schema_fp`,
     * after staging an EMPTY feed when there is none (a layout rewrite, or

@@ -10,7 +10,7 @@ class AvroSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("avro").toString
+    java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(tablesRoot), "avro").toString
 
   test("typed roundtrip: long/string/double/boolean across two files") {
     val root = tmp()

@@ -45,7 +45,7 @@ class BpeSpec extends SparkSpec {
 
   test("merge table persists and reloads byte-identically") {
     val merges = Seq(("a", "b"), ("ab", "ab"), ("é", "ü"), ("x y", "z"))
-    val path = java.nio.file.Files.createTempDirectory("bpe")
+    val path = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(tablesRoot), "bpe")
       .resolve("merges.txt").toString
     Bpe.saveMerges(path, merges)
     assert(Bpe.loadMerges(path) == merges)

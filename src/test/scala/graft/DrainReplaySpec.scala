@@ -171,7 +171,7 @@ class DrainReplaySpec extends SparkSpec {
 
   cases.foreach { case (name, setup) =>
     test(s"replaying the drain is a no-op commit-wise: $name") {
-      val root = java.nio.file.Files.createTempDirectory("replay").toString
+      val root = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(tablesRoot), "replay").toString
       try {
         val c = setup(root)
         c.drain()

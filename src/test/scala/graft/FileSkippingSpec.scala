@@ -13,7 +13,7 @@ class FileSkippingSpec extends SparkSpec {
   import spark.implicits._
 
   private def layout(n: Int = 8): String = {
-    val dst = java.nio.file.Files.createTempDirectory("skip").toString
+    val dst = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(tablesRoot), "skip").toString
     Tables.load(spark, sf, "orders")
       .repartitionByRange(n, col("o_totalprice"))
       .write.mode("overwrite").parquet(dst)
@@ -63,7 +63,7 @@ class FileSkippingSpec extends SparkSpec {
   }
 
   private def dateLayout(): String = {
-    val dst = java.nio.file.Files.createTempDirectory("bloom").toString
+    val dst = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(tablesRoot), "bloom").toString
     Tables.load(spark, sf, "orders")
       .repartitionByRange(8, col("o_orderdate"))
       .write.mode("overwrite").parquet(dst)
@@ -118,7 +118,7 @@ class FileSkippingSpec extends SparkSpec {
     val z = ZOrder.interleave(
       ZOrder.bin(col("o_totalprice"), col("p_lo"), col("p_hi")),
       ZOrder.bin(col("o_custkey"), col("c_lo"), col("c_hi")))
-    val zDst = java.nio.file.Files.createTempDirectory("zskip").toString
+    val zDst = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(tablesRoot), "zskip").toString
     o.crossJoin(broadcast(b)).withColumn("z", z)
       .repartitionByRange(8, col("z"))
       .drop("p_lo", "p_hi", "c_lo", "c_hi")
@@ -153,7 +153,7 @@ class FileSkippingSpec extends SparkSpec {
     // single-file raw table too
     assert(FileSkipping.fastCount(spark, s"$sf/orders.parquet") == real)
     // empty layout counts zero
-    val empty = java.nio.file.Files.createTempDirectory("skip_empty").toString
+    val empty = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(tablesRoot), "skip_empty").toString
     assert(FileSkipping.fastCount(spark, empty) == 0L)
   }
 }

@@ -13,7 +13,7 @@ import graft.table.LakeTable
 class OrchestratorSpec extends SparkSpec {
 
   private def freshRoot: String =
-    Files.createTempDirectory("orch").toString
+    Files.createTempDirectory(java.nio.file.Paths.get(tablesRoot), "orch").toString
 
   test("runAll lands all three tables with one-pass metrics") {
     val root = freshRoot
@@ -51,7 +51,7 @@ class OrchestratorSpec extends SparkSpec {
     val root = freshRoot
     // staging dir holding only the orders input — products (part) and
     // order_items (lineitem) have "no files" and must be skipped
-    val staging = Files.createTempDirectory("orch_in")
+    val staging = Files.createTempDirectory(java.nio.file.Paths.get(tablesRoot), "orch_in")
     Files.createSymbolicLink(staging.resolve("orders.parquet"),
       java.nio.file.Paths.get(s"$sf/orders.parquet"))
     val reports = Orchestrator.runAll(spark, staging.toString, root)
@@ -66,7 +66,7 @@ class OrchestratorSpec extends SparkSpec {
 
   test("archive-after-success moves inputs aside; rerun sees nothing to do") {
     val root = freshRoot
-    val staging = Files.createTempDirectory("orch_arch")
+    val staging = Files.createTempDirectory(java.nio.file.Paths.get(tablesRoot), "orch_arch")
     Seq("part", "orders", "lineitem").foreach(t =>
       Files.copy(java.nio.file.Paths.get(s"$sf/$t.parquet"),
         staging.resolve(s"$t.parquet")))

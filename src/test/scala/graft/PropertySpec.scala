@@ -151,7 +151,7 @@ class PropertySpec extends SparkSpec {
         val source = latestWins(Seq("id"), "v", tiebreakers = Seq($"p"))(
           s.toDF("id", "p", "v"))
         def run(prune: Boolean): Seq[String] = {
-          val root = Files.createTempDirectory("prop_prune").toString
+          val root = Files.createTempDirectory(java.nio.file.Paths.get(tablesRoot), "prop_prune").toString
           val tbl = LakeTable(spark, root, "t", Seq("id"), partitionCols = Seq("p"))
           tbl.create(target)
           tbl.upsert(source, prunePartitions = prune)
@@ -225,7 +225,7 @@ class PropertySpec extends SparkSpec {
   test("upsert is idempotent for any target/source pair") {
     forAllCases(Gen.zip(tableGen, tableGen)) { case (t, s) =>
       if (t.nonEmpty || s.nonEmpty) {
-        val root = Files.createTempDirectory("prop").toString
+        val root = Files.createTempDirectory(java.nio.file.Paths.get(tablesRoot), "prop").toString
         val target = t.toDF("id", "ts", "v")
         // source deduped on merge key (the pipelines' guarantee)
         val source = latestWins(Seq("id"), "ts", tiebreakers = Seq($"v"))(

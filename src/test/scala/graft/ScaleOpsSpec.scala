@@ -125,7 +125,7 @@ class ScaleOpsSpec extends SparkSpec {
     ).toDF("id", "v")
     val (instrumented, obs) = ScaleOps.observedSplitMetrics(df, Seq("id"))
     instrumented.write.mode("overwrite")
-      .parquet(java.nio.file.Files.createTempDirectory("obs").toString + "/t")
+      .parquet(java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(tablesRoot), "obs").toString + "/t")
     val m = obs.get
     assert(m("n_input") == 3L && m("n_valid") == 2L && m("n_rejected") == 1L)
   }

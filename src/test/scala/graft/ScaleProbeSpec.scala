@@ -362,7 +362,7 @@ class ScaleProbeSpec extends SparkSpec {
           col("c_name"), col("c_nationkey"), col("c_acctbal"),
           col("c_mktsegment"))
       }.reduce(_ unionByName _)
-      val root = java.nio.file.Files.createTempDirectory("jivm_pin").toString
+      val root = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(tablesRoot), "jivm_pin").toString
       val f = LakeTable(spark, root, "f", Seq("o_orderkey"), changeFeed = true)
       val d = LakeTable(spark, root, "d", Seq("o_custkey"), changeFeed = true)
       val v = LakeTable(spark, root, "v", Seq("c_mktsegment"))

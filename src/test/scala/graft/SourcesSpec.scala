@@ -10,7 +10,7 @@ import graft.sources.Sources
 class SourcesSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp = Files.createTempDirectory("sources").toString
+  private def tmp = Files.createTempDirectory(java.nio.file.Paths.get(tablesRoot), "sources").toString
 
   test("CSV round-trip: dynamic mode lands every column as string") {
     val dir = tmp

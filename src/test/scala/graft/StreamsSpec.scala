@@ -64,7 +64,7 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("foreachBatch streaming MERGE lands the same table as a batch upsert") {
-    val root = java.nio.file.Files.createTempDirectory("cdc").toString
+    val root = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(tablesRoot), "cdc").toString
     val table = graft.table.LakeTable(spark, root, "events_t", Seq("event_id"))
     val stream = Streams.readTableStream(spark, sf, "events")
       .select("event_id", "user_id", "ts", "event_type", "value")
@@ -84,13 +84,13 @@ class StreamsSpec extends SparkSpec {
     import graft.table.{IncrementalView, LakeTable}
     val ev = Tables.load(spark, sf, "events")
       .select("event_id", "ts", "user_id", "event_type", "value")
-    val root = java.nio.file.Files.createTempDirectory("sivm").toString
+    val root = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(tablesRoot), "sivm").toString
     val v = LakeTable(spark, root, "view", Seq("user_id"))
     v.create(IncrementalView.sumView(
       ev.filter(col("event_id") % 2 === 0), Seq("user_id"), "value"))
     // the odd half as THREE files + maxFilesPerTrigger=1 → the additive
     // delta rule must survive genuine micro-batch boundaries
-    val srcDir = java.nio.file.Files.createTempDirectory("sivm_src").toString
+    val srcDir = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(tablesRoot), "sivm_src").toString
     val odd = ev.filter(col("event_id") % 2 =!= 0)
     odd.repartition(3).write.mode("overwrite").parquet(srcDir)
     val stream = spark.readStream.schema(odd.schema)
@@ -117,7 +117,7 @@ class StreamsSpec extends SparkSpec {
   test("continuous IVM from the CDC stream: signed deltas through " +
       "upsert+delete+extinction == recompute; replay is a no-op") {
     import graft.table.{IncrementalView, LakeTable}
-    val root = java.nio.file.Files.createTempDirectory("civm").toString
+    val root = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(tablesRoot), "civm").toString
     val t = LakeTable(spark, root, "base", Seq("id"), changeFeed = true)
     val v = LakeTable(spark, root, "view", Seq("k"))
     t.create(Seq((1L, 1L, 2.0), (2L, 1L, 3.0), (3L, 2L, 5.0))
@@ -151,7 +151,7 @@ class StreamsSpec extends SparkSpec {
       "extinction across arbitrary micro-batching == recompute; " +
       "replay is a no-op") {
     import graft.table.{IncrementalView, LakeTable}
-    val root = java.nio.file.Files.createTempDirectory("cmm").toString
+    val root = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(tablesRoot), "cmm").toString
     val t = LakeTable(spark, root, "base", Seq("id"), changeFeed = true)
     val v = LakeTable(spark, root, "view", Seq("k"))
     t.create(Seq((1L, 1L, 2.0), (2L, 1L, 3.0), (3L, 2L, 5.0))
@@ -196,7 +196,7 @@ class StreamsSpec extends SparkSpec {
   test("continuous FULL-stats (aux-backed) IVM from the CDC stream == " +
       "recompute across per-file micro-batching; replay is a no-op") {
     import graft.table.{IncrementalView, LakeTable}
-    val root = java.nio.file.Files.createTempDirectory("cfl").toString
+    val root = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(tablesRoot), "cfl").toString
     val t = LakeTable(spark, root, "base", Seq("id"), changeFeed = true)
     val aux = LakeTable(spark, root, "aux", Seq("k", "__v"))
     val v = LakeTable(spark, root, "view", Seq("k"))
@@ -244,7 +244,7 @@ class StreamsSpec extends SparkSpec {
   test("continuous fused-stats IVM from the CDC stream == recompute " +
       "across per-file micro-batching; replay is a no-op") {
     import graft.table.{IncrementalView, LakeTable}
-    val root = java.nio.file.Files.createTempDirectory("cst").toString
+    val root = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(tablesRoot), "cst").toString
     val t = LakeTable(spark, root, "base", Seq("id"), changeFeed = true)
     val v = LakeTable(spark, root, "view", Seq("k"))
     // 4-dp values so the moment digits discriminate
@@ -283,7 +283,7 @@ class StreamsSpec extends SparkSpec {
 
   test("streaming SCD2 sink == batch SCD2 of the same deduped batch") {
     import graft.table.LakeTable
-    val root = java.nio.file.Files.createTempDirectory("scd2s").toString
+    val root = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(tablesRoot), "scd2s").toString
     val asOf = java.sql.Timestamp.valueOf("2024-03-01 00:00:00")
     def eventCols(df: org.apache.spark.sql.DataFrame) = df
       .select(col("user_id"), col("event_id"), col("event_type"))
@@ -611,7 +611,7 @@ class StreamsSpec extends SparkSpec {
 
   test("streaming JOIN-view maintenance: fact CDC drain == recompute, replay no-op") {
     import graft.table.{IncrementalView, LakeTable}
-    val root = java.nio.file.Files.createTempDirectory("sjv").toString
+    val root = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(tablesRoot), "sjv").toString
     val f = LakeTable(spark, root, "fact", Seq("id"), changeFeed = true)
     val d = LakeTable(spark, root, "dim", Seq("ck"))
     val v = LakeTable(spark, root, "view", Seq("seg"))
@@ -642,7 +642,7 @@ class StreamsSpec extends SparkSpec {
   test("streaming JOIN-view MIN/MAX: netting, rescan THROUGH the join, " +
       "extinction across per-file micro-batching == recompute; replay no-op") {
     import graft.table.{IncrementalView, LakeTable}
-    val root = java.nio.file.Files.createTempDirectory("sjmm").toString
+    val root = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(tablesRoot), "sjmm").toString
     val f = LakeTable(spark, root, "fact", Seq("id"), changeFeed = true)
     val d = LakeTable(spark, root, "dim", Seq("ck"))
     val v = LakeTable(spark, root, "view", Seq("seg"))
@@ -689,7 +689,7 @@ class StreamsSpec extends SparkSpec {
       "stream, same-window fact-insert+dim-delete cancels (cross term), " +
       "dim-only cycles wake the maintainer, replay no-op") {
     import graft.table.{IncrementalView, LakeTable}
-    val root = java.nio.file.Files.createTempDirectory("sjv2").toString
+    val root = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(tablesRoot), "sjv2").toString
     val f = LakeTable(spark, root, "fact", Seq("id"), changeFeed = true)
     val d = LakeTable(spark, root, "dim", Seq("ck"), changeFeed = true)
     val v = LakeTable(spark, root, "view", Seq("seg"))

@@ -11,7 +11,7 @@ class XlsxSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(name: String): String =
-    Files.createTempDirectory("xlsx").resolve(name).toString
+    Files.createTempDirectory(java.nio.file.Paths.get(tablesRoot), "xlsx").resolve(name).toString
 
   test("multi-sheet round-trip in dynamic (all-string) mode") {
     val path = tmp("two.xlsx")
