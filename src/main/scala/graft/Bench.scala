@@ -1,7 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark harness: runs every `SparkEntry.queries` entry against
+/** Benchmark harness: runs every query family's query (`SparkEntry.queries`) against
   * `SPARK_GRAFT_SF_DIR` under a noop sink (full evaluation — every row and
   * column is consumed, so projection-heavy queries are actually executed;
   * a bare `.count()` would let Catalyst prune the entire projection).

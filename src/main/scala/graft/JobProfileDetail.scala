@@ -14,7 +14,9 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   * anything. A streaming job carries its call site in the `callSite.short`
   * job property; a batch job only carries the id of the SQL execution it
   * runs for (`spark.sql.execution.id`), so it is filed under the call site
-  * of that execution's start event.
+  * of that execution's start event. A job with neither (an RDD action
+  * outside any SQL execution) is filed under its first stage's name,
+  * which Spark takes from the RDD's creation call site.
   *
   * Output: per query, total sec, scheduled job / stage / task counts
   * (each eager localCheckpoint is its own job, so the job count is the
@@ -61,6 +63,7 @@ object JobProfileDetail {
         val prop = (k: String) => Option(j.properties).flatMap(p => Option(p.getProperty(k)))
         val site = prop("callSite.short")
           .orElse(prop("spark.sql.execution.id").flatMap(execSites.get))
+          .orElse(j.stageInfos.sortBy(_.stageId).headOption.map(_.name))
           .getOrElse("<none>")
         starts.put(j.jobId, (System.nanoTime(), site)); ()
       }

@@ -1,19 +1,13 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.functions.TextFunctions._
-import graft.functions.VectorFunctions
-import graft.operators.{Dedup, Graph, Multimodal, Similarity, Stats}
-import graft.ops.CoreOps._
-import graft.pipelines.Pipelines
-import graft.queries.{Corpus, Events, Lakehouse}
-import graft.queries.QueryFamily.withSQLConf
+import graft.queries._
 
 /** Driver contract — one `queries` entry per implemented operator from
-  * SURVEY.md §2 plus the north-star extensions (§7.5), each paired (where
-  * SQL-expressible) with DuckDB oracle SQL over the same parquet tables.
+  * SURVEY.md §2 plus the north-star extensions (§7.5), each paired with
+  * DuckDB oracle SQL over the same parquet tables. Every query lives in
+  * one [[graft.queries.QueryFamily]], its builder beside its oracle SQL.
   *
   * Determinism rules for oracle-compared queries (SURVEY.md §7.3):
   * explicit ORDER BY everywhere, explicit NULLS FIRST/LAST (Spark and
@@ -29,5089 +23,13 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q_items_pipeline")(spark, "/root/testdata/sf0.001")
 
-  private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
+  /** Every query family; their name sets are disjoint (PipelinesSpec). */
+  val families: Seq[QueryFamily] =
+    Seq(Relational, Aggregates, Graphs, Statistics, Media, Lakehouse, Corpus, Events)
 
-  private def emb(s: SparkSession, dir: String) = Tables.load(s, dir, "embeddings")
-
-  /** Per-order DISTINCT part sets for the co-purchase queries
-    * (q_triangles, q_assoc_rules) — ONE lineitem scan + one shuffle;
-    * derive counts/pairs from this so the exchange is reused instead of
-    * re-scanning per branch. Parts as sorted STRINGS: the pair order
-    * (and Graph.triangleCounts' canonicalization) is lexicographic,
-    * replayed by the oracles' VARCHAR comparisons. */
-  private[graft] def copurchaseSets(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "lineitem")
-      .groupBy("l_orderkey")
-      .agg(array_sort(collect_set(col("l_partkey").cast("string")))
-        .as("ps"))
-
-  /** Within-order pairs of a sorted set column `ps`, support-counted and
-    * pruned — the single definition of the slice(i+2) pair expression
-    * and the support threshold both co-purchase queries share. */
-  private[graft] def supportPrunedPairs(sets: DataFrame, minSupport: Int): DataFrame =
-    sets.select(explode(expr(
-        "flatten(transform(ps, (x, i) -> " +
-          "transform(slice(ps, i + 2, size(ps)), " +
-          "y -> struct(x AS u, y AS v))))")).as("pr"))
-      .groupBy(col("pr.u").as("u"), col("pr.v").as("v"))
-      .agg(count(lit(1)).as("sup_ab"))
-      .filter(col("sup_ab") >= minSupport)
-
-  /** Apriori-pruned within-order TRIPLE candidates: baskets are first
-    * filtered to items that appear in some support-`minSupport` pair
-    * (every sub-pair of a frequent triple is frequent, so the filter
-    * drops no qualifying triple and adds none — surviving triples are
-    * counted over exactly the same baskets), THEN the cubic expansion
-    * runs on the shrunken arrays. A large-basket corpus can't go cubic
-    * on filler items the pair screen already rejected: candidate count
-    * is C(freq-items-in-basket, 3) per basket, not C(|basket|, 3).
-    * The item screen is a semi-join (AQE broadcasts the pruned item
-    * set when small), not a driver-side collect. */
-  private[graft] def aprioriTripleCandidates(sets: DataFrame, minSupport: Int): DataFrame = {
-    val freqItems = supportPrunedPairs(sets, minSupport)
-      .select(explode(array(col("u"), col("v"))).as("item")).distinct()
-    sets.select(col("l_orderkey"), explode(col("ps")).as("item"))
-      .join(freqItems, Seq("item"), "left_semi")
-      .groupBy("l_orderkey")
-      .agg(array_sort(collect_set(col("item"))).as("ps"))
-      .select(explode(expr(
-        "flatten(transform(ps, (x, i) -> " +
-          "flatten(transform(slice(ps, i + 2, size(ps)), (y, j) -> " +
-          "transform(slice(ps, i + j + 3, size(ps)), " +
-          "z -> struct(x AS a, y AS b, z AS c))))))")).as("t"))
-      .select("t.a", "t.b", "t.c")
-  }
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    inlineQueries ++ Lakehouse.queries ++ Corpus.queries ++ Events.queries
+  def queries: Map[String, QueryFamily.QueryFn] =
+    families.map(_.queries).reduce(_ ++ _)
 
   def oracleSql: Map[String, String] =
-    inlineOracleSql ++ Lakehouse.oracleSql ++ Corpus.oracleSql ++
-      Events.oracleSql
-
-  /** The queries defined in this file; the query families in
-    * [[graft.queries]] hold theirs with their oracle SQL. */
-  private[graft] def inlineQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // ================= Reference pipelines end-to-end (§3.1) ===========
-    "q_items_pipeline" -> ((s, dir) =>
-      Pipelines.orderItems(s, dir)
-        .groupBy("l_returnflag").agg(count(lit(1)).as("n_items"))
-        .orderBy("l_returnflag")),
-
-    "q_orders_pipeline" -> ((s, dir) =>
-      Pipelines.orders(s, dir)
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n_orders"),
-          sum(col("o_totalprice").cast("decimal(20,4)")).cast("double").as("sum_total"))
-        .orderBy("o_orderstatus")),
-
-    "q_products_pipeline" -> ((s, dir) =>
-      Pipelines.products(s, dir)
-        .select("p_partkey", "p_name", "p_brand", "p_type", "p_size")
-        .orderBy("p_partkey")),
-
-    // the reference's true input mode end-to-end: header CSV → all-string
-    // read → try_cast promotion → reject split (malformed rows routed to
-    // the JSON sink) → dedup → RI semi-join. Valid-path output equals the
-    // parquet pipeline, which is what the oracle checks.
-    "q_csv_pipeline" -> ((s, dir) =>
-      Pipelines.ordersFromCsv(s, dir)._1
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n_orders"),
-          sum(col("o_totalprice").cast("decimal(20,4)")).cast("double").as("sum_total"))
-        .orderBy("o_orderstatus")),
-
-    // S2: the same CSV ingested with a DECLARED schema (typed parsing at
-    // the reader, no inference pass); same oracle as the dynamic mode
-    "q_csv_declared" -> ((s, dir) =>
-      Pipelines.ordersFromCsvDeclared(s, dir)._1
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n_orders"),
-          sum(col("o_totalprice").cast("decimal(20,4)")).cast("double").as("sum_total"))
-        .orderBy("o_orderstatus")),
-
-    // ================= Core operators ==================================
-    // W1 latest-wins window dedup (order_glue_job.py:113-116)
-    "q_window_dedup" -> ((s, dir) =>
-      latestWins(Seq("o_custkey"), "o_orderdate",
-        tiebreakers = Seq(col("o_orderkey")))(Tables.load(s, dir, "orders"))
-        .select("o_custkey", "o_orderkey", "o_orderstatus")
-        .orderBy("o_custkey")),
-
-    // J1 RI semi-join (order_glue_job.py:132-140)
-    "q_semi_join" -> ((s, dir) =>
-      semiJoin(Seq("p_partkey"),
-        Tables.load(s, dir, "lineitem").selectExpr("l_partkey as p_partkey"))(
-        Tables.load(s, dir, "part"))
-        .select("p_partkey", "p_name").orderBy("p_partkey")),
-
-    // K2-internal anti-join (merge emulation core, SURVEY.md §7.3):
-    // parts never ordered at quantity >= 49
-    "q_anti_join" -> ((s, dir) =>
-      antiJoin(Seq("p_partkey"),
-        Tables.load(s, dir, "lineitem").filter(col("l_quantity") >= 49)
-          .selectExpr("l_partkey as p_partkey"))(
-        Tables.load(s, dir, "part"))
-        .select("p_partkey", "p_name").orderBy("p_partkey")),
-
-    // P4/P5 one-pass valid/reject split, surfaced as A1 one-pass metrics
-    "q_valid_counts" -> ((s, dir) =>
-      validityCounts(Seq("o_orderkey", "o_custkey", "o_orderdate"))(
-        Tables.load(s, dir, "orders")).orderBy("is_valid")),
-
-    // T1 EXCEPT-distinct (order_items_glue_job.py:140)
-    "q_except" -> ((s, dir) => {
-      val o = Tables.load(s, dir, "orders").select("o_orderkey", "o_orderstatus")
-      o.except(o.filter(col("o_orderstatus") === "F")).orderBy("o_orderkey")
-    }),
-
-    // set operations: INTERSECT / UNION (T1's siblings)
-    "q_intersect" -> ((s, dir) => {
-      val o = Tables.load(s, dir, "orders")
-      o.filter(col("o_totalprice") > 1000).select("o_custkey")
-        .intersect(o.filter(col("o_orderstatus") === "F").select("o_custkey"))
-        .orderBy("o_custkey")
-    }),
-
-    "q_union" -> ((s, dir) => {
-      val o = Tables.load(s, dir, "orders")
-      o.filter(col("o_orderstatus") === "F").select("o_orderkey", "o_orderstatus")
-        .unionByName(o.filter(col("o_orderstatus") === "P")
-          .select("o_orderkey", "o_orderstatus"))
-        .orderBy("o_orderkey")
-    }),
-
-    // LATERAL correlated derived table: top-2 orders per nation's
-    // customers — the "top-n per key as a join" SQL idiom (decorrelates
-    // to a ranked window, no per-row re-execution)
-    "q_lateral" -> ((s, dir) => {
-      Tables.load(s, dir, "customer").createOrReplaceTempView("customer")
-      Tables.load(s, dir, "orders").createOrReplaceTempView("orders")
-      s.sql("""SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
-               FROM customer c,
-               LATERAL (SELECT o_orderkey, o_totalprice FROM orders o
-                        WHERE o.o_custkey = c.c_custkey
-                        ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
-               WHERE c.c_custkey < 100
-               ORDER BY c_custkey, o_totalprice DESC, o_orderkey""")
-    }),
-
-    // correlated scalar subquery through the SQL surface
-    "q_correlated" -> ((s, dir) => {
-      Tables.load(s, dir, "orders").createOrReplaceTempView("orders")
-      s.sql("""SELECT o_orderkey, o_custkey FROM orders o
-               WHERE o_totalprice = (SELECT max(i.o_totalprice) FROM orders i
-                                     WHERE i.o_custkey = o.o_custkey)
-               ORDER BY o_orderkey""")
-    }),
-
-    // window with a RANGE frame (peers included on ties)
-    "q_range_frame" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("o_orderstatus").orderBy(col("o_totalprice"))
-        .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-      Tables.load(s, dir, "orders")
-        .filter(col("o_custkey") < 30)
-        .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
-          count(lit(1)).over(w).as("n_leq"))
-        .orderBy("o_orderkey")
-    }),
-
-    // §2.9 SQL surface: registered views + ORDER BY/LIMIT
-    "q_sql_limit" -> ((s, dir) => {
-      Tables.load(s, dir, "orders").createOrReplaceTempView("orders")
-      s.sql("""SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
-               FROM orders ORDER BY o_orderkey LIMIT 10""")
-    }),
-
-    // §2.9 SQL surface: multi-table join + agg through spark.sql
-    "q_sql_join_agg" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
-      s.sql("""
-        SELECT n.n_name,
-               ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,
-               COUNT(*) AS n_lines
-        FROM customer c
-        JOIN orders o ON o.o_custkey = c.c_custkey
-        JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-        JOIN nation n ON n.n_nationkey = c.c_nationkey
-        JOIN region r ON r.r_regionkey = n.n_regionkey
-        WHERE r.r_name = 'ASIA'
-        GROUP BY n.n_name ORDER BY n.n_name""")
-    }),
-
-    // S6 local collection → DataFrame, broadcast-joined to a fact
-    "q_local_relation" -> ((s, dir) => {
-      val ranks = s.createDataFrame(Seq(
-        ("1-URGENT", 1), ("2-HIGH", 2), ("3-MEDIUM", 3),
-        ("4-NOT SPECIFIED", 4), ("5-LOW", 5))).toDF("o_orderpriority", "prio_rank")
-      Tables.load(s, dir, "orders").join(broadcast(ranks), Seq("o_orderpriority"))
-        .groupBy("prio_rank").agg(count(lit(1)).as("n_orders"))
-        .orderBy("prio_rank")
-    }),
-
-    // ================= North-star: aggregations (§7.5) =================
-    "q1_agg" -> ((s, dir) =>
-      Tables.load(s, dir, "lineitem")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          sum(col("l_quantity").cast("decimal(20,4)")).cast("double").as("sum_qty"),
-          sum(col("l_extendedprice").cast("decimal(20,4)")).cast("double").as("sum_base_price"),
-          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("sum_disc_price"),
-          count(lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")),
-
-    "q_rollup" -> ((s, dir) => {
-      // Spark 4.1's DetectAmbiguousSelfJoin false-positives on
-      // rollup-after-join (the Expand node re-uses the grouping attrs);
-      // the check is a lint, not a semantic guard — disable it ONLY for
-      // this query's analysis (withSQLConf restores the previous value).
-      withSQLConf(s, "spark.sql.analyzer.failAmbiguousSelfJoin", "false") {
-      val c = Tables.load(s, dir, "customer")
-      val n = Tables.load(s, dir, "nation")
-      val r = Tables.load(s, dir, "region")
-      val joined = c.select("c_custkey", "c_nationkey", "c_acctbal")
-        .join(broadcast(n.select(col("n_nationkey").as("c_nationkey"),
-          col("n_name"), col("n_regionkey"))), Seq("c_nationkey"))
-        .join(broadcast(r.select(col("r_regionkey").as("n_regionkey"),
-          col("r_name"))), Seq("n_regionkey"))
-        .select("r_name", "n_name", "c_acctbal")
-      joined.rollup(joined("r_name"), joined("n_name"))
-        .agg(count(lit(1)).as("n_cust"),
-          sum(col("c_acctbal").cast("decimal(20,4)")).cast("double").as("sum_bal"))
-        .orderBy(col("r_name").asc_nulls_first, col("n_name").asc_nulls_first)
-      }
-    }),
-
-    "q_pivot" -> ((s, dir) =>
-      Tables.load(s, dir, "orders")
-        .groupBy("o_orderpriority").pivot("o_orderstatus", Seq("F", "O", "P"))
-        .agg(count(lit(1)))
-        .select(col("o_orderpriority"),
-          coalesce(col("F"), lit(0L)).as("F"),
-          coalesce(col("O"), lit(0L)).as("O"),
-          coalesce(col("P"), lit(0L)).as("P"))
-        .orderBy("o_orderpriority")),
-
-    "q_count_distinct" -> ((s, dir) =>
-      Tables.load(s, dir, "orders")
-        .groupBy("o_orderstatus")
-        .agg(countDistinct(col("o_custkey")).as("n_cust"), count(lit(1)).as("n"))
-        .orderBy("o_orderstatus")),
-
-    // date-part extraction + aggregation
-    "q_date_agg" -> ((s, dir) =>
-      Tables.load(s, dir, "orders")
-        .groupBy(year(col("o_orderdate")).as("yr"), month(col("o_orderdate")).as("mo"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("o_totalprice").cast("decimal(20,4)")).cast("double").as("sum_total"))
-        .orderBy("yr", "mo")),
-
-    // string scalar functions (upper/substring/length) under aggregation
-    "q_string_funcs" -> ((s, dir) =>
-      docs(s, dir).groupBy("source")
-        .agg(count(lit(1)).as("n"),
-          min(upper(substring(col("text"), 1, 12))).as("min_prefix"),
-          max(col("n_chars")).as("max_chars"))
-        .orderBy("source")),
-
-    // GROUPING SETS through the SQL surface
-    "q_grouping_sets" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
-      s.sql("""
-        SELECT r_name, n_name, count(*) AS n_cust
-        FROM customer c
-        JOIN nation n ON c.c_nationkey = n.n_nationkey
-        JOIN region r ON n.n_regionkey = r.r_regionkey
-        GROUP BY GROUPING SETS ((r_name), (n_name))
-        ORDER BY r_name ASC NULLS FIRST, n_name ASC NULLS FIRST""")
-    }),
-
-    // analytic window functions: lag + row_number + running sum
-    "q_window_analytics" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("o_custkey")
-        .orderBy(col("o_orderdate").asc, col("o_orderkey").asc)
-      Tables.load(s, dir, "orders")
-        .filter(col("o_custkey") < 50)
-        .select(col("o_custkey"), col("o_orderkey"),
-          lag(col("o_orderkey"), 1).over(w).as("prev_orderkey"),
-          row_number().over(w).as("seq"),
-          sum(col("o_totalprice").cast("decimal(20,4)"))
-            .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-            .cast("double").as("running_total"))
-        .orderBy("o_custkey", "seq")
-    }),
-
-    // higher-order-function surface: transform/aggregate/filter over the
-    // embedding arrays (the declarative forms the native expressions twin)
-    "q_hof" -> ((s, dir) =>
-      emb(s, dir).select(
-        col("vec_id"),
-        round(aggregate(transform(col("embedding"),
-          x => x.cast("double") * x.cast("double")), lit(0.0), (acc, x) => acc + x), 4)
-          .as("sum_sq"),
-        round(array_max(transform(col("embedding"), x => abs(x.cast("double")))), 4)
-          .as("max_abs"),
-        size(filter(col("embedding"), x => x > 0)).as("n_pos"))
-        .orderBy("vec_id")),
-
-    // rank-family analytic windows: dense_rank / percent_rank / ntile /
-    // cume_dist under one deterministic total order
-    "q_rank_funcs" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("o_custkey")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-      Tables.load(s, dir, "orders")
-        .filter(col("o_custkey") < 20)
-        .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"),
-          dense_rank().over(w).as("dr"),
-          round(percent_rank().over(w), 6).as("pr"),
-          ntile(4).over(w).as("quartile"),
-          round(cume_dist().over(w), 6).as("cd"))
-        .orderBy("o_custkey", "o_orderkey")
-    }),
-
-    // regex scalar surface: extract / extract_all / replace
-    "q_regex_funcs" -> ((s, dir) =>
-      docs(s, dir).select(
-        col("doc_id"),
-        regexp_extract(col("text"), "([A-Za-z]+)", 1).as("first_word"),
-        size(regexp_extract_all(col("text"), lit("[0-9]+"), lit(0))).as("n_nums"),
-        length(regexp_replace(col("text"), "[aeiou]", "")).as("n_novowel"))
-        .orderBy("doc_id")),
-
-    // HLL sketch, oracle-compared as a BOUND CHECK: the estimate itself is
-    // engine-seeded (Spark HLL++ vs DuckDB HLL differ by construction),
-    // but the sketch's accuracy contract is relational — the row carries
-    // the exact count plus a within-3×rsd flag (rsd defaults to 0.05) the
-    // oracle asserts as literal 1, so a broken/drifting sketch turns the
-    // row red instead of hiding behind a rows-only check.
-    // PROBABILISTIC caveat: rsd is a standard deviation, not a hard
-    // guarantee — 3×rsd holds with ~99.7% probability PER GROUP, and the
-    // check is deterministic per dataset (HLL++ has no runtime seed), so
-    // on a NEW dataset or SF a perfectly healthy sketch can land one
-    // group outside the bound and fail persistently there. A red row
-    // here on fresh data means "re-derive the bound for that data"
-    // before suspecting the sketch; the current testdata's worst group
-    // sits well inside 15%
-    "q_approx_distinct" -> ((s, dir) =>
-      Tables.load(s, dir, "orders")
-        .groupBy("o_orderstatus")
-        .agg(
-          countDistinct(col("o_custkey")).as("exact_cust"),
-          approx_count_distinct(col("o_custkey")).as("approx_cust"))
-        .select(col("o_orderstatus"), col("exact_cust"),
-          when(abs(col("approx_cust") - col("exact_cust")) <=
-            lit(0.15) * col("exact_cust"), lit(1L)).otherwise(lit(0L))
-            .as("within_bound"))
-        .orderBy("o_orderstatus")),
-
-    // KMV distinct sketch — the deterministic md5-based k-minimum-values
-    // estimator (ScaleOps.kmvDistinct): unlike the engine-seeded HLL row
-    // above, a DuckDB replay reproduces it bit-for-bit (hash-green)
-    "q_kmv_distinct" -> ((s, dir) =>
-      graft.ops.ScaleOps.kmvDistinct(Tables.load(s, dir, "orders"),
-        Seq("o_orderstatus"), "o_custkey", k = 64)
-        .orderBy("o_orderstatus")),
-
-    // KMV set operations — the mergeability payoff: |A|, |B|, |A∪B|,
-    // |A∩B| of two customer cohorts from bottom-64 sketches, exact
-    // below k, ρ/k-scaled above it; deterministic md5 chain → hash-green
-    "q_kmv_setops" -> ((s, dir) =>
-      graft.ops.ScaleOps.kmvSetOps(Tables.load(s, dir, "orders"),
-        "o_custkey",
-        col("o_orderstatus") === "F", col("o_orderstatus") === "O",
-        k = 64)),
-
-    // salted skew-join: same result as the plain join (oracle-checked),
-    // hot keys split across 8 reducers
-    "q_salted_join" -> ((s, dir) => {
-      val li = Tables.load(s, dir, "lineitem")
-        .select(col("l_suppkey").as("s_suppkey"), col("l_quantity"))
-      val sup = Tables.load(s, dir, "supplier").select("s_suppkey", "s_name")
-      graft.ops.ScaleOps.saltedJoin(li, sup, "s_suppkey", buckets = 8)
-        .groupBy("s_name")
-        .agg(count(lit(1)).as("n_items"),
-          sum(col("l_quantity").cast("decimal(20,4)")).cast("double").as("sum_qty"))
-        .orderBy("s_name")
-    }),
-
-    // triangle counting on the co-purchase part graph (parts sharing an
-    // order are linked): ordered edge-iterator — wedges by middle-vertex
-    // equi-join, closed by a semi-join, each triangle counted once via
-    // x<y<z. Edges are SUPPORT-PRUNED to pairs co-purchased ≥2 times —
-    // the market-basket sparsification that bounds the wedge count
-    // (Σ deg²): the raw singleton graph at sf0.1 has 1.2M edges and
-    // hub degrees in the hundreds (a ~30 s wedge explosion); pruning
-    // keeps ~3.6k meaningful edges. Canonical order is STRING order
-    // (the operator's node-id domain); the oracle replays the same
-    // VARCHAR least/greatest.
-    "q_triangles" -> ((s, dir) => {
-      // pair generation as ONE aggregation (copurchaseSets): collect the
-      // order's distinct part set, emit its within-array pairs map-side
-      // — replaces the self-join formulation (two scans + two distinct
-      // shuffles + broadcast build over 600k rows) with a single groupBy
-      // plus the pair-key shuffle
-      val pairs = supportPrunedPairs(copurchaseSets(s, dir), 2)
-      graft.operators.Graph.triangleCounts(pairs, "u", "v")
-        .orderBy(col("n_triangles").desc, col("vertex").asc)
-        .limit(50)
-    }),
-
-    // 1-hop/2-hop reachability profile over the same support-pruned
-    // co-purchase graph as q_triangles (pruning is what bounds the
-    // wedge-shaped 2-hop frontier, pinned by GraphSpec)
-    "q_two_hop" -> ((s, dir) => {
-      val pairs = supportPrunedPairs(copurchaseSets(s, dir), 2)
-      graft.operators.Graph.twoHopNeighborhood(pairs, "u", "v")
-        .orderBy(col("n_2hop").desc, col("vertex").asc)
-        .limit(50)
-    }),
-
-    // per-label embedding-norm stats — the vector-column profile
-    // (collapsed/exploded embedding detection): norms in sequential
-    // double accumulation, rounded, then the decimal-sum mean pattern
-    "q_embed_norms" -> ((s, dir) => {
-      val n = emb(s, dir).select(col("label"),
-        round(graft.functions.VectorFunctions.l2Norm(
-          graft.functions.VectorFunctions.toDouble(col("embedding"))), 4)
-          .as("norm"))
-      n.groupBy("label").agg(
-        count(lit(1)).as("n"),
-        round(sum(col("norm").cast("decimal(20,4)")).cast("double") /
-          count(lit(1)), 4).as("mean_norm"),
-        min("norm").as("min_norm"),
-        max("norm").as("max_norm"))
-        .orderBy("label")
-    }),
-
-    // frequent triples (Apriori level above q_assoc_rules' pairs) from
-    // the SAME copurchaseSets aggregation — Apriori-pruned: baskets are
-    // filtered to pair-frequent items BEFORE the cubic within-array
-    // expansion (aprioriTripleCandidates), so basket size bounds only
-    // the frequent-item part of the expansion, not raw |basket|^3
-    "q_itemsets3" -> ((s, dir) =>
-      aprioriTripleCandidates(copurchaseSets(s, dir), 2)
-        .groupBy("a", "b", "c").agg(count(lit(1)).as("support"))
-        .filter(col("support") >= 2)
-        .orderBy(col("support").desc, col("a").asc, col("b").asc,
-          col("c").asc)
-        .limit(30)),
-
-    // trending top-k: weekly top-3 parts by shipped quantity — the
-    // two-level shape (time-bucket agg, then a bucket-partitioned rank
-    // that WindowGroupLimit pushes map-side) behind every "trending
-    // now" panel; rank on the exact decimal total with id tiebreak
-    "q_trending" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val agg = Tables.load(s, dir, "lineitem")
-        .groupBy(date_trunc("week", col("l_shipdate")).as("week"),
-          col("l_partkey"))
-        .agg(sum(col("l_quantity").cast("decimal(20,4)")).as("qty_dec"))
-      val w = Window.partitionBy("week")
-        .orderBy(col("qty_dec").desc, col("l_partkey").asc)
-      agg.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
-        .select(col("week"), col("l_partkey"),
-          col("qty_dec").cast("double").as("qty"), col("rn"))
-        .orderBy("week", "rn")
-    }),
-
-    // market-basket association rules over the same co-purchase pairs
-    // as q_triangles: support ≥2 itemset pairs expanded to both rule
-    // directions, confidence = sup(ab)/sup(a), lift computed as
-    // (sup_ab/sup_a)·(n/sup_b) — two double divisions and a multiply in
-    // fixed order, bit-identical on both engines and overflow-free (a
-    // raw sup_ab·n Long product would wrap silently at extreme order
-    // counts where DuckDB's BIGINT errors) — ranked on the rounded
-    // lift with rule tiebreaks
-    "q_assoc_rules" -> ((s, dir) => {
-      // EVERY input (order count, singleton supports, pair supports)
-      // derives from the one copurchaseSets aggregation, so the
-      // collect_set exchange is planned once and reused — not four
-      // independent lineitem scan branches
-      val sets = copurchaseSets(s, dir)
-      val nOrders = sets.agg(count(lit(1)).as("n_orders"))
-      val singles = sets.select(explode(col("ps")).as("p"))
-        .groupBy("p").agg(count(lit(1)).as("sup_single"))
-      val pairs = supportPrunedPairs(sets, 2)
-      val rules = pairs.select(explode(array(
-          struct(col("u").as("antecedent"), col("v").as("consequent"),
-            col("sup_ab")),
-          struct(col("v").as("antecedent"), col("u").as("consequent"),
-            col("sup_ab")))).as("r"))
-        .select("r.antecedent", "r.consequent", "r.sup_ab")
-      rules
-        .join(singles.select(col("p").as("antecedent"),
-          col("sup_single").as("sup_a")), Seq("antecedent"))
-        .join(singles.select(col("p").as("consequent"),
-          col("sup_single").as("sup_b")), Seq("consequent"))
-        .crossJoin(broadcast(nOrders))
-        .select(col("antecedent"), col("consequent"), col("sup_ab"),
-          round(col("sup_ab").cast("double") / col("sup_a"), 4)
-            .as("confidence"),
-          round((col("sup_ab").cast("double") / col("sup_a")) *
-            (col("n_orders").cast("double") / col("sup_b")), 4).as("lift"))
-        .orderBy(col("lift").desc, col("antecedent").asc,
-          col("consequent").asc)
-        .limit(30)
-    }),
-
-    // FULL OUTER reconciliation: daily ordered vs shipped revenue with
-    // either side possibly absent — the one outer-join flavor the rest
-    // of the suite didn't exercise; both sides pre-aggregate to day
-    // grain BEFORE the join so the outer join touches ~2.5k rows, not
-    // the facts
-    "q_full_outer" -> ((s, dir) => {
-      val o = Tables.load(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(col("o_totalprice").cast("decimal(20,4)"))
-          .cast("double").as("order_revenue"))
-      val l = Tables.load(s, dir, "lineitem")
-        .groupBy(to_date(col("l_shipdate")).as("day"))
-        .agg(sum(col("l_extendedprice").cast("decimal(20,4)") *
-            (lit(1) - col("l_discount").cast("decimal(20,4)")))
-          .cast("double").as("shipped_revenue"))
-      o.join(l, Seq("day"), "full_outer")
-        .select(col("day"),
-          coalesce(col("order_revenue"), lit(0.0)).as("order_revenue"),
-          coalesce(col("shipped_revenue"), lit(0.0)).as("shipped_revenue"))
-        .orderBy("day")
-    }),
-
-    // two-phase salted aggregation (hot-group-key skew guard): partial
-    // agg on (key, salt) then merge — decomposable sums make the result
-    // EXACTLY the plain groupBy, which is the oracle
-    "q_salted_agg" -> ((s, dir) =>
-      graft.ops.ScaleOps.saltedAgg(
-        Tables.load(s, dir, "lineitem"),
-        Seq("l_returnflag"), "l_extendedprice", buckets = 8)
-        .orderBy("l_returnflag")),
-
-    // bloom-filter-accelerated semi-join: fact prefiltered by a dim-key
-    // bloom before the shuffle, exact semi-join finish — output is
-    // EXACTLY the plain semi-join, which is what the oracle checks
-    "q_bloom_join" -> ((s, dir) => {
-      val li = Tables.load(s, dir, "lineitem")
-        .select(col("l_suppkey").as("s_suppkey"), col("l_quantity"))
-      val sup = Tables.load(s, dir, "supplier")
-        .filter(col("s_acctbal") > 5000).select("s_suppkey")
-      graft.ops.ScaleOps.bloomSemiJoin(li, sup, "s_suppkey")
-        .groupBy("s_suppkey")
-        .agg(count(lit(1)).as("n_items"),
-          sum(col("l_quantity").cast("decimal(20,4)")).cast("double").as("sum_qty"))
-        .orderBy("s_suppkey")
-    }),
-
-    // deterministic consistent sample: 5 docs per language by smallest
-    // row hash. The chosen rows are engine-specific (xxhash64), so the
-    // oracle checks the invariant part — per-group sampled count =
-    // min(5, group size); subset/determinism pinned in ScaleOpsSpec
-    "q_consistent_sample" -> ((s, dir) =>
-      graft.ops.ScaleOps.consistentSamplePerGroup(
-        docs(s, dir), Seq("lang"), Seq("doc_id"), k = 5, seed = 11L)
-        .groupBy("lang").agg(count(lit(1)).as("n_sampled"))
-        .orderBy("lang")),
-
-    // deterministic per-stratum sampling (training-data rebalancing:
-    // downsample over-represented languages) via the replayable Knuth-
-    // hash threshold — exact counts cross-engine, so this gets a real
-    // oracle; the engine-seeded sampleBy variant stays in the library
-    // (ScaleOps.stratifiedSample), pinned by ScaleOpsSpec/PropertySpec.
-    "q_stratified_sample" -> ((s, dir) =>
-      graft.ops.ScaleOps.hashStratifiedSample(docs(s, dir), "lang", "doc_id",
-        Map("en" -> 0.5, "de" -> 1.0, "fr" -> 0.25))
-        .groupBy("lang").agg(count(lit(1)).as("n_sampled"))
-        .orderBy("lang")),
-
-    // column profiling (the reference's crawler-statistics step as an
-    // engine op): one aggregate over the table → long-format stats
-    "q_profile" -> ((s, dir) =>
-      graft.ops.ScaleOps.profileColumns(
-        Tables.load(s, dir, "orders"),
-        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"))
-        .orderBy("column_name")),
-
-    // multiset EXCEPT ALL: duplicate-preserving difference (one
-    // occurrence removed per matching right row) — contrast q_except's
-    // EXCEPT DISTINCT; summarized per key for a deterministic compare
-    "q_except_all" -> ((s, dir) => {
-      val li = Tables.load(s, dir, "lineitem").select("l_orderkey")
-      val ord = Tables.load(s, dir, "orders")
-        .filter(col("o_orderkey") % 2 === 0)
-        .select(col("o_orderkey").as("l_orderkey"))
-      li.exceptAll(ord)
-        .groupBy("l_orderkey").agg(count(lit(1)).as("n"))
-        .orderBy("l_orderkey")
-    }),
-
-    // multiset INTERSECT ALL: duplicate-preserving intersection
-    "q_intersect_all" -> ((s, dir) => {
-      val li = Tables.load(s, dir, "lineitem").select("l_orderkey")
-      val ord = Tables.load(s, dir, "orders")
-        .filter(col("o_orderkey") % 2 === 0)
-        .select(col("o_orderkey").as("l_orderkey"))
-      li.intersectAll(ord)
-        .groupBy("l_orderkey").agg(count(lit(1)).as("n"))
-        .orderBy("l_orderkey")
-    }),
-
-    // bucketed co-located join: both sides written bucketed on the join
-    // key (the write-once shuffle), then joined exchange-free — at scale
-    // this converts a per-query fact shuffle into a storage layout
-    // decision. Same oracle as the plain join; BucketedSpec pins the
-    // no-Exchange plan.
-    "q_bucketed_join" -> ((s, dir) => {
-      import graft.table.Bucketed
-      val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-      Bucketed.writeBucketed(
-        Tables.load(s, dir, "lineitem")
-          .select(col("l_suppkey").as("s_suppkey"), col("l_quantity")),
-        s"li_bkt_$sfx", "s_suppkey", buckets = 8)
-      Bucketed.writeBucketed(
-        Tables.load(s, dir, "supplier").select("s_suppkey", "s_name"),
-        s"sup_bkt_$sfx", "s_suppkey", buckets = 8)
-      Bucketed.colocatedJoin(s, s"li_bkt_$sfx", s"sup_bkt_$sfx", Seq("s_suppkey"))
-        .groupBy("s_name")
-        .agg(count(lit(1)).as("n_items"),
-          sum(col("l_quantity").cast("decimal(20,4)")).cast("double").as("sum_qty"))
-        .orderBy("s_name")
-    }),
-
-    // PII scrub: emails + long digit runs → typed placeholders, with
-    // audit counts. Deterministic PII is synthesized onto the corpus
-    // (doc_id-derived) so redaction coverage is nonzero and the DuckDB
-    // twin replays it exactly; patterns are RE2-compatible so both regex
-    // engines agree.
-    "q_pii_redact" -> ((s, dir) => {
-      val salted = docs(s, dir).withColumn("t2",
-        concat(col("text"),
-          when(col("doc_id") % 5 === 0, concat(lit(" contact user"),
-            col("doc_id"), lit("@example.com for details"))).otherwise(lit("")),
-          when(col("doc_id") % 7 === 0,
-            concat(lit(" ref 9001234"), col("doc_id"))).otherwise(lit(""))))
-      salted.select(col("doc_id"),
-          piiCounts(col("t2")).as("pc"),
-          md5(redactPii(col("t2")).cast("binary")).as("red_md5"))
-        .select(col("doc_id"), col("pc.n_emails"), col("pc.n_digit_runs"),
-          col("red_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // embedding-cosine near-dup, brute-force verify path (oracle-checked).
-    // Op-level threshold sits below the final cut so the 4-decimal rounding
-    // (applied in both engines) is the only boundary that matters. The
-    // brute path is quadratic BY CONSTRUCTION (it is the exact
-    // verification twin of the LSH sibling below), so the corpus is
-    // explicitly bounded — vec_id < 500 — per this project's no-unbounded-
-    // cartesian rule; the scale path is q_embed_neardup_lsh.
-    "q_embed_neardup" -> ((s, dir) =>
-      Dedup.embeddingNearDupPairs(
-        emb(s, dir).filter(col("vec_id") < 500), "vec_id", "embedding",
-        dim = 64, threshold = 0.35, lshBits = 0)
-        .withColumn("cos", round(col("cos"), 4))
-        .filter(col("cos") >= 0.4)
-        .orderBy("a_id", "b_id")),
-
-    // embedding-cosine near-dup, LSH-bucketed scale path. Deterministic
-    // md5-Rademacher hyperplanes over integer-quantized raw vectors make
-    // the CANDIDATE stage replayable bit-for-bit in DuckDB, so the row is
-    // fully oracle-COMPARED even though LSH recall < 1 (the oracle replays
-    // the same bucketing, not the brute-force definition). Verify chain is
-    // q_embed_neardup's proven op-0.35 / round-4 / cut-0.4 rounding
-    "q_embed_neardup_lsh" -> ((s, dir) =>
-      Dedup.embeddingNearDupPairs(emb(s, dir), "vec_id", "embedding",
-        dim = 64, threshold = 0.35, lshBits = 6, deterministic = true)
-        .withColumn("cos", round(col("cos"), 4))
-        .filter(col("cos") >= 0.4)
-        .orderBy("a_id", "b_id")),
-
-    // per-label centroid of the embedding column: posexplode → two hash
-    // aggs (dim-wise mean, then norm) — linear, no vector ever collected
-    // to the driver; the grouped-vector-aggregation staple for cluster
-    // quality / drift monitoring
-    "q_embed_centroids" -> ((s, dir) =>
-      emb(s, dir)
-        .select(col("label"), posexplode(col("embedding")))
-        .groupBy("label", "pos")
-        .agg(avg(col("col").cast("double")).as("m"), count(lit(1)).as("n"))
-        .groupBy("label")
-        .agg(round(sqrt(sum(col("m") * col("m"))), 6).as("centroid_norm"),
-          max("n").as("n_vecs"))
-        .orderBy("label")),
-
-    // ================= North-star: similarity search ===================
-    // brute-force exact top-k for a bounded query set (oracle-checked);
-    // ranking on the rounded cosine with id tiebreak keeps cross-engine
-    // float noise out of the rank.
-    "q_embed_topk" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val scored = Similarity.bruteForceTopK(
-        e.filter(col("vec_id") < 16), e, "vec_id", "embedding", k = 5)
-      scored.select("query_id", "rank", "neighbor_id", "cos")
-        .orderBy("query_id", "rank")
-    }),
-
-    // LSH-bucketed ANN in FULL-probe mode (probeBits = bits): every
-    // 2^bits bucket is probed, so the bucketed plan provably equals
-    // brute force and the row is oracle-COMPARED — the same
-    // full-probe ≡ brute-force conversion as q_ann_index (production
-    // probeBits < bits recall stays pinned by RecallSpec).
-    "q_embed_ann_lsh" -> ((s, dir) => {
-      val e = emb(s, dir)
-      Similarity.lshTopK(e.filter(col("vec_id") < 16), e, "vec_id", "embedding",
-        k = 5, dim = 64, bits = 8, probeBits = 8)
-        .orderBy("query_id", "rank")
-    }),
-
-    // IVF ANN in FULL-probe mode (nProbe = nCells): every Voronoi cell
-    // is probed, so the celled plan provably equals brute force and the
-    // row is oracle-COMPARED regardless of the k-means seeding
-    // (production nProbe < nCells recall stays pinned by RecallSpec).
-    "q_embed_ann_ivf" -> ((s, dir) => {
-      val e = emb(s, dir)
-      Similarity.ivfTopK(e.filter(col("vec_id") < 16), e, "vec_id", "embedding",
-        k = 5, nCells = 16, nProbe = 16)
-        .orderBy("query_id", "rank")
-    }),
-
-    // UNPIVOT (melt): the wide pivot table folded back to long form
-    "q_unpivot" -> ((s, dir) => {
-      val wide = Tables.load(s, dir, "orders")
-        .groupBy("o_orderpriority").pivot("o_orderstatus", Seq("F", "O", "P"))
-        .agg(count(lit(1)))
-        .select(col("o_orderpriority"),
-          coalesce(col("F"), lit(0L)).as("F"),
-          coalesce(col("O"), lit(0L)).as("O"),
-          coalesce(col("P"), lit(0L)).as("P"))
-      wide.unpivot(Array(col("o_orderpriority")),
-        Array(col("F"), col("O"), col("P")), "status", "n")
-        .orderBy("o_orderpriority", "status")
-    }),
-
-    // CUBE aggregation (all grouping combinations)
-    "q_cube" -> ((s, dir) =>
-      Tables.load(s, dir, "orders")
-        .cube("o_orderstatus", "o_orderpriority")
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("o_orderstatus").asc_nulls_first,
-          col("o_orderpriority").asc_nulls_first)),
-
-    // TPC-H Q3 shape: selective dim filter → two-table fact join →
-    // decimal-exact revenue agg → distributed top-10. The segment-filtered
-    // customer key set broadcasts; orders⋈lineitem shuffles on the order
-    // key; TakeOrderedAndProject merges per-partition heads.
-    "q_tpch_q3" -> ((s, dir) => {
-      val cut = lit("1998-01-01").cast("timestamp")
-      val c = Tables.load(s, dir, "customer")
-        .filter(col("c_mktsegment") === "BUILDING").select("c_custkey")
-      val o = Tables.load(s, dir, "orders")
-        .filter(col("o_orderdate") < cut)
-        .select(col("o_custkey").as("c_custkey"), col("o_orderkey").as("l_orderkey"),
-          col("o_orderdate"))
-      val l = Tables.load(s, dir, "lineitem")
-        .filter(col("l_shipdate") > cut)
-        .select("l_orderkey", "l_extendedprice", "l_discount")
-      l.join(o.join(broadcast(c), Seq("c_custkey")), Seq("l_orderkey"))
-        .groupBy("l_orderkey", "o_orderdate")
-        .agg(sum(col("l_extendedprice").cast("decimal(20,4)") *
-          (lit(1) - col("l_discount").cast("decimal(20,4)")))
-          .cast("double").as("revenue"))
-        .orderBy(col("revenue").desc, col("l_orderkey").asc)
-        .limit(10)
-    }),
-
-    // TPC-H Q5 shape: 6-way star join (region→nation→customer ⋈ orders ⋈
-    // lineitem ⋈ supplier with the nation-colocation condition) —
-    // dimensions broadcast, facts shuffle once on their join keys
-    "q_tpch_q5" -> ((s, dir) => {
-      val r = Tables.load(s, dir, "region")
-        .filter(col("r_name") === "ASIA").select("r_regionkey")
-      val n = Tables.load(s, dir, "nation")
-        .select(col("n_nationkey"), col("n_name"), col("n_regionkey").as("r_regionkey"))
-      val natAsia = n.join(broadcast(r), Seq("r_regionkey"))
-        .select(col("n_nationkey").as("c_nationkey"), col("n_name"))
-      val c = Tables.load(s, dir, "customer").select("c_custkey", "c_nationkey")
-      val o = Tables.load(s, dir, "orders")
-        .select(col("o_custkey").as("c_custkey"), col("o_orderkey").as("l_orderkey"))
-      val sup = Tables.load(s, dir, "supplier")
-        .select(col("s_suppkey").as("l_suppkey"), col("s_nationkey"))
-      val l = Tables.load(s, dir, "lineitem")
-        .select("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount")
-      l.join(o, Seq("l_orderkey"))
-        .join(broadcast(c.join(broadcast(natAsia), Seq("c_nationkey"))), Seq("c_custkey"))
-        .join(broadcast(sup), Seq("l_suppkey"))
-        .filter(col("s_nationkey") === col("c_nationkey"))
-        .groupBy("n_name")
-        .agg(sum(col("l_extendedprice").cast("decimal(20,4)") *
-          (lit(1) - col("l_discount").cast("decimal(20,4)")))
-          .cast("double").as("revenue"))
-        .orderBy(col("revenue").desc, col("n_name").asc)
-    }),
-
-    // TPC-H Q9 shape (product-profit by nation × year): part filter →
-    // three broadcast dims onto lineitem → one fact-fact shuffle with
-    // orders on the order key → decimal-exact profit agg. partsupp does
-    // not exist in this corpus, so p_retailprice stands in for
-    // ps_supplycost in the cost term — same join/agg skeleton.
-    "q_tpch_q9" -> ((s, dir) => {
-      val p = Tables.load(s, dir, "part")
-        .filter(col("p_name").like("%widget%"))
-        .select(col("p_partkey").as("l_partkey"), col("p_retailprice"))
-      val sup = Tables.load(s, dir, "supplier")
-        .select(col("s_suppkey").as("l_suppkey"), col("s_nationkey"))
-      val n = Tables.load(s, dir, "nation")
-        .select(col("n_nationkey").as("s_nationkey"), col("n_name").as("nation"))
-      val o = Tables.load(s, dir, "orders")
-        .select(col("o_orderkey").as("l_orderkey"),
-          year(col("o_orderdate")).as("o_year"))
-      val l = Tables.load(s, dir, "lineitem")
-        .select("l_orderkey", "l_partkey", "l_suppkey", "l_quantity",
-          "l_extendedprice", "l_discount")
-      l.join(broadcast(p), Seq("l_partkey"))
-        .join(broadcast(sup), Seq("l_suppkey"))
-        .join(broadcast(n), Seq("s_nationkey"))
-        .join(o, Seq("l_orderkey"))
-        .groupBy("nation", "o_year")
-        .agg(sum(col("l_extendedprice").cast("decimal(20,4)") *
-            (lit(1) - col("l_discount").cast("decimal(20,4)")) -
-            col("p_retailprice").cast("decimal(20,4)") *
-            col("l_quantity").cast("decimal(20,4)"))
-          .cast("double").as("sum_profit"))
-        .orderBy(col("nation").asc, col("o_year").desc)
-    }),
-
-    // TPC-H Q18 shape (large-quantity orders): HAVING subquery as a
-    // partial-agg groupBy whose tiny output AQE broadcasts back onto
-    // orders, then onto customer — the top-100 merges per-partition
-    // heads (TakeOrderedAndProject), never a global sort.
-    "q_tpch_q18" -> ((s, dir) => {
-      val l = Tables.load(s, dir, "lineitem")
-        .select(col("l_orderkey"),
-          col("l_quantity").cast("decimal(20,4)").as("qty"))
-      val qual = l.groupBy("l_orderkey")
-        .agg(sum("qty").as("total_qty"))
-        .filter(col("total_qty") > 9)
-      val o = Tables.load(s, dir, "orders")
-        .select(col("o_orderkey").as("l_orderkey"), col("o_custkey"),
-          col("o_orderdate"), col("o_totalprice"))
-      val c = Tables.load(s, dir, "customer")
-        .select(col("c_custkey").as("o_custkey"), col("c_name"))
-      o.join(qual, Seq("l_orderkey"))
-        .join(c, Seq("o_custkey"))
-        .select(col("c_name"), col("o_custkey").as("c_custkey"),
-          col("l_orderkey").as("o_orderkey"), col("o_orderdate"),
-          col("o_totalprice"), col("total_qty").cast("double").as("total_qty"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-        .limit(100)
-    }),
-
-    // TPC-H Q7 shape (volume shipping between nation pairs, by year):
-    // nations pre-filtered to the pair set BEFORE joining (suppliers of
-    // the set broadcast; the customer side keeps only 4/25 nations and
-    // AQE picks its strategy from the measured post-filter size), the
-    // cross-nation pair condition applied after both dims attach. Four
-    // nations rather than TPC-H's two so the smallest test SF still
-    // produces rows.
-    "q_tpch_q7" -> ((s, dir) => {
-      val pair = Seq("NATION_0", "NATION_1", "NATION_2", "NATION_3")
-      val n1 = Tables.load(s, dir, "nation")
-        .filter(col("n_name").isin(pair: _*))
-        .select(col("n_nationkey").as("s_nationkey"),
-          col("n_name").as("supp_nation"))
-      val n2 = Tables.load(s, dir, "nation")
-        .filter(col("n_name").isin(pair: _*))
-        .select(col("n_nationkey").as("c_nationkey"),
-          col("n_name").as("cust_nation"))
-      val sup = Tables.load(s, dir, "supplier")
-        .select(col("s_suppkey").as("l_suppkey"), col("s_nationkey"))
-      val c = Tables.load(s, dir, "customer")
-        .select(col("c_custkey").as("o_custkey"), col("c_nationkey"))
-      val o = Tables.load(s, dir, "orders")
-        .select(col("o_orderkey").as("l_orderkey"), col("o_custkey"))
-      val l = Tables.load(s, dir, "lineitem")
-        .select("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount",
-          "l_shipdate")
-      l.join(o, Seq("l_orderkey"))
-        .join(broadcast(sup.join(broadcast(n1), Seq("s_nationkey"))),
-          Seq("l_suppkey"))
-        .join(c.join(broadcast(n2), Seq("c_nationkey")), Seq("o_custkey"))
-        .filter(col("supp_nation") =!= col("cust_nation"))
-        .groupBy(col("supp_nation"), col("cust_nation"),
-          year(col("l_shipdate")).as("l_year"))
-        .agg(sum(col("l_extendedprice").cast("decimal(20,4)") *
-            (lit(1) - col("l_discount").cast("decimal(20,4)")))
-          .cast("double").as("revenue"))
-        .orderBy("supp_nation", "cust_nation", "l_year")
-    }),
-
-    // TPC-H Q14 shape (promo revenue share by month): one broadcast dim
-    // onto the fact, conditional decimal agg, share computed in double
-    // after the exact decimal sums.
-    "q_tpch_q14" -> ((s, dir) => {
-      val p = Tables.load(s, dir, "part")
-        .select(col("p_partkey").as("l_partkey"), col("p_type"))
-      val l = Tables.load(s, dir, "lineitem")
-        .select("l_partkey", "l_extendedprice", "l_discount", "l_shipdate")
-      val rev = col("l_extendedprice").cast("decimal(20,4)") *
-        (lit(1) - col("l_discount").cast("decimal(20,4)"))
-      l.join(broadcast(p), Seq("l_partkey"))
-        .groupBy(date_format(col("l_shipdate"), "yyyy-MM").as("month"))
-        .agg(round(lit(100.0) *
-            sum(when(col("p_type") === "PROMO", rev).otherwise(lit(0))).cast("double") /
-            sum(rev).cast("double"), 4).as("promo_share"))
-        .orderBy("month")
-    }),
-
-    // TPC-H Q6 shape (forecast revenue change): pure scan-side predicate
-    // stack — every conjunct reaches the parquet reader as a pushed
-    // filter, then one decimal-exact partial-aggregated sum. The plan to
-    // want at 100 TB: no shuffle at all beyond the single-row final agg.
-    "q_tpch_q6" -> ((s, dir) =>
-      Tables.load(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1997-01-01").cast("timestamp") &&
-          col("l_discount") >= 0.02 && col("l_discount") <= 0.04 &&
-          col("l_quantity") < 24)
-        .agg(sum(col("l_extendedprice").cast("decimal(20,4)") *
-            col("l_discount").cast("decimal(20,4)"))
-          .cast("double").as("revenue"))),
-
-    // TPC-H Q10 shape (returned-item revenue, top 20 customers): date
-    // window on orders + returnflag filter on lineitem BEFORE the join,
-    // one fact-fact shuffle, nation broadcast onto the customer side,
-    // TakeOrderedAndProject top-20.
-    "q_tpch_q10" -> ((s, dir) => {
-      val n = Tables.load(s, dir, "nation")
-        .select(col("n_nationkey").as("c_nationkey"), col("n_name"))
-      val c = Tables.load(s, dir, "customer")
-        .select("c_custkey", "c_name", "c_acctbal", "c_nationkey")
-        .join(broadcast(n), Seq("c_nationkey"))
-      val o = Tables.load(s, dir, "orders")
-        .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("o_orderdate") < lit("1996-07-01").cast("timestamp"))
-        .select(col("o_orderkey").as("l_orderkey"),
-          col("o_custkey").as("c_custkey"))
-      val l = Tables.load(s, dir, "lineitem")
-        .filter(col("l_returnflag") === "R")
-        .select("l_orderkey", "l_extendedprice", "l_discount")
-      l.join(o, Seq("l_orderkey"))
-        .join(c, Seq("c_custkey"))
-        .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(sum(col("l_extendedprice").cast("decimal(20,4)") *
-            (lit(1) - col("l_discount").cast("decimal(20,4)")))
-          .cast("double").as("revenue"))
-        .orderBy(col("revenue").desc, col("c_custkey").asc)
-        .limit(20)
-    }),
-
-    // TPC-H Q12 shape (shipping-priority class counts by mode; this
-    // corpus has no l_shipmode, so l_returnflag plays the 2-value mode
-    // column): fact filter → one shuffle join → conditional counts.
-    "q_tpch_q12" -> ((s, dir) => {
-      val l = Tables.load(s, dir, "lineitem")
-        .filter(col("l_returnflag").isin("R", "A") &&
-          col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1998-01-01").cast("timestamp"))
-        .select(col("l_orderkey"), col("l_returnflag"))
-      val o = Tables.load(s, dir, "orders")
-        .select(col("o_orderkey").as("l_orderkey"), col("o_orderpriority"))
-      val high = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-      l.join(o, Seq("l_orderkey"))
-        .groupBy("l_returnflag")
-        .agg(sum(when(high, 1L).otherwise(0L)).as("high_line_count"),
-          sum(when(high, 0L).otherwise(1L)).as("low_line_count"))
-        .orderBy("l_returnflag")
-    }),
-
-    // TPC-H Q13 shape (customer order-count distribution): LEFT OUTER
-    // join so zero-order customers survive with count 0, then a second
-    // tiny aggregation over the per-customer counts. The filtered orders
-    // side shuffles once on custkey; the histogram agg is ~50 rows.
-    "q_tpch_q13" -> ((s, dir) => {
-      val c = Tables.load(s, dir, "customer").select("c_custkey")
-      val o = Tables.load(s, dir, "orders")
-        .filter(col("o_orderpriority") =!= "4-NOT SPECIFIED")
-        .select(col("o_custkey").as("c_custkey"), col("o_orderkey"))
-      c.join(o, Seq("c_custkey"), "left_outer")
-        .groupBy("c_custkey")
-        .agg(count(col("o_orderkey")).as("c_count"))
-        .groupBy("c_count")
-        .agg(count(lit(1)).as("custdist"))
-        .orderBy(col("custdist").desc, col("c_count").desc)
-    }),
-
-    // TPC-H Q17 shape (small-quantity-order revenue): the correlated
-    // `l_quantity < 0.2 * avg(l_quantity per part)` rewritten as a
-    // per-part partial agg joined back onto the fact, with the predicate
-    // in INTEGER-EXACT form (qty·5·cnt < sum) so both engines compare
-    // exact decimals — no cross-engine double-average drift. The per-part
-    // agg output is tiny and AQE broadcasts it back.
-    "q_tpch_q17" -> ((s, dir) => {
-      val p = Tables.load(s, dir, "part")
-        .filter(col("p_type") === "PROMO" && col("p_brand").like("Brand#1%"))
-        .select(col("p_partkey").as("l_partkey"))
-      val qty = col("l_quantity").cast("decimal(20,4)")
-      val perPart = Tables.load(s, dir, "lineitem")
-        .groupBy("l_partkey")
-        .agg(sum(qty).as("sum_qty"), count(lit(1)).as("cnt_qty"))
-      Tables.load(s, dir, "lineitem")
-        .select("l_partkey", "l_quantity", "l_extendedprice")
-        .join(broadcast(p), Seq("l_partkey"))
-        .join(perPart, Seq("l_partkey"))
-        .filter(qty * lit(5) * col("cnt_qty") < col("sum_qty"))
-        .agg((sum(col("l_extendedprice").cast("decimal(20,4)"))
-          .cast("double") / 7.0).as("avg_yearly"))
-    }),
-
-    // TPC-H Q19 shape (disjunctive brand/size/quantity predicates): the
-    // three OR'd conjunct groups stay a single scan + broadcast join —
-    // the part-side disjunction (brand ∈ {...}) is pushable, the mixed
-    // fact/dim residual evaluates post-join inside codegen.
-    "q_tpch_q19" -> ((s, dir) => {
-      val p = Tables.load(s, dir, "part")
-        .select(col("p_partkey").as("l_partkey"), col("p_brand"), col("p_size"))
-      val l = Tables.load(s, dir, "lineitem")
-        .select("l_partkey", "l_quantity", "l_extendedprice", "l_discount")
-      val q = col("l_quantity")
-      val hit =
-        (col("p_brand") === "Brand#12" && col("p_size").between(1, 15) &&
-          q.between(1, 15)) ||
-        (col("p_brand") === "Brand#23" && col("p_size").between(1, 25) &&
-          q.between(10, 25)) ||
-        (col("p_brand") === "Brand#34" && col("p_size").between(1, 35) &&
-          q.between(20, 35))
-      l.join(broadcast(p), Seq("l_partkey"))
-        .filter(hit)
-        .agg(sum(col("l_extendedprice").cast("decimal(20,4)") *
-            (lit(1) - col("l_discount").cast("decimal(20,4)")))
-          .cast("double").as("revenue"))
-    }),
-
-    // TPC-H Q2 shape (min-cost supplier per part; no partsupp table, so
-    // the part↔supplier relation is the DISTINCT (partkey,suppkey) pairs
-    // observed in lineitem, and s_acctbal stands in for ps_supplycost):
-    // the correlated MIN subquery becomes a per-part partial agg joined
-    // back on equality — arithmetic-free, so double equality is exact.
-    "q_tpch_q2" -> ((s, dir) => {
-      val p = Tables.load(s, dir, "part")
-        .filter(col("p_type") === "LARGE" && col("p_size") < 16)
-        .select(col("p_partkey").as("l_partkey"), col("p_name"))
-      val sup = Tables.load(s, dir, "supplier")
-        .select(col("s_suppkey").as("l_suppkey"), col("s_name"),
-          col("s_acctbal"), col("s_nationkey"))
-      val n = Tables.load(s, dir, "nation")
-        .select(col("n_nationkey").as("s_nationkey"), col("n_name"))
-      val cand = Tables.load(s, dir, "lineitem")
-        .select("l_partkey", "l_suppkey").distinct()
-        .join(broadcast(p), Seq("l_partkey"))
-        .join(broadcast(sup), Seq("l_suppkey"))
-        .join(broadcast(n), Seq("s_nationkey"))
-      val mins = cand.groupBy("l_partkey")
-        .agg(min(col("s_acctbal")).as("min_bal"))
-      cand.join(mins, Seq("l_partkey"))
-        .filter(col("s_acctbal") === col("min_bal"))
-        .select(col("s_acctbal"), col("s_name"), col("n_name"),
-          col("l_partkey").as("p_partkey"), col("p_name"))
-        .orderBy(col("s_acctbal").desc, col("n_name").asc,
-          col("s_name").asc, col("p_partkey").asc)
-        .limit(100)
-    }),
-
-    // TPC-H Q4 shape (order-priority checking): EXISTS over lineitem as
-    // a LEFT SEMI join with a non-equi residual (shipdate > orderdate +
-    // 60 days — the corpus has no commit/receipt dates) — the semi join
-    // keys on the order key, so it stays a hash join with the interval
-    // condition evaluated as the join residual.
-    "q_tpch_q4" -> ((s, dir) => {
-      val o = Tables.load(s, dir, "orders")
-        .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("o_orderdate") < lit("1997-01-01").cast("timestamp"))
-        .select("o_orderkey", "o_orderdate", "o_orderpriority")
-      val l = Tables.load(s, dir, "lineitem")
-        .filter(col("l_returnflag") === "R")
-        .select(col("l_orderkey"), col("l_shipdate"))
-      o.join(l, col("o_orderkey") === col("l_orderkey") &&
-          col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 60 DAYS"),
-          "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("order_count"))
-        .orderBy("o_orderpriority")
-    }),
-
-    // TPC-H Q8 shape (national market share by year): region-filtered
-    // customers on the order side, supplier nation attached by broadcast,
-    // share = conditional decimal sum / total decimal sum, divided in
-    // double only after both sums are exact.
-    "q_tpch_q8" -> ((s, dir) => {
-      val r = Tables.load(s, dir, "region")
-        .filter(col("r_name") === "ASIA").select("r_regionkey")
-      val nc = Tables.load(s, dir, "nation")
-        .select(col("n_nationkey"), col("n_regionkey").as("r_regionkey"))
-        .join(broadcast(r), Seq("r_regionkey"))
-        .select(col("n_nationkey").as("c_nationkey"))
-      val c = Tables.load(s, dir, "customer")
-        .select("c_custkey", "c_nationkey")
-        .join(broadcast(nc), Seq("c_nationkey"))
-        .select(col("c_custkey").as("o_custkey"))
-      val o = Tables.load(s, dir, "orders")
-        .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("o_orderdate") < lit("1998-01-01").cast("timestamp"))
-        .select(col("o_orderkey").as("l_orderkey"), col("o_custkey"),
-          year(col("o_orderdate")).as("o_year"))
-      val ns = Tables.load(s, dir, "nation")
-        .select(col("n_nationkey").as("s_nationkey"),
-          col("n_name").as("supp_nation"))
-      val sup = Tables.load(s, dir, "supplier")
-        .select(col("s_suppkey").as("l_suppkey"), col("s_nationkey"))
-        .join(broadcast(ns), Seq("s_nationkey"))
-      val l = Tables.load(s, dir, "lineitem")
-        .select("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount")
-      val rev = col("l_extendedprice").cast("decimal(20,4)") *
-        (lit(1) - col("l_discount").cast("decimal(20,4)"))
-      l.join(o, Seq("l_orderkey"))
-        .join(c, Seq("o_custkey"))
-        .join(broadcast(sup), Seq("l_suppkey"))
-        .groupBy("o_year")
-        .agg(round(
-          sum(when(col("supp_nation") === "NATION_0", rev).otherwise(lit(0)))
-            .cast("double") /
-          sum(rev).cast("double"), 6).as("mkt_share"))
-        .orderBy("o_year")
-    }),
-
-    // TPC-H Q11 shape (important-part inventory value; lineitem revenue
-    // per part stands in for ps_supplycost·ps_availqty): the `HAVING
-    // value > fraction · total` scalar subquery is the bounded
-    // single-row broadcast stats attach (the bm25/unigram-LM pattern —
-    // a 1-row build side, exempted by PlanLint's maxRows rule), with
-    // the threshold in exact decimals (value·1000 > total ⇔ value >
-    // 0.1% of total).
-    "q_tpch_q11" -> ((s, dir) => {
-      val sup = Tables.load(s, dir, "supplier")
-        .filter(col("s_nationkey") < 5)
-        .select(col("s_suppkey").as("l_suppkey"))
-      val rev = col("l_extendedprice").cast("decimal(20,4)") *
-        (lit(1) - col("l_discount").cast("decimal(20,4)"))
-      val lv = Tables.load(s, dir, "lineitem")
-        .select("l_partkey", "l_suppkey", "l_extendedprice", "l_discount")
-        .join(broadcast(sup), Seq("l_suppkey"))
-        .groupBy("l_partkey")
-        .agg(sum(rev).as("value_dec"))
-      val total = lv.agg(sum(col("value_dec")).as("total_dec"))
-      lv.crossJoin(broadcast(total))
-        .filter(col("value_dec") * 1000 > col("total_dec"))
-        .select(col("l_partkey").as("p_partkey"),
-          col("value_dec").cast("double").as("value"))
-        .orderBy(col("value").desc, col("p_partkey").asc)
-        .limit(100)
-    }),
-
-    // TPC-H Q15 shape (top supplier): quarter revenue per supplier, keep
-    // the row(s) equal to the global max — the max is the same bounded
-    // single-row broadcast attach, compared in exact decimals so ties
-    // survive identically in both engines.
-    "q_tpch_q15" -> ((s, dir) => {
-      val rev = Tables.load(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1996-04-01").cast("timestamp"))
-        .groupBy("l_suppkey")
-        .agg(sum(col("l_extendedprice").cast("decimal(20,4)") *
-          (lit(1) - col("l_discount").cast("decimal(20,4)"))).as("total_dec"))
-      val mx = rev.agg(max(col("total_dec")).as("max_dec"))
-      val sup = Tables.load(s, dir, "supplier")
-        .select(col("s_suppkey").as("l_suppkey"), col("s_name"))
-      rev.crossJoin(broadcast(mx))
-        .filter(col("total_dec") === col("max_dec"))
-        .join(broadcast(sup), Seq("l_suppkey"))
-        .select(col("l_suppkey").as("s_suppkey"), col("s_name"),
-          col("total_dec").cast("double").as("total_revenue"))
-        .orderBy("s_suppkey")
-    }),
-
-    // TPC-H Q16 shape (supplier counts per part attribute): DISTINCT
-    // part↔supplier pairs from lineitem, the NOT-IN supplier exclusion
-    // as a LEFT ANTI join (acctbal stands in for the complaints filter),
-    // COUNT(DISTINCT) per attribute triple.
-    "q_tpch_q16" -> ((s, dir) => {
-      val p = Tables.load(s, dir, "part")
-        .filter(col("p_type") =!= "PROMO" &&
-          col("p_size").isin(1, 4, 9, 14, 19, 24, 29, 34, 49))
-        .select(col("p_partkey").as("l_partkey"),
-          col("p_brand"), col("p_type"), col("p_size"))
-      val excl = Tables.load(s, dir, "supplier")
-        .filter(col("s_acctbal") < 1000)
-        .select(col("s_suppkey").as("l_suppkey"))
-      Tables.load(s, dir, "lineitem")
-        .select("l_partkey", "l_suppkey").distinct()
-        .join(broadcast(p), Seq("l_partkey"))
-        .join(broadcast(excl), Seq("l_suppkey"), "left_anti")
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
-        .orderBy(col("supplier_cnt").desc, col("p_brand").asc,
-          col("p_type").asc, col("p_size").asc)
-    }),
-
-    // TPC-H Q20 shape (excess-inventory suppliers; shipped-quantity
-    // dominance stands in for ps_availqty > 0.5·sum): per-(part,supplier)
-    // 1996 quantity vs the part total in INTEGER-EXACT form
-    // (qty·2 > total), distinct dominant suppliers semi-joined onto the
-    // nation-filtered supplier dim.
-    "q_tpch_q20" -> ((s, dir) => {
-      val p = Tables.load(s, dir, "part")
-        .filter(col("p_name").like("small%"))
-        .select(col("p_partkey").as("l_partkey"))
-      val perPS = Tables.load(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1997-01-01").cast("timestamp"))
-        .select(col("l_partkey"), col("l_suppkey"),
-          col("l_quantity").cast("decimal(20,4)").as("q"))
-        .join(broadcast(p), Seq("l_partkey"))
-        .groupBy("l_partkey", "l_suppkey")
-        .agg(sum(col("q")).as("ps_qty"))
-      val perP = perPS.groupBy("l_partkey")
-        .agg(sum(col("ps_qty")).as("p_qty"))
-      val dominant = perPS.join(perP, Seq("l_partkey"))
-        .filter(col("ps_qty") * 2 > col("p_qty"))
-        .select(col("l_suppkey").as("s_suppkey")).distinct()
-      Tables.load(s, dir, "supplier")
-        .filter(col("s_nationkey") < 20)
-        .join(dominant, Seq("s_suppkey"), "left_semi")
-        .select("s_name", "s_acctbal")
-        .orderBy("s_name")
-    }),
-
-    // TPC-H Q21 shape (suppliers who kept orders waiting): the only
-    // supplier with a returned line in a multi-supplier completed order —
-    // EXISTS as a semi join and NOT EXISTS as an anti join, both hash
-    // joins on the order key with a supplier-inequality residual.
-    "q_tpch_q21" -> ((s, dir) => {
-      val sup = Tables.load(s, dir, "supplier")
-        .filter(col("s_nationkey") < 13)
-        .select(col("s_suppkey").as("l_suppkey"), col("s_name"))
-      val o = Tables.load(s, dir, "orders")
-        .filter(col("o_orderstatus") === "F")
-        .select(col("o_orderkey").as("l_orderkey"))
-      val base = Tables.load(s, dir, "lineitem")
-        .filter(col("l_returnflag") === "R")
-        .select("l_orderkey", "l_suppkey")
-        .join(o, Seq("l_orderkey"))
-        .join(broadcast(sup), Seq("l_suppkey"))
-      val others = Tables.load(s, dir, "lineitem")
-        .select(col("l_orderkey").as("o2_orderkey"),
-          col("l_suppkey").as("o2_suppkey"))
-      val othersR = Tables.load(s, dir, "lineitem")
-        .filter(col("l_returnflag") === "R")
-        .select(col("l_orderkey").as("o3_orderkey"),
-          col("l_suppkey").as("o3_suppkey"))
-      base
-        .join(others, col("l_orderkey") === col("o2_orderkey") &&
-          col("l_suppkey") =!= col("o2_suppkey"), "left_semi")
-        .join(othersR, col("l_orderkey") === col("o3_orderkey") &&
-          col("l_suppkey") =!= col("o3_suppkey"), "left_anti")
-        .groupBy("s_name")
-        .agg(count(lit(1)).as("numwait"))
-        .orderBy(col("numwait").desc, col("s_name").asc)
-        .limit(100)
-    }),
-
-    // TPC-H Q22 shape (dormant high-balance customers): the global
-    // positive-balance average as the bounded single-row broadcast
-    // attach, compared in integer-exact form (bal·cnt > sum), recent
-    // orders removed by a LEFT ANTI join, per-nation count + total.
-    "q_tpch_q22" -> ((s, dir) => {
-      val bal = col("c_acctbal").cast("decimal(20,4)")
-      val stats = Tables.load(s, dir, "customer")
-        .filter(col("c_acctbal") > 0.0 && col("c_nationkey") < 7)
-        .agg(sum(bal).as("sum_bal"), count(lit(1)).as("cnt_bal"))
-      val recent = Tables.load(s, dir, "orders")
-        .filter(col("o_orderdate") >= lit("2000-01-01").cast("timestamp"))
-        .select(col("o_custkey").as("c_custkey"))
-      Tables.load(s, dir, "customer")
-        .filter(col("c_nationkey") < 7)
-        .crossJoin(broadcast(stats))
-        .filter(bal * col("cnt_bal") > col("sum_bal"))
-        .join(recent, Seq("c_custkey"), "left_anti")
-        .groupBy("c_nationkey")
-        .agg(count(lit(1)).as("numcust"),
-          sum(bal).cast("double").as("totacctbal"))
-        .orderBy("c_nationkey")
-    }),
-
-    // ORDER BY + LIMIT top-n (TakeOrderedAndProject — the distributed
-    // top-k physical op: per-partition heads, single driver merge)
-    "q_topn" -> ((s, dir) =>
-      Tables.load(s, dir, "orders")
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-        .limit(20)),
-
-    // ================= North-star: multimodal columns ==================
-    "q_multimodal_meta" -> ((s, dir) =>
-      Multimodal.withMediaMeta(
-        docs(s, dir).withColumn("payload", col("text").cast("binary")), "payload")
-        .select(col("doc_id"), col("n_bytes"), col("content_md5"))
-        .orderBy("doc_id")),
-
-    // decode/feature-extract over binary payloads (stubbed codec). The
-    // stub's arithmetic (c = c*31 + byte mod 2^64, dims from the
-    // checksum) is deterministic byte math, so it IS oracle-checkable:
-    // the DuckDB twin replays it with HUGEINT mod-2^64 list_reduce over
-    // a 64-byte payload bound (texts are ASCII → byte = code point)
-    "q_multimodal_decode" -> ((s, dir) => {
-      import s.implicits._
-      val media = docs(s, dir).select(
-        col("doc_id").as("media_id"),
-        when(col("doc_id") % 3 === 0, "video").otherwise("image").as("kind"),
-        substring(col("text"), 1, 64).cast("binary").as("payload"))
-        .as[Multimodal.MediaRow]
-      Multimodal.resized(Multimodal.decodeAndFeaturize(media), 256)
-        .select("media_id", "kind", "width", "height", "n_bytes", "checksum",
-          "out_width", "out_height")
-        .orderBy("media_id")
-    }),
-
-    "q_frame_sample" -> ((s, dir) =>
-      Multimodal.sampleFrames(
-        docs(s, dir).select(
-          col("doc_id").as("media_id"),
-          when(col("doc_id") % 3 === 0, "video").otherwise("image").as("kind"),
-          repeat(col("text"), 50).cast("binary").as("payload")),
-        stride = 2)
-        .orderBy("media_id", "frame_idx")),
-
-    // ============ Round 4: link analysis / retrieval / sketches ========
-
-    // fixed-iteration PageRank over the undirected supplier↔customer
-    // trade graph (edges from lineitem⋈orders). Fixed iterations +
-    // ranking on the ROUNDED rank make the iterative float arithmetic
-    // replayable cross-engine (the DuckDB twin chains one CTE per
-    // iteration).
-    "q_pagerank" -> ((s, dir) => {
-      val l = Tables.load(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-      val o = Tables.load(s, dir, "orders")
-        .select(col("o_orderkey").as("l_orderkey"), col("o_custkey"))
-      // dedup as narrow int pairs BEFORE rendering string node ids (the
-      // "s"/"c" prefixes are injective, so distinctness survives the
-      // concat — and the disjoint namespaces keep the mirrored set
-      // duplicate-free, satisfying the dedupEdges=false contract)
-      val edges = l.join(o, Seq("l_orderkey"))
-        .select(col("l_suppkey"), col("o_custkey")).distinct()
-        .select(concat(lit("s"), col("l_suppkey")).as("src"),
-          concat(lit("c"), col("o_custkey")).as("dst"))
-      Graph.pageRank(edges, "src", "dst", iterations = 3,
-        dedupEdges = false)
-        .select(col("node"), round(col("pr"), 6).as("pr"))
-        .orderBy(col("pr").desc, col("node").asc)
-        .limit(20)
-    }),
-
-    // deterministic weighted mixture sampling: per-source keep rates from
-    // a pure hash of the doc id (no RNG) — reproducible across engines,
-    // monotone in the weight; rates land near the weights
-    "q_weighted_mix" -> ((s, dir) => {
-      val d = docs(s, dir).withColumn("wt",
-        (substring(col("source"), 4, 10).cast("int") % 5 + 1) / lit(5.0))
-      val kept = graft.ops.ScaleOps.weightedMixtureSample(d, "doc_id", col("wt"))
-        .groupBy("source").agg(count(lit(1)).as("n_kept"))
-      d.groupBy("source").agg(max("wt").as("wt"), count(lit(1)).as("n_total"))
-        .join(kept, Seq("source"), "left")
-        .select(col("source"), col("wt"), col("n_total"),
-          coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-          round(coalesce(col("n_kept"), lit(0L)) / col("n_total"), 4).as("kept_rate"))
-        .orderBy("source")
-    }),
-
-    // α=0.5 temperature-scaled source mixing: per-source keep rate
-    // √(n_min/nᵢ) (sqrt is IEEE-exact on every engine — the reason the
-    // operator pins α=0.5), kept set decided by the deterministic hash
-    // rule; rates and kept counts replay exactly in DuckDB
-    "q_temperature_mix" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val kept = graft.ops.ScaleOps.temperatureMixSample(d, "source", "doc_id")
-        .groupBy("source").agg(count(lit(1)).as("n_kept"))
-      val totals = d.groupBy("source").agg(count(lit(1)).as("n_total"))
-      totals.crossJoin(broadcast(totals.agg(min("n_total").as("nmin"))))
-        .select(col("source"), col("n_total"),
-          round(sqrt(col("nmin").cast("double") / col("n_total").cast("double")), 6)
-            .as("rate"))
-        .join(kept, Seq("source"), "left")
-        .select(col("source"), col("n_total"), col("rate"),
-          coalesce(col("n_kept"), lit(0L)).as("n_kept"))
-        .orderBy("source")
-    }),
-
-    // multi-epoch annealed mixture schedule over the skewed lang
-    // grouping (sources are uniform by construction): keep-rates at
-    // α ∈ {1, 1/2, 1/4} — division and sqrt only, IEEE-exact on both
-    // engines (the same pinning argument as q_temperature_mix)
-    "q_mix_schedule" -> ((s, dir) =>
-      graft.ops.ScaleOps.annealedMixSchedule(
-        docs(s, dir).select(col("lang").as("source")), "source")
-        .orderBy("source")),
-
-    // revenue concentration (Pareto report): share of total revenue
-    // held by the top 1% / 10% / 50% of customers — computed via exact
-    // percentile THRESHOLDS + filtered sums, no global ranking window
-    // anywhere (the windowless path to "top-x% share" at corpus scale);
-    // exact decimal sums, one double division per segment
-    "q_pareto" -> ((s, dir) => {
-      val rev = Tables.load(s, dir, "orders").groupBy("o_custkey")
-        .agg(sum(col("o_totalprice").cast("decimal(20,4)")).as("rev_dec"))
-        .withColumn("rev", col("rev_dec").cast("double"))
-      val th = rev.agg(
-        expr("percentile(rev, 0.99)").as("p99"),
-        expr("percentile(rev, 0.90)").as("p90"),
-        expr("percentile(rev, 0.50)").as("p50"),
-        sum("rev_dec").as("total_dec"))
-      rev.crossJoin(broadcast(th))
-        .select(explode(array(
-          struct(lit("top1").as("segment"), (col("rev") >= col("p99")).as("keep")),
-          struct(lit("top10").as("segment"), (col("rev") >= col("p90")).as("keep")),
-          struct(lit("top50").as("segment"), (col("rev") >= col("p50")).as("keep"))))
-          .as("sg"), col("rev_dec"), col("total_dec"))
-        .filter(col("sg.keep"))
-        .groupBy(col("sg.segment").as("segment"))
-        .agg(count(lit(1)).as("n_customers"),
-          round(sum(col("rev_dec")).cast("double") /
-            max(col("total_dec")).cast("double"), 6).as("revenue_share"))
-        .orderBy("segment")
-    }),
-
-    // 20-bucket equi-width histogram of order totals — the value-
-    // distribution profile behind range-partition boundary choices
-    "q_numeric_hist" -> ((s, dir) =>
-      graft.operators.Profiling.numericHistogram(
-        Tables.load(s, dir, "orders"), "o_totalprice", nBuckets = 20)
-        .orderBy("bucket")),
-
-    // one-pass whole-table profile (null rates + KMV distinct
-    // estimates) over the stable-cast orders columns; md5 sketch, so
-    // the estimates replay exactly in the oracle (and ARE exact for
-    // the low-cardinality columns)
-    "q_table_profile" -> ((s, dir) =>
-      graft.operators.Profiling.tableProfile(
-        Tables.load(s, dir, "orders"),
-        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"),
-        k = 64)
-        .orderBy("col_name")),
-
-    // exact join-output cardinality without running the join — the
-    // pre-flight explosion check (here: lineitem's l_partkey self-join,
-    // the co-purchase pair-expansion cost); decimal products so hot
-    // keys can't wrap a Long
-    "q_join_cardinality" -> ((s, dir) => {
-      val li = Tables.load(s, dir, "lineitem")
-      graft.operators.Profiling.joinCardinality(li, "l_partkey", li, "l_partkey")
-    }),
-
-    // HITS hubs/authorities on the directed supplier→part supply graph
-    // (edge list straight from lineitem, no upstream join). L1
-    // normalization per half-step keeps every constant replayable; the
-    // DuckDB twin chains two CTEs per iteration. Ranking on ROUNDED
-    // scores with node tiebreak, per the repo determinism rule.
-    "q_hits" -> ((s, dir) => {
-      // int-pair dedup before the string render; injective prefixes keep
-      // it distinct (dedupEdges=false contract)
-      val edges = Tables.load(s, dir, "lineitem")
-        .select(col("l_suppkey"), col("l_partkey")).distinct()
-        .select(concat(lit("s"), col("l_suppkey")).as("src"),
-          concat(lit("p"), col("l_partkey")).as("dst"))
-      Graph.hits(edges, "src", "dst", iterations = 2, dedupEdges = false)
-        .orderBy(col("auth").desc, col("hub").desc, col("node").asc)
-        .limit(20)
-    }),
-
-    // Deterministic synchronous label propagation on the undirected
-    // supplier↔part graph: communities emerge as shared min-ish labels;
-    // output is the community-size histogram (top 20)
-    "q_label_prop" -> ((s, dir) => {
-      val edges = Tables.load(s, dir, "lineitem")
-        .select(col("l_suppkey"), col("l_partkey")).distinct()
-        .select(concat(lit("s"), col("l_suppkey")).as("src"),
-          concat(lit("p"), col("l_partkey")).as("dst"))
-      Graph.labelPropagation(edges, "src", "dst", iterations = 2,
-        dedupEdges = false)
-        .groupBy("label").agg(count(lit(1)).as("n_members"))
-        .orderBy(col("n_members").desc, col("label").asc)
-        .limit(20)
-    }),
-
-    // hard-negative mining: per probe item, the 5 most-similar items of a
-    // DIFFERENT label — contrastive-training negatives, exact brute pass
-    // over the bounded probe set (scale path: lshTopK + label filter)
-    "q_hard_negatives" -> ((s, dir) => {
-      val e = emb(s, dir)
-      Similarity.hardNegatives(e.filter(col("vec_id") < 16), e,
-        "vec_id", "embedding", "label", k = 5)
-        .select("query_id", "rank", "neighbor_id", "cos")
-        .orderBy("query_id", "rank")
-    }),
-
-    // edit-distance self-join (entity resolution): all distinct part-name
-    // pairs within 2 edits, via deletion-neighborhood blocking (complete
-    // candidate generation, no all-pairs scan) + threshold levenshtein
-    "q_fuzzy_join" -> ((s, dir) => {
-      val names = Tables.load(s, dir, "part").select(col("p_name")).distinct()
-      graft.operators.FuzzyJoin.selfJoin(names, "p_name", "p_name", tau = 2)
-        .select(col("a_id").as("a_name"), col("b_id").as("b_name"), col("dist"))
-        .orderBy("a_name", "b_name")
-    }),
-
-    // Jaro–Winkler name-similarity self-join (entity resolution's other
-    // classic measure, complementing q_fuzzy_join's edit distance): the
-    // native expression stays inside codegen; blocking is the compound
-    // (2-char prefix × length band) key — a 1-char key's buckets grow
-    // linearly with the corpus and its within-bucket pairs
-    // quadratically, the textbook weak blocking key (see
-    // FuzzyJoin.jaroCandidates and FuzzyJoinSpec's candidate-count
-    // pin). The oracle replays the exact same blocking + algorithm;
-    // round(·,6) washes last-ulp double drift; the ≥ threshold compares
-    // the ROUNDED score in both engines so boundary rows can't flicker.
-    "q_jaro_pairs" -> ((s, dir) => {
-      val names = Tables.load(s, dir, "part").select(col("p_name")).distinct()
-      graft.operators.FuzzyJoin.jaroSelfJoin(names, "p_name", minSim = 0.5)
-        .orderBy("name1", "name2")
-    }),
-
-    // SemDeDup (cluster-then-dedup semantic dedup): k-means cells, then
-    // keep-min-id within each cell at cosine >= 0.4. k-means isn't
-    // SQL-replayable -> rows-only here; the cell-local rule is pinned
-    // exactly by SimilaritySpec's independent replay
-    // SemDeDup in EXACT mode (nCells = 1): the per-cell pairwise pass
-    // degenerates to the full all-pairs comparison, so the keep-min-id
-    // survivor rule is provably independent of the k-means seeding and
-    // the row is oracle-COMPARED (the same full-probe ≡ exact
-    // conversion as the ANN rows; multi-cell recall stays pinned by
-    // RecallSpec).
-    "q_semdedup" -> ((s, dir) =>
-      Similarity.semDedup(emb(s, dir), "vec_id", "embedding",
-        threshold = 0.4, nCells = 1)
-        .orderBy("id")),
-
-    // dirty-record -> clean-catalog fuzzy match (two-sided variant): a
-    // deterministically corrupted copy of the name table matched back at
-    // tau=2; oracle is the brute-force levenshtein join
-    "q_fuzzy_match" -> ((s, dir) => {
-      val clean = Tables.load(s, dir, "part").select(col("p_name")).distinct()
-      val dirty = clean.select(translate(col("p_name"), "e", "3").as("dirty_name"))
-        .distinct()
-      graft.operators.FuzzyJoin.join(
-        dirty, "dirty_name", "dirty_name", clean, "p_name", "p_name", tau = 2)
-        .select(col("left_id").as("dirty_name"), col("right_id").as("clean_name"),
-          col("dist"))
-        .orderBy("dirty_name", "clean_name")
-    }),
-
-    // deterministic epoch shuffle: each doc's position in two different
-    // epoch permutations (pure function of (epoch, id) -> md5 order,
-    // reproducible across engines); ranked with the WINDOWLESS two-phase
-    // epochPositions (round 4 ranked through an unpartitioned window —
-    // a single-executor funnel this suite no longer contains anywhere);
-    // oracle replays the same ranking as a plain global row_number
-    "q_epoch_shuffle" -> ((s, dir) => {
-      val base = docs(s, dir).select("doc_id")
-      // INT cast at the query layer to mirror the oracle's CAST(... AS
-      // INT); the operator itself emits LONG positions
-      def pos(epoch: Int, name: String) =
-        graft.ops.ScaleOps.epochPositions(base, "doc_id", epoch)
-          .select(col("doc_id"), col("pos").cast("int").as(name))
-      pos(1, "pos_e1").join(pos(2, "pos_e2"), "doc_id").orderBy("doc_id")
-    }),
-
-    // the FULL-corpus epoch ranking, scale-safely: two-phase distributed
-    // ranking (md5-prefix bucket -> partitioned window, plus a <=256-row
-    // offset table) — identical output to a global row_number with no
-    // global window anywhere in the plan
-    "q_epoch_positions" -> ((s, dir) =>
-      graft.ops.ScaleOps.epochPositions(
-        docs(s, dir).select("doc_id"), "doc_id", epoch = 1)
-        .select(col("doc_id"), col("pos").cast("int").as("pos"))
-        .orderBy("doc_id")),
-
-    // REAL media decode (not the stub): per order key, a deterministic
-    // 1x1 P6 PPM is byte-built and decoded by the pure-JVM codec; the
-    // oracle replays the ITU-R 601 luma arithmetic directly
-    "q_media_decode" -> ((s, dir) => {
-      import s.implicits._
-      val rows = Tables.load(s, dir, "orders").select("o_orderkey")
-        .filter(col("o_orderkey") < 1000).as[Long].map { k =>
-          val (r, g, b) = ((k % 256).toInt, ((k / 3) % 256).toInt, ((k / 7) % 256).toInt)
-          graft.operators.Multimodal.MediaRow(k, "image",
-            "P6\n1 1\n255\n".getBytes("US-ASCII") ++
-              Array(r.toByte, g.toByte, b.toByte))
-        }
-      graft.operators.Multimodal.decodeReal(rows).toDF()
-        .select(col("media_id").as("o_orderkey"), col("decoded"),
-          round(col("mean_level"), 4).as("luma"))
-        .orderBy("o_orderkey")
-    }),
-
-    // REAL pixel resample: per order key a 2x2 P6 with four DISTINCT
-    // pixels is built, nearest-neighbor-resized to 1x1 (which must pick
-    // the top-left source pixel: src = floor(dst*2/1) = 0), and the
-    // resized PPM re-decoded — the oracle replays the top-left pixel's
-    // luma, so selecting any other pixel (or emitting a malformed PPM)
-    // fails the hash
-    "q_media_resize" -> ((s, dir) => {
-      import s.implicits._
-      val rows = Tables.load(s, dir, "orders").select("o_orderkey")
-        .filter(col("o_orderkey") < 1000).as[Long].map { k =>
-          def px(i: Int) = Array((((k + i) % 256).toInt).toByte,
-            (((k / 3 + i) % 256).toInt).toByte,
-            (((k / 7 + i) % 256).toInt).toByte)
-          graft.operators.Multimodal.MediaRow(k, "image",
-            "P6\n2 2\n255\n".getBytes("US-ASCII") ++
-              px(0) ++ px(1) ++ px(2) ++ px(3))
-        }
-      val resized = graft.operators.Multimodal.resizeReal(rows, 1, 1)
-        .map(r => graft.operators.Multimodal.MediaRow(r.media_id, "image",
-          r.payload))
-      graft.operators.Multimodal.decodeReal(resized).toDF()
-        .select(col("media_id").as("o_orderkey"), col("width"), col("height"),
-          round(col("mean_level"), 4).as("luma"))
-        .orderBy("o_orderkey")
-    }),
-
-    // REAL compressed-image decode via pure-JDK javax.imageio: per order
-    // key a deterministic 2x2 raster is encoded by the JDK's own writer
-    // — PNG for even keys, JPEG for odd — then decoded back through
-    // Codecs.decodeImage. PNG is lossless, so its ITU-R 601 mean luma
-    // replays as exact arithmetic on the key in DuckDB (same sequential
-    // row-major accumulation both sides); JPEG is DCT-lossy
-    // (deterministic per JDK but not arithmetic-replayable), so the
-    // oracle pins its format/dims/channels and leaves luma NULL
-    "q_image_decode" -> ((s, dir) => {
-      import s.implicits._
-      val rows = Tables.load(s, dir, "orders").select("o_orderkey")
-        .filter(col("o_orderkey") < 600).as[Long].map { k =>
-          val fmt = if (k % 2 == 0) "png" else "jpeg"
-          val payload = graft.operators.Codecs.encodeImage(fmt, 2, 2, (x, y) => {
-            val i = y * 2 + x
-            val r = ((k + i) % 256).toInt
-            val g = ((k / 3 + i) % 256).toInt
-            val b = ((k / 7 + i) % 256).toInt
-            (r << 16) | (g << 8) | b
-          })
-          graft.operators.Multimodal.MediaRow(k, "image", payload)
-        }
-      graft.operators.Multimodal.decodeReal(rows).toDF()
-        .select(col("media_id").as("o_orderkey"), col("format"),
-          col("width"), col("height"), col("channels"),
-          when(col("format") === "png", round(col("mean_level"), 4)).as("luma"))
-        .orderBy("o_orderkey")
-    }),
-
-    // REAL compressed-image pixel resample: per key a 2x2 PNG with four
-    // DISTINCT pixels is NN-resized to 1x1 through the full
-    // decode->sample->PNG-re-encode->decode roundtrip; NN must pick the
-    // top-left source pixel (src = floor(dst*2/1) = 0) and PNG
-    // re-encoding is lossless, so the surviving pixel's luma replays as
-    // exact arithmetic on the key — picking any other pixel, resampling
-    // lossily, or emitting a malformed PNG fails the hash
-    "q_image_resize" -> ((s, dir) => {
-      import s.implicits._
-      val rows = Tables.load(s, dir, "orders").select("o_orderkey")
-        .filter(col("o_orderkey") < 600).as[Long].map { k =>
-          val payload = graft.operators.Codecs.encodeImage("png", 2, 2, (x, y) => {
-            val i = y * 2 + x
-            val r = ((k + i) % 256).toInt
-            val g = ((k / 3 + i) % 256).toInt
-            val b = ((k / 7 + i) % 256).toInt
-            (r << 16) | (g << 8) | b
-          })
-          graft.operators.Multimodal.MediaRow(k, "image", payload)
-        }
-      val resized = graft.operators.Multimodal.resizeReal(rows, 1, 1)
-        .map(r => graft.operators.Multimodal.MediaRow(r.media_id, "image",
-          r.payload))
-      graft.operators.Multimodal.decodeReal(resized).toDF()
-        .select(col("media_id").as("o_orderkey"), col("format"),
-          col("width"), col("height"), round(col("mean_level"), 4).as("luma"))
-        .orderBy("o_orderkey")
-    }),
-
-    // REAL audio feature extraction: per key an 8-sample PCM-16 WAV is
-    // byte-built (samples are pure key arithmetic), then RMS / peak /
-    // zero-crossings come from the codec. Every feature is exact across
-    // engines: /32768 and /2^30 are power-of-two scalings, so the
-    // sum-of-squares is a sum of exactly-representable dyadic rationals
-    // (order-independent), and peak/ZCR are integer comparisons
-    "q_audio_features" -> ((s, dir) => {
-      import s.implicits._
-      val rows = Tables.load(s, dir, "orders").select("o_orderkey")
-        .filter(col("o_orderkey") < 600).as[Long].map { k =>
-          val samples = Array.tabulate[Short](8)(i =>
-            (((k * 31 + i * 997) % 65536) - 32768).toShort)
-          graft.operators.Multimodal.MediaRow(k, "audio",
-            graft.operators.Codecs.encodeWav(8000, 1, samples))
-        }
-      graft.operators.Multimodal.audioFeaturesReal(rows).toDF()
-        .select(col("media_id").as("o_orderkey"), col("n_samples"),
-          round(col("rms"), 6).as("rms"),
-          round(col("peak"), 6).as("peak"),
-          col("zero_crossings"))
-        .orderBy("o_orderkey")
-    }),
-
-    // REAL per-channel color means: the same deterministic 2x2 PNG as
-    // q_image_decode, reduced per channel instead of to luma — each mean
-    // replays as integer-sum arithmetic on the key
-    "q_image_channels" -> ((s, dir) => {
-      import s.implicits._
-      val rows = Tables.load(s, dir, "orders").select("o_orderkey")
-        .filter(col("o_orderkey") < 600).as[Long].map { k =>
-          val payload = graft.operators.Codecs.encodeImage("png", 2, 2, (x, y) => {
-            val i = y * 2 + x
-            val r = ((k + i) % 256).toInt
-            val g = ((k / 3 + i) % 256).toInt
-            val b = ((k / 7 + i) % 256).toInt
-            (r << 16) | (g << 8) | b
-          })
-          graft.operators.Multimodal.MediaRow(k, "image", payload)
-        }
-      graft.operators.Multimodal.imageChannelsReal(rows).toDF()
-        .select(col("media_id").as("o_orderkey"),
-          round(col("r_mean"), 4).as("r_mean"),
-          round(col("g_mean"), 4).as("g_mean"),
-          round(col("b_mean"), 4).as("b_mean"))
-        .orderBy("o_orderkey")
-    }),
-
-    // REAL multi-frame video-analogue sampling: per key a 6-frame 2x2
-    // animated GIF (shared gray palette, interlace disabled — the two
-    // conditions under which the JDK GIF roundtrip is pixel-exact),
-    // strided frame decode (stride 2 → frames 0,2,4) with per-frame
-    // mean luma replaying as pure key arithmetic
-    "q_gif_frames" -> ((s, dir) => {
-      import s.implicits._
-      val rows = Tables.load(s, dir, "orders").select("o_orderkey")
-        .filter(col("o_orderkey") < 300).as[Long].map { k =>
-          val payload = graft.operators.Codecs.encodeGifFrames(2, 2, 6,
-            palette = i => i * 0x010101,
-            pixelIdx = (f, x, y) =>
-              ((k * 13 + f * 97 + y * 31 + x * 53) % 256).toInt)
-          graft.operators.Multimodal.MediaRow(k, "video", payload)
-        }
-      graft.operators.Multimodal.sampleFramesReal(rows, stride = 2).toDF()
-        .filter(col("decoded"))
-        .select(col("media_id").as("o_orderkey"),
-          col("frame_idx").cast("long").as("frame_idx"),
-          col("n_frames").cast("long").as("n_frames"),
-          round(col("mean_level"), 4).as("luma"))
-        .orderBy("o_orderkey", "frame_idx")
-    }),
-
-    // MAP-typed column surface: build a status->count map per customer
-    // (map_from_entries over sorted entries), then read it back out with
-    // element_at / map_keys / size — oracle replays map-free
-    "q_map_ops" -> ((s, dir) =>
-      Tables.load(s, dir, "orders")
-        .groupBy("o_custkey", "o_orderstatus").agg(count(lit(1)).as("n"))
-        .groupBy("o_custkey")
-        .agg(map_from_entries(sort_array(collect_list(
-          struct(col("o_orderstatus"), col("n"))))).as("m"))
-        .select(col("o_custkey"),
-          size(col("m")).as("n_statuses"),
-          coalesce(element_at(col("m"), lit("O")), lit(0L)).as("n_open"),
-          array_join(map_keys(col("m")), ",").as("statuses"))
-        .orderBy("o_custkey")),
-
-    // learned-BPE token accounting: train the merge table on a BOUNDED
-    // deterministic sample (64 docs, driver-side — tokenizer practice),
-    // then count subwords across the full corpus with the native encode
-    // expression. The learned merges are dumped as a parquet SIDECAR so
-    // the oracle can replay the greedy rank-ordered encode relationally
-    // (recursive CTE over symbol lists — DuckDB recomputes every
-    // subword count from the same merge table); the TRAINING loop stays
-    // pinned against hand-computed merges in BpeSpec.
-    "q_bpe_tokens" -> ((s, dir) => {
-      val d = docs(s, dir)
-      // Locale.ROOT: the sample's lowercase must be locale-independent
-      // like the encode expression's (UTF8String) and the oracle's
-      // (DuckDB lower()) — a tr_TR default locale would fold I→ı and
-      // train a different merge table than the encode applies
-      val sample = d.filter(col("doc_id") < 64).select("text").collect()
-        .flatMap(_.getString(0).toLowerCase(java.util.Locale.ROOT)
-          .split("\\s+")).filter(_.nonEmpty).toSeq
-      val merges = graft.functions.Bpe.train(sample, numMerges = 100)
-      // oracle sidecar (tiny: <= 100 rows), CONTENT-ADDRESSED: every
-      // scale factor writes one <slug>.parquet into a SHARED dir, each
-      // row stamped with the corpus fingerprint (count, sum(length(
-      // text))) it was trained against. The oracle reads the whole dir
-      // and selects the merge table whose fingerprint matches the
-      // documents under verify — so verifying at ANY sf picks ITS OWN
-      // merge table (the old per-sf path literal could only name one
-      // sf and silently compared others against a foreign table), and
-      // a corpus with no sidecar at all fails loudly ("no bpe sidecar
-      // for this corpus"), never as an inscrutable hash diff. The
-      // fingerprint needs the char sum because the generator keeps the
-      // documents ROW COUNT constant across small sfs (ASCII corpus,
-      // so char-count semantics agree cross-engine).
-      val slug = dir.stripSuffix("/").replaceAll("[^A-Za-z0-9]", "_")
-      val stats = d.agg(count(lit(1)).as("n"),
-        sum(length(col("text"))).as("chars")).head()
-      val (corpusDocs, corpusChars) = (stats.getLong(0), stats.getLong(1))
-      import s.implicits._
-      val stage = s"/tmp/graft_oracle_sidecar/.stage_bpe_$slug"
-      merges.zipWithIndex
-        .map { case ((a, b), i) => (i, a, b, corpusDocs, corpusChars) }
-        .toDF("rank", "l", "r", "corpus_docs", "corpus_chars")
-        .coalesce(1).write.mode("overwrite").parquet(stage)
-      locally {
-        import java.nio.file.{Files, Paths, StandardCopyOption}
-        val part = Files.list(Paths.get(stage)).filter(
-          _.getFileName.toString.endsWith(".parquet")).findFirst.get
-        val dst = Paths.get("/tmp/graft_oracle_sidecar/bpe_merges_all")
-        Files.createDirectories(dst)
-        Files.move(part, dst.resolve(s"$slug.parquet"),
-          StandardCopyOption.REPLACE_EXISTING)
-      }
-      d.select(col("source"),
-          graft.functions.Bpe.bpeEncode(col("text"), merges).as("toks"))
-        .groupBy("source").agg(
-          count(lit(1)).as("n_docs"),
-          sum(size(col("toks"))).as("n_subwords"))
-        .orderBy("source")
-    }),
-
-    // ============== round 8: monitoring / quantization / CEP =============
-
-    // equal-frequency histogram: order-value deciles per priority class
-    // via ntile over a fully-tiebroken partitioned order — usable
-    // range-partition boundaries where equi-width buckets would collapse
-    "q_equidepth_hist" -> ((s, dir) =>
-      graft.operators.Profiling.equiDepthHistogram(
-        Tables.load(s, dir, "orders"),
-        "o_orderpriority", "o_totalprice", "o_orderkey", nBuckets = 10)
-        .orderBy("o_orderpriority", "bucket")),
-
-    // int8 scalar quantization profile: per-vector scale + EXACT integer
-    // code mass + reconstruction error of the round trip — the audit you
-    // run before switching an embedding store to int8
-    "q_int8_quant" -> ((s, dir) => {
-      import graft.functions.VectorFunctions._
-      val e = emb(s, dir)
-      // internal name "sc" ≠ output alias "scale": Spark 4's lateral
-      // column alias resolution would otherwise bind the err
-      // expression's scale reference to the ROUNDED output column
-      val d = e.select(col("vec_id"), toDouble(col("embedding")).as("v"))
-        .withColumn("sc", int8Scale(col("v")))
-        .withColumn("q", int8Codes(col("v")))
-      val err = zip_with(col("v"), col("q"),
-        (x, qi) => x - dequant(qi, col("sc")))
-      d.select(col("vec_id"), round(col("sc"), 6).as("scale"),
-          aggregate(col("q"), lit(0L), (acc, qi) => acc + abs(qi)).as("code_l1"),
-          round(dot(err, err) / size(col("q")), 10).as("mse"))
-        .orderBy("vec_id")
-    }),
-
-    // ANN under fixed-scale int8 quantization of unit vectors: integer
-    // dot-product ranking (4× scan bandwidth cut) — exact arithmetic,
-    // so unlike LSH/IVF this approximate path has a full oracle
-    "q_int8_ann" -> ((s, dir) => {
-      val e = emb(s, dir)
-      Similarity.int8TopK(e.filter(col("vec_id") < 16), e,
-        "vec_id", "embedding", k = 5)
-        .orderBy("query_id", "rank")
-    }),
-
-    // 2-core of the co-purchase graph (support-≥2 pairs): peel degree-<2
-    // vertices for 3 rounds — the dense-cluster filter that bounds the
-    // wedge ops' frontier; fixed rounds keep it oracle-replayable
-    "q_kcore" -> ((s, dir) => {
-      val edges = supportPrunedPairs(copurchaseSets(s, dir), 2)
-        .select(col("u"), col("v"))
-      Graph.kCore(edges, "u", "v", k = 2, rounds = 3)
-        .orderBy("vertex")
-    }),
-
-    // k-anonymity audit over (lang, source) quasi-identifiers: the
-    // privacy screen a training corpus runs before release — groups
-    // smaller than k are re-identification risks
-    "q_k_anonymity" -> ((s, dir) =>
-      docs(s, dir).groupBy("lang", "source")
-        .agg(count(lit(1)).as("n"))
-        .withColumn("violates_k5", col("n") < 5)
-        .orderBy("lang", "source")),
-
-    // Efraimidis–Spirakis weighted k-sample per language, weight =
-    // n_chars (longer docs proportionally likelier) — exact-k weighted
-    // sampling with a fully hash-replayable key
-    "q_weighted_sample" -> ((s, dir) =>
-      graft.ops.ScaleOps.weightedSamplePerGroup(
-        docs(s, dir).select("doc_id", "lang", "n_chars"),
-        Seq("lang"), "doc_id", "n_chars", k = 5, seed = 7L)
-        .select("lang", "sample_rank", "doc_id", "n_chars")
-        .orderBy("lang", "sample_rank")),
-
-    // ——— closed-form statistics / experimentation family ———
-
-    // robust location estimates: 10% two-sided trimmed and winsorized
-    // means of the order totals per priority
-    "q_robust_mean" -> ((s, dir) =>
-      Stats.robustMeans(Tables.load(s, dir, "orders"), "o_orderpriority",
-        "o_totalprice").orderBy("o_orderpriority")),
-
-    // Gini concentration of per-customer revenue within each market
-    // segment — the inequality scalar next to q_pareto's top-share view
-    "q_gini" -> ((s, dir) => {
-      val rev = Tables.load(s, dir, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(sum(col("o_totalprice").cast("decimal(18,2)")).as("revenue"))
-      val cust = Tables.load(s, dir, "customer")
-        .select(col("c_custkey"), col("c_mktsegment"))
-      Stats.giniByGroup(
-        rev.join(cust, rev("o_custkey") === cust("c_custkey"))
-          .select(col("c_mktsegment"), col("o_custkey"), col("revenue")),
-        "c_mktsegment", "o_custkey", "revenue")
-        .orderBy("c_mktsegment")
-    }),
-
-    // design-based causal estimate: 1:1 nearest-neighbor matching on
-    // price within returnflag strata, matched-pairs ATT of quantity
-    "q_nn_match" -> ((s, dir) =>
-      Stats.nnMatchATT(
-        Tables.load(s, dir, "lineitem")
-          .withColumn("li_id", col("l_orderkey") * 10 + col("l_linenumber")),
-        "li_id", Seq("l_returnflag"), "l_extendedprice", "l_quantity",
-        treated = col("l_orderkey") % 2 === 0)
-        .orderBy("l_returnflag")),
-
-    // per-returnflag OLS of extendedprice on quantity (+ r²): the
-    // normal equations over ONE pass of exact decimal moments
-    "q_ols" -> ((s, dir) =>
-      Stats.olsByGroup(Tables.load(s, dir, "lineitem"),
-        "l_returnflag", "l_quantity", "l_extendedprice")
-        .orderBy("l_returnflag")),
-
-    // full Pearson pair matrix over the four lineitem measures in ONE
-    // aggregate pass (6 pair rows unfold from the single moment row)
-    "q_corr_matrix" -> ((s, dir) =>
-      Stats.pearsonPairs(Tables.load(s, dir, "lineitem"),
-        Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))
-        .orderBy("x_col", "y_col")),
-
-    // Benford first-digit screen on order totals (digit extraction via
-    // exact decimal render, not log10; expected masses fixed literals)
-    "q_benford" -> ((s, dir) =>
-      Stats.benford(Tables.load(s, dir, "orders"), "o_totalprice")
-        .orderBy("digit")),
-
-    // 2-D skyline (Pareto frontier): parts no other part beats on both
-    // size and price; staircase from a 50-row per-size aggregate, no
-    // all-pairs dominance join
-    "q_skyline" -> ((s, dir) =>
-      Stats.skyline2d(
-        Tables.load(s, dir, "part").select("p_partkey", "p_size", "p_retailprice"),
-        "p_size", "p_retailprice")
-        .select(col("p_partkey"), col("p_size"),
-          round(col("p_retailprice"), 2).as("p_retailprice"))
-        .orderBy("p_size", "p_partkey")),
-
-    // Neyman-optimal allocation of a 1000-row sample budget across
-    // market segments (n_h ∝ N_h·σ_h from one exact-moment aggregate) —
-    // the profiling step before hashStratifiedSample draws
-    "q_neyman" -> ((s, dir) =>
-      Stats.neymanAllocation(Tables.load(s, dir, "customer"),
-        "c_mktsegment", "c_acctbal", totalN = 1000)
-        .orderBy("c_mktsegment")),
-
-    // perceptual-hash image near-dup: 4x4 PNGs built from key
-    // arithmetic (1-in-5 keys a one-unit perturbation of the previous
-    // key's raster), decoded by the REAL ImageIO codec, aHash'd in
-    // exact integer space (bit i: 16·s_i > Σs), paired by the banded
-    // Hamming join — bands=4 > maxHamming=3, so pigeonhole makes the
-    // candidate set EXACTLY the true pair set and the brute-force
-    // DuckDB replay is a full oracle, not a recall bound
-    "q_phash_pairs" -> ((s, dir) => {
-      import s.implicits._
-      val rows = Tables.load(s, dir, "orders").select("o_orderkey")
-        .filter(col("o_orderkey") < 600).as[Long].map { k =>
-          val base = if (k % 5 == 4) k - 1 else k
-          val delta = if (k % 5 == 4) 1 else 0
-          // multiplicative mixing so hashes spread (a linear gradient
-          // gives every image the same above-average bit pattern and
-          // the pair set degenerates to all-pairs)
-          val payload = graft.operators.Codecs.encodeImage("png", 4, 4, (x, y) => {
-            val i = y * 4 + x
-            val d = if (i == 0) delta else 0
-            val r = ((base * 31 + i * 97 + d) % 256).toInt
-            val g = ((base * 53 + i * 193) % 256).toInt
-            val b = ((base * 71 + i * 41) % 256).toInt
-            (r << 16) | (g << 8) | b
-          })
-          graft.operators.Multimodal.MediaRow(k, "image", payload)
-        }
-      val hashed = graft.operators.Multimodal.perceptualHash(rows, 4, 4)
-        .toDF().filter(col("decoded"))
-      graft.operators.Dedup.hammingPairs(hashed, "media_id", "phash",
-          bits = 16, bands = 4, maxHamming = 3)
-        .select(col("a_id"), col("b_id"), col("hamming").cast("long").as("hamming"))
-        .orderBy("a_id", "b_id")
-    }),
-
-    // same real-raster aHash fixture through the MULTI-INDEX Hamming
-    // join (the >1e8-fingerprint scale path): blocks=4, maxHamming=2 →
-    // C(4,2)=6 tables keyed on concatenated chunk PAIRS — double-width
-    // keys, so ~2^chunk× fewer random candidates than the single-chunk
-    // bands while pigeonhole still guarantees the EXACT pair set; the
-    // brute-force DuckDB replay is again a full oracle
-    "q_phash_multiindex" -> ((s, dir) => {
-      import s.implicits._
-      val rows = Tables.load(s, dir, "orders").select("o_orderkey")
-        .filter(col("o_orderkey") < 600).as[Long].map { k =>
-          val base = if (k % 5 == 4) k - 1 else k
-          val delta = if (k % 5 == 4) 1 else 0
-          val payload = graft.operators.Codecs.encodeImage("png", 4, 4, (x, y) => {
-            val i = y * 4 + x
-            val d = if (i == 0) delta else 0
-            val r = ((base * 31 + i * 97 + d) % 256).toInt
-            val g = ((base * 53 + i * 193) % 256).toInt
-            val b = ((base * 71 + i * 41) % 256).toInt
-            (r << 16) | (g << 8) | b
-          })
-          graft.operators.Multimodal.MediaRow(k, "image", payload)
-        }
-      val hashed = graft.operators.Multimodal.perceptualHash(rows, 4, 4)
-        .toDF().filter(col("decoded"))
-      graft.operators.Dedup.hammingPairsMultiIndex(hashed, "media_id", "phash",
-          bits = 16, blocks = 4, maxHamming = 2)
-        .select(col("a_id"), col("b_id"), col("hamming").cast("long").as("hamming"))
-        .orderBy("a_id", "b_id")
-    }),
-
-    // declarative data-quality gate: completeness / uniqueness / bound /
-    // domain / referential-integrity constraints in one scan of orders
-    "q_dq_suite" -> ((s, dir) =>
-      graft.operators.Profiling.dqSuite(
-        Tables.load(s, dir, "orders"), Tables.load(s, dir, "customer"),
-        keyCol = "o_orderkey", completenessCol = "o_custkey",
-        boundCol = "o_totalprice", lowerBound = 0.0,
-        domainCol = "o_orderstatus", domain = Seq("F", "P", "O"),
-        fkCol = "o_custkey", dimKeyCol = "c_custkey")
-        .orderBy("constraint")),
-
-    // item-item cosine collaborative filtering from co-purchase counts:
-    // sim = sup_ab / √(n_a·n_b) on the SAME shared copurchaseSets
-    // exchange the other basket queries reuse; sqrt is IEEE-exact so
-    // the ranking needs no rounding rescue (rounded anyway for display)
-    "q_item_cf" -> ((s, dir) => {
-      val sets = copurchaseSets(s, dir)
-      val itemN = sets.select(explode(col("ps")).as("item"))
-        .groupBy("item").agg(count(lit(1)).as("n_orders"))
-      supportPrunedPairs(sets, 2)
-        .join(itemN.select(col("item").as("u"), col("n_orders").as("n_u")),
-          Seq("u"))
-        .join(itemN.select(col("item").as("v"), col("n_orders").as("n_v")),
-          Seq("v"))
-        .select(col("u"), col("v"), col("sup_ab"),
-          round(col("sup_ab").cast("double") /
-            sqrt((col("n_u") * col("n_v")).cast("double")), 6).as("cosine"))
-        .orderBy(col("cosine").desc, col("u"), col("v"))
-        .limit(50)
-    }),
-
-    // χ² independence of market segment × order priority over the
-    // customer⋈orders fact — the r×c generalization of q_ab_test's 2×2;
-    // empty cells folded in via Σ_all e = n (no grid materialization)
-    "q_chi2_indep" -> ((s, dir) => {
-      val o = Tables.load(s, dir, "orders")
-        .select(col("o_custkey"), col("o_orderpriority"))
-      val c = Tables.load(s, dir, "customer")
-        .select(col("c_custkey"), col("c_mktsegment"))
-      Stats.chi2Independence(
-        o.join(broadcast(c), o("o_custkey") === c("c_custkey")),
-        "c_mktsegment", "o_orderpriority")
-    }),
-
-    // PSI drift of order totals, early era (< 1998) vs late era — the
-    // model-input stability gate; per-bucket table + exact-decimal total
-    "q_psi" -> ((s, dir) => {
-      val o = Tables.load(s, dir, "orders")
-      Stats.psi(o.filter(col("o_orderdate") < lit("1998-01-01")),
-          o.filter(col("o_orderdate") >= lit("1998-01-01")),
-          "o_totalprice")
-        .orderBy("bucket")
-    }),
-
-    // Fisher-style class-separation profile of the labeled embeddings:
-    // intra = mean distance to the OWN-label centroid, inter = distance
-    // of that centroid to the GLOBAL centroid (between-class scatter) —
-    // deliberately centroid-vs-global rather than centroid-pairs, so
-    // every join is an equi-join on (label, pos)/(pos) and nothing
-    // cross-products, at any number of classes. The embedding-quality
-    // gate before training a classifier head on the corpus.
-    "q_class_separation" -> ((s, dir) => {
-      val d = emb(s, dir)
-        .select(col("vec_id"), col("label"), posexplode(col("embedding")))
-        .select(col("vec_id"), col("label"), col("pos"),
-          col("col").cast("double").as("v"))
-      val cl = d.groupBy("label", "pos").agg(avg("v").as("m"))
-      val cg = d.groupBy("pos").agg(avg("v").as("g"))
-      val dist = d.join(broadcast(cl), Seq("label", "pos"))
-        .withColumn("sq", (col("v") - col("m")) * (col("v") - col("m")))
-        .groupBy("vec_id", "label")
-        .agg(round(sqrt(sum("sq")), 4).cast("decimal(18,4)").as("dist"))
-      val intra = dist.groupBy("label")
-        .agg(count(lit(1)).as("n_vecs"),
-          round(sum("dist").cast("double") / count(lit(1)), 4).as("intra"))
-      val inter = cl.join(broadcast(cg), Seq("pos"))
-        .withColumn("sq", (col("m") - col("g")) * (col("m") - col("g")))
-        .groupBy("label").agg(round(sqrt(sum("sq")), 4).as("inter"))
-      intra.join(inter, Seq("label"))
-        .withColumn("separation", round(col("inter") / col("intra"), 4))
-        .orderBy("label")
-    }),
-
-    // effective dimensionality of the embedding space: participation
-    // ratio PR = (Σ var_d)² / Σ var_d² over per-dimension variances —
-    // the eigen-free collapse detector (PR ≈ d for isotropic vectors,
-    // PR ≪ d when the space has collapsed onto a few directions).
-    // One unnest + one per-dim agg + one single-row fold; per-dim
-    // variances rounded at 6 dp before the decimal fold so the final
-    // ratio is order-free on both engines
-    "q_effective_dim" -> ((s, dir) => {
-      val d = emb(s, dir)
-        .select(posexplode(col("embedding")))
-        .select(col("pos"), col("col").cast("double").as("v"))
-      val perDim = d.groupBy("pos")
-        .agg(count(lit(1)).as("n"), avg("v").as("m"),
-          avg(col("v") * col("v")).as("m2"))
-        .select(col("pos"),
-          round(col("m2") - col("m") * col("m"), 6)
-            .cast("decimal(18,6)").as("variance"))
-      perDim.agg(
-        count(lit(1)).as("n_dims"),
-        round(sum("variance").cast("double"), 6).as("total_variance"),
-        round(
-          (sum("variance").cast("double") * sum("variance").cast("double")) /
-            sum((col("variance") * col("variance")).cast("decimal(38,12)"))
-              .cast("double"), 4).as("participation_ratio"))
-    }),
-
-    // per-dimension embedding drift between two corpus eras (vec_id
-    // parity as the deterministic era split): |Δmean| / pooled sd per
-    // dim, top-10 drifted dims — the vector-space PSI analog that
-    // catches an upstream encoder change before it poisons retrieval
-    "q_embed_drift" -> ((s, dir) => {
-      val d = emb(s, dir)
-        .select(pmod(col("vec_id"), lit(2)).as("era"),
-          posexplode(col("embedding")))
-        .select(col("era"), col("pos"), col("col").cast("double").as("v"))
-      val stats = d.groupBy("pos")
-        .agg(
-          avg(when(col("era") === 0, col("v"))).as("m0"),
-          avg(when(col("era") === 1, col("v"))).as("m1"),
-          avg(col("v") * col("v")).as("m2"),
-          avg("v").as("m"))
-      stats
-        .withColumn("pooled_sd", sqrt(col("m2") - col("m") * col("m")))
-        .withColumn("drift_z",
-          round(abs(col("m1") - col("m0")) / col("pooled_sd"), 4))
-        .select(col("pos"), round(col("m0"), 4).as("mean_a"),
-          round(col("m1"), 4).as("mean_b"), col("drift_z"))
-        .orderBy(col("drift_z").desc, col("pos"))
-        .limit(10)
-    }),
-
-    // median with a resampling CI — 20 DETERMINISTIC half-samples by
-    // the md5 parity of (replicate, custkey), each half's exact median
-    // in one pass of conditional percentiles, spread reported as the
-    // half-sample standard error (rounded medians → exact moments)
-    "q_median_ci" -> ((s, dir) => {
-      val rev = Tables.load(s, dir, "orders")
-        .groupBy("o_custkey")
-        .agg(sum(col("o_totalprice").cast("decimal(18,2)"))
-          .cast("double").as("rev"))
-      // 4-dp round: midpoints of 2-dp values are exact at 3 dp, so no
-      // boundary digit exists and interpolation ulp cannot flip it
-      val halves = (0 until 20).map { b =>
-        round(expr(
-          s"""percentile(case when
-              conv(substring(md5(concat('$b|', cast(o_custkey as string))), 1, 15), 16, 10) % 2 = 0
-              then rev end, 0.5)"""), 4).cast("decimal(18,4)").as(s"m$b")
-      }
-      val aggCols = round(expr("percentile(rev, 0.5)"), 2).as("median") +:
-        halves
-      val ms = rev.agg(aggCols.head, aggCols.tail: _*)
-      val cols = (0 until 20).map(b => col(s"m$b"))
-      val k = lit(20.0)
-      val mean = cols.reduce(_ + _).cast("double") / k
-      // squares in DOUBLE over a fixed left-associated single-row
-      // chain — deterministic on both engines (and DuckDB's int64
-      // decimal(18) multiply would overflow on million-scale medians)
-      val sumsq = cols.map(c => c.cast("double") * c.cast("double"))
-        .reduce(_ + _)
-      ms.select(col("median"),
-        round(mean, 2).as("half_sample_mean"),
-        round(sqrt(sumsq / k - mean * mean), 4).as("half_sample_se"))
-    }),
-
-    // cross-sell sequences at the ITEM level: customer bought part X
-    // in an earlier order, then part Y in a LATER order — the retail
-    // twin of q_seq_patterns, bounded to the top-20 parts by order
-    // count (the fixed-vocabulary discipline that keeps the per-
-    // customer pair profile ≤ 20 rows at any scale); first-purchase
-    // profile join, X.first < Y.first, support = customers
-    "q_cross_sell" -> ((s, dir) => {
-      val li = Tables.load(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_partkey"))
-      val o = Tables.load(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"))
-      val topParts = li.select(col("l_orderkey"), col("l_partkey"))
-        .distinct()
-        .groupBy("l_partkey").agg(count(lit(1)).as("n_orders"))
-        .orderBy(col("n_orders").desc, col("l_partkey")).limit(20)
-        .select("l_partkey")
-      val firstBuy = li
-        .join(broadcast(topParts), Seq("l_partkey"), "left_semi")
-        .join(o, col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_custkey").as("cust"), col("l_partkey").as("part"))
-        .agg(min("o_orderdate").as("first_dt"))
-      val a = firstBuy.select(col("cust"), col("part").as("x"),
-        col("first_dt").as("xd"))
-      val b = firstBuy.select(col("cust"), col("part").as("y"),
-        col("first_dt").as("yd"))
-      a.join(b, Seq("cust")).filter(col("xd") < col("yd"))
-        .groupBy("x", "y").agg(count(lit(1)).as("support"))
-        .orderBy(col("support").desc, col("x"), col("y"))
-        .limit(30)
-    }),
-
-    // log-log price elasticity per return flag: OLS of ln(quantity) on
-    // ln(unit price) — the econometrics readout on the star schema;
-    // 6-dp lns into exact decimal moments (the zipf/heaps discipline)
-    "q_price_elasticity" -> ((s, dir) => {
-      val li = Tables.load(s, dir, "lineitem")
-        .filter(col("l_quantity") > 0 && col("l_extendedprice") > 0)
-      val x = round(log(round(col("l_extendedprice").cast("double") /
-          col("l_quantity").cast("double"), 2)), 6).cast("decimal(18,6)")
-      val y = round(log(col("l_quantity").cast("double")), 6)
-        .cast("decimal(18,6)")
-      val m = li.groupBy("l_returnflag").agg(count(lit(1)).as("n"),
-        sum(x).as("sx"), sum(y).as("sy"),
-        sum((x * x).cast("decimal(38,12)")).as("sxx"),
-        sum((y * y).cast("decimal(38,12)")).as("syy"),
-        sum((x * y).cast("decimal(38,12)")).as("sxy"))
-      val n = col("n").cast("double")
-      val sx = col("sx").cast("double")
-      val sy = col("sy").cast("double")
-      val cov = n * col("sxy").cast("double") - sx * sy
-      val vx = n * col("sxx").cast("double") - sx * sx
-      val vy = n * col("syy").cast("double") - sy * sy
-      m.select(col("l_returnflag"), col("n"),
-        round(cov / vx, 4).as("elasticity"),
-        round(cov * cov / (vx * vy), 4).as("r2"))
-        .orderBy("l_returnflag")
-    }),
-
-    // RFM customer scoring WITHOUT a global ranking window: quintile
-    // cutoffs come from one exact-percentile aggregate broadcast back,
-    // each score = 1 + Σ(x > cutoff) — the q_pareto threshold
-    // discipline applied to the classic segmentation report
-    "q_rfm" -> ((s, dir) => {
-      val o = Tables.load(s, dir, "orders")
-      val today = o.agg(to_date(max("o_orderdate")).as("today"))
-      val rfm = o.crossJoin(broadcast(today))
-        .groupBy("o_custkey")
-        .agg(min(datediff(col("today"), to_date(col("o_orderdate"))))
-          .as("recency"),
-          count(lit(1)).as("frequency"),
-          sum(col("o_totalprice").cast("decimal(18,2)")).as("monetary"))
-      def cuts(c: String) = Seq(0.2, 0.4, 0.6, 0.8).map(p =>
-        expr(s"percentile(cast($c as double), $p)").as(s"${c}_q${(p * 100).toInt}"))
-      val th = rfm.agg((cuts("recency") ++ cuts("frequency") ++
-        cuts("monetary")).head,
-        (cuts("recency") ++ cuts("frequency") ++ cuts("monetary")).tail: _*)
-      def score(c: String, reversed: Boolean) = {
-        val s0 = Seq(20, 40, 60, 80).map(q =>
-          when(col(c).cast("double") > col(s"${c}_q$q"), 1).otherwise(0))
-          .reduce(_ + _) + 1
-        if (reversed) lit(6) - s0 else s0 // low recency = good
-      }
-      rfm.crossJoin(broadcast(th))
-        .filter(col("o_custkey") % 50 === 0) // bounded output slice
-        .select(col("o_custkey"), col("recency"), col("frequency"),
-          round(col("monetary").cast("double"), 2).as("monetary"),
-          score("recency", reversed = true).as("r_score"),
-          score("frequency", reversed = false).as("f_score"),
-          score("monetary", reversed = false).as("m_score"))
-        .orderBy("o_custkey")
-    }),
-
-    // cohort LTV curve: cumulative revenue per customer by order-age
-    // year within each first-order-year cohort — the growth-finance
-    // payback view; exact decimal sums, cohort-partitioned prefix
-    "q_ltv_curve" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val o = Tables.load(s, dir, "orders")
-        .select(col("o_custkey"), year(col("o_orderdate")).as("yr"),
-          col("o_totalprice").cast("decimal(18,2)").as("rev"))
-      val cohort = o.groupBy("o_custkey").agg(min("yr").as("cohort"))
-      val byAge = o.join(cohort, Seq("o_custkey"))
-        .groupBy(col("cohort"), (col("yr") - col("cohort")).as("age"))
-        .agg(sum("rev").as("arev"))
-      val size = cohort.groupBy("cohort").agg(count(lit(1)).as("n_customers"))
-      val w = Window.partitionBy("cohort").orderBy("age")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      byAge
-        .withColumn("cum_rev", sum("arev").over(w))
-        .join(broadcast(size), Seq("cohort"))
-        .select(col("cohort"), col("age"), col("n_customers"),
-          round(col("cum_rev").cast("double") / col("n_customers"), 2)
-            .as("cum_ltv_per_customer"))
-        .orderBy("cohort", "age")
-    }),
-
-    // share-of-parent rollup: nation revenue as a share of its region,
-    // region as a share of the total — the hierarchical BI report;
-    // exact decimal sums at every level, shares as rounded doubles
-    "q_share_of_parent" -> ((s, dir) => {
-      val o = Tables.load(s, dir, "orders")
-        .select(col("o_custkey"),
-          col("o_totalprice").cast("decimal(18,2)").as("rev"))
-      val c = Tables.load(s, dir, "customer")
-        .select(col("c_custkey"), col("c_nationkey"))
-      val nat = Tables.load(s, dir, "nation")
-        .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
-      val reg = Tables.load(s, dir, "region")
-        .select(col("r_regionkey"), col("r_name"))
-      val byNation = o.join(broadcast(c), o("o_custkey") === c("c_custkey"))
-        .join(broadcast(nat), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(reg), col("n_regionkey") === col("r_regionkey"))
-        .groupBy("r_name", "n_name").agg(sum("rev").as("nrev"))
-      val byRegion = byNation.groupBy("r_name")
-        .agg(sum("nrev").as("rrev"))
-      val total = byRegion.agg(sum("rrev").as("trev"))
-      byNation.join(broadcast(byRegion), Seq("r_name"))
-        .crossJoin(broadcast(total))
-        .select(col("r_name"), col("n_name"),
-          round(col("nrev").cast("double"), 2).as("revenue"),
-          round(col("nrev").cast("double") / col("rrev").cast("double"), 6)
-            .as("share_of_region"),
-          round(col("rrev").cast("double") / col("trev").cast("double"), 6)
-            .as("region_share_of_total"))
-        .orderBy("r_name", "n_name")
-    }),
-
-    // Newman modularity of the label-propagation communities on the
-    // supplier–part graph: Q = Σ_c (e_c/m − (d_c/2m)²) — the "are these
-    // communities real" quality score on top of q_label_prop, computed
-    // from three equi-join aggregates (within-community edges, degree
-    // sums, |E|); per-community terms rounded then decimal-summed
-    "q_modularity" -> ((s, dir) => {
-      val e0 = Tables.load(s, dir, "lineitem")
-        .select(col("l_suppkey"), col("l_partkey")).distinct()
-        .select(concat(lit("s"), col("l_suppkey")).as("src"),
-          concat(lit("p"), col("l_partkey")).as("dst"))
-      val labels = Graph.labelPropagation(e0, "src", "dst",
-        iterations = 2, dedupEdges = false)
-      val m = e0.agg(count(lit(1)).as("m_edges"))
-      val ec = e0
-        .join(labels.select(col("node").as("src"), col("label").as("ls")),
-          Seq("src"))
-        .join(labels.select(col("node").as("dst"), col("label").as("ld")),
-          Seq("dst"))
-        .filter(col("ls") === col("ld"))
-        .groupBy(col("ls").as("label")).agg(count(lit(1)).as("e_in"))
-      val deg = e0.select(col("src").as("node"))
-        .unionByName(e0.select(col("dst").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("d"))
-      val dc = labels.join(deg, Seq("node"))
-        .groupBy("label")
-        .agg(sum("d").as("d_sum"), count(lit(1)).as("n_members"))
-      val halfD = col("d_sum").cast("double") / (lit(2) * col("m_edges"))
-      val terms = dc.join(ec, Seq("label"), "left")
-        .withColumn("e_in", coalesce(col("e_in"), lit(0L)))
-        .crossJoin(broadcast(m))
-        .withColumn("q_term", round(
-          col("e_in").cast("double") / col("m_edges") - halfD * halfD, 6))
-      val q = terms.agg(
-        round(sum(col("q_term").cast("decimal(18,6)")).cast("double"), 6)
-          .as("modularity"))
-      terms.crossJoin(broadcast(q))
-        .select(col("label"), col("n_members"), col("e_in"), col("d_sum"),
-          col("q_term"), col("modularity"))
-        .orderBy(col("n_members").desc, col("label"))
-        .limit(20)
-    }),
-
-    // ——— ML feature-engineering family ———
-
-    // leave-one-out target encoding of market segment by order total —
-    // the leakage-safe categorical encoder: each row's code excludes
-    // its own target, (Σ_seg − x)/(n_seg − 1), all in exact decimal
-    "q_target_encoding" -> ((s, dir) => {
-      val o = Tables.load(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"),
-          col("o_totalprice").cast("decimal(18,2)").as("y"))
-      val c = Tables.load(s, dir, "customer")
-        .select(col("c_custkey"), col("c_mktsegment"))
-      val joined = o.join(broadcast(c), o("o_custkey") === c("c_custkey"))
-      val seg = joined.groupBy("c_mktsegment")
-        .agg(sum("y").as("sy"), count(lit(1)).as("ny"))
-      joined.join(broadcast(seg), Seq("c_mktsegment"))
-        .filter(col("o_orderkey") % 100 === 0) // bounded output slice
-        .select(col("o_orderkey"), col("c_mktsegment"),
-          round(col("y").cast("double"), 2).as("y"),
-          // divide in DOUBLE: decimal division scale/rounding rules are
-          // engine-specific, double division is IEEE on both
-          round((col("sy").cast("double") - col("y").cast("double")) /
-            (col("ny") - 1), 4).as("loo_encoding"))
-        .orderBy("o_orderkey")
-    }),
-
-    // Laplace-mechanism noisy counts over (lang, source) — the DP
-    // release plumbing next to q_k_anonymity (hash-seeded u-draws make
-    // the mechanism gate-replayable; production swaps in a CSPRNG)
-    "q_dp_counts" -> ((s, dir) =>
-      Stats.dpNoisyCounts(docs(s, dir), Seq("lang", "source"),
-        epsilon = 1.0)
-        .orderBy("lang", "source")),
-
-    // degree assortativity of the supplier–part graph: Pearson
-    // correlation of endpoint degrees over the symmetrized edge list
-    // (negative = hubs attach to leaves, the usual bipartite signature)
-    // — exact decimal moments of integer degrees, one edges⋈degrees
-    // equi-join per side
-    "q_assortativity" -> ((s, dir) => {
-      val e0 = Tables.load(s, dir, "lineitem")
-        .select(col("l_suppkey"), col("l_partkey")).distinct()
-        .select(concat(lit("s"), col("l_suppkey")).as("src"),
-          concat(lit("p"), col("l_partkey")).as("dst"))
-      val sym = e0.unionByName(
-        e0.select(col("dst").as("src"), col("src").as("dst")))
-      val deg = sym.groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("d"))
-      val pairs = sym
-        .join(deg.select(col("node").as("src"), col("d").as("dx")),
-          Seq("src"))
-        .join(deg.select(col("node").as("dst"), col("d").as("dy")),
-          Seq("dst"))
-        .select(col("dx").cast("decimal(18,0)").as("x"),
-          col("dy").cast("decimal(18,0)").as("y"))
-      val m = pairs.agg(count(lit(1)).as("n"),
-        sum("x").as("sx"), sum("y").as("sy"),
-        sum((col("x") * col("x")).cast("decimal(38,0)")).as("sxx"),
-        sum((col("y") * col("y")).cast("decimal(38,0)")).as("syy"),
-        sum((col("x") * col("y")).cast("decimal(38,0)")).as("sxy"))
-      val n = col("n").cast("double")
-      val sx = col("sx").cast("double")
-      val sy = col("sy").cast("double")
-      val cov = n * col("sxy").cast("double") - sx * sy
-      val vx = n * col("sxx").cast("double") - sx * sx
-      val vy = n * col("syy").cast("double") - sy * sy
-      m.select(col("n").as("n_directed_edges"),
-        round(cov / sqrt(vx * vy), 6).as("assortativity"))
-    }),
-
-    // feature scaling (min-max + z-score) per group from ONE stats pass
-    // attached by broadcast — the ML-preprocessing primitive; mean/sd
-    // from exact decimal Σx/Σx², output bounded to a keyed slice
-    "q_feature_scaling" -> ((s, dir) => {
-      val li = Tables.load(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
-          col("l_extendedprice").cast("decimal(18,2)").as("x"))
-      val stats = li.groupBy("l_returnflag").agg(
-        min(col("x").cast("double")).as("mn"),
-        max(col("x").cast("double")).as("mx"),
-        count(lit(1)).as("n"),
-        sum("x").as("sx"),
-        sum((col("x") * col("x")).cast("decimal(38,4)")).as("sxx"))
-      val mean = col("sx").cast("double") / col("n")
-      val variance = col("sxx").cast("double") / col("n") - mean * mean
-      li.join(broadcast(stats), Seq("l_returnflag"))
-        .filter(col("l_orderkey") % 500 === 0) // bounded output slice
-        .select(col("l_returnflag"), col("l_orderkey"), col("l_linenumber"),
-          round(col("x").cast("double"), 2).as("x"),
-          round((col("x").cast("double") - col("mn")) /
-            (col("mx") - col("mn")), 6).as("minmax"),
-          round((col("x").cast("double") - mean) / sqrt(variance), 4)
-            .as("zscore"))
-        // (orderkey, linenumber) is NOT unique in this synthetic data —
-        // total tiebreak through flag and value
-        .orderBy("l_orderkey", "l_linenumber", "l_returnflag", "x")
-    }),
-
-    // weight-of-evidence / information value of market segment vs the
-    // has-urgent-order target — the credit-scoring feature screen;
-    // +0.5 Laplace smoothing, ln rounded at 4 dp, IV terms rounded
-    // then decimal-summed
-    "q_woe_iv" -> ((s, dir) => {
-      val tgt = Tables.load(s, dir, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(max(when(col("o_orderpriority") === "1-URGENT", 1L)
-          .otherwise(0L)).as("y"))
-      val c = Tables.load(s, dir, "customer")
-        .select(col("c_custkey"), col("c_mktsegment"))
-      val bins = c.join(tgt, c("c_custkey") === tgt("o_custkey"))
-        .groupBy("c_mktsegment")
-        .agg(sum("y").as("g"), sum(lit(1L) - col("y")).as("b"))
-      val tot = bins.agg(sum("g").as("gt"), sum("b").as("bt"),
-        count(lit(1)).as("k"))
-      val pg = (col("g").cast("double") + 0.5) /
-        (col("gt") + lit(0.5) * col("k"))
-      val pb = (col("b").cast("double") + 0.5) /
-        (col("bt") + lit(0.5) * col("k"))
-      val woe = round(log(pg / pb), 4)
-      val terms = bins.crossJoin(broadcast(tot))
-        .withColumn("woe", woe)
-        .withColumn("iv_term", round((pg - pb) * col("woe"), 6)
-          .cast("decimal(18,6)"))
-      val iv = terms.agg(
-        round(sum("iv_term").cast("double"), 6).as("iv_total"))
-      terms.crossJoin(broadcast(iv))
-        .select(col("c_mktsegment"), col("g"), col("b"), col("woe"),
-          col("iv_total"))
-        .orderBy("c_mktsegment")
-    }),
-  )
-
-  private[graft] def inlineOracleSql: Map[String, String] = Map(
-    "q_items_pipeline" ->
-      """SELECT l_returnflag, count(*) AS n_items
-         FROM (
-           SELECT * FROM (
-             SELECT *, row_number() OVER (
-               PARTITION BY l_orderkey, l_linenumber
-               ORDER BY l_shipdate DESC NULLS LAST, l_partkey, l_suppkey) AS rn
-             FROM lineitem
-             WHERE l_orderkey IS NOT NULL AND l_partkey IS NOT NULL
-               AND l_shipdate IS NOT NULL) t
-           WHERE rn = 1
-             AND EXISTS (SELECT 1 FROM orders o WHERE o.o_orderkey = t.l_orderkey))
-         GROUP BY l_returnflag ORDER BY l_returnflag""",
-
-    "q_orders_pipeline" ->
-      """SELECT o_orderstatus, count(*) AS n_orders,
-                CAST(SUM(CAST(o_totalprice AS DECIMAL(20,4))) AS DOUBLE) AS sum_total
-         FROM (
-           SELECT * FROM (
-             SELECT *, row_number() OVER (
-               PARTITION BY o_orderkey ORDER BY o_orderdate DESC NULLS LAST) AS rn
-             FROM orders
-             WHERE o_orderkey IS NOT NULL AND o_custkey IS NOT NULL
-               AND o_orderdate IS NOT NULL) t
-           WHERE rn = 1
-             AND EXISTS (SELECT 1 FROM lineitem l WHERE l.l_orderkey = t.o_orderkey))
-         GROUP BY o_orderstatus ORDER BY o_orderstatus""",
-
-    "q_products_pipeline" ->
-      """SELECT p_partkey, p_name, p_brand, p_type, p_size
-         FROM (
-           SELECT * FROM (
-             SELECT *, row_number() OVER (
-               PARTITION BY p_partkey ORDER BY p_name DESC NULLS LAST) AS rn
-             FROM part
-             WHERE p_partkey IS NOT NULL AND p_name IS NOT NULL) t
-           WHERE rn = 1
-             AND EXISTS (SELECT 1 FROM lineitem l WHERE l.l_partkey = t.p_partkey))
-         ORDER BY p_partkey""",
-
-    // CSV round-trip is lossless and the injected malformed rows are all
-    // rejected, so the oracle is the same parquet-side pipeline SQL
-    "q_csv_pipeline" ->
-      """SELECT o_orderstatus, count(*) AS n_orders,
-                CAST(SUM(CAST(o_totalprice AS DECIMAL(20,4))) AS DOUBLE) AS sum_total
-         FROM (
-           SELECT * FROM (
-             SELECT *, row_number() OVER (
-               PARTITION BY o_orderkey ORDER BY o_orderdate DESC NULLS LAST) AS rn
-             FROM orders
-             WHERE o_orderkey IS NOT NULL AND o_custkey IS NOT NULL
-               AND o_orderdate IS NOT NULL) t
-           WHERE rn = 1
-             AND EXISTS (SELECT 1 FROM lineitem l WHERE l.l_orderkey = t.o_orderkey))
-         GROUP BY o_orderstatus ORDER BY o_orderstatus""",
-
-    "q_csv_declared" ->
-      """SELECT o_orderstatus, count(*) AS n_orders,
-                CAST(SUM(CAST(o_totalprice AS DECIMAL(20,4))) AS DOUBLE) AS sum_total
-         FROM (
-           SELECT * FROM (
-             SELECT *, row_number() OVER (
-               PARTITION BY o_orderkey ORDER BY o_orderdate DESC NULLS LAST) AS rn
-             FROM orders
-             WHERE o_orderkey IS NOT NULL AND o_custkey IS NOT NULL
-               AND o_orderdate IS NOT NULL) t
-           WHERE rn = 1
-             AND EXISTS (SELECT 1 FROM lineitem l WHERE l.l_orderkey = t.o_orderkey))
-         GROUP BY o_orderstatus ORDER BY o_orderstatus""",
-
-    "q_window_dedup" ->
-      """SELECT o_custkey, o_orderkey, o_orderstatus FROM (
-           SELECT *, row_number() OVER (
-             PARTITION BY o_custkey
-             ORDER BY o_orderdate DESC NULLS LAST, o_orderkey) AS rn
-           FROM orders) t
-         WHERE rn = 1 ORDER BY o_custkey""",
-
-    "q_semi_join" ->
-      """SELECT p_partkey, p_name FROM part p
-         WHERE EXISTS (SELECT 1 FROM lineitem l WHERE l.l_partkey = p.p_partkey)
-         ORDER BY p_partkey""",
-
-    "q_anti_join" ->
-      """SELECT p_partkey, p_name FROM part p
-         WHERE NOT EXISTS (SELECT 1 FROM lineitem l
-                           WHERE l.l_quantity >= 49 AND l.l_partkey = p.p_partkey)
-         ORDER BY p_partkey""",
-
-    "q_valid_counts" ->
-      """SELECT (o_orderkey IS NOT NULL AND o_custkey IS NOT NULL
-                 AND o_orderdate IS NOT NULL) AS is_valid, count(*) AS n
-         FROM orders GROUP BY 1 ORDER BY is_valid""",
-
-    "q_except" ->
-      """SELECT o_orderkey, o_orderstatus FROM orders
-         EXCEPT
-         SELECT o_orderkey, o_orderstatus FROM orders WHERE o_orderstatus = 'F'
-         ORDER BY o_orderkey""",
-
-    "q_intersect" ->
-      """SELECT o_custkey FROM orders WHERE o_totalprice > 1000
-         INTERSECT
-         SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-         ORDER BY o_custkey""",
-
-    "q_union" ->
-      """SELECT o_orderkey, o_orderstatus FROM orders WHERE o_orderstatus = 'F'
-         UNION ALL
-         SELECT o_orderkey, o_orderstatus FROM orders WHERE o_orderstatus = 'P'
-         ORDER BY o_orderkey""",
-
-    "q_correlated" ->
-      """SELECT o_orderkey, o_custkey FROM orders o
-         WHERE o_totalprice = (SELECT max(i.o_totalprice) FROM orders i
-                               WHERE i.o_custkey = o.o_custkey)
-         ORDER BY o_orderkey""",
-
-    "q_lateral" ->
-      """SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
-         FROM customer c,
-         LATERAL (SELECT o_orderkey, o_totalprice FROM orders o
-                  WHERE o.o_custkey = c.c_custkey
-                  ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
-         WHERE c.c_custkey < 100
-         ORDER BY c_custkey, o_totalprice DESC, o_orderkey""",
-
-    "q_range_frame" ->
-      """SELECT o_orderkey, o_orderstatus, o_totalprice,
-                count(*) OVER (PARTITION BY o_orderstatus ORDER BY o_totalprice
-                               RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                  AS n_leq
-         FROM orders WHERE o_custkey < 30 ORDER BY o_orderkey""",
-
-    "q_sql_limit" ->
-      """SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
-         FROM orders ORDER BY o_orderkey LIMIT 10""",
-
-    "q_sql_join_agg" ->
-      """SELECT n.n_name,
-                ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,
-                COUNT(*) AS n_lines
-         FROM customer c
-         JOIN orders o ON o.o_custkey = c.c_custkey
-         JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-         JOIN nation n ON n.n_nationkey = c.c_nationkey
-         JOIN region r ON r.r_regionkey = n.n_regionkey
-         WHERE r.r_name = 'ASIA'
-         GROUP BY n.n_name ORDER BY n.n_name""",
-
-    "q_local_relation" ->
-      """SELECT prio_rank, count(*) AS n_orders
-         FROM orders
-         JOIN (VALUES ('1-URGENT', 1), ('2-HIGH', 2), ('3-MEDIUM', 3),
-                      ('4-NOT SPECIFIED', 4), ('5-LOW', 5))
-              AS ranks(o_orderpriority, prio_rank) USING (o_orderpriority)
-         GROUP BY prio_rank ORDER BY prio_rank""",
-
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-                CAST(SUM(CAST(l_quantity AS DECIMAL(20,4))) AS DOUBLE) AS sum_qty,
-                CAST(SUM(CAST(l_extendedprice AS DECIMAL(20,4))) AS DOUBLE) AS sum_base_price,
-                ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-                count(*) AS count_order
-         FROM lineitem
-         GROUP BY l_returnflag, l_linestatus
-         ORDER BY l_returnflag, l_linestatus""",
-
-    "q_rollup" ->
-      """SELECT r_name, n_name, count(*) AS n_cust,
-                CAST(SUM(CAST(c_acctbal AS DECIMAL(20,4))) AS DOUBLE) AS sum_bal
-         FROM customer c
-         JOIN nation n ON c.c_nationkey = n.n_nationkey
-         JOIN region r ON n.n_regionkey = r.r_regionkey
-         GROUP BY ROLLUP(r_name, n_name)
-         ORDER BY r_name NULLS FIRST, n_name NULLS FIRST""",
-
-    "q_pivot" ->
-      """SELECT o_orderpriority,
-                count(*) FILTER (WHERE o_orderstatus = 'F') AS "F",
-                count(*) FILTER (WHERE o_orderstatus = 'O') AS "O",
-                count(*) FILTER (WHERE o_orderstatus = 'P') AS "P"
-         FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""",
-
-    "q_count_distinct" ->
-      """SELECT o_orderstatus, count(DISTINCT o_custkey) AS n_cust, count(*) AS n
-         FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""",
-
-    "q_date_agg" ->
-      """SELECT year(o_orderdate) AS yr, month(o_orderdate) AS mo,
-                count(*) AS n,
-                CAST(SUM(CAST(o_totalprice AS DECIMAL(20,4))) AS DOUBLE) AS sum_total
-         FROM orders GROUP BY 1, 2 ORDER BY yr, mo""",
-
-    "q_string_funcs" ->
-      """SELECT source, count(*) AS n,
-                min(upper(substr(text, 1, 12))) AS min_prefix,
-                max(n_chars) AS max_chars
-         FROM documents GROUP BY source ORDER BY source""",
-
-    "q_grouping_sets" ->
-      """SELECT r_name, n_name, count(*) AS n_cust
-         FROM customer c
-         JOIN nation n ON c.c_nationkey = n.n_nationkey
-         JOIN region r ON n.n_regionkey = r.r_regionkey
-         GROUP BY GROUPING SETS ((r_name), (n_name))
-         ORDER BY r_name ASC NULLS FIRST, n_name ASC NULLS FIRST""",
-
-    "q_window_analytics" ->
-      """SELECT o_custkey, o_orderkey,
-                lag(o_orderkey, 1) OVER w AS prev_orderkey,
-                row_number() OVER w AS seq,
-                CAST(SUM(CAST(o_totalprice AS DECIMAL(20,4))) OVER (
-                  PARTITION BY o_custkey
-                  ORDER BY o_orderdate ASC, o_orderkey ASC
-                  ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS running_total
-         FROM orders WHERE o_custkey < 50
-         WINDOW w AS (PARTITION BY o_custkey
-                      ORDER BY o_orderdate ASC, o_orderkey ASC)
-         ORDER BY o_custkey, seq""",
-
-    "q_hof" ->
-      """SELECT vec_id,
-                ROUND(CAST(list_sum(list_transform(embedding::DOUBLE[],
-                      x -> x * x)) AS DOUBLE), 4) AS sum_sq,
-                ROUND(CAST(list_max(list_transform(embedding::DOUBLE[],
-                      x -> abs(x))) AS DOUBLE), 4) AS max_abs,
-                len(list_filter(embedding, x -> x > 0)) AS n_pos
-         FROM embeddings ORDER BY vec_id""",
-
-    "q_rank_funcs" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice,
-                dense_rank() OVER w AS dr,
-                ROUND(percent_rank() OVER w, 6) AS pr,
-                ntile(4) OVER w AS quartile,
-                ROUND(cume_dist() OVER w, 6) AS cd
-         FROM orders WHERE o_custkey < 20
-         WINDOW w AS (PARTITION BY o_custkey
-                      ORDER BY o_totalprice DESC, o_orderkey ASC)
-         ORDER BY o_custkey, o_orderkey""",
-
-    "q_regex_funcs" ->
-      """SELECT doc_id,
-                regexp_extract(text, '([A-Za-z]+)', 1) AS first_word,
-                len(regexp_extract_all(text, '[0-9]+')) AS n_nums,
-                length(regexp_replace(text, '[aeiou]', '', 'g')) AS n_novowel
-         FROM documents ORDER BY doc_id""",
-
-    "q_salted_join" ->
-      """SELECT s_name, count(*) AS n_items,
-                CAST(SUM(CAST(l_quantity AS DECIMAL(20,4))) AS DOUBLE) AS sum_qty
-         FROM lineitem l JOIN supplier s ON l.l_suppkey = s.s_suppkey
-         GROUP BY s_name ORDER BY s_name""",
-
-    "q_bloom_join" ->
-      """SELECT l.l_suppkey AS s_suppkey, count(*) AS n_items,
-                CAST(SUM(CAST(l_quantity AS DECIMAL(20,4))) AS DOUBLE) AS sum_qty
-         FROM lineitem l
-         WHERE EXISTS (SELECT 1 FROM supplier s
-                       WHERE s.s_acctbal > 5000 AND s.s_suppkey = l.l_suppkey)
-         GROUP BY l.l_suppkey ORDER BY s_suppkey""",
-
-    // same lexicographic canonicalization (VARCHAR least/greatest),
-    // support-≥2 edge pruning, wedge join, and EXISTS closure
-    "q_triangles" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-         pr AS (
-           SELECT CAST(a.l_partkey AS VARCHAR) AS u,
-                  CAST(b.l_partkey AS VARCHAR) AS v
-           FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-                              AND a.l_partkey < b.l_partkey
-           GROUP BY u, v HAVING count(*) >= 2),
-         e AS (SELECT DISTINCT LEAST(u, v) AS lo, GREATEST(u, v) AS hi
-               FROM pr WHERE u <> v),
-         w AS (SELECT e1.lo AS x, e1.hi AS y, e2.hi AS z
-               FROM e e1 JOIN e e2 ON e2.lo = e1.hi),
-         t AS (SELECT x, y, z FROM w
-               WHERE EXISTS (SELECT 1 FROM e
-                             WHERE e.lo = w.x AND e.hi = w.z)),
-         vx AS (SELECT unnest([x, y, z]) AS vertex FROM t)
-         SELECT vertex, count(*) AS n_triangles FROM vx
-         GROUP BY vertex
-         ORDER BY n_triangles DESC, vertex ASC LIMIT 50""",
-
-    // same support-≥2 pair CTE as q_triangles; adjacency symmetrized,
-    // 2-hop via one self-join, distinct counts
-    "q_two_hop" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-         pr AS (
-           SELECT CAST(a.l_partkey AS VARCHAR) AS u,
-                  CAST(b.l_partkey AS VARCHAR) AS v
-           FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-                              AND a.l_partkey < b.l_partkey
-           GROUP BY u, v HAVING count(*) >= 2),
-         adj AS (SELECT u AS s, v AS d FROM pr WHERE u <> v
-                 UNION SELECT v, u FROM pr WHERE u <> v),
-         two AS (SELECT a.s AS s, b.d AS d
-                 FROM adj a JOIN adj b ON a.d = b.s
-                 WHERE a.s <> b.d),
-         reach AS (SELECT s, d FROM adj UNION SELECT s, d FROM two),
-         h1 AS (SELECT s, count(*) AS n_1hop FROM adj GROUP BY s),
-         h2 AS (SELECT s, count(*) AS n_2hop FROM reach GROUP BY s)
-         SELECT h1.s AS vertex, h1.n_1hop AS n_1hop, h2.n_2hop AS n_2hop
-         FROM h1 JOIN h2 USING (s)
-         ORDER BY n_2hop DESC, vertex ASC LIMIT 50""",
-
-    // same norm chain as the q_embed_topk oracle (sequential double
-    // accumulation over the DOUBLE[] cast), then the decimal-sum mean
-    "q_embed_norms" ->
-      """WITH n AS (
-           SELECT label,
-                  ROUND(sqrt(list_sum(list_transform(embedding::DOUBLE[],
-                                                     x -> x * x))), 4)
-                    AS norm
-           FROM embeddings)
-         SELECT label, count(*) AS n,
-                ROUND(CAST(SUM(CAST(norm AS DECIMAL(20,4))) AS DOUBLE)
-                      / count(*), 4) AS mean_norm,
-                MIN(norm) AS min_norm, MAX(norm) AS max_norm
-         FROM n GROUP BY label ORDER BY label""",
-
-    // both rule directions from each support-≥2 pair; lift as
-    // (sup_ab/sup_a)·(n/sup_b), same fixed double-op order as the
-    // Spark side — no integer products, overflow-free
-    "q_assoc_rules" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey,
-                            CAST(l_partkey AS VARCHAR) AS p
-                     FROM lineitem),
-         n AS (SELECT count(DISTINCT l_orderkey) AS n_orders FROM li),
-         s AS (SELECT p, count(*) AS sup_single FROM li GROUP BY p),
-         pr AS (
-           SELECT a.p AS u, b.p AS v, count(*) AS sup_ab
-           FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-                              AND a.p < b.p
-           GROUP BY u, v HAVING count(*) >= 2),
-         rules AS (
-           SELECT u AS antecedent, v AS consequent, sup_ab FROM pr
-           UNION ALL
-           SELECT v, u, sup_ab FROM pr)
-         SELECT r.antecedent, r.consequent, r.sup_ab,
-                ROUND(CAST(r.sup_ab AS DOUBLE) / sa.sup_single, 4)
-                  AS confidence,
-                ROUND((CAST(r.sup_ab AS DOUBLE) / sa.sup_single) *
-                      (CAST(n.n_orders AS DOUBLE) / sb.sup_single), 4)
-                  AS lift
-         FROM rules r
-         JOIN s sa ON sa.p = r.antecedent
-         JOIN s sb ON sb.p = r.consequent
-         CROSS JOIN n
-         ORDER BY lift DESC, antecedent ASC, consequent ASC LIMIT 30""",
-
-    "q_trending" ->
-      """WITH a AS (
-           SELECT date_trunc('week', l_shipdate) AS week, l_partkey,
-                  SUM(CAST(l_quantity AS DECIMAL(20,4))) AS qty_dec
-           FROM lineitem GROUP BY week, l_partkey),
-         r AS (SELECT *, row_number() OVER (PARTITION BY week
-                 ORDER BY qty_dec DESC, l_partkey ASC) AS rn FROM a)
-         SELECT week, l_partkey, CAST(qty_dec AS DOUBLE) AS qty, rn
-         FROM r WHERE rn <= 3 ORDER BY week, rn""",
-
-    // two-phase salted agg == plain groupBy for decomposable aggregates
-    "q_salted_agg" ->
-      """SELECT l_returnflag, count(*) AS n_rows,
-                CAST(SUM(CAST(l_extendedprice AS DECIMAL(20,4))) AS DOUBLE)
-                  AS sum_value
-         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-
-    "q_full_outer" ->
-      """WITH o AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  CAST(SUM(CAST(o_totalprice AS DECIMAL(20,4))) AS DOUBLE)
-                    AS order_revenue
-           FROM orders GROUP BY 1),
-         l AS (
-           SELECT CAST(l_shipdate AS DATE) AS day,
-                  CAST(SUM(CAST(l_extendedprice AS DECIMAL(20,4)) *
-                           (1 - CAST(l_discount AS DECIMAL(20,4))))
-                       AS DOUBLE) AS shipped_revenue
-           FROM lineitem GROUP BY 1)
-         SELECT COALESCE(o.day, l.day) AS day,
-                COALESCE(o.order_revenue, 0.0) AS order_revenue,
-                COALESCE(l.shipped_revenue, 0.0) AS shipped_revenue
-         FROM o FULL OUTER JOIN l ON o.day = l.day
-         ORDER BY day""",
-
-    "q_profile" ->
-      """SELECT * FROM (
-           SELECT 'o_orderkey' AS column_name, count(*) AS n_rows,
-                  count(o_orderkey) AS n_nonnull,
-                  count(DISTINCT o_orderkey) AS n_distinct,
-                  CAST(min(o_orderkey) AS VARCHAR) AS min_val,
-                  CAST(max(o_orderkey) AS VARCHAR) AS max_val
-           FROM orders
-           UNION ALL
-           SELECT 'o_custkey', count(*), count(o_custkey),
-                  count(DISTINCT o_custkey),
-                  CAST(min(o_custkey) AS VARCHAR),
-                  CAST(max(o_custkey) AS VARCHAR)
-           FROM orders
-           UNION ALL
-           SELECT 'o_orderstatus', count(*), count(o_orderstatus),
-                  count(DISTINCT o_orderstatus),
-                  CAST(min(o_orderstatus) AS VARCHAR),
-                  CAST(max(o_orderstatus) AS VARCHAR)
-           FROM orders
-           UNION ALL
-           SELECT 'o_orderpriority', count(*), count(o_orderpriority),
-                  count(DISTINCT o_orderpriority),
-                  CAST(min(o_orderpriority) AS VARCHAR),
-                  CAST(max(o_orderpriority) AS VARCHAR)
-           FROM orders)
-         ORDER BY column_name""",
-
-    "q_except_all" ->
-      """SELECT l_orderkey, count(*) AS n FROM (
-           SELECT l_orderkey FROM lineitem
-           EXCEPT ALL
-           SELECT o_orderkey FROM orders WHERE o_orderkey % 2 = 0)
-         GROUP BY l_orderkey ORDER BY l_orderkey""",
-
-    "q_intersect_all" ->
-      """SELECT l_orderkey, count(*) AS n FROM (
-           SELECT l_orderkey FROM lineitem
-           INTERSECT ALL
-           SELECT o_orderkey FROM orders WHERE o_orderkey % 2 = 0)
-         GROUP BY l_orderkey ORDER BY l_orderkey""",
-
-    "q_bucketed_join" ->
-      """SELECT s_name, count(*) AS n_items,
-                CAST(SUM(CAST(l_quantity AS DECIMAL(20,4))) AS DOUBLE) AS sum_qty
-         FROM lineitem l JOIN supplier s ON l.l_suppkey = s.s_suppkey
-         GROUP BY s_name ORDER BY s_name""",
-
-    "q_pii_redact" ->
-      """WITH s AS (
-           SELECT doc_id, text ||
-             CASE WHEN doc_id % 5 = 0
-                  THEN ' contact user' || doc_id || '@example.com for details'
-                  ELSE '' END ||
-             CASE WHEN doc_id % 7 = 0
-                  THEN ' ref 9001234' || doc_id ELSE '' END AS t2
-           FROM documents)
-         SELECT doc_id,
-           CAST(len(regexp_extract_all(t2,
-             '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS INT)
-             AS n_emails,
-           CAST(len(regexp_extract_all(t2, '[0-9]{7,}')) AS INT)
-             AS n_digit_runs,
-           md5(regexp_replace(regexp_replace(t2,
-                 '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
-                 '<EMAIL>', 'g'),
-               '[0-9]{7,}', '<NUM>', 'g')) AS red_md5
-         FROM s ORDER BY doc_id""",
-
-    "q_consistent_sample" ->
-      """SELECT lang, LEAST(count(*), 5) AS n_sampled
-         FROM documents GROUP BY lang ORDER BY lang""",
-
-    "q_embed_neardup" ->
-      """WITH nv AS (
-           SELECT vec_id,
-                  list_transform(embedding::DOUBLE[],
-                    x -> x / sqrt(list_sum(list_transform(embedding::DOUBLE[],
-                                                          y -> y * y)))) AS v
-           FROM embeddings WHERE vec_id < 500)
-         SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-                ROUND(ROUND(list_dot_product(a.v, b.v), 6), 4) AS cos
-         FROM nv a JOIN nv b ON a.vec_id < b.vec_id
-         WHERE ROUND(ROUND(list_dot_product(a.v, b.v), 6), 4) >= 0.4
-         ORDER BY a_id, b_id""",
-
-    // full replay of the deterministic LSH candidate stage (LshBitsDet):
-    // Rademacher sign s(t,j,i) = bit 0 of the first hex digit of
-    // md5('lsh:<1000+t>:<j>:<i>'); signature bit j of table t is the sign
-    // of sum_i s*floor(raw_v_i*1e6) — exact integer arithmetic, so both
-    // engines compute identical buckets; candidates share (table, bucket),
-    // then the proven cosine verify chain (round 6 -> round 4 -> cut 0.4)
-    "q_embed_neardup_lsh" ->
-      """WITH q AS (
-           SELECT vec_id,
-                  [CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000000)
-                        AS BIGINT)
-                   for i in range(1, len(embedding) + 1)] AS qv
-           FROM embeddings),
-         planes AS (
-           SELECT t.t AS t, j.j AS j, i.i AS i,
-                  CASE WHEN ((strpos('0123456789abcdef',
-                               substr(md5('lsh:' || CAST(1000 + t.t AS VARCHAR)
-                                          || ':' || CAST(j.j AS VARCHAR)
-                                          || ':' || CAST(i.i AS VARCHAR)),
-                                      1, 1)) - 1) & 1) = 1
-                       THEN 1 ELSE -1 END AS s
-           FROM range(0, 8) AS t(t), range(0, 6) AS j(j),
-                range(0, 64) AS i(i)),
-         proj AS (
-           SELECT q.vec_id, p.t, p.j,
-                  SUM(p.s * q.qv[CAST(p.i AS INT) + 1]) AS pr
-           FROM q, planes p
-           GROUP BY q.vec_id, p.t, p.j),
-         sig AS (
-           SELECT vec_id, t,
-                  CAST(SUM(CASE WHEN pr >= 0
-                                THEN (1::BIGINT << CAST(j AS INT))
-                                ELSE 0 END) AS BIGINT) AS bucket
-           FROM proj GROUP BY vec_id, t),
-         cand AS (
-           SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
-           FROM sig a JOIN sig b
-             ON a.t = b.t AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
-         nv AS (
-           SELECT vec_id,
-                  list_transform(embedding::DOUBLE[],
-                    x -> x / sqrt(list_sum(list_transform(embedding::DOUBLE[],
-                                                          y -> y * y)))) AS v
-           FROM embeddings)
-         SELECT c.a_id, c.b_id,
-                ROUND(ROUND(list_dot_product(a.v, b.v), 6), 4) AS cos
-         FROM cand c
-         JOIN nv a ON a.vec_id = c.a_id
-         JOIN nv b ON b.vec_id = c.b_id
-         WHERE ROUND(ROUND(list_dot_product(a.v, b.v), 6), 4) >= 0.4
-         ORDER BY a_id, b_id""",
-
-    "q_embed_centroids" ->
-      """WITH d AS (
-           SELECT label,
-                  unnest([{'pos': i, 'v': CAST(embedding[i] AS DOUBLE)}
-                          for i in range(1, len(embedding) + 1)]) AS u
-           FROM embeddings),
-         m AS (
-           SELECT label, u.pos AS pos, AVG(u.v) AS m, count(*) AS n
-           FROM d GROUP BY label, u.pos)
-         SELECT label, ROUND(sqrt(SUM(m * m)), 6) AS centroid_norm,
-                CAST(MAX(n) AS BIGINT) AS n_vecs
-         FROM m GROUP BY label ORDER BY label""",
-
-    "q_embed_topk" ->
-      """WITH nv AS (
-           SELECT vec_id,
-                  list_transform(embedding::DOUBLE[],
-                    x -> x / sqrt(list_sum(list_transform(embedding::DOUBLE[],
-                                                          y -> y * y)))) AS v
-           FROM embeddings),
-         scored AS (
-           SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                  ROUND(list_dot_product(q.v, c.v), 6) AS cos
-           FROM nv q JOIN nv c ON q.vec_id < 16 AND q.vec_id <> c.vec_id),
-         ranked AS (
-           SELECT query_id, neighbor_id, cos,
-                  row_number() OVER (PARTITION BY query_id
-                                     ORDER BY cos DESC, neighbor_id) AS rank
-           FROM scored)
-         SELECT query_id, rank, neighbor_id, cos FROM ranked
-         WHERE rank <= 5 ORDER BY query_id, rank""",
-
-    // full-probe LSH ≡ brute force (every bucket probed, each corpus row
-    // in exactly one bucket) — identical oracle to q_embed_topk
-    "q_embed_ann_lsh" ->
-      """WITH nv AS (
-           SELECT vec_id,
-                  list_transform(embedding::DOUBLE[],
-                    x -> x / sqrt(list_sum(list_transform(embedding::DOUBLE[],
-                                                          y -> y * y)))) AS v
-           FROM embeddings),
-         scored AS (
-           SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                  ROUND(list_dot_product(q.v, c.v), 6) AS cos
-           FROM nv q JOIN nv c ON q.vec_id < 16 AND q.vec_id <> c.vec_id),
-         ranked AS (
-           SELECT query_id, neighbor_id, cos,
-                  row_number() OVER (PARTITION BY query_id
-                                     ORDER BY cos DESC, neighbor_id) AS rank
-           FROM scored)
-         SELECT query_id, rank, neighbor_id, cos FROM ranked
-         WHERE rank <= 5 ORDER BY query_id, rank""",
-
-    // full-probe IVF ≡ brute force (every cell probed; the seeded
-    // quantizer only partitions work) — identical oracle to q_embed_topk
-    "q_embed_ann_ivf" ->
-      """WITH nv AS (
-           SELECT vec_id,
-                  list_transform(embedding::DOUBLE[],
-                    x -> x / sqrt(list_sum(list_transform(embedding::DOUBLE[],
-                                                          y -> y * y)))) AS v
-           FROM embeddings),
-         scored AS (
-           SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                  ROUND(list_dot_product(q.v, c.v), 6) AS cos
-           FROM nv q JOIN nv c ON q.vec_id < 16 AND q.vec_id <> c.vec_id),
-         ranked AS (
-           SELECT query_id, neighbor_id, cos,
-                  row_number() OVER (PARTITION BY query_id
-                                     ORDER BY cos DESC, neighbor_id) AS rank
-           FROM scored)
-         SELECT query_id, rank, neighbor_id, cos FROM ranked
-         WHERE rank <= 5 ORDER BY query_id, rank""",
-
-    // exact-mode SemDeDup (nCells = 1 → all-pairs): a row is dropped
-    // iff some LOWER-id row reaches the rounded-cosine threshold
-    "q_semdedup" ->
-      """WITH nv AS (
-           SELECT vec_id,
-                  list_transform(embedding::DOUBLE[],
-                    x -> x / sqrt(list_sum(list_transform(embedding::DOUBLE[],
-                                                          y -> y * y)))) AS v
-           FROM embeddings),
-         dropped AS (
-           SELECT DISTINCT b.vec_id AS id
-           FROM nv a JOIN nv b ON a.vec_id < b.vec_id
-           WHERE ROUND(list_dot_product(a.v, b.v), 6) >= 0.4)
-         SELECT n.vec_id AS id, CAST(0 AS INTEGER) AS cell,
-                (d.id IS NULL) AS kept
-         FROM nv n LEFT JOIN dropped d ON n.vec_id = d.id
-         ORDER BY id""",
-
-    "q_unpivot" ->
-      """WITH w AS (
-           SELECT o_orderpriority,
-                  count(*) FILTER (WHERE o_orderstatus = 'F') AS f_n,
-                  count(*) FILTER (WHERE o_orderstatus = 'O') AS o_n,
-                  count(*) FILTER (WHERE o_orderstatus = 'P') AS p_n
-           FROM orders GROUP BY o_orderpriority)
-         SELECT o_orderpriority, status, n FROM (
-           SELECT o_orderpriority, 'F' AS status, f_n AS n FROM w
-           UNION ALL SELECT o_orderpriority, 'O', o_n FROM w
-           UNION ALL SELECT o_orderpriority, 'P', p_n FROM w)
-         ORDER BY o_orderpriority, status""",
-
-    "q_cube" ->
-      """SELECT o_orderstatus, o_orderpriority, count(*) AS n
-         FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
-         ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""",
-
-    "q_topn" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-         ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 20""",
-
-    "q_tpch_q3" ->
-      """SELECT l_orderkey, o_orderdate,
-                CAST(SUM(CAST(l_extendedprice AS DECIMAL(20,4)) *
-                         (1 - CAST(l_discount AS DECIMAL(20,4)))) AS DOUBLE)
-                  AS revenue
-         FROM customer c
-         JOIN orders o ON c.c_custkey = o.o_custkey
-         JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-         WHERE c.c_mktsegment = 'BUILDING'
-           AND o.o_orderdate < TIMESTAMP '1998-01-01'
-           AND l.l_shipdate > TIMESTAMP '1998-01-01'
-         GROUP BY l_orderkey, o_orderdate
-         ORDER BY revenue DESC, l_orderkey LIMIT 10""",
-
-    "q_tpch_q5" ->
-      """SELECT n_name,
-                CAST(SUM(CAST(l_extendedprice AS DECIMAL(20,4)) *
-                         (1 - CAST(l_discount AS DECIMAL(20,4)))) AS DOUBLE)
-                  AS revenue
-         FROM customer c
-         JOIN orders o ON c.c_custkey = o.o_custkey
-         JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-         JOIN supplier s ON l.l_suppkey = s.s_suppkey
-                        AND c.c_nationkey = s.s_nationkey
-         JOIN nation n ON c.c_nationkey = n.n_nationkey
-         JOIN region r ON n.n_regionkey = r.r_regionkey
-         WHERE r.r_name = 'ASIA'
-         GROUP BY n_name ORDER BY revenue DESC, n_name""",
-
-    "q_tpch_q9" ->
-      """SELECT n.n_name AS nation,
-                CAST(year(o.o_orderdate) AS INT) AS o_year,
-                CAST(SUM(CAST(l_extendedprice AS DECIMAL(20,4)) *
-                         (1 - CAST(l_discount AS DECIMAL(20,4))) -
-                         CAST(p_retailprice AS DECIMAL(20,4)) *
-                         CAST(l_quantity AS DECIMAL(20,4))) AS DOUBLE)
-                  AS sum_profit
-         FROM lineitem l
-         JOIN part p ON p.p_partkey = l.l_partkey
-         JOIN supplier s ON s.s_suppkey = l.l_suppkey
-         JOIN nation n ON n.n_nationkey = s.s_nationkey
-         JOIN orders o ON o.o_orderkey = l.l_orderkey
-         WHERE p.p_name LIKE '%widget%'
-         GROUP BY nation, o_year
-         ORDER BY nation ASC, o_year DESC""",
-
-    "q_tpch_q18" ->
-      """SELECT c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate,
-                o.o_totalprice,
-                CAST(SUM(CAST(l.l_quantity AS DECIMAL(20,4))) AS DOUBLE)
-                  AS total_qty
-         FROM customer c
-         JOIN orders o ON o.o_custkey = c.c_custkey
-         JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-         WHERE o.o_orderkey IN (
-           SELECT l_orderkey FROM lineitem
-           GROUP BY l_orderkey
-           HAVING SUM(CAST(l_quantity AS DECIMAL(20,4))) > 9)
-         GROUP BY c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate,
-                  o.o_totalprice
-         ORDER BY o.o_totalprice DESC, o.o_orderkey ASC LIMIT 100""",
-
-    "q_tpch_q7" ->
-      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-                CAST(year(l.l_shipdate) AS INT) AS l_year,
-                CAST(SUM(CAST(l_extendedprice AS DECIMAL(20,4)) *
-                         (1 - CAST(l_discount AS DECIMAL(20,4)))) AS DOUBLE)
-                  AS revenue
-         FROM lineitem l
-         JOIN orders o ON o.o_orderkey = l.l_orderkey
-         JOIN supplier s ON s.s_suppkey = l.l_suppkey
-         JOIN customer c ON c.c_custkey = o.o_custkey
-         JOIN nation n1 ON n1.n_nationkey = s.s_nationkey
-         JOIN nation n2 ON n2.n_nationkey = c.c_nationkey
-         WHERE n1.n_name IN ('NATION_0','NATION_1','NATION_2','NATION_3')
-           AND n2.n_name IN ('NATION_0','NATION_1','NATION_2','NATION_3')
-           AND n1.n_name <> n2.n_name
-         GROUP BY supp_nation, cust_nation, l_year
-         ORDER BY supp_nation, cust_nation, l_year""",
-
-    "q_tpch_q14" ->
-      """SELECT strftime(l_shipdate, '%Y-%m') AS month,
-                ROUND(100.0 * CAST(SUM(CASE WHEN p_type = 'PROMO'
-                        THEN CAST(l_extendedprice AS DECIMAL(20,4)) *
-                             (1 - CAST(l_discount AS DECIMAL(20,4)))
-                        ELSE 0 END) AS DOUBLE) /
-                      CAST(SUM(CAST(l_extendedprice AS DECIMAL(20,4)) *
-                               (1 - CAST(l_discount AS DECIMAL(20,4))))
-                           AS DOUBLE), 4) AS promo_share
-         FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-         GROUP BY month ORDER BY month""",
-
-    "q_tpch_q6" ->
-      """SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(20,4)) *
-                        CAST(l_discount AS DECIMAL(20,4))) AS DOUBLE)
-                  AS revenue
-         FROM lineitem
-         WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-           AND l_shipdate < TIMESTAMP '1997-01-01'
-           AND l_discount BETWEEN 0.02 AND 0.04
-           AND l_quantity < 24""",
-
-    "q_tpch_q10" ->
-      """SELECT c.c_custkey, c.c_name, c.c_acctbal, n.n_name,
-                CAST(SUM(CAST(l_extendedprice AS DECIMAL(20,4)) *
-                         (1 - CAST(l_discount AS DECIMAL(20,4)))) AS DOUBLE)
-                  AS revenue
-         FROM customer c
-         JOIN orders o ON o.o_custkey = c.c_custkey
-         JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-         JOIN nation n ON n.n_nationkey = c.c_nationkey
-         WHERE l.l_returnflag = 'R'
-           AND o.o_orderdate >= TIMESTAMP '1996-01-01'
-           AND o.o_orderdate < TIMESTAMP '1996-07-01'
-         GROUP BY c.c_custkey, c.c_name, c.c_acctbal, n.n_name
-         ORDER BY revenue DESC, c.c_custkey ASC LIMIT 20""",
-
-    "q_tpch_q12" ->
-      """SELECT l_returnflag,
-                CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
-                         THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-                CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
-                         THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-         FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
-         WHERE l_returnflag IN ('R','A')
-           AND l_shipdate >= TIMESTAMP '1996-01-01'
-           AND l_shipdate < TIMESTAMP '1998-01-01'
-         GROUP BY l_returnflag ORDER BY l_returnflag""",
-
-    "q_tpch_q13" ->
-      """SELECT c_count, count(*) AS custdist
-         FROM (SELECT c.c_custkey, count(o.o_orderkey) AS c_count
-               FROM customer c
-               LEFT OUTER JOIN orders o ON o.o_custkey = c.c_custkey
-                 AND o.o_orderpriority <> '4-NOT SPECIFIED'
-               GROUP BY c.c_custkey)
-         GROUP BY c_count ORDER BY custdist DESC, c_count DESC""",
-
-    // correlated 0.2·avg predicate replayed in integer-exact form
-    // (qty·5·cnt < sum of exact decimals) — see the Spark side
-    "q_tpch_q17" ->
-      """WITH perpart AS (
-           SELECT l_partkey,
-                  SUM(CAST(l_quantity AS DECIMAL(20,4))) AS sum_qty,
-                  COUNT(*) AS cnt_qty
-           FROM lineitem GROUP BY l_partkey)
-         SELECT CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(20,4)))
-                     AS DOUBLE) / 7.0 AS avg_yearly
-         FROM lineitem l
-         JOIN part p ON p.p_partkey = l.l_partkey
-         JOIN perpart a ON a.l_partkey = l.l_partkey
-         WHERE p.p_type = 'PROMO' AND p.p_brand LIKE 'Brand#1%'
-           AND CAST(l.l_quantity AS DECIMAL(20,4)) * 5 * a.cnt_qty
-               < a.sum_qty""",
-
-    "q_tpch_q19" ->
-      """SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(20,4)) *
-                        (1 - CAST(l_discount AS DECIMAL(20,4)))) AS DOUBLE)
-                  AS revenue
-         FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-         WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
-                AND l_quantity BETWEEN 1 AND 15)
-            OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25
-                AND l_quantity BETWEEN 10 AND 25)
-            OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 35
-                AND l_quantity BETWEEN 20 AND 35)""",
-
-    // part↔supplier relation = DISTINCT lineitem pairs; correlated MIN
-    // replayed as a CTE agg + equality join (arithmetic-free)
-    "q_tpch_q2" ->
-      """WITH ps AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
-         cand AS (
-           SELECT p.p_partkey, p.p_name, s.s_name, s.s_acctbal, n.n_name
-           FROM ps
-           JOIN part p ON p.p_partkey = ps.l_partkey
-           JOIN supplier s ON s.s_suppkey = ps.l_suppkey
-           JOIN nation n ON n.n_nationkey = s.s_nationkey
-           WHERE p.p_type = 'LARGE' AND p.p_size < 16),
-         mins AS (SELECT p_partkey, MIN(s_acctbal) AS min_bal
-                  FROM cand GROUP BY p_partkey)
-         SELECT c.s_acctbal, c.s_name, c.n_name, c.p_partkey, c.p_name
-         FROM cand c JOIN mins m ON m.p_partkey = c.p_partkey
-         WHERE c.s_acctbal = m.min_bal
-         ORDER BY c.s_acctbal DESC, c.n_name ASC, c.s_name ASC,
-                  c.p_partkey ASC LIMIT 100""",
-
-    "q_tpch_q4" ->
-      """SELECT o_orderpriority, count(*) AS order_count
-         FROM orders o
-         WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
-           AND o.o_orderdate < TIMESTAMP '1997-01-01'
-           AND EXISTS (
-             SELECT 1 FROM lineitem l
-             WHERE l.l_orderkey = o.o_orderkey AND l.l_returnflag = 'R'
-               AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
-         GROUP BY o_orderpriority ORDER BY o_orderpriority""",
-
-    "q_tpch_q8" ->
-      """SELECT CAST(year(o.o_orderdate) AS INT) AS o_year,
-                ROUND(CAST(SUM(CASE WHEN sn.n_name = 'NATION_0'
-                         THEN CAST(l_extendedprice AS DECIMAL(20,4)) *
-                              (1 - CAST(l_discount AS DECIMAL(20,4)))
-                         ELSE 0 END) AS DOUBLE) /
-                      CAST(SUM(CAST(l_extendedprice AS DECIMAL(20,4)) *
-                               (1 - CAST(l_discount AS DECIMAL(20,4))))
-                           AS DOUBLE), 6) AS mkt_share
-         FROM lineitem l
-         JOIN orders o ON o.o_orderkey = l.l_orderkey
-         JOIN customer c ON c.c_custkey = o.o_custkey
-         JOIN nation cn ON cn.n_nationkey = c.c_nationkey
-         JOIN region r ON r.r_regionkey = cn.n_regionkey
-         JOIN supplier s ON s.s_suppkey = l.l_suppkey
-         JOIN nation sn ON sn.n_nationkey = s.s_nationkey
-         WHERE r.r_name = 'ASIA'
-           AND o.o_orderdate >= TIMESTAMP '1996-01-01'
-           AND o.o_orderdate < TIMESTAMP '1998-01-01'
-         GROUP BY o_year ORDER BY o_year""",
-
-    // HAVING vs global total in integer-exact form: value·1000 > total
-    "q_tpch_q11" ->
-      """WITH lv AS (
-           SELECT l_partkey,
-                  SUM(CAST(l_extendedprice AS DECIMAL(20,4)) *
-                      (1 - CAST(l_discount AS DECIMAL(20,4)))) AS value_dec
-           FROM lineitem l
-           JOIN supplier s ON s.s_suppkey = l.l_suppkey
-           WHERE s.s_nationkey < 5
-           GROUP BY l_partkey),
-         t AS (SELECT SUM(value_dec) AS total_dec FROM lv)
-         SELECT lv.l_partkey AS p_partkey,
-                CAST(lv.value_dec AS DOUBLE) AS value
-         FROM lv, t WHERE lv.value_dec * 1000 > t.total_dec
-         ORDER BY value DESC, p_partkey ASC LIMIT 100""",
-
-    "q_tpch_q15" ->
-      """WITH rev AS (
-           SELECT l_suppkey,
-                  SUM(CAST(l_extendedprice AS DECIMAL(20,4)) *
-                      (1 - CAST(l_discount AS DECIMAL(20,4)))) AS total_dec
-           FROM lineitem
-           WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-             AND l_shipdate < TIMESTAMP '1996-04-01'
-           GROUP BY l_suppkey),
-         mx AS (SELECT MAX(total_dec) AS max_dec FROM rev)
-         SELECT r.l_suppkey AS s_suppkey, s.s_name,
-                CAST(r.total_dec AS DOUBLE) AS total_revenue
-         FROM rev r
-         JOIN supplier s ON s.s_suppkey = r.l_suppkey
-         JOIN mx ON r.total_dec = mx.max_dec
-         ORDER BY s_suppkey""",
-
-    "q_tpch_q16" ->
-      """WITH ps AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem)
-         SELECT p.p_brand, p.p_type, p.p_size,
-                count(DISTINCT ps.l_suppkey) AS supplier_cnt
-         FROM ps
-         JOIN part p ON p.p_partkey = ps.l_partkey
-         WHERE p.p_type <> 'PROMO'
-           AND p.p_size IN (1,4,9,14,19,24,29,34,49)
-           AND ps.l_suppkey NOT IN (
-             SELECT s_suppkey FROM supplier WHERE s_acctbal < 1000)
-         GROUP BY p.p_brand, p.p_type, p.p_size
-         ORDER BY supplier_cnt DESC, p_brand ASC, p_type ASC, p_size ASC""",
-
-    // shipped-quantity dominance in integer-exact form: qty·2 > total
-    "q_tpch_q20" ->
-      """WITH l96 AS (
-           SELECT l_partkey, l_suppkey,
-                  CAST(l_quantity AS DECIMAL(20,4)) AS q
-           FROM lineitem
-           WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-             AND l_shipdate < TIMESTAMP '1997-01-01'),
-         ps AS (SELECT l_partkey, l_suppkey, SUM(q) AS ps_qty
-                FROM l96 JOIN part p ON p.p_partkey = l96.l_partkey
-                WHERE p.p_name LIKE 'small%'
-                GROUP BY l_partkey, l_suppkey),
-         pt AS (SELECT l_partkey, SUM(ps_qty) AS p_qty
-                FROM ps GROUP BY l_partkey)
-         SELECT s.s_name, s.s_acctbal
-         FROM supplier s
-         WHERE s.s_nationkey < 20 AND s.s_suppkey IN (
-           SELECT ps.l_suppkey FROM ps JOIN pt ON pt.l_partkey = ps.l_partkey
-           WHERE ps.ps_qty * 2 > pt.p_qty)
-         ORDER BY s.s_name""",
-
-    "q_tpch_q21" ->
-      """SELECT s.s_name, count(*) AS numwait
-         FROM lineitem l1
-         JOIN orders o ON o.o_orderkey = l1.l_orderkey
-         JOIN supplier s ON s.s_suppkey = l1.l_suppkey
-         WHERE l1.l_returnflag = 'R' AND o.o_orderstatus = 'F'
-           AND s.s_nationkey < 13
-           AND EXISTS (
-             SELECT 1 FROM lineitem l2
-             WHERE l2.l_orderkey = l1.l_orderkey
-               AND l2.l_suppkey <> l1.l_suppkey)
-           AND NOT EXISTS (
-             SELECT 1 FROM lineitem l3
-             WHERE l3.l_orderkey = l1.l_orderkey
-               AND l3.l_suppkey <> l1.l_suppkey
-               AND l3.l_returnflag = 'R')
-         GROUP BY s.s_name
-         ORDER BY numwait DESC, s.s_name ASC LIMIT 100""",
-
-    // positive-balance average in integer-exact form: bal·cnt > sum
-    "q_tpch_q22" ->
-      """WITH pos AS (
-           SELECT SUM(CAST(c_acctbal AS DECIMAL(20,4))) AS sum_bal,
-                  COUNT(*) AS cnt_bal
-           FROM customer WHERE c_acctbal > 0.0 AND c_nationkey < 7)
-         SELECT c.c_nationkey, count(*) AS numcust,
-                CAST(SUM(CAST(c.c_acctbal AS DECIMAL(20,4))) AS DOUBLE)
-                  AS totacctbal
-         FROM customer c, pos
-         WHERE c.c_nationkey < 7
-           AND CAST(c.c_acctbal AS DECIMAL(20,4)) * pos.cnt_bal
-               > pos.sum_bal
-           AND NOT EXISTS (
-             SELECT 1 FROM orders o
-             WHERE o.o_custkey = c.c_custkey
-               AND o.o_orderdate >= TIMESTAMP '2000-01-01')
-         GROUP BY c.c_nationkey ORDER BY c.c_nationkey""",
-
-    // HLL bound check: the estimate is engine-seeded, so the oracle
-    // asserts the accuracy CONTRACT — the Spark side emits 1 only when
-    // |approx - exact| <= 3*rsd*exact (rsd 0.05); a broken sketch flips
-    // the flag and the hash goes red
-    "q_approx_distinct" ->
-      """SELECT o_orderstatus,
-                count(DISTINCT o_custkey) AS exact_cust,
-                CAST(1 AS BIGINT) AS within_bound
-         FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""",
-
-    // KMV: identical md5→60-bit-hash→bottom-k→(k-1)·2^60/h_k arithmetic
-    "q_kmv_distinct" ->
-      """WITH h AS (
-           SELECT DISTINCT o_orderstatus,
-                  ('0x' || substr(md5(CAST(o_custkey AS VARCHAR)), 1, 15))::BIGINT
-                    AS hv
-           FROM orders WHERE o_custkey IS NOT NULL),
-         r AS (
-           SELECT o_orderstatus, hv,
-                  row_number() OVER (PARTITION BY o_orderstatus ORDER BY hv)
-                    AS rn
-           FROM h)
-         SELECT o_orderstatus,
-                CAST(CASE WHEN count(*) < 64 THEN count(*)
-                          ELSE floor(63.0 * 1152921504606846976.0 /
-                                     CAST(max(hv) AS DOUBLE))
-                     END AS BIGINT) AS est_distinct
-         FROM r WHERE rn <= 64
-         GROUP BY o_orderstatus ORDER BY o_orderstatus""",
-
-    // same md5→60-bit chain as q_kmv_distinct; tags replayed by UNION ALL
-    "q_kmv_setops" ->
-      """WITH m AS (
-           SELECT ('0x' || substr(md5(CAST(o_custkey AS VARCHAR)), 1, 15))::BIGINT
-                    AS h,
-                  bool_or(o_orderstatus = 'F') AS in_a,
-                  bool_or(o_orderstatus = 'O') AS in_b
-           FROM orders
-           WHERE o_custkey IS NOT NULL AND o_orderstatus IN ('F','O')
-           GROUP BY h),
-         t AS (
-           SELECT h, in_a, in_b, 'a' AS tag FROM m WHERE in_a
-           UNION ALL SELECT h, in_a, in_b, 'b' FROM m WHERE in_b
-           UNION ALL SELECT h, in_a, in_b, 'u' FROM m),
-         r AS (SELECT *, row_number() OVER (PARTITION BY tag ORDER BY h)
-                         AS rn FROM t),
-         s AS (SELECT tag, count(*) AS n, max(h) AS hk,
-                      CAST(SUM(CASE WHEN in_a AND in_b THEN 1 ELSE 0 END)
-                           AS BIGINT) AS nboth
-               FROM r WHERE rn <= 64 GROUP BY tag),
-         e AS (SELECT tag, n, nboth,
-                      CASE WHEN n < 64 THEN n
-                           ELSE CAST(floor(63.0 * 1152921504606846976.0 /
-                                           CAST(hk AS DOUBLE)) AS BIGINT)
-                      END AS est
-               FROM s)
-         SELECT MAX(CASE WHEN tag = 'a' THEN est END) AS est_a,
-                MAX(CASE WHEN tag = 'b' THEN est END) AS est_b,
-                MAX(CASE WHEN tag = 'u' THEN est END) AS est_union,
-                MAX(CASE WHEN tag = 'u' THEN
-                      CASE WHEN n < 64 THEN nboth
-                           ELSE CAST(floor(CAST(nboth * est AS DOUBLE) / 64)
-                                     AS BIGINT) END END) AS est_intersect
-         FROM e""",
-
-    "q_multimodal_meta" ->
-      """SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-                md5(text) AS content_md5
-         FROM documents ORDER BY doc_id""",
-
-    // replays the stub codec byte-exactly: c = c*31 + byte with 64-bit
-    // wraparound via HUGEINT mod 2^64 (texts are ASCII, so ascii(char)
-    // = byte); |trunc(c/7)| computed as abs(c) // 7
-    "q_multimodal_decode" ->
-      """WITH m AS (
-           SELECT doc_id AS media_id,
-                  CASE WHEN doc_id % 3 = 0 THEN 'video' ELSE 'image' END AS kind,
-                  left(text, 64) AS p
-           FROM documents),
-         c AS (
-           SELECT media_id, kind, len(p) AS n_raw,
-                  list_reduce(
-                    list_prepend(CAST(0 AS HUGEINT),
-                      list_transform(range(1, len(p) + 1),
-                                     i -> CAST(ascii(p[i]) AS HUGEINT))),
-                    (acc, b) -> (acc * 31 + b) %
-                                18446744073709551616::HUGEINT) AS m64
-           FROM m),
-         s AS (
-           SELECT media_id, kind, n_raw,
-                  CAST(CASE WHEN m64 >= 9223372036854775808::HUGEINT
-                            THEN m64 - 18446744073709551616::HUGEINT
-                            ELSE m64 END AS BIGINT) AS checksum
-           FROM c),
-         d AS (
-           SELECT media_id, kind,
-                  CAST(16 + abs(checksum) % 1024 AS INT) AS width,
-                  CAST(16 + (abs(checksum) // 7) % 1024 AS INT) AS height,
-                  CAST(n_raw AS BIGINT) AS n_bytes, checksum
-           FROM s),
-         r AS (
-           SELECT *, least(1.0, 256.0 / greatest(width, height)) AS scale
-           FROM d)
-         SELECT media_id, kind, width, height, n_bytes, checksum,
-                CAST(floor(width * scale) AS INT) AS out_width,
-                CAST(floor(height * scale) AS INT) AS out_height
-         FROM r ORDER BY media_id""",
-
-    "q_frame_sample" ->
-      """SELECT doc_id AS media_id,
-                unnest(range(0, greatest(1,
-                  octet_length(encode(repeat(text, 50))) // 4096), 2))
-                  AS frame_idx
-         FROM documents WHERE doc_id % 3 = 0
-         ORDER BY media_id, frame_idx""",
-
-    // 3 PageRank iterations as chained CTEs — identical edge set,
-    // identical r_{t+1} = (1-d) + 0.85·Σ r_t/deg arithmetic
-    "q_pagerank" ->
-      """WITH e0 AS (
-           SELECT DISTINCT 's' || l_suppkey AS src, 'c' || o_custkey AS dst
-           FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-         e AS (SELECT src, dst FROM e0
-               UNION SELECT dst AS src, src AS dst FROM e0),
-         deg AS (SELECT src AS node, count(*) AS deg FROM e GROUP BY src),
-         r0 AS (SELECT node, CAST(1.0 AS DOUBLE) AS pr FROM deg),
-         r1 AS (SELECT e.dst AS node, (1.0 - 0.85) + 0.85 * SUM(r.pr / d.deg) AS pr
-                FROM e JOIN r0 r ON e.src = r.node
-                       JOIN deg d ON e.src = d.node GROUP BY e.dst),
-         r2 AS (SELECT e.dst AS node, (1.0 - 0.85) + 0.85 * SUM(r.pr / d.deg) AS pr
-                FROM e JOIN r1 r ON e.src = r.node
-                       JOIN deg d ON e.src = d.node GROUP BY e.dst),
-         r3 AS (SELECT e.dst AS node, (1.0 - 0.85) + 0.85 * SUM(r.pr / d.deg) AS pr
-                FROM e JOIN r2 r ON e.src = r.node
-                       JOIN deg d ON e.src = d.node GROUP BY e.dst)
-         SELECT node, ROUND(pr, 6) AS pr FROM r3
-         ORDER BY ROUND(pr, 6) DESC, node LIMIT 20""",
-
-    // three-way distinct self-join replays the within-basket triple
-    // expansion; VARCHAR part ordering matches the sorted string sets
-    "q_itemsets3" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey,
-                            CAST(l_partkey AS VARCHAR) AS p
-                     FROM lineitem)
-         SELECT a.p AS a, b.p AS b, c.p AS c, count(*) AS support
-         FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey AND a.p < b.p
-                   JOIN li c ON a.l_orderkey = c.l_orderkey AND b.p < c.p
-         GROUP BY a.p, b.p, c.p HAVING count(*) >= 2
-         ORDER BY support DESC, a ASC, b ASC, c ASC LIMIT 30""",
-
-    // same Knuth multiplicative hash + integer threshold, per stratum;
-    // langs outside the fraction map drop (weight 0), mirroring sampleBy
-    "q_stratified_sample" ->
-      """SELECT lang, count(*) AS n_sampled
-         FROM documents
-         WHERE (CAST(doc_id AS HUGEINT) * 2654435761) % 4294967296 <
-               CAST(floor(CASE lang WHEN 'en' THEN 0.5
-                                    WHEN 'de' THEN 1.0
-                                    WHEN 'fr' THEN 0.25
-                                    ELSE 0.0 END * 4294967296.0) AS BIGINT)
-         GROUP BY lang ORDER BY lang""",
-
-    // α=0.5 temperature mixing: sqrt-exact rates + the same hash rule
-    "q_temperature_mix" ->
-      """WITH t AS (SELECT source, count(*) AS n_total
-                    FROM documents GROUP BY source),
-         m AS (SELECT min(n_total) AS nmin FROM t),
-         r AS (SELECT source, n_total,
-                      sqrt(CAST(nmin AS DOUBLE) / CAST(n_total AS DOUBLE))
-                        AS rate_full
-               FROM t, m),
-         k AS (SELECT d.source, count(*) AS n_kept
-               FROM documents d JOIN r USING (source)
-               WHERE (CAST(doc_id AS HUGEINT) * 2654435761) % 4294967296 <
-                     CAST(floor(rate_full * 4294967296.0) AS BIGINT)
-               GROUP BY d.source)
-         SELECT r.source AS source, r.n_total AS n_total,
-                ROUND(r.rate_full, 6) AS rate,
-                coalesce(k.n_kept, 0) AS n_kept
-         FROM r LEFT JOIN k USING (source) ORDER BY source""",
-
-    // same Knuth multiplicative hash + integer threshold compare
-    "q_weighted_mix" ->
-      """WITH d AS (
-           SELECT doc_id, source,
-                  (CAST(substr(source, 4) AS INT) % 5 + 1)
-                    / CAST(5.0 AS DOUBLE) AS wt
-           FROM documents),
-         k AS (
-           SELECT source, count(*) AS n_kept
-           FROM d
-           WHERE (CAST(doc_id AS HUGEINT) * 2654435761) % 4294967296 <
-                 CAST(floor(wt * 4294967296.0) AS BIGINT)
-           GROUP BY source),
-         t AS (SELECT source, MAX(wt) AS wt, count(*) AS n_total
-               FROM d GROUP BY source)
-         SELECT t.source AS source, t.wt AS wt, t.n_total AS n_total,
-                coalesce(k.n_kept, 0) AS n_kept,
-                ROUND(coalesce(k.n_kept, 0) / CAST(t.n_total AS DOUBLE), 4)
-                  AS kept_rate
-         FROM t LEFT JOIN k USING (source) ORDER BY source""",
-
-    // same IEEE-exact division/sqrt chain as the Spark side; FLOOR of
-    // the identical double product, so kept counts replay exactly
-    "q_mix_schedule" ->
-      """WITH c AS (SELECT lang AS source, count(*) AS n_docs
-                    FROM documents GROUP BY lang),
-         m AS (SELECT MIN(n_docs) AS nmin FROM c)
-         SELECT source, n_docs,
-                ROUND(CAST(nmin AS DOUBLE) / n_docs, 6) AS rate_a100,
-                CAST(FLOOR(n_docs * (CAST(nmin AS DOUBLE) / n_docs))
-                     AS BIGINT) AS keep_a100,
-                ROUND(sqrt(CAST(nmin AS DOUBLE) / n_docs), 6) AS rate_a50,
-                CAST(FLOOR(n_docs * sqrt(CAST(nmin AS DOUBLE) / n_docs))
-                     AS BIGINT) AS keep_a50,
-                ROUND(sqrt(sqrt(CAST(nmin AS DOUBLE) / n_docs)), 6) AS rate_a25,
-                CAST(FLOOR(n_docs * sqrt(sqrt(CAST(nmin AS DOUBLE) / n_docs)))
-                     AS BIGINT) AS keep_a25
-         FROM c CROSS JOIN m ORDER BY source""",
-
-    // same percentile thresholds + filtered decimal sums; >= boundary
-    // on the identical doubles on both engines
-    "q_pareto" ->
-      """WITH r AS (
-           SELECT o_custkey,
-                  SUM(CAST(o_totalprice AS DECIMAL(20,4))) AS rev_dec,
-                  CAST(SUM(CAST(o_totalprice AS DECIMAL(20,4))) AS DOUBLE)
-                    AS rev
-           FROM orders GROUP BY o_custkey),
-         t AS (SELECT quantile_cont(rev, 0.99) AS p99,
-                      quantile_cont(rev, 0.90) AS p90,
-                      quantile_cont(rev, 0.50) AS p50,
-                      SUM(rev_dec) AS total_dec
-               FROM r),
-         seg AS (
-           SELECT 'top1' AS segment, rev_dec, total_dec
-           FROM r CROSS JOIN t WHERE rev >= p99
-           UNION ALL
-           SELECT 'top10', rev_dec, total_dec
-           FROM r CROSS JOIN t WHERE rev >= p90
-           UNION ALL
-           SELECT 'top50', rev_dec, total_dec
-           FROM r CROSS JOIN t WHERE rev >= p50)
-         SELECT segment, count(*) AS n_customers,
-                ROUND(CAST(SUM(rev_dec) AS DOUBLE)
-                      / CAST(MAX(total_dec) AS DOUBLE), 6) AS revenue_share
-         FROM seg GROUP BY segment ORDER BY segment""",
-
-    // same clamped floor((v-lo)/((hi-lo)/20)) bucket expression
-    // the v CTE casts to DOUBLE up front so every bucket operand is the
-    // same IEEE double Spark's cast("double") sees — bit-identical floor
-    // boundaries even if a future testdata generation stores
-    // o_totalprice as DECIMAL (DuckDB would otherwise subtract exactly
-    // in decimal before dividing, which can flip floor() at boundaries)
-    "q_numeric_hist" ->
-      """WITH v AS (SELECT CAST(o_totalprice AS DOUBLE) AS p FROM orders
-                    WHERE o_totalprice IS NOT NULL),
-            b AS (SELECT MIN(p) AS lo, MAX(p) AS hi FROM v)
-         SELECT CASE WHEN hi = lo THEN 0
-                     ELSE least(19, CAST(floor((p - lo) /
-                                               ((hi - lo) / 20)) AS INT))
-                END AS bucket,
-                count(*) AS n,
-                ROUND(MIN(p), 4) AS bucket_min,
-                ROUND(MAX(p), 4) AS bucket_max
-         FROM v CROSS JOIN b
-         GROUP BY bucket ORDER BY bucket""",
-
-    // same md5→60-bit KMV chain as q_kmv_distinct, stacked per column
-    "q_table_profile" ->
-      """WITH s AS (
-           SELECT 'o_orderkey' AS col_name,
-                  CAST(o_orderkey AS VARCHAR) AS v FROM orders
-           UNION ALL SELECT 'o_custkey', CAST(o_custkey AS VARCHAR)
-           FROM orders
-           UNION ALL SELECT 'o_orderstatus', o_orderstatus FROM orders
-           UNION ALL SELECT 'o_orderpriority', o_orderpriority FROM orders),
-         b AS (SELECT col_name, count(*) AS n_rows,
-                      count(CASE WHEN v IS NULL THEN 1 END) AS n_null
-               FROM s GROUP BY col_name),
-         h AS (SELECT DISTINCT col_name,
-                      ('0x' || substr(md5(v), 1, 15))::BIGINT AS hv
-               FROM s WHERE v IS NOT NULL),
-         r AS (SELECT col_name, hv,
-                      row_number() OVER (PARTITION BY col_name ORDER BY hv)
-                        AS rn
-               FROM h),
-         d AS (SELECT col_name,
-                      CAST(CASE WHEN count(*) < 64 THEN count(*)
-                           ELSE floor(63.0 * 1152921504606846976.0 /
-                                      CAST(max(hv) AS DOUBLE))
-                           END AS BIGINT) AS est_distinct
-               FROM r WHERE rn <= 64 GROUP BY col_name)
-         SELECT b.col_name AS col_name, b.n_rows AS n_rows,
-                b.n_null AS n_null,
-                ROUND(CAST(b.n_null AS DOUBLE) / b.n_rows, 6) AS null_rate,
-                coalesce(d.est_distinct, 0) AS est_distinct
-         FROM b LEFT JOIN d USING (col_name) ORDER BY col_name""",
-
-    // HUGEINT-exact frequency products cast to BIGINT, mirroring the
-    // Spark side's decimal(38,0) products
-    "q_join_cardinality" ->
-      """WITH f AS (SELECT l_partkey AS k, count(*) AS fl
-                    FROM lineitem GROUP BY l_partkey)
-         SELECT count(*) AS n_matched_keys,
-                CAST(SUM(fl * fl) AS BIGINT) AS join_rows,
-                CAST(MAX(fl * fl) AS BIGINT) AS max_key_fanout
-         FROM f""",
-
-    // HITS, two iterations as chained CTEs — identical edge set,
-    // identical L1 normalization per half-step
-    "q_hits" ->
-      """WITH e AS (SELECT DISTINCT 's' || l_suppkey AS src,
-                           'p' || l_partkey AS dst FROM lineitem),
-         nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-         h0 AS (SELECT node, 1.0 AS h FROM nodes),
-         a1r AS (SELECT e.dst AS node, SUM(h0.h) AS a
-                 FROM e JOIN h0 ON e.src = h0.node GROUP BY e.dst),
-         a1 AS (SELECT node, a / (SELECT SUM(a) FROM a1r) AS a FROM a1r),
-         h1r AS (SELECT e.src AS node, SUM(a1.a) AS h
-                 FROM e JOIN a1 ON e.dst = a1.node GROUP BY e.src),
-         h1 AS (SELECT node, h / (SELECT SUM(h) FROM h1r) AS h FROM h1r),
-         a2r AS (SELECT e.dst AS node, SUM(h1.h) AS a
-                 FROM e JOIN h1 ON e.src = h1.node GROUP BY e.dst),
-         a2 AS (SELECT node, a / (SELECT SUM(a) FROM a2r) AS a FROM a2r),
-         h2r AS (SELECT e.src AS node, SUM(a2.a) AS h
-                 FROM e JOIN a2 ON e.dst = a2.node GROUP BY e.src),
-         h2 AS (SELECT node, h / (SELECT SUM(h) FROM h2r) AS h FROM h2r)
-         SELECT n.node AS node, ROUND(COALESCE(a2.a, 0), 6) AS auth,
-                ROUND(COALESCE(h2.h, 0), 6) AS hub
-         FROM nodes n LEFT JOIN a2 ON n.node = a2.node
-                      LEFT JOIN h2 ON n.node = h2.node
-         ORDER BY ROUND(COALESCE(a2.a, 0), 6) DESC,
-                  ROUND(COALESCE(h2.h, 0), 6) DESC, n.node LIMIT 20""",
-
-    // synchronous LPA, two rounds as chained CTEs: adopt the most
-    // frequent neighbor label, ties to the smallest label
-    "q_label_prop" ->
-      """WITH e0 AS (SELECT DISTINCT 's' || l_suppkey AS src,
-                            'p' || l_partkey AS dst FROM lineitem),
-         e AS (SELECT src, dst FROM e0
-               UNION SELECT dst AS src, src AS dst FROM e0),
-         r0 AS (SELECT DISTINCT src AS node, src AS label FROM e),
-         n1 AS (SELECT e.src AS node, r.label, count(*) AS cnt
-                FROM e JOIN r0 r ON e.dst = r.node GROUP BY e.src, r.label),
-         r1 AS (SELECT node, label FROM (
-                  SELECT node, label, row_number() OVER (
-                    PARTITION BY node ORDER BY cnt DESC, label) AS rn
-                  FROM n1) WHERE rn = 1),
-         n2 AS (SELECT e.src AS node, r.label, count(*) AS cnt
-                FROM e JOIN r1 r ON e.dst = r.node GROUP BY e.src, r.label),
-         r2 AS (SELECT node, label FROM (
-                  SELECT node, label, row_number() OVER (
-                    PARTITION BY node ORDER BY cnt DESC, label) AS rn
-                  FROM n2) WHERE rn = 1)
-         SELECT label, count(*) AS n_members FROM r2 GROUP BY label
-         ORDER BY count(*) DESC, label LIMIT 20""",
-
-    "q_hard_negatives" ->
-      """WITH nv AS (
-           SELECT vec_id, label,
-                  list_transform(embedding::DOUBLE[],
-                    x -> x / sqrt(list_sum(list_transform(embedding::DOUBLE[],
-                                                          y -> y * y)))) AS v
-           FROM embeddings),
-         scored AS (
-           SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                  ROUND(list_dot_product(q.v, c.v), 6) AS cos
-           FROM nv q JOIN nv c ON q.vec_id < 16 AND q.label <> c.label),
-         ranked AS (
-           SELECT query_id, neighbor_id, cos,
-                  row_number() OVER (PARTITION BY query_id
-                                     ORDER BY cos DESC, neighbor_id) AS rank
-           FROM scored)
-         SELECT query_id, rank, neighbor_id, cos FROM ranked
-         WHERE rank <= 5 ORDER BY query_id, rank""",
-
-    // oracle is the brute-force all-pairs join the operator avoids
-    "q_fuzzy_join" ->
-      """WITH d AS (SELECT DISTINCT p_name FROM part)
-         SELECT a.p_name AS a_name, b.p_name AS b_name,
-                CAST(levenshtein(a.p_name, b.p_name) AS INT) AS dist
-         FROM d a JOIN d b ON a.p_name < b.p_name
-         WHERE levenshtein(a.p_name, b.p_name) <= 2
-         ORDER BY a_name, b_name""",
-
-    // same (2-char prefix × length band of 4) blocking; DuckDB's
-    // jaro_winkler_similarity is the same algorithm (0.7 boost gate,
-    // prefix≤4, scale 0.1) — both sides round to 6 before the threshold
-    // so boundary rows agree
-    "q_jaro_pairs" ->
-      """WITH n AS (SELECT DISTINCT p_name FROM part)
-         SELECT a.p_name AS name1, b.p_name AS name2,
-                ROUND(jaro_winkler_similarity(a.p_name, b.p_name), 6) AS sim
-         FROM n a JOIN n b
-           ON substr(a.p_name, 1, 2) = substr(b.p_name, 1, 2)
-          AND CAST(floor(length(a.p_name) / 4) AS BIGINT)
-              = CAST(floor(length(b.p_name) / 4) AS BIGINT)
-          AND a.p_name < b.p_name
-         WHERE ROUND(jaro_winkler_similarity(a.p_name, b.p_name), 6) >= 0.5
-         ORDER BY name1, name2""",
-
-    "q_epoch_shuffle" ->
-      """SELECT doc_id,
-                CAST(row_number() OVER (ORDER BY
-                  md5('1' || ':' || CAST(doc_id AS VARCHAR)), doc_id) AS INT)
-                  AS pos_e1,
-                CAST(row_number() OVER (ORDER BY
-                  md5('2' || ':' || CAST(doc_id AS VARCHAR)), doc_id) AS INT)
-                  AS pos_e2
-         FROM documents WHERE doc_id IS NOT NULL ORDER BY doc_id""",
-
-    // the two-phase ranking must equal the plain global row_number
-    "q_epoch_positions" ->
-      """SELECT doc_id,
-                CAST(row_number() OVER (ORDER BY
-                  md5('1' || ':' || CAST(doc_id AS VARCHAR)), doc_id) AS INT)
-                  AS pos
-         FROM documents WHERE doc_id IS NOT NULL ORDER BY doc_id""",
-
-    "q_media_decode" ->
-      """SELECT o_orderkey, true AS decoded,
-                ROUND(0.299 * (o_orderkey % 256) +
-                      0.587 * ((o_orderkey // 3) % 256) +
-                      0.114 * ((o_orderkey // 7) % 256), 4) AS luma
-         FROM orders WHERE o_orderkey < 1000 ORDER BY o_orderkey""",
-
-    // nearest-neighbor 2x2 -> 1x1 must keep exactly the top-left pixel,
-    // whose channels replay as pure arithmetic on the order key
-    "q_media_resize" ->
-      """SELECT o_orderkey, CAST(1 AS INT) AS width, CAST(1 AS INT) AS height,
-                ROUND(0.299 * (o_orderkey % 256) +
-                      0.587 * ((o_orderkey // 3) % 256) +
-                      0.114 * ((o_orderkey // 7) % 256), 4) AS luma
-         FROM orders WHERE o_orderkey < 1000 ORDER BY o_orderkey""",
-
-    // PNG (lossless): the 2x2 raster's mean luma replays pixel-by-pixel
-    // in the same left-to-right accumulation order the decoder uses;
-    // JPEG (lossy): format/dims/channels are pinned, luma is NULL
-    "q_image_decode" ->
-      """SELECT o_orderkey,
-                CASE WHEN o_orderkey % 2 = 0 THEN 'png' ELSE 'jpeg' END
-                  AS format,
-                CAST(2 AS INT) AS width, CAST(2 AS INT) AS height,
-                CAST(3 AS INT) AS channels,
-                CASE WHEN o_orderkey % 2 = 0 THEN ROUND((
-                   (0.299 * ((o_orderkey + 0) % 256) +
-                    0.587 * ((o_orderkey // 3 + 0) % 256) +
-                    0.114 * ((o_orderkey // 7 + 0) % 256)) +
-                   (0.299 * ((o_orderkey + 1) % 256) +
-                    0.587 * ((o_orderkey // 3 + 1) % 256) +
-                    0.114 * ((o_orderkey // 7 + 1) % 256)) +
-                   (0.299 * ((o_orderkey + 2) % 256) +
-                    0.587 * ((o_orderkey // 3 + 2) % 256) +
-                    0.114 * ((o_orderkey // 7 + 2) % 256)) +
-                   (0.299 * ((o_orderkey + 3) % 256) +
-                    0.587 * ((o_orderkey // 3 + 3) % 256) +
-                    0.114 * ((o_orderkey // 7 + 3) % 256))) / 4, 4)
-                END AS luma
-         FROM orders WHERE o_orderkey < 600 ORDER BY o_orderkey""",
-
-    // gray palette (r=g=b=v) and a lossless GIF roundtrip make each
-    // sampled frame's luma pure key arithmetic: per pixel the same
-    // three-term 601 form the decoder accumulates, row-major order
-    "q_gif_frames" ->
-      """WITH k AS (SELECT o_orderkey AS k FROM orders
-                    WHERE o_orderkey < 300),
-         fr AS (SELECT unnest([0, 2, 4]) AS f)
-         SELECT k.k AS o_orderkey, CAST(fr.f AS BIGINT) AS frame_idx,
-                CAST(6 AS BIGINT) AS n_frames,
-                ROUND((
-                  (0.299 * ((k.k * 13 + fr.f * 97) % 256) +
-                   0.587 * ((k.k * 13 + fr.f * 97) % 256) +
-                   0.114 * ((k.k * 13 + fr.f * 97) % 256)) +
-                  (0.299 * ((k.k * 13 + fr.f * 97 + 53) % 256) +
-                   0.587 * ((k.k * 13 + fr.f * 97 + 53) % 256) +
-                   0.114 * ((k.k * 13 + fr.f * 97 + 53) % 256)) +
-                  (0.299 * ((k.k * 13 + fr.f * 97 + 31) % 256) +
-                   0.587 * ((k.k * 13 + fr.f * 97 + 31) % 256) +
-                   0.114 * ((k.k * 13 + fr.f * 97 + 31) % 256)) +
-                  (0.299 * ((k.k * 13 + fr.f * 97 + 84) % 256) +
-                   0.587 * ((k.k * 13 + fr.f * 97 + 84) % 256) +
-                   0.114 * ((k.k * 13 + fr.f * 97 + 84) % 256))
-                ) / 4, 4) AS luma
-         FROM k CROSS JOIN fr
-         ORDER BY o_orderkey, frame_idx""",
-
-    // NN 2x2 -> 1x1 through PNG re-encode keeps exactly the top-left
-    // pixel (i=0), whose channels replay as pure arithmetic on the key
-    "q_image_resize" ->
-      """SELECT o_orderkey, 'png' AS format,
-                CAST(1 AS INT) AS width, CAST(1 AS INT) AS height,
-                ROUND(0.299 * (o_orderkey % 256) +
-                      0.587 * ((o_orderkey // 3) % 256) +
-                      0.114 * ((o_orderkey // 7) % 256), 4) AS luma
-         FROM orders WHERE o_orderkey < 600 ORDER BY o_orderkey""",
-
-    // time-domain audio features replayed over the unnested synthetic
-    // samples: /32768 and the squared terms are power-of-two scalings of
-    // integers (exactly representable doubles), so SUM order can't skew
-    // the RMS; ZCR is a lag-window sign-flip count; all integer-exact
-    "q_audio_features" ->
-      """WITH s AS (
-           SELECT o_orderkey AS k, i,
-                  ((o_orderkey * 31 + i * 997) % 65536) - 32768 AS raw
-           FROM orders CROSS JOIN (SELECT unnest(range(8)) AS i)
-           WHERE o_orderkey < 600),
-         f AS (SELECT k, i, raw,
-                 CASE WHEN lag(raw) OVER (PARTITION BY k ORDER BY i)
-                        IS NULL THEN 0
-                      WHEN (raw >= 0) <>
-                        (lag(raw) OVER (PARTITION BY k ORDER BY i) >= 0)
-                        THEN 1 ELSE 0 END AS flip
-               FROM s)
-         SELECT k AS o_orderkey, CAST(8 AS BIGINT) AS n_samples,
-                ROUND(SQRT(SUM((raw / 32768.0) * (raw / 32768.0)) / 8), 6)
-                  AS rms,
-                ROUND(MAX(ABS(raw)) / 32768.0, 6) AS peak,
-                CAST(SUM(flip) AS BIGINT) AS zero_crossings
-         FROM f GROUP BY k ORDER BY o_orderkey""",
-
-    // per-channel means of the 2x2 raster: integer channel sums then one
-    // exact /4, same accumulation both engines
-    "q_image_channels" ->
-      """SELECT o_orderkey,
-                ROUND(((o_orderkey + 0) % 256 + (o_orderkey + 1) % 256 +
-                       (o_orderkey + 2) % 256 + (o_orderkey + 3) % 256)
-                      / 4.0, 4) AS r_mean,
-                ROUND(((o_orderkey // 3 + 0) % 256 + (o_orderkey // 3 + 1) % 256 +
-                       (o_orderkey // 3 + 2) % 256 + (o_orderkey // 3 + 3) % 256)
-                      / 4.0, 4) AS g_mean,
-                ROUND(((o_orderkey // 7 + 0) % 256 + (o_orderkey // 7 + 1) % 256 +
-                       (o_orderkey // 7 + 2) % 256 + (o_orderkey // 7 + 3) % 256)
-                      / 4.0, 4) AS b_mean
-         FROM orders WHERE o_orderkey < 600 ORDER BY o_orderkey""",
-
-    "q_map_ops" ->
-      """WITH g AS (SELECT o_custkey, o_orderstatus, count(*) AS n
-                    FROM orders GROUP BY 1, 2)
-         SELECT o_custkey,
-                CAST(count(*) AS INT) AS n_statuses,
-                CAST(COALESCE(SUM(CASE WHEN o_orderstatus = 'O' THEN n END), 0)
-                     AS BIGINT) AS n_open,
-                string_agg(o_orderstatus, ',' ORDER BY o_orderstatus)
-                  AS statuses
-         FROM g GROUP BY o_custkey ORDER BY o_custkey""",
-
-    "q_fuzzy_match" ->
-      """WITH clean AS (SELECT DISTINCT p_name FROM part),
-            dirty AS (SELECT DISTINCT replace(p_name, 'e', '3') AS dirty_name
-                      FROM clean)
-         SELECT d.dirty_name, c.p_name AS clean_name,
-                CAST(levenshtein(d.dirty_name, c.p_name) AS INT) AS dist
-         FROM dirty d JOIN clean c
-           ON levenshtein(d.dirty_name, c.p_name) <= 2
-         ORDER BY dirty_name, clean_name""",
-
-    // Replays the learned-BPE ENCODE from the merge-table sidecar the
-    // query dumps (the path names the driver's verify SF — sf0.01):
-    // per distinct word, a recursive CTE applies greedy rank-ordered
-    // merges exactly like Bpe.encodeWord (strictly-lowest rank, first
-    // position, one merge per step), then per-doc subword counts
-    // re-aggregate per source. The merge table itself is pure driver
-    // Scala pinned by BpeSpec; given it, the counts are exact.
-    "q_bpe_tokens" ->
-      """WITH RECURSIVE
-         mraw AS (SELECT * FROM read_parquet(
-           '/tmp/graft_oracle_sidecar/bpe_merges_all/*.parquet')),
-         dc AS MATERIALIZED (SELECT count(*) AS n,
-                 sum(length(text)) AS chars FROM documents),
-         msel AS MATERIALIZED (SELECT DISTINCT rank, l, r FROM mraw, dc
-                 WHERE corpus_docs = dc.n AND corpus_chars = dc.chars),
-         mn AS MATERIALIZED (SELECT count(*) AS k,
-                 count(DISTINCT rank) AS dr FROM msel),
-         chk AS MATERIALIZED (SELECT CASE WHEN mn.k = 0
-                 THEN error('no bpe sidecar for this corpus: the content-addressed merge-table dir has no entry whose corpus fingerprint matches the documents under verify - run q_bpe_tokens at this sf first')
-                 WHEN mn.k <> mn.dr
-                 THEN error('ambiguous bpe sidecar: more than one stored merge table matches this corpus fingerprint (duplicate ranks after the fingerprint cut) - two regenerated corpora collided on (doc count, char sum); clear /tmp/graft_oracle_sidecar/bpe_merges_all and re-run q_bpe_tokens')
-                 ELSE 1 END AS ok FROM mn),
-         m AS (SELECT list(struct_pack(a := l, b := r) ORDER BY rank) AS ms
-               FROM msel),
-         toks AS (
-           SELECT doc_id, source,
-                  list_filter(string_split_regex(lower(text), '\s+'),
-                              x -> len(x) > 0) AS t
-           FROM documents),
-         w0 AS (SELECT DISTINCT unnest(t) AS word FROM toks),
-         enc AS (
-           SELECT word, [word[i] for i in range(1, len(word)+1)] AS syms
-           FROM w0
-           UNION ALL
-           SELECT word,
-                  list_concat(list_concat(syms[1:bp-1],
-                                          [syms[bp] || syms[bp+1]]),
-                              syms[bp+2:])
-           FROM (
-             SELECT word, syms, list_min(prs) AS mn,
-                    list_position(prs, list_min(prs)) AS bp
-             FROM (
-               SELECT e.word, e.syms,
-                      [coalesce(nullif(list_position(ms,
-                         struct_pack(a := e.syms[i], b := e.syms[i+1])), 0),
-                         2147483647)
-                       for i in range(1, len(e.syms))] AS prs
-               FROM enc e, m
-               WHERE len(e.syms) >= 2)
-           ) WHERE mn < 2147483647),
-         fin AS (
-           SELECT e.word, len(e.syms) AS n_tok
-           FROM enc e, m
-           WHERE len(e.syms) < 2 OR
-                 list_min([coalesce(nullif(list_position(ms,
-                    struct_pack(a := e.syms[i], b := e.syms[i+1])), 0),
-                    2147483647)
-                    for i in range(1, len(e.syms))]) = 2147483647),
-         doc_words AS (SELECT doc_id, source, unnest(t) AS word FROM toks),
-         per_doc AS (SELECT doc_id, sum(f.n_tok) AS n_sub
-                     FROM doc_words dw JOIN fin f USING (word)
-                     GROUP BY doc_id)
-         SELECT t.source, count(*)::BIGINT AS n_docs,
-                CAST(sum(coalesce(p.n_sub, 0)) AS BIGINT) AS n_subwords
-         FROM toks t LEFT JOIN per_doc p USING (doc_id) CROSS JOIN chk
-         WHERE chk.ok = 1
-         GROUP BY t.source ORDER BY t.source""",
-
-    // ============== round 8: monitoring / quantization / CEP =============
-
-    // ntile over the identical fully-tiebroken order — the SQL-standard
-    // ceil(n/k)-first-buckets split is common to both engines
-    "q_equidepth_hist" ->
-      """WITH v AS (SELECT o_orderpriority,
-                           CAST(o_totalprice AS DOUBLE) AS p, o_orderkey
-                    FROM orders WHERE o_totalprice IS NOT NULL)
-         SELECT o_orderpriority, bucket, count(*) AS n,
-                ROUND(MIN(p), 4) AS bucket_min,
-                ROUND(MAX(p), 4) AS bucket_max
-         FROM (SELECT o_orderpriority, p,
-                      ntile(10) OVER (PARTITION BY o_orderpriority
-                                      ORDER BY p, o_orderkey) AS bucket
-               FROM v)
-         GROUP BY o_orderpriority, bucket
-         ORDER BY o_orderpriority, bucket""",
-
-    // replay of the exact quantization arithmetic: scale = max |x|,
-    // q = floor(x·127/scale + 0.5) clamped (the engine-neutral rounding
-    // form), reconstruction error in the same sequential double chain
-    "q_int8_quant" ->
-      """WITH d AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         q AS (SELECT vec_id, v,
-                      list_max(list_transform(v, x -> abs(x))) AS scale
-               FROM d),
-         c AS (SELECT vec_id, v, scale,
-                      list_transform(v, x -> CASE WHEN scale = 0 THEN 0
-                        ELSE CAST(greatest(-127, least(127,
-                               floor(x * 127.0 / scale + 0.5))) AS INT)
-                        END) AS qc
-               FROM q)
-         SELECT vec_id, ROUND(scale, 6) AS scale,
-                CAST(list_sum(list_transform(qc,
-                       x -> abs(CAST(x AS BIGINT)))) AS BIGINT) AS code_l1,
-                ROUND(list_sum(list_transform(range(len(v)), i ->
-                        (v[i + 1] - qc[i + 1] * scale / 127.0) *
-                        (v[i + 1] - qc[i + 1] * scale / 127.0)))
-                      / len(v), 10) AS mse
-         FROM c ORDER BY vec_id""",
-
-    // integer dot products of fixed-scale int8 codes — exact arithmetic
-    // end to end (|q·c| ≤ 64·127² ≪ 2^53), ties broken on neighbor id
-    "q_int8_ann" ->
-      """WITH nv AS (
-           SELECT vec_id,
-                  list_transform(embedding::DOUBLE[],
-                    x -> x / sqrt(list_sum(list_transform(embedding::DOUBLE[],
-                                                          y -> y * y)))) AS v
-           FROM embeddings),
-         c AS (SELECT vec_id,
-                      list_transform(v, x -> CAST(greatest(-127, least(127,
-                        floor(x * 127.0 + 0.5))) AS DOUBLE)) AS q
-               FROM nv),
-         scored AS (
-           SELECT qq.vec_id AS query_id, cc.vec_id AS neighbor_id,
-                  CAST(list_dot_product(qq.q, cc.q) AS BIGINT) AS dot_q
-           FROM c qq JOIN c cc
-             ON qq.vec_id < 16 AND qq.vec_id <> cc.vec_id),
-         ranked AS (
-           SELECT query_id, neighbor_id, dot_q,
-                  row_number() OVER (PARTITION BY query_id
-                                     ORDER BY dot_q DESC, neighbor_id) AS rank
-           FROM scored)
-         SELECT query_id, rank, neighbor_id, dot_q FROM ranked
-         WHERE rank <= 5 ORDER BY query_id, rank""",
-
-    // 3 unrolled peel rounds over the same support-≥2 co-purchase edge
-    // set (VARCHAR part keys match the sorted-string pair generation)
-    "q_kcore" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey,
-                            CAST(l_partkey AS VARCHAR) AS p
-                     FROM lineitem),
-         e0 AS (SELECT a.p AS lo, b.p AS hi
-                FROM li a JOIN li b
-                  ON a.l_orderkey = b.l_orderkey AND a.p < b.p
-                GROUP BY a.p, b.p HAVING count(*) >= 2),
-         d1 AS (SELECT n, count(*) AS deg FROM (
-                  SELECT lo AS n FROM e0 UNION ALL SELECT hi FROM e0)
-                GROUP BY n),
-         k1 AS (SELECT n FROM d1 WHERE deg >= 2),
-         e1 AS (SELECT lo, hi FROM e0
-                WHERE lo IN (SELECT n FROM k1) AND hi IN (SELECT n FROM k1)),
-         d2 AS (SELECT n, count(*) AS deg FROM (
-                  SELECT lo AS n FROM e1 UNION ALL SELECT hi FROM e1)
-                GROUP BY n),
-         k2 AS (SELECT n FROM d2 WHERE deg >= 2),
-         e2 AS (SELECT lo, hi FROM e1
-                WHERE lo IN (SELECT n FROM k2) AND hi IN (SELECT n FROM k2)),
-         d3 AS (SELECT n, count(*) AS deg FROM (
-                  SELECT lo AS n FROM e2 UNION ALL SELECT hi FROM e2)
-                GROUP BY n),
-         k3 AS (SELECT n FROM d3 WHERE deg >= 2),
-         e3 AS (SELECT lo, hi FROM e2
-                WHERE lo IN (SELECT n FROM k3) AND hi IN (SELECT n FROM k3))
-         SELECT vertex, count(*) AS degree FROM (
-           SELECT lo AS vertex FROM e3 UNION ALL SELECT hi AS vertex FROM e3)
-         GROUP BY vertex ORDER BY vertex""",
-
-    // exact small-group counting; the flag is derived, not probabilistic
-    "q_k_anonymity" ->
-      """SELECT lang, source, count(*) AS n, count(*) < 5 AS violates_k5
-         FROM documents GROUP BY lang, source ORDER BY lang, source""",
-
-    // same md5(seed|id)→60-bit→u∈(0,1] chain, key = −ln(u)/w rounded to
-    // 6 dp, id tiebreak, k smallest per group
-    "q_weighted_sample" ->
-      """WITH keyed AS (
-           SELECT lang, doc_id, n_chars,
-                  ROUND(-ln((('0x' || substr(md5('7|' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
-                             + 1.0) / 1.152921504606846976e18)
-                        / CAST(n_chars AS DOUBLE), 6) AS es_key
-           FROM documents WHERE n_chars > 0),
-         ranked AS (
-           SELECT lang, doc_id, n_chars,
-                  row_number() OVER (PARTITION BY lang
-                                     ORDER BY es_key, doc_id) AS sample_rank
-           FROM keyed)
-         SELECT lang, sample_rank, doc_id, n_chars FROM ranked
-         WHERE sample_rank <= 5 ORDER BY lang, sample_rank""",
-
-    // trimmed/winsorized replay on the same engine-compatible
-    // interpolated percentiles; winsorized values rounded to 4 dp then
-    // decimal-summed, matching the engine's order-free discipline
-    "q_robust_mean" ->
-      """WITH th AS (
-           SELECT o_orderpriority,
-                  quantile_cont(o_totalprice, 0.1) AS lo,
-                  quantile_cont(o_totalprice, 0.9) AS hi
-           FROM orders GROUP BY o_orderpriority)
-         SELECT o.o_orderpriority,
-                CAST(count(*) AS BIGINT) AS n,
-                CAST(SUM(CASE WHEN o.o_totalprice >= t.lo
-                               AND o.o_totalprice <= t.hi
-                              THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-                round(CAST(SUM(CASE WHEN o.o_totalprice >= t.lo
-                                     AND o.o_totalprice <= t.hi
-                               THEN CAST(o.o_totalprice AS DECIMAL(20,4))
-                               END) AS DOUBLE)
-                      / SUM(CASE WHEN o.o_totalprice >= t.lo
-                                  AND o.o_totalprice <= t.hi
-                                 THEN 1 ELSE 0 END), 6) AS trimmed_mean,
-                round(CAST(SUM(CAST(round(least(greatest(o.o_totalprice, t.lo),
-                                           t.hi), 4) AS DECIMAL(20,4)))
-                           AS DOUBLE) / count(*), 6) AS winsorized_mean
-         FROM orders o JOIN th t USING (o_orderpriority)
-         GROUP BY o.o_orderpriority ORDER BY o.o_orderpriority""",
-
-    // rank-weighted DECIMAL sums stay exact; only the final fixed
-    // formula 2Σ(r·x)/(nΣx) − (n+1)/n runs in double
-    "q_gini" ->
-      """WITH rev AS (
-           SELECT o_custkey,
-                  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
-                       AS DECIMAL(18,2)) AS x
-           FROM orders GROUP BY o_custkey),
-         ranked AS (
-           SELECT c.c_mktsegment, r.o_custkey, r.x,
-                  row_number() OVER (PARTITION BY c.c_mktsegment
-                                     ORDER BY r.x ASC, r.o_custkey ASC) AS rk
-           FROM rev r JOIN customer c ON r.o_custkey = c.c_custkey)
-         SELECT c_mktsegment, count(*) AS n,
-                ROUND(CAST(SUM(x) AS DOUBLE), 2) AS total,
-                ROUND(2.0 * CAST(SUM(x * rk) AS DOUBLE)
-                      / (count(*) * CAST(SUM(x) AS DOUBLE))
-                    - CAST(count(*) + 1 AS DOUBLE) / count(*), 6) AS gini
-         FROM ranked GROUP BY c_mktsegment ORDER BY c_mktsegment""",
-
-    // Pearson over doubled average ranks (exact integers); same moment
-    // formula as q_acf
-    // matching replay: identical window mechanics (stratum-partitioned
-    // covariate sort, IGNORE NULLS carries, same tie rules)
-    "q_nn_match" ->
-      """WITH base AS (
-           SELECT l_returnflag AS st,
-                  l_orderkey * 10 + l_linenumber AS id,
-                  CAST(l_extendedprice AS DOUBLE) AS cov,
-                  CAST(l_quantity AS DECIMAL(20,4)) AS y,
-                  CASE WHEN l_orderkey % 2 = 0 THEN 1 ELSE 0 END AS side
-           FROM lineitem
-           WHERE l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL),
-         car AS (
-           SELECT st, cov, y, side,
-                  last_value(CASE WHEN side = 0 THEN cov END IGNORE NULLS)
-                    OVER w1 AS pc,
-                  last_value(CASE WHEN side = 0 THEN y END IGNORE NULLS)
-                    OVER w1 AS py,
-                  first_value(CASE WHEN side = 0 THEN cov END IGNORE NULLS)
-                    OVER w2 AS nc,
-                  first_value(CASE WHEN side = 0 THEN y END IGNORE NULLS)
-                    OVER w2 AS ny
-           FROM base
-           WINDOW
-             w1 AS (PARTITION BY st ORDER BY cov ASC, side ASC, id DESC
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-             w2 AS (PARTITION BY st ORDER BY cov ASC, side ASC, id DESC
-                    ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)),
-         m AS (
-           SELECT st, y,
-                  CASE WHEN pc IS NOT NULL
-                        AND (nc IS NULL OR cov - pc <= nc - cov) THEN py
-                       WHEN nc IS NOT NULL THEN ny END AS my
-           FROM car WHERE side = 1)
-         SELECT st AS l_returnflag,
-                CAST(count(*) AS BIGINT) AS n_treated,
-                CAST(SUM(CASE WHEN my IS NOT NULL THEN 1 ELSE 0 END)
-                     AS BIGINT) AS n_matched,
-                round(CAST(SUM(CASE WHEN my IS NOT NULL THEN y - my END)
-                           AS DOUBLE)
-                      / SUM(CASE WHEN my IS NOT NULL THEN 1 ELSE 0 END), 6)
-                  AS att
-         FROM m GROUP BY st ORDER BY st""",
-
-    // normal equations over one-pass exact decimal moments; doubles
-    // enter only in the final fixed formulas (mirrored operand order)
-    "q_ols" ->
-      """WITH m AS (
-           SELECT l_returnflag, count(*) AS n,
-             SUM(CAST(ROUND(CAST(l_quantity AS DOUBLE), 2)
-                 AS DECIMAL(18,2))) AS sx,
-             SUM(CAST(ROUND(CAST(l_extendedprice AS DOUBLE), 2)
-                 AS DECIMAL(18,2))) AS sy,
-             SUM(CAST(CAST(ROUND(CAST(l_quantity AS DOUBLE), 2)
-                   AS DECIMAL(18,2))
-                 * CAST(ROUND(CAST(l_quantity AS DOUBLE), 2)
-                   AS DECIMAL(18,2)) AS DECIMAL(38,4))) AS sxx,
-             SUM(CAST(CAST(ROUND(CAST(l_extendedprice AS DOUBLE), 2)
-                   AS DECIMAL(18,2))
-                 * CAST(ROUND(CAST(l_extendedprice AS DOUBLE), 2)
-                   AS DECIMAL(18,2)) AS DECIMAL(38,4))) AS syy,
-             SUM(CAST(CAST(ROUND(CAST(l_quantity AS DOUBLE), 2)
-                   AS DECIMAL(18,2))
-                 * CAST(ROUND(CAST(l_extendedprice AS DOUBLE), 2)
-                   AS DECIMAL(18,2)) AS DECIMAL(38,4))) AS sxy
-           FROM lineitem GROUP BY l_returnflag)
-         SELECT l_returnflag, n,
-           ROUND((n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-               / (n * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)), 6)
-             AS slope,
-           ROUND((CAST(sy AS DOUBLE)
-               - ((n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-                  / (n * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)))
-                 * CAST(sx AS DOUBLE)) / n, 6) AS intercept,
-           ROUND((n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-               * (n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-               / ((n * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-                * (n * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6)
-             AS r2
-         FROM m ORDER BY l_returnflag""",
-
-    // all moments in ONE aggregate CTE; six pair rows replay the same
-    // cov/√(varx·vary) formula (sqrt is IEEE-exact on both engines)
-    "q_corr_matrix" ->
-      """WITH src AS (
-           SELECT CAST(ROUND(CAST(l_quantity AS DOUBLE), 2)
-                  AS DECIMAL(18,2)) AS a,
-                  CAST(ROUND(CAST(l_extendedprice AS DOUBLE), 2)
-                  AS DECIMAL(18,2)) AS b,
-                  CAST(ROUND(CAST(l_discount AS DOUBLE), 2)
-                  AS DECIMAL(18,2)) AS c,
-                  CAST(ROUND(CAST(l_tax AS DOUBLE), 2)
-                  AS DECIMAL(18,2)) AS d
-           FROM lineitem),
-         m AS (
-           SELECT count(*) AS n,
-             SUM(a) AS sa, SUM(b) AS sb, SUM(c) AS sc, SUM(d) AS sd,
-             SUM(CAST(a * a AS DECIMAL(38,4))) AS saa,
-             SUM(CAST(b * b AS DECIMAL(38,4))) AS sbb,
-             SUM(CAST(c * c AS DECIMAL(38,4))) AS scc,
-             SUM(CAST(d * d AS DECIMAL(38,4))) AS sdd,
-             SUM(CAST(a * b AS DECIMAL(38,4))) AS sab,
-             SUM(CAST(a * c AS DECIMAL(38,4))) AS sac,
-             SUM(CAST(a * d AS DECIMAL(38,4))) AS sad,
-             SUM(CAST(b * c AS DECIMAL(38,4))) AS sbc,
-             SUM(CAST(b * d AS DECIMAL(38,4))) AS sbd,
-             SUM(CAST(c * d AS DECIMAL(38,4))) AS scd
-           FROM src)
-         SELECT * FROM (
-           SELECT 'l_quantity' AS x_col, 'l_extendedprice' AS y_col, n,
-             ROUND((n * CAST(sab AS DOUBLE) - CAST(sa AS DOUBLE) * CAST(sb AS DOUBLE))
-               / sqrt((n * CAST(saa AS DOUBLE) - CAST(sa AS DOUBLE) * CAST(sa AS DOUBLE))
-                    * (n * CAST(sbb AS DOUBLE) - CAST(sb AS DOUBLE) * CAST(sb AS DOUBLE))), 6) AS corr
-           FROM m
-           UNION ALL
-           SELECT 'l_quantity', 'l_discount', n,
-             ROUND((n * CAST(sac AS DOUBLE) - CAST(sa AS DOUBLE) * CAST(sc AS DOUBLE))
-               / sqrt((n * CAST(saa AS DOUBLE) - CAST(sa AS DOUBLE) * CAST(sa AS DOUBLE))
-                    * (n * CAST(scc AS DOUBLE) - CAST(sc AS DOUBLE) * CAST(sc AS DOUBLE))), 6)
-           FROM m
-           UNION ALL
-           SELECT 'l_quantity', 'l_tax', n,
-             ROUND((n * CAST(sad AS DOUBLE) - CAST(sa AS DOUBLE) * CAST(sd AS DOUBLE))
-               / sqrt((n * CAST(saa AS DOUBLE) - CAST(sa AS DOUBLE) * CAST(sa AS DOUBLE))
-                    * (n * CAST(sdd AS DOUBLE) - CAST(sd AS DOUBLE) * CAST(sd AS DOUBLE))), 6)
-           FROM m
-           UNION ALL
-           SELECT 'l_extendedprice', 'l_discount', n,
-             ROUND((n * CAST(sbc AS DOUBLE) - CAST(sb AS DOUBLE) * CAST(sc AS DOUBLE))
-               / sqrt((n * CAST(sbb AS DOUBLE) - CAST(sb AS DOUBLE) * CAST(sb AS DOUBLE))
-                    * (n * CAST(scc AS DOUBLE) - CAST(sc AS DOUBLE) * CAST(sc AS DOUBLE))), 6)
-           FROM m
-           UNION ALL
-           SELECT 'l_extendedprice', 'l_tax', n,
-             ROUND((n * CAST(sbd AS DOUBLE) - CAST(sb AS DOUBLE) * CAST(sd AS DOUBLE))
-               / sqrt((n * CAST(sbb AS DOUBLE) - CAST(sb AS DOUBLE) * CAST(sb AS DOUBLE))
-                    * (n * CAST(sdd AS DOUBLE) - CAST(sd AS DOUBLE) * CAST(sd AS DOUBLE))), 6)
-           FROM m
-           UNION ALL
-           SELECT 'l_discount', 'l_tax', n,
-             ROUND((n * CAST(scd AS DOUBLE) - CAST(sc AS DOUBLE) * CAST(sd AS DOUBLE))
-               / sqrt((n * CAST(scc AS DOUBLE) - CAST(sc AS DOUBLE) * CAST(sc AS DOUBLE))
-                    * (n * CAST(sdd AS DOUBLE) - CAST(sd AS DOUBLE) * CAST(sd AS DOUBLE))), 6)
-           FROM m)
-         ORDER BY x_col, y_col""",
-
-    // digit via exact DECIMAL(18,2) string render (both engines print
-    // plain form); the nine Benford masses are fixed 6-dp literals
-    "q_benford" ->
-      """WITH digits AS (
-           SELECT substr(CAST(CAST(o_totalprice AS DECIMAL(18,2))
-                         AS VARCHAR), 1, 1) AS digit,
-                  count(*) AS n
-           FROM orders GROUP BY 1),
-         tot AS (SELECT CAST(SUM(n) AS BIGINT) AS n_total FROM digits),
-         e(digit, expected) AS (VALUES
-           ('1', CAST(0.30103  AS DOUBLE)), ('2', CAST(0.176091 AS DOUBLE)),
-           ('3', CAST(0.124939 AS DOUBLE)), ('4', CAST(0.09691  AS DOUBLE)),
-           ('5', CAST(0.079181 AS DOUBLE)), ('6', CAST(0.066947 AS DOUBLE)),
-           ('7', CAST(0.057992 AS DOUBLE)), ('8', CAST(0.051153 AS DOUBLE)),
-           ('9', CAST(0.045757 AS DOUBLE)))
-         SELECT d.digit, d.n,
-                ROUND(CAST(d.n AS DOUBLE) / t.n_total, 6) AS freq,
-                e.expected,
-                ROUND(ROUND(CAST(d.n AS DOUBLE) / t.n_total, 6)
-                      - e.expected, 6) AS deviation
-         FROM digits d CROSS JOIN tot t JOIN e ON e.digit = d.digit
-         ORDER BY d.digit""",
-
-    // skyline by definition: NOT EXISTS a componentwise-dominating part
-    "q_skyline" ->
-      """SELECT b.p_partkey, b.p_size,
-                ROUND(b.p_retailprice, 2) AS p_retailprice
-         FROM part b
-         WHERE NOT EXISTS (
-           SELECT 1 FROM part a
-           WHERE a.p_size <= b.p_size
-             AND a.p_retailprice <= b.p_retailprice
-             AND (a.p_size < b.p_size OR a.p_retailprice < b.p_retailprice))
-         ORDER BY b.p_size, b.p_partkey""",
-
-    // Neyman allocation from one exact-moment aggregate; floor(x+0.5)
-    // rounding so neither engine's round-half mode matters, and the
-    // N_h*sd weights rounded to 10dp + decimal-summed so wtot (and
-    // hence every allocation) is order-free cross-engine
-    "q_neyman" ->
-      """WITH s AS (SELECT c_mktsegment, count(*) AS n_pop,
-                  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) AS s1,
-                  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,4))
-                           * CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) AS s2
-                FROM customer GROUP BY c_mktsegment),
-         t AS (SELECT c_mktsegment, n_pop,
-                 sqrt(greatest(0.0, s2 / n_pop - (s1 / n_pop) * (s1 / n_pop)))
-                   AS sd
-               FROM s),
-         t2 AS (SELECT c_mktsegment, n_pop, sd,
-                  CAST(round(n_pop * sd, 10) AS DECIMAL(28,10)) AS w
-                FROM t),
-         w AS (SELECT CAST(SUM(w) AS DOUBLE) AS wtot FROM t2)
-         SELECT t2.c_mktsegment, t2.n_pop, ROUND(t2.sd, 6) AS sd,
-                CAST(floor(CAST(1000 AS DOUBLE) * CAST(t2.w AS DOUBLE)
-                           / w.wtot + 0.5) AS BIGINT) AS n_alloc
-         FROM t2 CROSS JOIN w ORDER BY t2.c_mktsegment""",
-
-    // brute-force aHash replay: the PNG round-trip is lossless, so the
-    // raster IS the key arithmetic; bits compare 16*s_i > total in pure
-    // integers, pairs are all-pairs Hamming <= 3 (the Spark side's
-    // banded join is provably equal by pigeonhole: 4 bands > 3 flips)
-    "q_phash_pairs" ->
-      """WITH k AS (SELECT o_orderkey AS k FROM orders WHERE o_orderkey < 600),
-         px AS (SELECT k,
-                  CASE WHEN k % 5 = 4 THEN k - 1 ELSE k END AS base,
-                  CASE WHEN k % 5 = 4 THEN 1 ELSE 0 END AS delta,
-                  unnest(range(16)) AS i
-                FROM k),
-         s AS (SELECT k, i,
-                 ((base * 31 + i * 97
-                   + CASE WHEN i = 0 THEN delta ELSE 0 END) % 256)
-                 + ((base * 53 + i * 193) % 256)
-                 + ((base * 71 + i * 41) % 256) AS s
-               FROM px),
-         t AS (SELECT k, SUM(s) AS tot FROM s GROUP BY k),
-         h AS (SELECT s.k,
-                 SUM(CASE WHEN 16 * s.s > t.tot THEN 1 << s.i ELSE 0 END) AS ph
-               FROM s JOIN t USING (k) GROUP BY s.k)
-         SELECT a.k AS a_id, b.k AS b_id,
-                CAST(bit_count(xor(a.ph, b.ph)) AS BIGINT) AS hamming
-         FROM h a JOIN h b ON a.k < b.k
-         WHERE bit_count(xor(a.ph, b.ph)) <= 3
-         ORDER BY a_id, b_id""",
-
-    // identical replay, threshold 2 — the multi-index join is exact by
-    // the same pigeonhole argument (>= blocks-maxHamming chunks agree)
-    "q_phash_multiindex" ->
-      """WITH k AS (SELECT o_orderkey AS k FROM orders WHERE o_orderkey < 600),
-         px AS (SELECT k,
-                  CASE WHEN k % 5 = 4 THEN k - 1 ELSE k END AS base,
-                  CASE WHEN k % 5 = 4 THEN 1 ELSE 0 END AS delta,
-                  unnest(range(16)) AS i
-                FROM k),
-         s AS (SELECT k, i,
-                 ((base * 31 + i * 97
-                   + CASE WHEN i = 0 THEN delta ELSE 0 END) % 256)
-                 + ((base * 53 + i * 193) % 256)
-                 + ((base * 71 + i * 41) % 256) AS s
-               FROM px),
-         t AS (SELECT k, SUM(s) AS tot FROM s GROUP BY k),
-         h AS (SELECT s.k,
-                 SUM(CASE WHEN 16 * s.s > t.tot THEN 1 << s.i ELSE 0 END) AS ph
-               FROM s JOIN t USING (k) GROUP BY s.k)
-         SELECT a.k AS a_id, b.k AS b_id,
-                CAST(bit_count(xor(a.ph, b.ph)) AS BIGINT) AS hamming
-         FROM h a JOIN h b ON a.k < b.k
-         WHERE bit_count(xor(a.ph, b.ph)) <= 2
-         ORDER BY a_id, b_id""",
-
-    // one scan of orders folds every constraint metric; the RI probe is
-    // the same distinct-dim-keyset left join
-    "q_dq_suite" ->
-      """WITH j AS (
-           SELECT o.*, c.c_custkey AS dim_key
-           FROM orders o
-           LEFT JOIN (SELECT DISTINCT c_custkey FROM customer) c
-             ON o.o_custkey = c.c_custkey),
-         m AS (
-           SELECT count(*) AS n_rows,
-             CAST(SUM(CASE WHEN o_custkey IS NOT NULL THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_complete,
-             count(DISTINCT o_orderkey) AS n_distinct,
-             min(CAST(o_totalprice AS DOUBLE)) AS min_bound,
-             CAST(SUM(CASE WHEN o_orderstatus IN ('F','P','O')
-                      THEN 1 ELSE 0 END) AS BIGINT) AS n_in_domain,
-             CAST(SUM(CASE WHEN dim_key IS NOT NULL THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_ri_ok
-           FROM j)
-         SELECT * FROM (
-           SELECT 'row_count_nonempty' AS "constraint",
-                  CAST(n_rows AS DOUBLE) AS metric, n_rows > 0 AS passed
-           FROM m
-           UNION ALL SELECT 'completeness_o_custkey',
-             ROUND(CAST(n_complete AS DOUBLE) / n_rows, 6),
-             n_complete = n_rows FROM m
-           UNION ALL SELECT 'uniqueness_o_orderkey',
-             ROUND(CAST(n_distinct AS DOUBLE) / n_rows, 6),
-             n_distinct = n_rows FROM m
-           UNION ALL SELECT 'min_bound_o_totalprice',
-             ROUND(min_bound, 6), min_bound >= 0.0 FROM m
-           UNION ALL SELECT 'domain_o_orderstatus',
-             ROUND(CAST(n_in_domain AS DOUBLE) / n_rows, 6),
-             n_in_domain = n_rows FROM m
-           UNION ALL SELECT 'ri_o_custkey_c_custkey',
-             ROUND(CAST(n_ri_ok AS DOUBLE) / n_rows, 6),
-             n_ri_ok = n_rows FROM m)
-         ORDER BY "constraint"""",
-
-    // same distinct-basket pair counts as q_assoc_rules; cosine =
-    // sup_ab / √(n_a·n_b), ranked on the rounded value
-    "q_item_cf" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey,
-                            CAST(l_partkey AS VARCHAR) AS p
-                     FROM lineitem),
-         s AS (SELECT p, count(*) AS n_orders FROM li GROUP BY p),
-         pr AS (
-           SELECT a.p AS u, b.p AS v, count(*) AS sup_ab
-           FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-                              AND a.p < b.p
-           GROUP BY u, v HAVING count(*) >= 2)
-         SELECT pr.u, pr.v, pr.sup_ab,
-                ROUND(CAST(pr.sup_ab AS DOUBLE)
-                      / sqrt(CAST(su.n_orders * sv.n_orders AS DOUBLE)), 6)
-                  AS cosine
-         FROM pr JOIN s su ON su.p = pr.u JOIN s sv ON sv.p = pr.v
-         ORDER BY cosine DESC, pr.u, pr.v LIMIT 50""",
-
-    // observed-cells-only identity χ² = Σ_obs[(o−e)²/e − e] + n; terms
-    // rounded at 6 dp and summed in exact decimal
-    "q_chi2_indep" ->
-      """WITH f AS (
-           SELECT cu.c_mktsegment AS a, o.o_orderpriority AS b
-           FROM orders o JOIN customer cu ON o.o_custkey = cu.c_custkey),
-         obs AS (SELECT a, b, count(*) AS o FROM f GROUP BY a, b),
-         rt AS (SELECT a, CAST(SUM(o) AS BIGINT) AS ra FROM obs GROUP BY a),
-         ct AS (SELECT b, CAST(SUM(o) AS BIGINT) AS cb FROM obs GROUP BY b),
-         tot AS (SELECT CAST(SUM(o) AS BIGINT) AS n,
-                        count(DISTINCT a) AS r, count(DISTINCT b) AS c
-                 FROM obs),
-         terms AS (
-           SELECT tot.n, tot.r, tot.c,
-                  CAST(ROUND((obs.o - CAST(rt.ra AS DOUBLE) * ct.cb / tot.n)
-                           * (obs.o - CAST(rt.ra AS DOUBLE) * ct.cb / tot.n)
-                           / (CAST(rt.ra AS DOUBLE) * ct.cb / tot.n)
-                           - CAST(rt.ra AS DOUBLE) * ct.cb / tot.n, 6)
-                       AS DECIMAL(18,6)) AS term
-           FROM obs JOIN rt USING (a) JOIN ct USING (b) CROSS JOIN tot)
-         SELECT max(n) AS n, max(r) AS r, max(c) AS c,
-                (max(r) - 1) * (max(c) - 1) AS dof,
-                ROUND(CAST(SUM(term) AS DOUBLE) + max(n), 6) AS chi2
-         FROM terms""",
-
-    // shared pooled-bounds buckets, +1-per-occupied-bucket smoothing,
-    // (p−q)·ln(p/q) terms rounded then decimal-summed
-    "q_psi" ->
-      """WITH allv AS (
-           SELECT CAST(o_totalprice AS DOUBLE) AS v,
-                  CASE WHEN o_orderdate < TIMESTAMP '1998-01-01'
-                       THEN 1 ELSE 0 END AS is_ref
-           FROM orders WHERE o_totalprice IS NOT NULL),
-         bounds AS (SELECT min(v) AS lo, max(v) AS hi FROM allv),
-         bucketed AS (
-           SELECT CASE WHEN b.hi = b.lo THEN 0
-                       ELSE LEAST(9, CAST(FLOOR((v - b.lo)
-                         / ((b.hi - b.lo) / 10)) AS INTEGER)) END AS bucket,
-                  CAST(SUM(is_ref) AS BIGINT) AS n_ref,
-                  CAST(SUM(1 - is_ref) AS BIGINT) AS n_cur
-           FROM allv CROSS JOIN bounds b GROUP BY 1),
-         totals AS (SELECT CAST(SUM(n_ref) AS BIGINT) AS t_ref,
-                           CAST(SUM(n_cur) AS BIGINT) AS t_cur,
-                           count(*) AS nb
-                    FROM bucketed),
-         terms AS (
-           SELECT bucket, n_ref, n_cur,
-                  CAST(n_ref + 1 AS DOUBLE) / (t_ref + nb) AS p,
-                  CAST(n_cur + 1 AS DOUBLE) / (t_cur + nb) AS q,
-                  ROUND((CAST(n_ref + 1 AS DOUBLE) / (t_ref + nb)
-                       - CAST(n_cur + 1 AS DOUBLE) / (t_cur + nb))
-                      * ln((CAST(n_ref + 1 AS DOUBLE) / (t_ref + nb))
-                         / (CAST(n_cur + 1 AS DOUBLE) / (t_cur + nb))), 6)
-                    AS psi_term
-           FROM bucketed CROSS JOIN totals),
-         tot2 AS (SELECT ROUND(CAST(SUM(CAST(psi_term AS DECIMAL(18,6)))
-                    AS DOUBLE), 6) AS psi_total FROM terms)
-         SELECT bucket, n_ref, n_cur, ROUND(p, 6) AS p, ROUND(q, 6) AS q,
-                psi_term, psi_total
-         FROM terms CROSS JOIN tot2 ORDER BY bucket""",
-
-    // same per-dim unnest as q_embed_centroids; per-vector distances
-    // rounded then decimal-summed, centroid-vs-global equi-join shape
-    "q_class_separation" ->
-      """WITH d AS (
-           SELECT vec_id, label, u.pos AS pos, u.v AS v
-           FROM (SELECT vec_id, label,
-                   unnest([{'pos': i, 'v': CAST(embedding[i] AS DOUBLE)}
-                           for i in range(1, len(embedding) + 1)]) AS u
-                 FROM embeddings)),
-         cl AS (SELECT label, pos, AVG(v) AS m FROM d GROUP BY label, pos),
-         cg AS (SELECT pos, AVG(v) AS g FROM d GROUP BY pos),
-         dist AS (
-           SELECT d.vec_id, d.label,
-                  CAST(ROUND(sqrt(SUM((d.v - c.m) * (d.v - c.m))), 4)
-                       AS DECIMAL(18,4)) AS dist
-           FROM d JOIN cl c ON c.label = d.label AND c.pos = d.pos
-           GROUP BY d.vec_id, d.label),
-         w AS (SELECT label, count(*) AS n_vecs,
-                      ROUND(CAST(SUM(dist) AS DOUBLE) / count(*), 4)
-                        AS intra
-               FROM dist GROUP BY label),
-         btw AS (
-           SELECT c.label,
-                  ROUND(sqrt(SUM((c.m - g.g) * (c.m - g.g))), 4) AS inter
-           FROM cl c JOIN cg g USING (pos) GROUP BY c.label)
-         SELECT w.label, w.n_vecs, w.intra, b.inter,
-                ROUND(b.inter / w.intra, 4) AS separation
-         FROM w JOIN btw b ON b.label = w.label ORDER BY w.label""",
-
-    // per-dim variances rounded then decimal-folded; PR = (Σv)²/Σv²
-    "q_effective_dim" ->
-      """WITH d AS (
-           SELECT u.pos AS pos, u.v AS v
-           FROM (SELECT unnest([{'pos': i, 'v': CAST(embedding[i] AS DOUBLE)}
-                                for i in range(1, len(embedding) + 1)]) AS u
-                 FROM embeddings)),
-         pd AS (
-           SELECT pos,
-                  CAST(ROUND(AVG(v * v) - AVG(v) * AVG(v), 6)
-                       AS DECIMAL(18,6)) AS variance
-           FROM d GROUP BY pos)
-         SELECT count(*) AS n_dims,
-                ROUND(CAST(SUM(variance) AS DOUBLE), 6) AS total_variance,
-                ROUND(CAST(SUM(variance) AS DOUBLE)
-                      * CAST(SUM(variance) AS DOUBLE)
-                      / CAST(SUM(CAST(variance * variance
-                                      AS DECIMAL(38,12))) AS DOUBLE), 4)
-                  AS participation_ratio
-         FROM pd""",
-
-    // vec_id parity era split; |Δmean|/pooled sd, rank on rounded z
-    "q_embed_drift" ->
-      """WITH d AS (
-           SELECT vec_id % 2 AS era, u.pos AS pos, u.v AS v
-           FROM (SELECT vec_id,
-                   unnest([{'pos': i - 1, 'v': CAST(embedding[i] AS DOUBLE)}
-                           for i in range(1, len(embedding) + 1)]) AS u
-                 FROM embeddings)),
-         st AS (
-           SELECT pos,
-                  AVG(CASE WHEN era = 0 THEN v END) AS m0,
-                  AVG(CASE WHEN era = 1 THEN v END) AS m1,
-                  AVG(v * v) AS m2, AVG(v) AS m
-           FROM d GROUP BY pos)
-         SELECT pos, ROUND(m0, 4) AS mean_a, ROUND(m1, 4) AS mean_b,
-                ROUND(abs(m1 - m0) / sqrt(m2 - m * m), 4) AS drift_z
-         FROM st ORDER BY drift_z DESC, pos LIMIT 10""",
-
-    // same unrolled 2-iteration propagation as q_label_prop, then the
-    // three modularity aggregates over the ONE-direction edge list
-    "q_modularity" ->
-      """WITH e0 AS (SELECT DISTINCT 's' || l_suppkey AS src,
-                            'p' || l_partkey AS dst FROM lineitem),
-         e AS (SELECT src, dst FROM e0
-               UNION SELECT dst AS src, src AS dst FROM e0),
-         r0 AS (SELECT DISTINCT src AS node, src AS label FROM e),
-         n1 AS (SELECT e.src AS node, r.label, count(*) AS cnt
-                FROM e JOIN r0 r ON e.dst = r.node GROUP BY e.src, r.label),
-         r1 AS (SELECT node, label FROM (
-                  SELECT node, label, row_number() OVER (
-                    PARTITION BY node ORDER BY cnt DESC, label) AS rn
-                  FROM n1) WHERE rn = 1),
-         n2 AS (SELECT e.src AS node, r.label, count(*) AS cnt
-                FROM e JOIN r1 r ON e.dst = r.node GROUP BY e.src, r.label),
-         r2 AS (SELECT node, label FROM (
-                  SELECT node, label, row_number() OVER (
-                    PARTITION BY node ORDER BY cnt DESC, label) AS rn
-                  FROM n2) WHERE rn = 1),
-         mm AS (SELECT count(*) AS m_edges FROM e0),
-         ec AS (
-           SELECT ls.label, count(*) AS e_in
-           FROM e0 JOIN r2 ls ON ls.node = e0.src
-                   JOIN r2 ld ON ld.node = e0.dst
-           WHERE ls.label = ld.label
-           GROUP BY ls.label),
-         deg AS (
-           SELECT node, count(*) AS d FROM (
-             SELECT src AS node FROM e0
-             UNION ALL SELECT dst AS node FROM e0)
-           GROUP BY node),
-         dc AS (
-           SELECT r.label, CAST(SUM(d.d) AS BIGINT) AS d_sum,
-                  count(*) AS n_members
-           FROM r2 r JOIN deg d USING (node) GROUP BY r.label),
-         terms AS (
-           SELECT dc.label, dc.n_members,
-                  COALESCE(ec.e_in, 0) AS e_in, dc.d_sum,
-                  ROUND(CAST(COALESCE(ec.e_in, 0) AS DOUBLE) / mm.m_edges
-                      - (CAST(dc.d_sum AS DOUBLE) / (2 * mm.m_edges))
-                      * (CAST(dc.d_sum AS DOUBLE) / (2 * mm.m_edges)), 6)
-                    AS q_term
-           FROM dc LEFT JOIN ec USING (label) CROSS JOIN mm),
-         q AS (SELECT ROUND(CAST(SUM(CAST(q_term AS DECIMAL(18,6)))
-                    AS DOUBLE), 6) AS modularity FROM terms)
-         SELECT t.label, t.n_members, t.e_in, t.d_sum, t.q_term,
-                q.modularity
-         FROM terms t CROSS JOIN q
-         ORDER BY t.n_members DESC, t.label LIMIT 20""",
-
-    // LOO in double: (Σ_seg − x)/(n_seg − 1); decimal only for the sums
-    "q_target_encoding" ->
-      """WITH o AS (
-           SELECT o_orderkey, o_custkey,
-                  CAST(o_totalprice AS DECIMAL(18,2)) AS y
-           FROM orders),
-         j AS (SELECT o.*, c.c_mktsegment
-               FROM o JOIN customer c ON o.o_custkey = c.c_custkey),
-         seg AS (SELECT c_mktsegment, SUM(y) AS sy, count(*) AS ny
-                 FROM j GROUP BY 1)
-         SELECT j.o_orderkey, j.c_mktsegment,
-                ROUND(CAST(j.y AS DOUBLE), 2) AS y,
-                ROUND((CAST(s.sy AS DOUBLE) - CAST(j.y AS DOUBLE))
-                      / (s.ny - 1), 4) AS loo_encoding
-         FROM j JOIN seg s USING (c_mktsegment)
-         WHERE j.o_orderkey % 100 = 0
-         ORDER BY j.o_orderkey""",
-
-    // same md5→60-bit uniform chain as q_weighted_sample; Laplace noise
-    // as b·(ln u1 − ln u2), b = 1/ε = 1
-    "q_dp_counts" ->
-      """WITH c AS (
-           SELECT lang, source, count(*) AS n
-           FROM documents GROUP BY 1, 2),
-         u AS (
-           SELECT lang, source, n,
-                  ((('0x' || substr(md5('42|1|' || lang || '|' || source),
-                      1, 15))::BIGINT + 1.0) / 1.152921504606846976e18)
-                    AS u1,
-                  ((('0x' || substr(md5('42|2|' || lang || '|' || source),
-                      1, 15))::BIGINT + 1.0) / 1.152921504606846976e18)
-                    AS u2
-           FROM c)
-         SELECT lang, source, n,
-                ROUND(n + (ln(u1) - ln(u2)) / 1.0, 4) AS noisy_n
-         FROM u ORDER BY lang, source""",
-
-    // 20 deterministic half-samples via md5 parity; exact medians
-    "q_median_ci" -> {
-      val halves = (0 until 20).map { b =>
-        s"""quantile_cont(CASE WHEN (('0x' || substr(md5('$b|' ||
-            CAST(o_custkey AS VARCHAR)), 1, 15))::BIGINT) % 2 = 0
-            THEN rev END, 0.5)"""
-      }
-      val mcols = (0 until 20).map(b =>
-        s"CAST(ROUND(${halves(b)}, 4) AS DECIMAL(18,4)) AS m$b")
-        .mkString(",\n                  ")
-      val sumM = (0 until 20).map(b => s"m$b").mkString(" + ")
-      val sumSq = (0 until 20)
-        .map(b => s"CAST(m$b AS DOUBLE) * CAST(m$b AS DOUBLE)")
-        .mkString(" + ")
-      s"""WITH rev AS (
-           SELECT o_custkey,
-                  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
-                       AS DOUBLE) AS rev
-           FROM orders GROUP BY o_custkey),
-         ms AS (
-           SELECT ROUND(quantile_cont(rev, 0.5), 2) AS median,
-                  $mcols
-           FROM rev)
-         SELECT median,
-                ROUND(CAST($sumM AS DOUBLE) / 20.0, 2)
-                  AS half_sample_mean,
-                ROUND(sqrt(CAST($sumSq AS DOUBLE) / 20.0
-                      - (CAST($sumM AS DOUBLE) / 20.0)
-                      * (CAST($sumM AS DOUBLE) / 20.0)), 4)
-                  AS half_sample_se
-         FROM ms"""
-    },
-
-    // top-20 parts by distinct-order count; X-before-Y on first buys
-    "q_cross_sell" ->
-      """WITH tp AS (
-           SELECT l_partkey FROM (
-             SELECT l_partkey, count(*) AS n_orders
-             FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)
-             GROUP BY l_partkey)
-           ORDER BY n_orders DESC, l_partkey LIMIT 20),
-         fb AS (
-           SELECT o.o_custkey AS cust, li.l_partkey AS part,
-                  min(o.o_orderdate) AS first_dt
-           FROM lineitem li
-           JOIN tp ON tp.l_partkey = li.l_partkey
-           JOIN orders o ON o.o_orderkey = li.l_orderkey
-           GROUP BY 1, 2)
-         SELECT a.part AS x, b.part AS y, count(*) AS support
-         FROM fb a JOIN fb b ON a.cust = b.cust
-                            AND a.first_dt < b.first_dt
-         GROUP BY 1, 2
-         ORDER BY support DESC, x, y LIMIT 30""",
-
-    // ln(unit price) rounded at 2 dp first (the exact ratio both
-    // engines compute), then 6-dp lns into decimal moments
-    "q_price_elasticity" ->
-      """WITH src AS (
-           SELECT l_returnflag,
-                  CAST(ROUND(ln(ROUND(CAST(l_extendedprice AS DOUBLE)
-                    / CAST(l_quantity AS DOUBLE), 2)), 6)
-                    AS DECIMAL(18,6)) AS x,
-                  CAST(ROUND(ln(CAST(l_quantity AS DOUBLE)), 6)
-                    AS DECIMAL(18,6)) AS y
-           FROM lineitem
-           WHERE l_quantity > 0 AND l_extendedprice > 0),
-         m AS (
-           SELECT l_returnflag, count(*) AS n,
-                  SUM(x) AS sx, SUM(y) AS sy,
-                  SUM(CAST(x * x AS DECIMAL(38,12))) AS sxx,
-                  SUM(CAST(y * y AS DECIMAL(38,12))) AS syy,
-                  SUM(CAST(x * y AS DECIMAL(38,12))) AS sxy
-           FROM src GROUP BY l_returnflag)
-         SELECT l_returnflag, n,
-           ROUND((n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-               / (n * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)), 4)
-             AS elasticity,
-           ROUND((n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-               * (n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-               / ((n * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-                * (n * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 4)
-             AS r2
-         FROM m ORDER BY l_returnflag""",
-
-    // quintile cutoffs from exact percentiles; score = 1 + Σ(x > cut)
-    "q_rfm" ->
-      """WITH today AS (
-           SELECT CAST(max(o_orderdate) AS DATE) AS today FROM orders),
-         rfm AS (
-           SELECT o_custkey,
-                  min(datediff('day', CAST(o_orderdate AS DATE), t.today))
-                    AS recency,
-                  count(*) AS frequency,
-                  SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS monetary
-           FROM orders CROSS JOIN today t GROUP BY o_custkey),
-         th AS (SELECT
-             quantile_cont(CAST(recency AS DOUBLE), 0.2) AS r20,
-             quantile_cont(CAST(recency AS DOUBLE), 0.4) AS r40,
-             quantile_cont(CAST(recency AS DOUBLE), 0.6) AS r60,
-             quantile_cont(CAST(recency AS DOUBLE), 0.8) AS r80,
-             quantile_cont(CAST(frequency AS DOUBLE), 0.2) AS f20,
-             quantile_cont(CAST(frequency AS DOUBLE), 0.4) AS f40,
-             quantile_cont(CAST(frequency AS DOUBLE), 0.6) AS f60,
-             quantile_cont(CAST(frequency AS DOUBLE), 0.8) AS f80,
-             quantile_cont(CAST(monetary AS DOUBLE), 0.2) AS m20,
-             quantile_cont(CAST(monetary AS DOUBLE), 0.4) AS m40,
-             quantile_cont(CAST(monetary AS DOUBLE), 0.6) AS m60,
-             quantile_cont(CAST(monetary AS DOUBLE), 0.8) AS m80
-           FROM rfm)
-         SELECT r.o_custkey, r.recency, r.frequency,
-           ROUND(CAST(r.monetary AS DOUBLE), 2) AS monetary,
-           6 - (1 + (CASE WHEN CAST(r.recency AS DOUBLE) > t.r20 THEN 1 ELSE 0 END)
-                  + (CASE WHEN CAST(r.recency AS DOUBLE) > t.r40 THEN 1 ELSE 0 END)
-                  + (CASE WHEN CAST(r.recency AS DOUBLE) > t.r60 THEN 1 ELSE 0 END)
-                  + (CASE WHEN CAST(r.recency AS DOUBLE) > t.r80 THEN 1 ELSE 0 END))
-             AS r_score,
-           1 + (CASE WHEN CAST(r.frequency AS DOUBLE) > t.f20 THEN 1 ELSE 0 END)
-             + (CASE WHEN CAST(r.frequency AS DOUBLE) > t.f40 THEN 1 ELSE 0 END)
-             + (CASE WHEN CAST(r.frequency AS DOUBLE) > t.f60 THEN 1 ELSE 0 END)
-             + (CASE WHEN CAST(r.frequency AS DOUBLE) > t.f80 THEN 1 ELSE 0 END)
-             AS f_score,
-           1 + (CASE WHEN CAST(r.monetary AS DOUBLE) > t.m20 THEN 1 ELSE 0 END)
-             + (CASE WHEN CAST(r.monetary AS DOUBLE) > t.m40 THEN 1 ELSE 0 END)
-             + (CASE WHEN CAST(r.monetary AS DOUBLE) > t.m60 THEN 1 ELSE 0 END)
-             + (CASE WHEN CAST(r.monetary AS DOUBLE) > t.m80 THEN 1 ELSE 0 END)
-             AS m_score
-         FROM rfm r CROSS JOIN th t
-         WHERE r.o_custkey % 50 = 0 ORDER BY r.o_custkey""",
-
-    // cohort-partitioned prefix of exact decimal sums
-    "q_ltv_curve" ->
-      """WITH o AS (
-           SELECT o_custkey, year(o_orderdate) AS yr,
-                  CAST(o_totalprice AS DECIMAL(18,2)) AS rev
-           FROM orders),
-         ch AS (SELECT o_custkey, min(yr) AS cohort FROM o
-                GROUP BY o_custkey),
-         ba AS (SELECT c.cohort, o.yr - c.cohort AS age,
-                       SUM(o.rev) AS arev
-                FROM o JOIN ch c USING (o_custkey) GROUP BY 1, 2),
-         sz AS (SELECT cohort, count(*) AS n_customers FROM ch
-                GROUP BY cohort)
-         SELECT ba.cohort, ba.age, sz.n_customers,
-           ROUND(CAST(SUM(ba.arev) OVER (PARTITION BY ba.cohort
-               ORDER BY ba.age ROWS BETWEEN UNBOUNDED PRECEDING
-               AND CURRENT ROW) AS DOUBLE) / sz.n_customers, 2)
-             AS cum_ltv_per_customer
-         FROM ba JOIN sz USING (cohort)
-         ORDER BY ba.cohort, ba.age""",
-
-    // exact decimal sums at each rollup level; shares as doubles
-    "q_share_of_parent" ->
-      """WITH bn AS (
-           SELECT r.r_name, n.n_name,
-                  SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS nrev
-           FROM orders o
-           JOIN customer c ON o.o_custkey = c.c_custkey
-           JOIN nation n ON c.c_nationkey = n.n_nationkey
-           JOIN region r ON n.n_regionkey = r.r_regionkey
-           GROUP BY r.r_name, n.n_name),
-         br AS (SELECT r_name, SUM(nrev) AS rrev FROM bn GROUP BY r_name),
-         t AS (SELECT SUM(rrev) AS trev FROM br)
-         SELECT bn.r_name, bn.n_name,
-                ROUND(CAST(bn.nrev AS DOUBLE), 2) AS revenue,
-                ROUND(CAST(bn.nrev AS DOUBLE) / CAST(br.rrev AS DOUBLE), 6)
-                  AS share_of_region,
-                ROUND(CAST(br.rrev AS DOUBLE) / CAST(t.trev AS DOUBLE), 6)
-                  AS region_share_of_total
-         FROM bn JOIN br USING (r_name) CROSS JOIN t
-         ORDER BY bn.r_name, bn.n_name""",
-
-    // symmetrized edges ⋈ integer degrees; Pearson from decimal moments
-    "q_assortativity" ->
-      """WITH e0 AS (SELECT DISTINCT 's' || l_suppkey AS src,
-                            'p' || l_partkey AS dst FROM lineitem),
-         sym AS (SELECT src, dst FROM e0
-                 UNION ALL SELECT dst AS src, src AS dst FROM e0),
-         deg AS (SELECT src AS node, count(*) AS d FROM sym GROUP BY src),
-         pairs AS (
-           SELECT CAST(dx.d AS DECIMAL(18,0)) AS x,
-                  CAST(dy.d AS DECIMAL(18,0)) AS y
-           FROM sym JOIN deg dx ON dx.node = sym.src
-                    JOIN deg dy ON dy.node = sym.dst),
-         m AS (SELECT count(*) AS n, SUM(x) AS sx, SUM(y) AS sy,
-                 SUM(CAST(x * x AS DECIMAL(38,0))) AS sxx,
-                 SUM(CAST(y * y AS DECIMAL(38,0))) AS syy,
-                 SUM(CAST(x * y AS DECIMAL(38,0))) AS sxy
-               FROM pairs)
-         SELECT n AS n_directed_edges,
-           ROUND((n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-               / sqrt((n * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-                    * (n * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6)
-             AS assortativity
-         FROM m""",
-
-    // one stats pass per group; scaling replayed row-locally
-    "q_feature_scaling" ->
-      """WITH li AS (
-           SELECT l_orderkey, l_linenumber, l_returnflag,
-                  CAST(l_extendedprice AS DECIMAL(18,2)) AS x
-           FROM lineitem),
-         st AS (
-           SELECT l_returnflag,
-                  min(CAST(x AS DOUBLE)) AS mn,
-                  max(CAST(x AS DOUBLE)) AS mx,
-                  count(*) AS n, SUM(x) AS sx,
-                  SUM(CAST(x * x AS DECIMAL(38,4))) AS sxx
-           FROM li GROUP BY 1)
-         SELECT li.l_returnflag, li.l_orderkey, li.l_linenumber,
-                ROUND(CAST(li.x AS DOUBLE), 2) AS x,
-                ROUND((CAST(li.x AS DOUBLE) - st.mn) / (st.mx - st.mn), 6)
-                  AS minmax,
-                ROUND((CAST(li.x AS DOUBLE) - CAST(st.sx AS DOUBLE) / st.n)
-                      / sqrt(CAST(st.sxx AS DOUBLE) / st.n
-                             - (CAST(st.sx AS DOUBLE) / st.n)
-                             * (CAST(st.sx AS DOUBLE) / st.n)), 4) AS zscore
-         FROM li JOIN st USING (l_returnflag)
-         WHERE li.l_orderkey % 500 = 0
-         ORDER BY li.l_orderkey, li.l_linenumber, li.l_returnflag,
-                  ROUND(CAST(li.x AS DOUBLE), 2)""",
-
-    // +0.5 smoothing; 4-dp WoE; IV terms rounded then decimal-summed
-    "q_woe_iv" ->
-      """WITH tgt AS (
-           SELECT o_custkey,
-                  max(CASE WHEN o_orderpriority = '1-URGENT'
-                      THEN 1 ELSE 0 END) AS y
-           FROM orders GROUP BY 1),
-         bins AS (
-           SELECT c.c_mktsegment, CAST(SUM(y) AS BIGINT) AS g,
-                  CAST(SUM(1 - y) AS BIGINT) AS b
-           FROM customer c JOIN tgt t ON c.c_custkey = t.o_custkey
-           GROUP BY 1),
-         tot AS (SELECT CAST(SUM(g) AS BIGINT) AS gt,
-                        CAST(SUM(b) AS BIGINT) AS bt, count(*) AS k
-                 FROM bins),
-         terms AS (
-           SELECT bins.c_mktsegment, bins.g, bins.b,
-                  ROUND(ln(((CAST(bins.g AS DOUBLE) + 0.5)
-                            / (tot.gt + 0.5 * tot.k))
-                         / ((CAST(bins.b AS DOUBLE) + 0.5)
-                            / (tot.bt + 0.5 * tot.k))), 4) AS woe,
-                  CAST(ROUND(((CAST(bins.g AS DOUBLE) + 0.5)
-                              / (tot.gt + 0.5 * tot.k)
-                            - (CAST(bins.b AS DOUBLE) + 0.5)
-                              / (tot.bt + 0.5 * tot.k))
-                           * ROUND(ln(((CAST(bins.g AS DOUBLE) + 0.5)
-                                       / (tot.gt + 0.5 * tot.k))
-                                    / ((CAST(bins.b AS DOUBLE) + 0.5)
-                                       / (tot.bt + 0.5 * tot.k))), 4), 6)
-                       AS DECIMAL(18,6)) AS iv_term
-           FROM bins CROSS JOIN tot),
-         iv AS (SELECT ROUND(CAST(SUM(iv_term) AS DOUBLE), 6) AS iv_total
-                FROM terms)
-         SELECT t.c_mktsegment, t.g, t.b, t.woe, iv.iv_total
-         FROM terms t CROSS JOIN iv ORDER BY t.c_mktsegment""",
-  )
+    families.map(_.oracleSql).reduce(_ ++ _)
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType}
 
 /** Named access to the driver-provided testdata tables (TESTDATA.md).
   *
-  * Every `SparkEntry.queries` entry receives `(spark, sfDir)`; this is the
+  * Every declared query's builder receives `(spark, sfDir)`; this is the
   * single place that maps a logical table name to its parquet path so the
   * scan (and therefore Catalyst's pushdown/pruning) starts from one spot.
   */

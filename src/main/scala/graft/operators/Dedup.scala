@@ -733,7 +733,7 @@ object Dedup {
     * [[hammingPairsMultiIndex]], whose concatenated-subset keys keep
     * maxHamming > 1 affordable at 10⁸+ rows. Trading maxHamming down
     * with width is exactly the production pHash/SimHash dedup trade
-    * (measured in ScaleProbe's hamming family).
+    * (measured in the hamming scaling ladder).
     *
     * Output: (a_id, b_id, hamming), a_id < b_id. */
   def hammingPairs(df: DataFrame, idCol: String, hashCol: String,
@@ -863,7 +863,7 @@ object Dedup {
     * For the common minDocs=2, "in two distinct docs" is exactly
     * min(doc) != max(doc) — a single-phase agg with map-side combine
     * instead of countDistinct's two-level expansion (the dominant cost
-    * of the anchor stage, measured in the ScaleProbe spans family). */
+    * of the anchor stage, measured in the spans scaling ladder). */
   private def multiDocKeys(df: DataFrame, keyCol: String, minDocs: Int): DataFrame =
     if (minDocs == 2)
       df.groupBy(keyCol).agg(min(col("__id")).as("__mn"), max(col("__id")).as("__mx"))

@@ -899,8 +899,11 @@ object Stats {
       .agg(count(lit(1)).as("o"))
     val rowT = obs.groupBy("a").agg(sum("o").as("ra"))
     val colT = obs.groupBy("b").agg(sum("o").as("cb"))
-    val tot = obs.agg(sum("o").as("n"),
-      countDistinct(col("a")).as("r"), countDistinct(col("b")).as("c"))
+    // r and c from the margins: two distinct counts in one aggregate plan
+    // an Expand whose column order follows expression-id hashes
+    val tot = obs.agg(sum("o").as("n"))
+      .crossJoin(rowT.agg(count(col("a")).as("r")))
+      .crossJoin(colT.agg(count(col("b")).as("c")))
     val e = col("ra").cast("double") * col("cb") / col("n")
     val diff = col("o") - col("e")
     obs.join(broadcast(rowT), Seq("a"))

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.DataType
   *
   * Every op stays inside Catalyst built-ins (no UDFs) so predicate pushdown,
   * column pruning and whole-stage codegen apply unchanged; these compose into
-  * the §3.1 pipelines and are individually wired into `SparkEntry.queries`.
+  * the §3.1 pipelines and into the queries of [[graft.queries.Relational]].
   *
   * Reference behaviors covered (file:line cites into /root/reference):
   *  - strict/lenient schema validation  — jobs/order_glue_job.py:95-101,

@@ -449,11 +449,15 @@ object Corpus extends QueryFamily {
         .orderBy("doc_id"),
       s"""$langIdOracleSql ORDER BY doc_id"""),
 
-    "q_dedup_exact" -> Paired((s, dir) =>
-      docs(s, dir).agg(
-        count(lit(1)).as("n_docs"),
-        countDistinct(fingerprintMd5(col("text"))).as("n_unique"),
-        countDistinct(fingerprintNormalized(col("text"))).as("n_unique_norm")),
+    // one distinct count per aggregate: two in one plan an Expand whose
+    // column order follows expression-id hashes
+    "q_dedup_exact" -> Paired((s, dir) => {
+      val d = docs(s, dir)
+      d.agg(count(lit(1)).as("n_docs"),
+          countDistinct(fingerprintMd5(col("text"))).as("n_unique"))
+        .crossJoin(d.agg(
+          countDistinct(fingerprintNormalized(col("text"))).as("n_unique_norm")))
+    },
       s"""SELECT count(*) AS n_docs,
                 count(DISTINCT md5(text)) AS n_unique,
                 count(DISTINCT md5(array_to_string($tokensSql, ' '))) AS n_unique_norm
@@ -936,12 +940,7 @@ object Corpus extends QueryFamily {
                         CAST(row_number() OVER (ORDER BY score DESC, doc_id)
                              AS INT) AS rank_a
                  FROM bm),
-         nv AS (
-           SELECT vec_id,
-                  list_transform(embedding::DOUBLE[],
-                    x -> x / sqrt(list_sum(list_transform(embedding::DOUBLE[],
-                                                          y -> y * y)))) AS v
-           FROM embeddings),
+         ${Media.nvCte},
          qv AS (SELECT v FROM nv WHERE vec_id = 0),
          scored AS (
            SELECT c.vec_id AS doc_id,

@@ -164,7 +164,7 @@ object Lakehouse extends QueryFamily {
     * final corpus (ids ≡ 4 mod 11 negated, ≡ 3 mod 7 deleted), queried
     * with the ORIGINAL vectors. */
   private val annTopKSql =
-    """WITH corpus AS (
+    s"""WITH corpus AS (
            SELECT vec_id,
                   CASE WHEN vec_id % 11 = 4
                        THEN list_transform(embedding::DOUBLE[], x -> -x)
@@ -178,21 +178,13 @@ object Lakehouse extends QueryFamily {
            FROM corpus),
          nq AS (
            SELECT vec_id,
-                  list_transform(embedding::DOUBLE[],
-                    x -> x / sqrt(list_sum(list_transform(embedding::DOUBLE[],
-                                                          y -> y * y)))) AS v
+                  ${Media.unitVecSql}
            FROM embeddings WHERE vec_id < 16),
          scored AS (
            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
                   ROUND(list_dot_product(q.v, c.v), 6) AS cos
            FROM nq q JOIN nc c ON q.vec_id <> c.vec_id),
-         ranked AS (
-           SELECT query_id, neighbor_id, cos,
-                  row_number() OVER (PARTITION BY query_id
-                                     ORDER BY cos DESC, neighbor_id) AS rank
-           FROM scored)
-         SELECT query_id, rank, neighbor_id, cos FROM ranked
-         WHERE rank <= 5 ORDER BY query_id, rank"""
+         ${Media.top5CosineSql}"""
 
   protected val paired: Seq[(String, Paired)] = Seq(
 
@@ -217,39 +209,15 @@ object Lakehouse extends QueryFamily {
       // the three merged tables equal their pipeline results (first run is a
       // create; reruns are idempotent merges), so the oracle re-derives each
       // pipeline and compares counts + key checksums
-      """SELECT 'order_items' AS entity, count(*) AS n_rows,
+      s"""SELECT 'order_items' AS entity, count(*) AS n_rows,
                 CAST(SUM(l_orderkey) AS BIGINT) AS key_sum
-         FROM (
-           SELECT * FROM (
-             SELECT *, row_number() OVER (
-               PARTITION BY l_orderkey, l_linenumber
-               ORDER BY l_shipdate DESC NULLS LAST, l_partkey, l_suppkey) AS rn
-             FROM lineitem
-             WHERE l_orderkey IS NOT NULL AND l_partkey IS NOT NULL
-               AND l_shipdate IS NOT NULL) t
-           WHERE rn = 1
-             AND EXISTS (SELECT 1 FROM orders o WHERE o.o_orderkey = t.l_orderkey))
+         ${Relational.itemsPipelineFromSql}
          UNION ALL
          SELECT 'orders', count(*), CAST(SUM(o_orderkey) AS BIGINT)
-         FROM (
-           SELECT * FROM (
-             SELECT *, row_number() OVER (
-               PARTITION BY o_orderkey ORDER BY o_orderdate DESC NULLS LAST) AS rn
-             FROM orders
-             WHERE o_orderkey IS NOT NULL AND o_custkey IS NOT NULL
-               AND o_orderdate IS NOT NULL) t
-           WHERE rn = 1
-             AND EXISTS (SELECT 1 FROM lineitem l WHERE l.l_orderkey = t.o_orderkey))
+         ${Relational.ordersPipelineFromSql}
          UNION ALL
          SELECT 'products', count(*), CAST(SUM(p_partkey) AS BIGINT)
-         FROM (
-           SELECT * FROM (
-             SELECT *, row_number() OVER (
-               PARTITION BY p_partkey ORDER BY p_name DESC NULLS LAST) AS rn
-             FROM part
-             WHERE p_partkey IS NOT NULL AND p_name IS NOT NULL) t
-           WHERE rn = 1
-             AND EXISTS (SELECT 1 FROM lineitem l WHERE l.l_partkey = t.p_partkey))
+         ${Relational.productsPipelineFromSql}
          ORDER BY entity"""),
 
     // JSON source round-trip (S-surface breadth): typed table → JSON lines

@@ -7,8 +7,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class Paired(build: QueryFamily.QueryFn, sql: String)
 
 /** A family of declared queries, each entry holding its builder and its
-  * oracle SQL side by side. `SparkEntry.queries` / `oracleSql` merge every
-  * family's maps with the queries SparkEntry defines itself. */
+  * oracle SQL side by side. `SparkEntry.queries` / `oracleSql` merge the
+  * maps of every family in `SparkEntry.families`. */
 abstract class QueryFamily {
   import QueryFamily.QueryFn
 

@@ -47,7 +47,7 @@ import graft.operators.Similarity
   * the merge's matched-key rule — a re-assigned vector must leave its
   * old cell) are rewritten; untouched cell partitions hard-link. At
   * production scale pick nCells so cells stay bounded (corpus/nCells ≈
-  * constant), the standard IVF sizing — the `annidx` ScaleProbe ladder
+  * constant), the standard IVF sizing — the `annidx` scaling ladder
   * measures search cost flat in corpus under exactly that discipline.
   *
   * `docParts > 0` prunes the touched-vector fetch from the snapshot:

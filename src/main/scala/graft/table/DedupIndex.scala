@@ -146,7 +146,7 @@ final class DedupIndex(spark: SparkSession, root: String, name: String,
     * key is the bare id, and — the part that matters at ×64 corpus
     * scale — every per-batch index rewrite moves `bands`× fewer rows
     * (the per-(id, band) layout measured 15.9 s/maintain at 320k docs,
-    * dominated by rewriting 5.1M skinny rows; see ARCHITECTURE §7i). */
+    * dominated by rewriting 5.1M skinny rows; round 12, ARCHITECTURE.md history). */
   val index: LakeTable = LakeTable(spark, root, s"${name}_index",
     Seq("id"),
     partitionCols = if (idParts > 0) Seq("__ib") else Nil,

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * semi-join — but the SCAN side of that join reads the whole corpus
   * parquet, the last O(corpus) term in an otherwise O(changes)
   * maintenance path (the measured residual slope of the `dedupidxp`
-  * ScaleProbe ladder). Hash-partitioning the corpus table on
+  * scaling ladder). Hash-partitioning the corpus table on
   * `__db = pmod(xxhash64(id), parts)` turns that fetch into a
   * partition-PRUNED read: a batch of b ids touches ≤ min(b, parts)
   * partitions, so the fetch opens only the touched ids' files

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.Graph
+import graft.queries.Graphs
 
 class GraphSpec extends SparkSpec {
   import spark.implicits._
@@ -175,7 +176,7 @@ class GraphSpec extends SparkSpec {
         .sorted
     }.toDF("l_orderkey", "ps")
     def prunedCount(fill: Int): Long =
-      SparkEntry.supportPrunedPairs(sets(fill), 2).count()
+      Graphs.supportPrunedPairs(sets(fill), 2).count()
     def rawCount(fill: Int): Long = { // the explosion the pruning absorbs
       val b = hot.size + fill
       nOrders.toLong * b * (b - 1) / 2
@@ -196,7 +197,7 @@ class GraphSpec extends SparkSpec {
     // nOrders × C(3,3) = nOrders — flat under inflation — while the
     // unpruned expansion would be nOrders × C(3+fill, 3)
     def tripleCandidates(fill: Int): Long =
-      SparkEntry.aprioriTripleCandidates(sets(fill), 2).count()
+      Graphs.aprioriTripleCandidates(sets(fill), 2).count()
     def rawTriples(fill: Int): Long = {
       val b = hot.size.toLong + fill
       nOrders.toLong * b * (b - 1) * (b - 2) / 6
@@ -269,8 +270,8 @@ class GraphSpec extends SparkSpec {
   }
 
   test("kCore: 3 rounds reach the fixpoint on the co-purchase graph") {
-    val edges = SparkEntry.supportPrunedPairs(
-      SparkEntry.copurchaseSets(spark, sf), 2).select("u", "v")
+    val edges = Graphs.supportPrunedPairs(
+      Graphs.copurchaseSets(spark, sf), 2).select("u", "v")
     def run(r: Int) = Graph.kCore(edges, "u", "v", k = 2, rounds = r)
       .orderBy("vertex").collect().toSeq
     val r3 = run(3)

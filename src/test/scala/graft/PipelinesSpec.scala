@@ -48,13 +48,9 @@ class PipelinesSpec extends SparkSpec {
 
   test("the lakehouse family's names are disjoint from SparkEntry's inline " +
       "names (a name in both would be silently overridden by ++)") {
-    // every pair of name sets: the inline maps and each family's
-    import graft.queries.{Corpus, Events, Lakehouse}
-    val sets = Seq(
-      ("inline", SparkEntry.inlineQueries.keySet, SparkEntry.inlineOracleSql.keySet),
-      ("Lakehouse", Lakehouse.queries.keySet, Lakehouse.oracleSql.keySet),
-      ("Corpus", Corpus.queries.keySet, Corpus.oracleSql.keySet),
-      ("Events", Events.queries.keySet, Events.oracleSql.keySet))
+    // every pair of families in SparkEntry's one list
+    val sets = SparkEntry.families.map(f =>
+      (f.getClass.getSimpleName, f.queries.keySet, f.oracleSql.keySet))
     for (Seq((a, qa, oa), (b, qb, ob)) <- sets.combinations(2)) {
       val q = qa intersect qb
       val o = oa intersect ob

@@ -1,15 +1,19 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.queries.Graphs
 
 /** CI-light re-run of one row of the ARCHITECTURE §5 scaling table, so the
   * recorded ×2..×64 measurements can't silently rot as operators change:
-  * under ScaleProbe's shingle-disjoint inflation the TRUE near-dup pair
+  * under the shingle-disjoint inflation below the TRUE near-dup pair
   * count provably scales ×n, and this spec asserts the LSH pipeline
   * recovers exactly that at ×8, inside a generously sub-quadratic time
-  * budget. Uses the identical `ScaleProbe.inflate` the manual probe runs.
+  * budget. The inflations live in the companion object.
   */
 class ScaleProbeSpec extends SparkSpec {
+  import ScaleProbeSpec._
   import spark.implicits._
 
   test("×8 shingle-disjoint inflation: pairs scale exactly ×8, sub-quadratic time") {
@@ -17,7 +21,7 @@ class ScaleProbeSpec extends SparkSpec {
     val maxId = docs.agg(max("doc_id")).head().getLong(0) + 1
 
     def pairsAt(n: Int): (Long, Double) = {
-      val d = ScaleProbe.inflate(docs, maxId, n).localCheckpoint(true)
+      val d = inflate(docs, maxId, n).localCheckpoint(true)
       val t0 = System.nanoTime()
       val c = graft.operators.Dedup.minhashLshPairs(
         d, "doc_id", "text", shingleN = 3, k = 64, bands = 16,
@@ -55,7 +59,7 @@ class ScaleProbeSpec extends SparkSpec {
     val corpus = (0L until 30L).map(i =>
       (i, (0 until 30).map(j => s"u${i}t$j").mkString(" ")))
       .toDF("doc_id", "text")
-    val d = ScaleProbe.densify(corpus, 1000L, every = 3, copies = 4)
+    val d = densify(corpus, 1000L, every = 3, copies = 4)
       .localCheckpoint(true)
     assert(d.count() == 30 + 10 * 4)
     val sh = d.select(col("doc_id"),
@@ -76,7 +80,7 @@ class ScaleProbeSpec extends SparkSpec {
     assert(lsh == 100, s"LSH recovered $lsh of 100 dense pairs")
   }
 
-  // CI-light pin for the profiling/rolling-sketch ScaleProbe rows: the
+  // CI-light pin for the profiling/rolling-sketch scaling-table rows: the
   // shape-preserving events inflation makes exact expectations provable,
   // so a probe row can't rot into measuring a different computation
   test("×8 events inflation: skew profile and rolling KMV scale exactly") {
@@ -87,7 +91,7 @@ class ScaleProbeSpec extends SparkSpec {
     val maxE = ev.agg(max("event_id")).head().getLong(0) + 1
     val maxU = ev.agg(max("user_id")).head().getLong(0) + 1
     def at(n: Int) =
-      ScaleProbe.inflateEvents(ev, maxE, maxU, n).localCheckpoint(true)
+      inflateEvents(ev, maxE, maxU, n).localCheckpoint(true)
     val b = at(1)
     val i8 = at(8)
 
@@ -160,7 +164,7 @@ class ScaleProbeSpec extends SparkSpec {
     }
   }
 
-  // CI-light pin for the behavioral/basket ScaleProbe rows: user-shifted
+  // CI-light pin for the behavioral/basket scaling-table rows: user-shifted
   // events replicas have identical per-user streams, so every 3-step
   // pattern's support scales exactly ×n and attribution credit exactly
   // ×n (modulo the documented 4-dp rounding of the ×1 total); part/order
@@ -172,7 +176,7 @@ class ScaleProbeSpec extends SparkSpec {
       .select("event_id", "ts", "user_id", "event_type", "value")
     val maxE = ev.agg(max("event_id")).head().getLong(0) + 1
     val maxU = ev.agg(max("user_id")).head().getLong(0) + 1
-    val ev4 = ScaleProbe.inflateEvents(ev, maxE, maxU, 4).localCheckpoint(true)
+    val ev4 = inflateEvents(ev, maxE, maxU, 4).localCheckpoint(true)
 
     def seq(d: org.apache.spark.sql.DataFrame) =
       EventOps.sequenceTripleSupport(d, "user_id", "event_type", "ts")
@@ -205,7 +209,7 @@ class ScaleProbeSpec extends SparkSpec {
       val sets = d.groupBy("l_orderkey")
         .agg(array_sort(collect_set(col("l_partkey").cast("string")))
           .as("ps"))
-      SparkEntry.supportPrunedPairs(sets, 2).count()
+      Graphs.supportPrunedPairs(sets, 2).count()
     }
     val p1 = pairs(li)
     val li4 = (0 until 4).map { r =>
@@ -217,7 +221,7 @@ class ScaleProbeSpec extends SparkSpec {
       "co-purchase pair count must scale exactly ×4")
   }
 
-  // CI-light pin for the stats/hamming ScaleProbe families: bootstrap
+  // CI-light pin for the stats/hamming scaling-table families: bootstrap
   // output stays |types| rows under any inflation (the shuffle-volume
   // claim), and XOR-masked fingerprint replicas reproduce the pair set
   // exactly ×4 (XOR by a constant preserves within-replica distances;
@@ -233,7 +237,7 @@ class ScaleProbeSpec extends SparkSpec {
       Stats.poissonBootstrap(d, Seq("event_type"), "event_id", "value",
         replicates = 8).count()
     assert(ciRows(ev) == types)
-    assert(ciRows(ScaleProbe.inflateEvents(ev, maxE, maxU, 4)
+    assert(ciRows(inflateEvents(ev, maxE, maxU, 4)
       .localCheckpoint(true)) == types)
 
     val base = ev.select(col("event_id").as("id"))
@@ -295,7 +299,7 @@ class ScaleProbeSpec extends SparkSpec {
     val maxE = ev.agg(max("event_id")).head().getLong(0) + 1
     val maxU = ev.agg(max("user_id")).head().getLong(0) + 1
     def gains(n: Int) = Stats.gainsTable(
-      ScaleProbe.inflateEvents(ev, maxE, maxU, n).select(
+      inflateEvents(ev, maxE, maxU, n).select(
         col("value").as("score"),
         (floor(col("value") * 100) % 2 === 0).cast("long").as("label")),
       "score", "label")
@@ -312,7 +316,7 @@ class ScaleProbeSpec extends SparkSpec {
     val docs = Tables.load(spark, sf, "documents").select("doc_id", "text", "lang")
     val maxId = docs.agg(max("doc_id")).head().getLong(0) + 1
     def spansAt(n: Int): Long = {
-      val d = ScaleProbe.inflate(docs, maxId, n).localCheckpoint(true)
+      val d = inflate(docs, maxId, n).localCheckpoint(true)
       graft.operators.Dedup.duplicateSpans(d, "doc_id", "text", minLen = 30).count()
     }
     val base = spansAt(1)
@@ -325,7 +329,7 @@ class ScaleProbeSpec extends SparkSpec {
     assert(spansAt(4) == base + 3 * r1,
       s"spans must grow by exactly one replica's count per factor")
     // and the replica span SETS are identical up to the id shift
-    val d4 = ScaleProbe.inflate(docs, maxId, 4).localCheckpoint(true)
+    val d4 = inflate(docs, maxId, 4).localCheckpoint(true)
     val byRep = graft.operators.Dedup
       .duplicateSpans(d4, "doc_id", "text", minLen = 30)
       .withColumn("rep", floor(col("doc_id") / maxId).cast("long"))
@@ -534,7 +538,7 @@ class ScaleProbeSpec extends SparkSpec {
     val docs = Tables.load(spark, sf, "documents").select("doc_id", "text")
     val maxId = docs.agg(max("doc_id")).head().getLong(0) + 1
     def run(n: Int): (Long, Set[(Long, Long)]) = {
-      val base = ScaleProbe.inflate(
+      val base = inflate(
         Tables.load(spark, sf, "documents").select("doc_id", "text", "lang"),
         maxId, n).select("doc_id", "text")
       val root = s"$tablesRoot/probe_spec_didx"
@@ -602,4 +606,60 @@ class ScaleProbeSpec extends SparkSpec {
       s"compacted net must be ONE pre/post pair per hot key regardless " +
         s"of span length: $net2/$net4 for $k2 keys")
   }
+}
+
+/** The corpus and events inflations the scaling pins run. */
+object ScaleProbeSpec {
+
+  /** Shingle-disjoint ×n corpus inflation (see object doc): replica r
+    * shifts ids past `maxId` and prefixes every token with `r<r>`, so
+    * replicas share no shingles while each reproduces the original's
+    * internal dup structure — true near-dup pairs scale exactly ×n. */
+  def inflate(docs: DataFrame, maxId: Long, n: Int): DataFrame =
+    (0 until n).map { r =>
+      if (r == 0) docs
+      else docs.select(
+        (col("doc_id") + lit(r * maxId)).as("doc_id"),
+        // prefix EVERY token: replicas share no shingles with each
+        // other or the original, so near-dup structure is per-replica
+        regexp_replace(col("text"), "([A-Za-z0-9]+)", s"r$r$$1").as("text"),
+        col("lang"))
+    }.reduce(_ unionByName _)
+
+  /** Near-dup DENSIFIED corpus for the dense-pairs probe: every doc with
+    * `doc_id % every == 0` gains `copies` near-duplicate variants (ids
+    * shifted past `maxId` per variant, text prefixed with a 3-token
+    * variant-distinct filler — a long doc keeps shingle-Jaccard well
+    * above threshold), so the true pair volume is ≈ C(copies+1, 2)/every
+    * pairs per corpus row ON TOP of the corpus's own near-dup structure.
+    * This is the regime where the pairs table rivals the postings
+    * sidecar in stored volume — what the symmetric `__ab` layout's 2×
+    * row cost is paid in — and density is uniform across replicas, so
+    * pairs still scale exactly ×n under [[inflate]]. */
+  def densify(docs: DataFrame, maxId: Long, every: Int,
+      copies: Int): DataFrame =
+    docs.select("doc_id", "text").unionByName(
+      (1 to copies).map { r =>
+        docs.filter(col("doc_id") % every === 0)
+          .select((col("doc_id") + lit(r * maxId)).as("doc_id"),
+            concat(lit(s"dv$r vq$r zz$r "), col("text")).as("text"))
+      }.reduce(_ unionByName _))
+
+  /** Events inflation for the profiling / rolling-sketch probes: replica
+    * r shifts event_id and user_id past their max while keeping
+    * timestamps — each replica reproduces the original key-frequency
+    * histogram over fresh keys (n_keys/n_rows scale exactly ×n,
+    * max/avg frequency invariant) and per-day distinct users scale
+    * exactly ×n, which is what makes the measured slope and the
+    * exactness pins in the spec interpretable. */
+  def inflateEvents(ev: DataFrame, maxEvent: Long, maxUser: Long,
+      n: Int): DataFrame =
+    (0 until n).map { r =>
+      if (r == 0) ev
+      else ev.select(
+        (col("event_id") + lit(r * maxEvent)).as("event_id"),
+        col("ts"),
+        (col("user_id") + lit(r * maxUser)).as("user_id"),
+        col("event_type"), col("value"))
+    }.reduce(_ unionByName _)
 }
