@@ -96,23 +96,9 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = DevSession.start()
     spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000).selectExpr("sum(id)").collect() // JVM/session warmup outside timings
-    // Parquet-path warmup, also outside timings: file listing, footer
-    // decode, codec + datasource class init otherwise land entirely on
-    // whichever query the Map happens to order first (~2 s of noise
-    // attributed to one arbitrary query per run).
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings").foreach { t =>
-      try Tables.load(spark, sfDir, t).limit(1).collect()
-      catch { case e: Throwable => System.err.println(s"[bench] warmup $t: $e") }
-    }
+    DevSession.warmUp(spark, sfDir)
     // Write-path warmup, same rationale: the noop sink, the parquet
     // write committer/codec classes and the first whole-stage-codegen
     // shuffle otherwise initialize inside whichever query sorts first

@@ -5,7 +5,6 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Dev tool: run named queries and attribute per-JOB wall time to the
@@ -33,20 +32,9 @@ object JobProfileDetail {
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val names = if (args.length > 1) args(1).split(",").map(_.trim).toSeq
       else Seq("q_mv_avg")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = DevSession.start()
     spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000).selectExpr("sum(id)").collect() // session warmup
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings").foreach { t =>
-      try Tables.load(spark, sfDir, t).limit(1).collect()
-      catch { case _: Throwable => () }
-    }
+    DevSession.warmUp(spark, sfDir)
 
     val starts = TrieMap.empty[Int, (Long, String)]
     val execSites = TrieMap.empty[String, String]

@@ -15,6 +15,19 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** A fresh temp dir (`<prefix><random>` under java.io.tmpdir) whose
+    * tree is deleted when this JVM exits: two processes writing scratch
+    * files for the same scale factor (a test run and a Verify run) never
+    * share one and delete or overwrite each other's files mid-read. */
+  def scratchRoot(prefix: String): java.nio.file.Path = {
+    import java.nio.file.{Files, Path}
+    val d = Files.createTempDirectory(prefix)
+    sys.addShutdownHook(scala.util.Try(Files.walk(d)
+      .sorted(java.util.Comparator.reverseOrder[Path]())
+      .forEach(p => Files.delete(p))))
+    d
+  }
+
   /** Normalize `events.ts` across driver testdata generations to ONE
     * type — session-zone TimestampType — so every downstream operator
     * (batch and streaming; this is a pure projection, streaming-safe)

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec, ShuffledHashJoinExec, SortMergeJoinExec}
@@ -137,20 +137,16 @@ object PlanLint {
     lint(df).filter(_.severity == "error")
 
   /** Run `action` while capturing EVERY query execution it triggers on
-    * the session, then lint each captured physical plan — the post-hoc
-    * gate for operators whose work happens eagerly (lake DML, iterative
-    * loops, foreachBatch sinks): their interesting plans are the jobs
-    * they run, not the frame they return, so the lazy `lint(df)` entry
-    * point never sees them.
+    * the session: (action result, (funcName, execution) in completion
+    * order). The plans of operators whose work happens eagerly (lake
+    * DML, iterative loops, foreachBatch sinks) are the jobs they run,
+    * not the frame they return, so a frame's own plan never shows them.
     *
-    * Returns (action result, findings across all captured executions).
     * QueryExecutionListener delivery is asynchronous; the listener bus is
     * drained BEFORE registering (so an event still queued from an earlier
     * action is not misattributed to this one) and again before reading
     * the capture. Failed executions are skipped (they surface through the
-    * action itself), and a plan that cannot be linted post-hoc is
-    * recorded as an `unlintable` info finding rather than crashing the
-    * audit.
+    * action itself).
     *
     * The capture is session-global: any execution COMPLETING on this
     * session while `action` runs is attributed to it. Callers hold the
@@ -158,19 +154,17 @@ object PlanLint {
     * share one session and run sequentially, and every stream drain
     * completes inside its builder before returning — so the attribution
     * is exact here; a concurrently-shared session would need per-
-    * execution tagging before trusting this gate. */
-  def lintExecuted[A](spark: org.apache.spark.sql.SparkSession)
-      (action: => A): (A, Seq[Finding]) = {
+    * execution tagging before trusting the capture. */
+  def captureExecutions[A](spark: org.apache.spark.sql.SparkSession)
+      (action: => A): (A, Seq[(String, QueryExecution)]) = {
     org.apache.spark.GraftListenerBridge.drainListenerBus(
       spark.sparkContext, 30000)
     val captured =
-      new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.execution.QueryExecution]()
+      new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = { captured.add(qe); () }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = { captured.add((funcName, qe)); () }
+      override def onFailure(funcName: String, qe: QueryExecution,
           exception: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
@@ -181,16 +175,27 @@ object PlanLint {
           spark.sparkContext, 30000)
         a
       } finally spark.listenerManager.unregister(listener)
-    val findings = scala.collection.mutable.ArrayBuffer.empty[Finding]
-    captured.forEach { qe =>
+    (result, captured.toArray(Array.empty[(String, QueryExecution)]).toSeq)
+  }
+
+  /** [[captureExecutions]], then lint each captured physical plan — the
+    * post-hoc gate for operators whose work happens eagerly, which the
+    * lazy `lint(df)` entry point never sees. Returns (action result,
+    * findings across all captured executions); a plan that cannot be
+    * linted post-hoc is recorded as an `unlintable` info finding rather
+    * than crashing the audit. */
+  def lintExecuted[A](spark: org.apache.spark.sql.SparkSession)
+      (action: => A): (A, Seq[Finding]) = {
+    val (result, captured) = captureExecutions(spark)(action)
+    val findings = captured.flatMap { case (_, qe) =>
       scala.util.Try(lintPlan(qe.executedPlan, spark)) match {
-        case scala.util.Success(fs) => findings ++= fs
+        case scala.util.Success(fs) => fs
         case scala.util.Failure(e) =>
-          findings += Finding("unlintable", "info",
-            s"captured execution could not be linted post-hoc: $e")
+          Seq(Finding("unlintable", "info",
+            s"captured execution could not be linted post-hoc: $e"))
       }
     }
-    (result, findings.toSeq)
+    (result, findings)
   }
 
   // AQE wraps the real plan; subqueries hang off expressions — walk both.

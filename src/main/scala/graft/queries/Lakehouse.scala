@@ -44,14 +44,7 @@ object Lakehouse extends QueryFamily {
   private def tableRoot(dir: String): String =
     tablesTmp.resolve(dir.replaceAll("[^A-Za-z0-9]", "_")).toString
 
-  private lazy val tablesTmp: java.nio.file.Path = {
-    import java.nio.file.{Files, Path}
-    val d = Files.createTempDirectory("graft_tables")
-    sys.addShutdownHook(scala.util.Try(Files.walk(d)
-      .sorted(java.util.Comparator.reverseOrder[Path]())
-      .forEach(p => Files.delete(p))))
-    d
-  }
+  private lazy val tablesTmp = Tables.scratchRoot("graft_tables")
 
   // ---- The orders churn most of this family replays ----
   //

@@ -35,6 +35,14 @@ import org.apache.spark.sql.functions._
   * the worst case scans just the threatened groups' partitions, never
   * the table.
   *
+  * One core per kind of view: the self-maintainable maintainers (sum,
+  * moments, join sum) end in [[mergeDelta]]; the four extremum
+  * maintainers (min/max, stats, full stats, join min/max) end in
+  * [[maintainExtrema]], which alone decides per batch between the
+  * zero-threat commit and the rescan of the threatened groups. A
+  * maintainer passes only its delta frame, its view layout, where its
+  * rescan reads from, and what else rides its commit.
+  *
   * Sync bookkeeping: both maintainers RETURN the base version they
   * synced the view to — record it and pass it as the next call's
   * `sinceVersion`. Re-deriving it from `availableVersions.min` is a
@@ -130,6 +138,186 @@ object IncrementalView {
   private def addSumSq(v: Column, d: Column): Column =
     (narrow37_8(v) + narrow37_8(d)).cast("decimal(38,8)")
 
+  // ---- the delta and merge columns, spelled once ----
+  //
+  // Every maintainer LEFT-joins its per-group delta (`d_*` columns) to
+  // the stored rows it reads back under the `v_*` names of [[priorName]]
+  // and merges with the columns below; a group new to the view reads
+  // NULL `v_*` columns, which count as zero. A delta group whose changed
+  // rows all carry NULL values has d_sum NULL; coalesce so it can't null
+  // out the stored sum.
+  private val mergedN: Column = coalesce(col("v_n"), lit(0L)) + col("d_n")
+  private val mergedSum: Column =
+    (coalesce(col("v_sum"), zero30_4) + coalesce(col("d_sum"), zero30_4))
+      .cast("decimal(30,4)")
+  private val mergedSq: Column = addSumSq(col("v_sq"), col("d_sq"))
+  private val countSum: Seq[(String, Column)] =
+    Seq("n" -> mergedN, "sum_value" -> mergedSum)
+  private val momentState: Seq[(String, Column)] =
+    countSum :+ ("sum_sq" -> mergedSq)
+
+  private val priorName = Map("n" -> "v_n", "n_nonnull" -> "v_nn",
+    "sum_value" -> "v_sum", "min_value" -> "v_min", "max_value" -> "v_max",
+    "sum_sq" -> "v_sq", "n_distinct" -> "v_d")
+
+  /** The stored view columns a merge reads, renamed to their `v_*` names. */
+  private def priorState(view: LakeTable, keys: Seq[Column],
+      stored: Seq[String]): DataFrame =
+    view.read.select(keys ++ stored.map(c => col(c).as(priorName(c))): _*)
+
+  private def aggBy(df: DataFrame, keys: Seq[Column],
+      aggs: Seq[Column]): DataFrame =
+    df.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
+
+  private def signOf(ins: Column): Column = when(ins, 1L).otherwise(-1L)
+
+  /** Signed (d_n, d_sum, d_sq) of change rows whose `ins` marks an
+    * addition. The squared term is signed by NEGATION, never by
+    * multiplication: `v*v` is decimal(37,8), and multiplying THAT by a
+    * LONG sign overflows precision past 38, where Spark's precision-loss
+    * rule truncates to decimal(38,6) — silently destroying sub-1e-6
+    * squares (0.0003² → 0.000000). Negation keeps decimal(37,8) exactly,
+    * matching the create path's sum(vDec*vDec). Masked for 2-dp money;
+    * fatal for any value column with >3 decimal digits (confirmed on
+    * Spark 4.1.2; pinned by IncrementalViewSpec's 4-dp fixture). */
+  private def signedMoments(ins: Column, v: Column): Seq[Column] = Seq(
+    sum(signOf(ins)).as("d_n"),
+    sum(when(ins, v).otherwise(-v)).as("d_sum"),
+    sum(when(ins, v * v).otherwise(-(v * v))).as("d_sq"))
+
+  /** Net signed weight `w` per (group, value `v`): all-cancelled values
+    * (w = 0) drop out entirely. The change feed is a per-version EVENT
+    * LOG, not a net diff, so extrema must read these — a value inserted
+    * then deleted inside the span must never tighten an extremum, and
+    * only values whose multiplicity strictly decreased threaten one. */
+  private def netWeights(rows: DataFrame, keys: Seq[Column], v: Column,
+      w: Column): DataFrame =
+    rows.groupBy(keys :+ v: _*).agg(sum(w).as("w")).filter(col("w") =!= 0L)
+
+  /** Insert- and delete-side extrema over net weights (NULL values never
+    * enter min/max: Spark min/max and least/greatest skip nulls). */
+  private val netExtrema: Seq[Column] = Seq(
+    min(when(col("w") > 0, col("__v"))).as("ins_min"),
+    max(when(col("w") > 0, col("__v"))).as("ins_max"),
+    min(when(col("w") < 0, col("__v"))).as("del_min"),
+    max(when(col("w") < 0, col("__v"))).as("del_max"))
+
+  /** (d_n, d_sum, ins_*, del_*) per group from net weights. Signed
+    * count/sum need no netting (canceling events cancel arithmetically),
+    * but they ride the netted frame anyway: one pass either way. */
+  private def weightedDelta(net: DataFrame, keys: Seq[Column]): DataFrame =
+    aggBy(net, keys, Seq(sum(col("w")).as("d_n"),
+      sum(col("__v") * col("w")).as("d_sum")) ++ netExtrema)
+
+  // ---- the extremum core (minMax, stats, fullStats, joinMinMax) ----
+  //
+  // An inserted value can only tighten an extremum, but deleting the
+  // current extremum reveals the runner-up, which only a rescan knows.
+  // One routine takes that per-batch decision for all four extremum
+  // maintainers: merge count/sum (and moments) by the delta rule, count
+  // the THREATENED groups on the checkpoint's own materialization, and
+  // either commit straight away (zero threat: no rescan subtree, no
+  // rescan job) or rescan just the threatened groups. Each maintainer
+  // passes only what differs: its delta frame, its view layout, where
+  // a rescan reads from, and what else rides its commit.
+
+  /** An extremum view's layout: the stored columns a merge reads (view
+    * order), the merged columns the gate frame adds ahead of
+    * `__rescan`, and the output row around the min/max selections. */
+  private final case class ExtremaShape(stored: Seq[String],
+      merged: Seq[(String, Column)], row: (Column, Column) => Seq[Column])
+
+  private val minMaxShape = ExtremaShape(
+    Seq("n", "sum_value", "min_value", "max_value"), countSum,
+    (mn, mx) => Seq(col("n"), col("sum_value"), mn, mx))
+
+  private val statsShape = ExtremaShape(
+    Seq("n", "sum_value", "min_value", "max_value", "sum_sq"), momentState,
+    (mn, mx) => Seq(col("n"), col("sum_value"), mn, mx, col("sum_sq")))
+
+  /** Where threatened groups' extrema come back from — `extrema` maps
+    * (threatened keys, their size hint) to (keys…, r_min, r_max) — and
+    * which joined rows take them (`taken`); every other row keeps the
+    * delta rule's least/greatest. */
+  private final case class Rescan(
+      extrema: (DataFrame, DataFrame => DataFrame) => DataFrame,
+      taken: Column)
+
+  private def extremaOf(rows: DataFrame, keys: Seq[Column],
+      v: Column): DataFrame =
+    rows.groupBy(keys: _*).agg(min(v).as("r_min"), max(v).as("r_max"))
+
+  /** A base rescan: the threatened groups' CURRENT base rows, reduced to
+    * their extrema and marked `__rescanned` so a legitimately-NULL
+    * recomputed extremum (all remaining values null) isn't mistaken for
+    * "not rescanned". Only groups that come back take the rescanned
+    * value — a streaming drain's base snapshot can be AHEAD of its
+    * batch, and a group it no longer holds keeps the delta rule. */
+  private def baseRescan(keys: Seq[Column], v: Column)(
+      rows: (DataFrame, DataFrame => DataFrame) => DataFrame): Rescan =
+    Rescan((threatened, hint) => extremaOf(rows(threatened, hint), keys, v)
+      .withColumn("__rescanned", lit(true)),
+      coalesce(col("__rescanned"), lit(false)))
+
+  /** [[baseRescan]] by one semi-join of the base against the threatened
+    * key set — broadcast while it measures small, so the scan side never
+    * shuffles (degrading to a shuffle semi-join under a delete storm
+    * touching every extremum). */
+  private def semiJoinRescan(baseNow: DataFrame, keyCols: Seq[String],
+      v: Column): Rescan =
+    baseRescan(keyCols.map(col), v)((threatened, hint) =>
+      baseNow.join(hint(threatened), keyCols, "left_semi"))
+
+  /** The extremum core. Left-joins `delta` (d_n, d_sum, ins_*, del_* and
+    * the shape's extra deltas) to the stored rows, adds the shape's
+    * merged columns and the `__rescan` flag, and checkpoints that frame
+    * with the threatened-group count observed on the checkpoint's own
+    * materialization (no probe job). Then one atomic
+    * MERGE-with-DELETE — `staged` pendings commit ahead of it in the same
+    * [[LakeTable.commitFused]], `meta` rides it, and groups whose count
+    * reached zero go in the same commit:
+    *  - zero threat (the common batch): least/greatest of stored and
+    *    inserted extrema for every row — what the rescan branch computes
+    *    when its rescan comes back empty;
+    *  - otherwise: rescan only the threatened groups; the observed count
+    *    decides the broadcast hint of the key set and of the (≤ one row
+    *    per key) rescan result — probing the result itself would execute
+    *    the rescan join twice. */
+  private def maintainExtrema(view: LakeTable, keyCols: Seq[String],
+      delta: DataFrame, shape: ExtremaShape, rescan: Rescan,
+      staged: Seq[LakeTable.Pending], meta: Map[String, String]): Unit = {
+    val keys = keyCols.map(col)
+    // threatened only for a PRE-EXISTING, SURVIVING group where some
+    // net-removed value ties the stored extremum (a consistent view
+    // can't have net deletes beyond it; <=/>= also self-heals drift).
+    // NULL values never participate, so null-row deletes threaten nothing
+    val threatened = col("v_n").isNotNull && mergedN > 0 &&
+      ((col("del_min") <= col("v_min")) || (col("del_max") >= col("v_max")))
+    val (observed, nRescanF) = observedFlagCount(
+      shape.merged.foldLeft(delta.join(priorState(view, keys, shape.stored),
+        keyCols, "left")) { case (df, (c, e)) => df.withColumn(c, e) }
+        .withColumn("__rescan", threatened), "__rescan")
+    val joined = observed.localCheckpoint(true) // rescan-key probe AND merge
+    val nRescan = nRescanF()
+    // least/greatest skip NULLs: no inserts keeps the stored extremum, a
+    // new group takes the insert-side extremum alone
+    val keptMin = least(col("v_min"), col("ins_min"))
+    val keptMax = greatest(col("v_max"), col("ins_max"))
+    def commit(changed: DataFrame): Unit = LakeTable.commitFused(staged :+
+      view.pendingUpsertWithDelete(changed, col("n") <= 0L, meta = meta))
+    if (nRescan == 0L)
+      commit(joined.select(keys ++
+        shape.row(keptMin.as("min_value"), keptMax.as("max_value")): _*))
+    else {
+      val rescanKeys = joined.filter(col("__rescan")).select(keys: _*)
+      val hint = hintFor(nRescan)
+      commit(joined.join(hint(rescan.extrema(rescanKeys, hint)), keyCols, "left")
+        .select(keys ++ shape.row(
+          when(rescan.taken, col("r_min")).otherwise(keptMin).as("min_value"),
+          when(rescan.taken, col("r_max")).otherwise(keptMax).as("max_value")): _*))
+    }
+  }
+
   /** Full (count, exact-decimal-sum) aggregate of `df` — the view's
     * initial state, and the recomputation IVM must stay equal to. */
   def sumView(df: DataFrame, keyCols: Seq[String], valueCol: String): DataFrame =
@@ -166,7 +354,7 @@ object IncrementalView {
 
   /** Apply ONE change-event frame to a stored sum view — the whole
     * [[maintainSumView]] rule (signed per-key deltas, then
-    * [[mergeSumDelta]]), factored out (the [[applyMinMaxDelta]] pattern)
+    * [[mergeDelta]]), factored out (the [[applyMinMaxDelta]] pattern)
     * so the streaming subscribers apply identical semantics per
     * micro-batch with their exactly-once `meta` marker riding the same
     * commit. An append-only stream tags its rows `insert`. */
@@ -177,16 +365,15 @@ object IncrementalView {
     val delta = events.groupBy(keyCols.map(col): _*).agg(
       sum(sign).as("d_n"),
       sum(col(valueCol).cast("decimal(20,4)") * sign).as("d_sum"))
-    mergeSumDelta(view, keyCols, delta, meta)
+    mergeDelta(view, keyCols, delta, countSum, meta)
   }
 
-  /** Apply a (d_n, d_sum) per-group delta frame to a stored sum view:
-    * left join against current rows → ONE atomic MERGE-with-DELETE of
-    * the changed keys (groups whose count reached zero are removed in
-    * the SAME commit as the surviving merges — no second publish, no
-    * window where a zero-count zombie row is the durable state). A
-    * delta group whose changed rows all carry NULL values has d_sum
-    * NULL; coalesce so it can't null out the stored sum.
+  /** Apply a per-group delta frame (d_n, d_sum[, d_sq]) to a stored
+    * self-maintainable view through its `merged` columns: left join
+    * against current rows → ONE atomic MERGE-with-DELETE of the changed
+    * keys (groups whose count reached zero are removed in the SAME
+    * commit as the surviving merges — no second publish, no window where
+    * a zero-count zombie row is the durable state).
     *
     * Known SQL-semantics corner (all single-column sum/moments/minmax
     * maintainers): a surviving group whose non-null values are ALL
@@ -195,16 +382,13 @@ object IncrementalView {
     * from "no values" without a non-null count. [[fullStatsView]]
     * carries that signal (n_distinct) and reports the corner
     * correctly; use it where the distinction matters. */
-  private def mergeSumDelta(view: LakeTable, keyCols: Seq[String],
-      delta: DataFrame, meta: Map[String, String] = Map.empty): Unit = {
-    val cur = view.read.select(
-      keyCols.map(col) :+ col("n").as("v_n") :+
-        col("sum_value").as("v_sum"): _*)
-    val changed = delta.join(cur, keyCols, "left")
-      .select(keyCols.map(col) ++ Seq(
-        (coalesce(col("v_n"), lit(0L)) + col("d_n")).as("n"),
-        (coalesce(col("v_sum"), zero30_4) + coalesce(col("d_sum"), zero30_4))
-          .cast("decimal(30,4)").as("sum_value")): _*)
+  private def mergeDelta(view: LakeTable, keyCols: Seq[String],
+      delta: DataFrame, merged: Seq[(String, Column)],
+      meta: Map[String, String]): Unit = {
+    val keys = keyCols.map(col)
+    val changed = delta
+      .join(priorState(view, keys, merged.map(_._1)), keyCols, "left")
+      .select(keys ++ merged.map { case (c, e) => e.as(c) }: _*)
       .localCheckpoint(true) // referenced twice inside the merge plan
     view.upsertWithDelete(changed, col("n") <= 0L, meta = meta)
   }
@@ -213,18 +397,12 @@ object IncrementalView {
     * delta rule; min/max from insert-side extrema when safe, and a
     * per-group base rescan ONLY where a delete (or update pre-image)
     * removed a value tied with the group's current extremum — the one
-    * case the delta cannot answer. Returns the synced base version.
-    *
-    * The change feed is a per-version EVENT LOG, not a net diff: over
-    * a multi-write span with `changeFeed` on, a value inserted then
-    * deleted (or updated away) appears on BOTH sides. Extrema must
-    * therefore read the NET per-(group, value) signed weights — same
-    * rule as [[maintainJoinMinMaxView]] — so a cancelled value can
-    * never tighten an extremum (insert 200 @v2, delete it @v3 must NOT
-    * report max 200) and only values whose multiplicity strictly
-    * decreased threaten one. Signed count/sum need no netting (the
-    * canceling events cancel arithmetically), but they ride the netted
-    * frame anyway: one pass either way. */
+    * case the delta cannot answer. Extrema read the NET per-(group,
+    * value) weights ([[netWeights]]), the same rule as
+    * [[maintainJoinMinMaxView]]: insert 200 @v2, delete it @v3 must NOT
+    * report max 200. The zero-threat gate, rescan and merge are the
+    * extremum core's ([[maintainExtrema]]). Returns the synced base
+    * version. */
   def maintainMinMaxView(base: LakeTable, view: LakeTable,
       keyCols: Seq[String], valueCol: String, sinceVersion: Int,
       meta: Map[String, String] = Map.empty): Int = {
@@ -240,87 +418,17 @@ object IncrementalView {
     * merge-with-extinction), factored out so the streaming foreachBatch
     * subscriber ([[graft.streaming.Streams.maintainMinMaxViewFromChangeFeed]])
     * applies the IDENTICAL semantics per micro-batch with its
-    * exactly-once `meta` marker riding the same commit. */
+    * exactly-once `meta` marker riding the same commit. NULL values
+    * collapse into one net group per key: they carry the count/sum
+    * contribution but never enter min/max. */
   private[graft] def applyMinMaxDelta(ch: DataFrame, baseNow: DataFrame,
       view: LakeTable, keyCols: Seq[String], valueCol: String,
       meta: Map[String, String] = Map.empty): Unit = {
     val keys = keyCols.map(col)
     val vDec = col(valueCol).cast("decimal(20,4)")
-    // net per (group, value) first; all-cancelled values (w=0) drop out
-    // entirely. NULL values collapse into one group per key — they carry
-    // the count/sum contribution but never enter min/max (Spark min/max
-    // and least/greatest skip nulls).
-    val net = ch.groupBy(keys :+ vDec.as("__v"): _*)
-      .agg(sum(LakeTable.changeSign).as("w"))
-      .filter(col("w") =!= 0L)
-    val delta = net.groupBy(keys: _*).agg(
-      sum(col("w")).as("d_n"),
-      sum(col("__v") * col("w")).as("d_sum"),
-      min(when(col("w") > 0, col("__v"))).as("ins_min"),
-      max(when(col("w") > 0, col("__v"))).as("ins_max"),
-      min(when(col("w") < 0, col("__v"))).as("del_min"),
-      max(when(col("w") < 0, col("__v"))).as("del_max"))
-    val cur = view.read.select(
-      keys :+ col("n").as("v_n") :+ col("sum_value").as("v_sum") :+
-        col("min_value").as("v_min") :+ col("max_value").as("v_max"): _*)
-    val newN = coalesce(col("v_n"), lit(0L)) + col("d_n")
-    // an extremum is threatened only for a PRE-EXISTING, SURVIVING group
-    // where some net-removed value ties the stored extremum (a
-    // consistent view can't have net deletes beyond it; <=/>= also
-    // self-heals drift). NULL values never participate in min/max, so
-    // null-row deletes threaten nothing and the null-vs-null comparison
-    // correctly evaluates to false here.
-    val threatened: Column = col("v_n").isNotNull && newN > 0 &&
-      ((col("del_min") <= col("v_min")) || (col("del_max") >= col("v_max")))
-    // the threatened-group count rides the checkpoint's own
-    // materialization (observedFlagCount) — no separate probe job
-    val (obsJoined, nRescanF) = observedFlagCount(
-      delta.join(cur, keyCols, "left")
-        .withColumn("n", newN)
-        .withColumn("sum_value",
-          (coalesce(col("v_sum"), zero30_4) + coalesce(col("d_sum"), zero30_4))
-            .cast("decimal(30,4)"))
-        .withColumn("__rescan", threatened), "__rescan")
-    val joined = obsJoined
-      .localCheckpoint(true) // computed once: rescan-key probe AND merge
-    val nRescan = nRescanF()
-    // the COMMON batch threatens nothing: skip the rescan subtree
-    // entirely (zero base-scan jobs), taking the otherwise-branch of
-    // the extremum rule for every row — identical output by definition
-    // (an empty rescanned side leaves __rescanned false everywhere)
-    if (nRescan == 0L) {
-      val changed = joined.select(keys ++ Seq(col("n"), col("sum_value"),
-        least(col("v_min"), col("ins_min")).as("min_value"),
-        greatest(col("v_max"), col("ins_max")).as("max_value")): _*)
-      view.upsertWithDelete(changed, col("n") <= 0L, meta = meta)
-      return
-    }
-    // base rescan for threatened groups only — broadcast the key set
-    // while it measures small so the scan side never shuffles
-    // (degrading to a shuffle semi-join under a delete storm touching
-    // every extremum), and mark rescanned rows so a legitimately-NULL
-    // recomputed extremum (all remaining values null) isn't mistaken
-    // for "not rescanned"
-    val rescanKeys = joined.filter(col("__rescan")).select(keys: _*)
-    // the observed count decides the hint for both the key set and the
-    // (≤ one row per key) rescan result — probing `rescanned` itself
-    // would execute the rescan join twice
-    val hint = hintFor(nRescan)
-    val rescanned = baseNow
-      .join(hint(rescanKeys), keyCols, "left_semi")
-      .groupBy(keys: _*)
-      .agg(min(vDec).as("r_min"), max(vDec).as("r_max"))
-      .withColumn("__rescanned", lit(true))
-    // least/greatest skip NULLs (Spark semantics), which is exactly the
-    // delta rule: no inserts => keep the stored extremum; new group =>
-    // insert-side extremum alone
-    val changed = joined.join(hint(rescanned), keyCols, "left")
-      .select(keys ++ Seq(col("n"), col("sum_value"),
-        when(coalesce(col("__rescanned"), lit(false)), col("r_min"))
-          .otherwise(least(col("v_min"), col("ins_min"))).as("min_value"),
-        when(coalesce(col("__rescanned"), lit(false)), col("r_max"))
-          .otherwise(greatest(col("v_max"), col("ins_max"))).as("max_value")): _*)
-    view.upsertWithDelete(changed, col("n") <= 0L, meta = meta)
+    maintainExtrema(view, keyCols,
+      weightedDelta(netWeights(ch, keys, vDec.as("__v"), LakeTable.changeSign), keys),
+      minMaxShape, semiJoinRescan(baseNow, keyCols, vDec), Nil, meta)
   }
 
   // ---- MOMENTS views (self-maintainable variance) ----
@@ -360,35 +468,10 @@ object IncrementalView {
   def maintainMomentsView(base: LakeTable, view: LakeTable,
       keyCols: Seq[String], valueCol: String, sinceVersion: Int): Int = {
     val syncedTo = base.version
-    val ch = base.changesSince(sinceVersion)
-    val isIns = LakeTable.isAddition
-    val vDec = col(valueCol).cast("decimal(18,4)")
-    // sign the SQUARED term by negation, never multiplication: vDec*vDec
-    // is decimal(37,8), and multiplying THAT by a LONG sign overflows
-    // precision past 38, where Spark's precision-loss rule truncates to
-    // decimal(38,6) — silently destroying sub-1e-6 squares (0.0003² →
-    // 0.000000). Negation preserves decimal(37,8) exactly, matching the
-    // create path's sum(vDec*vDec). Masked for 2-dp money; fatal for any
-    // value column with >3 decimal digits (round-9 audit, confirmed
-    // empirically on Spark 4.1.2; pinned by IncrementalViewSpec's 4-dp
-    // fixture).
-    val delta = ch.groupBy(keyCols.map(col): _*).agg(
-      sum(LakeTable.changeSign).as("d_n"),
-      sum(when(isIns, vDec).otherwise(-vDec)).as("d_sum"),
-      sum(when(isIns, vDec * vDec).otherwise(-(vDec * vDec))).as("d_sq"))
-    val cur = view.read.select(
-      keyCols.map(col) :+ col("n").as("v_n") :+
-        col("sum_value").as("v_sum") :+ col("sum_sq").as("v_sq"): _*)
-    // merge addition via the shared guarded (37,8) discipline — see
-    // narrow37_8/addSumSq at the top of this object
-    val changed = delta.join(cur, keyCols, "left")
-      .select(keyCols.map(col) ++ Seq(
-        (coalesce(col("v_n"), lit(0L)) + col("d_n")).as("n"),
-        (coalesce(col("v_sum"), zero30_4) + coalesce(col("d_sum"), zero30_4))
-          .cast("decimal(30,4)").as("sum_value"),
-        addSumSq(col("v_sq"), col("d_sq")).as("sum_sq")): _*)
-      .localCheckpoint(true)
-    view.upsertWithDelete(changed, col("n") <= 0L)
+    val keys = keyCols.map(col)
+    mergeDelta(view, keyCols, aggBy(base.changesSince(sinceVersion), keys,
+      signedMoments(LakeTable.isAddition, col(valueCol).cast("decimal(18,4)"))),
+      momentState, Map.empty)
     syncedTo
   }
 
@@ -449,70 +532,19 @@ object IncrementalView {
       meta: Map[String, String] = Map.empty): Unit = {
     val keys = keyCols.map(col)
     val vDec = col(valueCol).cast("decimal(18,4)")
-    // one feed read, checkpointed, shared by both delta aggregations
+    // one feed read, checkpointed, shared by both delta aggregations; a
+    // group all of whose values cancelled is absent from the extrema
+    // side, and the left join leaves its ins_*/del_* null — no tighten,
+    // no threat
     val ch = events
       .select(keys :+ vDec.as("__v") :+ LakeTable.isAddition.as("__ins"): _*)
       .localCheckpoint(true)
-    val mom = ch.groupBy(keys: _*).agg(
-      sum(when(col("__ins"), 1L).otherwise(-1L)).as("d_n"),
-      sum(when(col("__ins"), col("__v")).otherwise(-col("__v"))).as("d_sum"),
-      sum(when(col("__ins"), col("__v") * col("__v"))
-        .otherwise(-(col("__v") * col("__v")))).as("d_sq"))
-    val net = ch.groupBy(keys :+ col("__v"): _*)
-      .agg(sum(when(col("__ins"), 1L).otherwise(-1L)).as("w"))
-      .filter(col("w") =!= 0L)
-    val ext = net.groupBy(keys: _*).agg(
-      min(when(col("w") > 0, col("__v"))).as("ins_min"),
-      max(when(col("w") > 0, col("__v"))).as("ins_max"),
-      min(when(col("w") < 0, col("__v"))).as("del_min"),
-      max(when(col("w") < 0, col("__v"))).as("del_max"))
-    // all-cancelled groups are absent from ext (w=0 everywhere): the
-    // left join leaves their ins_*/del_* null — no tighten, no threat
-    val delta = mom.join(ext, keyCols, "left")
-    val cur = view.read.select(
-      keys :+ col("n").as("v_n") :+ col("sum_value").as("v_sum") :+
-        col("min_value").as("v_min") :+ col("max_value").as("v_max") :+
-        col("sum_sq").as("v_sq"): _*)
-    val newN = coalesce(col("v_n"), lit(0L)) + col("d_n")
-    val threatened: Column = col("v_n").isNotNull && newN > 0 &&
-      ((col("del_min") <= col("v_min")) || (col("del_max") >= col("v_max")))
-    // threatened-group count observed on the checkpoint's own
-    // materialization; the common zero-threat batch skips the rescan
-    // subtree entirely (same contract as applyMinMaxDelta)
-    val (obsJoined, nRescanF) = observedFlagCount(
-      delta.join(cur, keyCols, "left")
-        .withColumn("n", newN)
-        .withColumn("sum_value",
-          (coalesce(col("v_sum"), zero30_4) + coalesce(col("d_sum"), zero30_4))
-            .cast("decimal(30,4)"))
-        .withColumn("sum_sq", addSumSq(col("v_sq"), col("d_sq")))
-        .withColumn("__rescan", threatened), "__rescan")
-    val joined = obsJoined
-      .localCheckpoint(true) // rescan-key probe AND merge
-    val nRescan = nRescanF()
-    if (nRescan == 0L) {
-      val changed = joined.select(keys ++ Seq(col("n"), col("sum_value"),
-        least(col("v_min"), col("ins_min")).as("min_value"),
-        greatest(col("v_max"), col("ins_max")).as("max_value"),
-        col("sum_sq")): _*)
-      view.upsertWithDelete(changed, col("n") <= 0L, meta = meta)
-      return
-    }
-    val rescanKeys = joined.filter(col("__rescan")).select(keys: _*)
-    val hint = hintFor(nRescan)
-    val rescanned = baseNow
-      .join(hint(rescanKeys), keyCols, "left_semi")
-      .groupBy(keys: _*)
-      .agg(min(vDec).as("r_min"), max(vDec).as("r_max"))
-      .withColumn("__rescanned", lit(true))
-    val changed = joined.join(hint(rescanned), keyCols, "left")
-      .select(keys ++ Seq(col("n"), col("sum_value"),
-        when(coalesce(col("__rescanned"), lit(false)), col("r_min"))
-          .otherwise(least(col("v_min"), col("ins_min"))).as("min_value"),
-        when(coalesce(col("__rescanned"), lit(false)), col("r_max"))
-          .otherwise(greatest(col("v_max"), col("ins_max"))).as("max_value"),
-        col("sum_sq")): _*)
-    view.upsertWithDelete(changed, col("n") <= 0L, meta = meta)
+    val ins = col("__ins")
+    val ext = aggBy(netWeights(ch, keys, col("__v"), signOf(ins)), keys,
+      netExtrema)
+    maintainExtrema(view, keyCols,
+      aggBy(ch, keys, signedMoments(ins, col("__v"))).join(ext, keyCols, "left"),
+      statsShape, semiJoinRescan(baseNow, keyCols, vDec), Nil, meta)
   }
 
   // ---- COUNT DISTINCT views (two-level / support-relation IVM) ----
@@ -627,6 +659,26 @@ object IncrementalView {
       max(vDec).as("max_value"),
       sum(vDec * vDec).cast("decimal(38,8)").as("sum_sq"),
       countDistinct(vDec).as("n_distinct"))
+  }
+
+  /** The [[fullStatsView]] layout for [[maintainExtrema]]. Its sums
+    * follow SQL SUM-over-no-rows semantics: a surviving group whose
+    * non-null values are ALL deleted (only null-valued rows remain) must
+    * report NULL sums, not the delta rule's arithmetic 0 — and
+    * n_distinct = 0 is exactly that signal, for free from the aux. (The
+    * single-column sum/moments maintainers lack the signal and keep 0
+    * in this corner; documented at [[mergeDelta]].) */
+  private val fullStatsShape = {
+    val hasVals = col("n_distinct") > 0L
+    ExtremaShape(Seq("n", "n_nonnull", "sum_value", "min_value",
+      "max_value", "sum_sq", "n_distinct"),
+      Seq("n" -> mergedN,
+        "n_nonnull" -> (coalesce(col("v_nn"), lit(0L)) + coalesce(col("d_nn"), lit(0L))),
+        "sum_value" -> mergedSum, "sum_sq" -> mergedSq,
+        "n_distinct" -> (coalesce(col("v_d"), lit(0L)) + coalesce(col("d_d"), lit(0L)))),
+      (mn, mx) => Seq(col("n"), col("n_nonnull"),
+        when(hasVals, col("sum_value")).as("sum_value"), mn, mx,
+        when(hasVals, col("sum_sq")).as("sum_sq"), col("n_distinct")))
   }
 
   /** Support relation for a [[fullStatsView]]: per-(group, DECIMAL
@@ -777,20 +829,10 @@ object IncrementalView {
     val ch = events
       .select(keys :+ vDec.as("__v") :+ LakeTable.isAddition.as("__ins"): _*)
       .localCheckpoint(true) // one feed read feeds both aggregations
-    // top-level moment deltas over ALL rows (null values count in n;
-    // n_nonnull's delta restricts the same ±1 rule to non-null values)
-    val mom = ch.groupBy(keys: _*).agg(
-      sum(when(col("__ins"), 1L).otherwise(-1L)).as("d_n"),
-      sum(when(col("__v").isNotNull,
-        when(col("__ins"), 1L).otherwise(-1L)).otherwise(0L)).as("d_nn"),
-      sum(when(col("__ins"), col("__v")).otherwise(-col("__v"))).as("d_sum"),
-      sum(when(col("__ins"), col("__v") * col("__v"))
-        .otherwise(-(col("__v") * col("__v")))).as("d_sq"))
+    val ins = col("__ins")
     // netted non-null multiplicity deltas → aux merge + transitions
-    val net = ch.filter(col("__v").isNotNull)
-      .groupBy(keys :+ col("__v"): _*)
-      .agg(sum(when(col("__ins"), 1L).otherwise(-1L)).as("w"))
-      .filter(col("w") =!= 0L)
+    val net = netWeights(ch.filter(col("__v").isNotNull), keys, col("__v"),
+      signOf(ins))
     // bucketed aux: restrict every aux read to the delta's bucket set
     // (collected once, ≤ auxBuckets values) so partition pruning
     // reaches the scan
@@ -832,54 +874,13 @@ object IncrementalView {
         else auxMerge.withColumn("__b", bucketOf(keyCols, auxBuckets)),
         col("cnt") <= 0L, meta = Map(AuxSpanKey -> spanId,
           AuxBucketsKey -> auxBuckets.toString)))
-    val ext = changedAux.groupBy(keys: _*).agg(
-      min(when(col("w") > 0, col("__v"))).as("ins_min"),
-      max(when(col("w") > 0, col("__v"))).as("ins_max"),
-      min(when(col("w") < 0, col("__v"))).as("del_min"),
-      max(when(col("w") < 0, col("__v"))).as("del_max"),
-      sum(col("__tr")).as("d_d"))
-    val delta = mom.join(ext, keyCols, "left")
-    val cur = view.read.select(
-      keys :+ col("n").as("v_n") :+ col("n_nonnull").as("v_nn") :+
-        col("sum_value").as("v_sum") :+
-        col("min_value").as("v_min") :+ col("max_value").as("v_max") :+
-        col("sum_sq").as("v_sq") :+ col("n_distinct").as("v_d"): _*)
-    val newN = coalesce(col("v_n"), lit(0L)) + col("d_n")
-    val threatened: Column = col("v_n").isNotNull && newN > 0 &&
-      ((col("del_min") <= col("v_min")) || (col("del_max") >= col("v_max")))
-    val joined0 = delta.join(cur, keyCols, "left")
-      .withColumn("n", newN)
-      .withColumn("n_nonnull",
-        coalesce(col("v_nn"), lit(0L)) + coalesce(col("d_nn"), lit(0L)))
-      .withColumn("sum_value",
-        (coalesce(col("v_sum"), zero30_4) + coalesce(col("d_sum"), zero30_4))
-          .cast("decimal(30,4)"))
-      .withColumn("sum_sq", addSumSq(col("v_sq"), col("d_sq")))
-      .withColumn("n_distinct",
-        coalesce(col("v_d"), lit(0L)) + coalesce(col("d_d"), lit(0L)))
-      .withColumn("__rescan", threatened)
-    // threatened-group count observed on the checkpoint's own
-    // materialization; the common zero-threat batch skips the whole
-    // aux-rescan subtree (its bucket collect included)
-    val (obsJoined, nRescanF) = observedFlagCount(joined0, "__rescan")
-    val joined = obsJoined
-      .localCheckpoint(true) // rescan-key probe AND merge
-    val nRescan = nRescanF()
-    val hasVals0 = col("n_distinct") > 0L
-    if (nRescan == 0L) {
-      val changed = joined.select(keys ++ Seq(col("n"), col("n_nonnull"),
-        when(hasVals0, col("sum_value")).as("sum_value"),
-        least(col("v_min"), col("ins_min")).as("min_value"),
-        greatest(col("v_max"), col("ins_max")).as("max_value"),
-        when(hasVals0, col("sum_sq")).as("sum_sq"),
-        col("n_distinct")): _*)
-      LakeTable.commitFused(pAux.toSeq :+
-        view.pendingUpsertWithDelete(changed, col("n") <= 0L,
-          meta = meta + (SpanKey -> spanId)))
-      return
-    }
-    val rescanKeys = joined.filter(col("__rescan")).select(keys: _*)
-    val hint = hintFor(nRescan)
+    // top-level moment deltas over ALL rows (null values count in n;
+    // n_nonnull's delta restricts the same ±1 rule to non-null values)
+    val moments = signedMoments(ins, col("__v"))
+    val mom = aggBy(ch, keys, moments.head +:
+      sum(when(col("__v").isNotNull, signOf(ins)).otherwise(0L)).as("d_nn") +:
+      moments.tail)
+    val ext = aggBy(changedAux, keys, netExtrema :+ sum(col("__tr")).as("d_d"))
     // the aux-answered "rescan": the POST-merge aux multiset of the
     // threatened groups (bucket-pruned when the aux is bucketed), never
     // the base. Derived from PRE-commit reads so the view merge can
@@ -887,40 +888,25 @@ object IncrementalView {
     // auxMerge's surviving (cnt > 0) rows — exactly upsertWithDelete's
     // semantics over the (group, __v) merge key. On a replay whose aux
     // merge already landed (auxApplied) the stored slice IS post-merge
-    // and is read as-is, as before.
-    val storedSlice = auxSlice(rescanKeys)
-      .join(hint(rescanKeys), keyCols, "left_semi")
-      .select(keys :+ col("__v"): _*)
-    val postMergeSlice =
-      if (auxApplied) storedSlice
-      else storedSlice
-        .join(changedAux.select(keys :+ col("__v"): _*),
-          keyCols :+ "__v", "left_anti")
-        .unionByName(changedAux.filter(col("cnt") > 0L)
-          .join(hint(rescanKeys), keyCols, "left_semi")
-          .select(keys :+ col("__v"): _*))
-    val rescanned = postMergeSlice
-      .groupBy(keys: _*)
-      .agg(min(col("__v")).as("r_min"), max(col("__v")).as("r_max"))
-    // SQL SUM/aggregate-over-no-rows semantics: a surviving group whose
-    // non-null values are ALL deleted (only null-valued rows remain)
-    // must report NULL sums, not the delta rule's arithmetic 0 — and
-    // n_distinct = 0 is exactly that signal, for free from the aux.
-    // (The single-column sum/moments maintainers lack the signal and
-    // keep 0 in this corner; documented there.)
-    val hasVals = col("n_distinct") > 0L
-    val changed = joined.join(hint(rescanned), keyCols, "left")
-      .select(keys ++ Seq(col("n"), col("n_nonnull"),
-        when(hasVals, col("sum_value")).as("sum_value"),
-        when(col("__rescan"), col("r_min"))
-          .otherwise(least(col("v_min"), col("ins_min"))).as("min_value"),
-        when(col("__rescan"), col("r_max"))
-          .otherwise(greatest(col("v_max"), col("ins_max"))).as("max_value"),
-        when(hasVals, col("sum_sq")).as("sum_sq"),
-        col("n_distinct")): _*)
-    val pView = view.pendingUpsertWithDelete(changed, col("n") <= 0L,
-      meta = meta + (SpanKey -> spanId))
-    LakeTable.commitFused(pAux.toSeq :+ pView)
+    // and is read as-is. The aux is a COMPLETE multiset, so EVERY
+    // threatened group takes its aux extremum: one with no surviving
+    // value lands NULL extrema.
+    val auxRescan = Rescan((threatened, hint) => {
+      val storedSlice = auxSlice(threatened)
+        .join(hint(threatened), keyCols, "left_semi")
+        .select(keys :+ col("__v"): _*)
+      extremaOf(
+        if (auxApplied) storedSlice
+        else storedSlice
+          .join(changedAux.select(keys :+ col("__v"): _*),
+            keyCols :+ "__v", "left_anti")
+          .unionByName(changedAux.filter(col("cnt") > 0L)
+            .join(hint(threatened), keyCols, "left_semi")
+            .select(keys :+ col("__v"): _*)),
+        keys, col("__v"))
+    }, col("__rescan"))
+    maintainExtrema(view, keyCols, mom.join(ext, keyCols, "left"),
+      fullStatsShape, auxRescan, pAux.toSeq, meta + (SpanKey -> spanId))
   }
 
   // ---- JOIN views (two-table delta rule) ----
@@ -1055,7 +1041,7 @@ object IncrementalView {
       // sees) never enter the merge
       .filter(col("d_n") =!= 0L ||
         coalesce(col("d_sum"), zero30_4) =!= zero30_4)
-    mergeSumDelta(view, groupKeys, delta, meta)
+    mergeDelta(view, groupKeys, delta, countSum, meta)
   }
 
   /** [[joinSumView]] extended with per-group min/max of the fact value
@@ -1106,73 +1092,28 @@ object IncrementalView {
       joinKeys: Seq[String], groupKeys: Seq[String], valueCol: String,
       meta: Map[String, String] = Map.empty): Unit = {
     val keys = groupKeys.map(col)
-    val net = rows
-      .groupBy(keys :+ col("__v"): _*)
-      .agg(sum(col("__w")).as("w"))
-      .filter(col("w") =!= 0L)
-    val delta = net.groupBy(keys: _*).agg(
-      sum(col("w")).as("d_n"),
-      sum(col("__v") * col("w")).as("d_sum"),
-      min(when(col("w") > 0, col("__v"))).as("ins_min"),
-      max(when(col("w") > 0, col("__v"))).as("ins_max"),
-      min(when(col("w") < 0, col("__v"))).as("del_min"),
-      max(when(col("w") < 0, col("__v"))).as("del_max"))
-    val cur = view.read.select(
-      keys :+ col("n").as("v_n") :+ col("sum_value").as("v_sum") :+
-        col("min_value").as("v_min") :+ col("max_value").as("v_max"): _*)
-    val newN = coalesce(col("v_n"), lit(0L)) + col("d_n")
-    val threatened: Column = col("v_n").isNotNull && newN > 0 &&
-      ((col("del_min") <= col("v_min")) || (col("del_max") >= col("v_max")))
-    // threatened-group count observed on the checkpoint's own
-    // materialization; the common zero-threat batch skips the rescan
-    // subtree AND the dim slice's measured gate (one count job each)
-    val (obsJoined, nRescanF) = observedFlagCount(
-      delta.join(cur, groupKeys, "left")
-        .withColumn("n", newN)
-        .withColumn("sum_value",
-          (coalesce(col("v_sum"), zero30_4) + coalesce(col("d_sum"), zero30_4))
-            .cast("decimal(30,4)"))
-        .withColumn("__rescan", threatened), "__rescan")
-    val joined = obsJoined
-      .localCheckpoint(true) // rescan-key probe AND merge
-    val nRescan = nRescanF()
-    if (nRescan == 0L) {
-      val changed = joined.select(keys ++ Seq(col("n"), col("sum_value"),
-        least(col("v_min"), col("ins_min")).as("min_value"),
-        greatest(col("v_max"), col("ins_max")).as("max_value")): _*)
-      view.upsertWithDelete(changed, col("n") <= 0L, meta = meta)
-      return
+    // the dim build — full dim when group keys live on the fact, the
+    // threatened groups' slice otherwise (whose cardinality is NOT
+    // bounded by the key count: one threatened segment can hold millions
+    // of dim rows) — gets its own measured gate. A delete storm touching
+    // every extremum degrades every side to a shuffle semi-join instead
+    // of OOMing the driver.
+    val rescan = baseRescan(keys, col(valueCol).cast("decimal(20,4)")) {
+      (threatened, hint) =>
+        val (factProj, dimProj) =
+          joinSides(factNow, dimNow, joinKeys, groupKeys, valueCol)
+        val dimSideKeys = groupKeys.filter(dimProj.contains)
+        val dimR = broadcastIfSmall(
+          if (dimSideKeys.isEmpty) dimNow.select(dimProj.map(col): _*)
+          else dimNow.select(dimProj.map(col): _*).join(
+            hint(threatened.select(dimSideKeys.map(col): _*).distinct()),
+            dimSideKeys, "left_semi"))
+        factNow.select(factProj.map(col): _*)
+          .join(dimR, joinKeys)
+          .join(hint(threatened), groupKeys, "left_semi")
     }
-    val rescanKeys = joined.filter(col("__rescan")).select(keys: _*)
-    val (factProj, dimProj) =
-      joinSides(factNow, dimNow, joinKeys, groupKeys, valueCol)
-    // the observed count decides the hint for the key set and the
-    // (≤ one row per key) rescan result; the dim build — full dim when
-    // group keys live on the fact, threatened-groups slice otherwise
-    // (whose cardinality is NOT bounded by the key count: one
-    // threatened segment can hold millions of dim rows) — gets its own
-    // measured gate. A delete storm touching every extremum degrades
-    // every side to a shuffle semi-join instead of OOMing the driver.
-    val hint = hintFor(nRescan)
-    val dimSideKeys = groupKeys.filter(dimProj.contains)
-    val dimR = broadcastIfSmall(
-      if (dimSideKeys.isEmpty) dimNow.select(dimProj.map(col): _*)
-      else dimNow.select(dimProj.map(col): _*).join(
-        hint(rescanKeys.select(dimSideKeys.map(col): _*).distinct()),
-        dimSideKeys, "left_semi"))
-    val vDec = col(valueCol).cast("decimal(20,4)")
-    val rescanned = factNow.select(factProj.map(col): _*)
-      .join(dimR, joinKeys)
-      .join(hint(rescanKeys), groupKeys, "left_semi")
-      .groupBy(keys: _*)
-      .agg(min(vDec).as("r_min"), max(vDec).as("r_max"))
-      .withColumn("__rescanned", lit(true))
-    val changed = joined.join(hint(rescanned), groupKeys, "left")
-      .select(keys ++ Seq(col("n"), col("sum_value"),
-        when(coalesce(col("__rescanned"), lit(false)), col("r_min"))
-          .otherwise(least(col("v_min"), col("ins_min"))).as("min_value"),
-        when(coalesce(col("__rescanned"), lit(false)), col("r_max"))
-          .otherwise(greatest(col("v_max"), col("ins_max"))).as("max_value")): _*)
-    view.upsertWithDelete(changed, col("n") <= 0L, meta = meta)
+    maintainExtrema(view, groupKeys,
+      weightedDelta(netWeights(rows, keys, col("__v"), col("__w")), keys),
+      minMaxShape, rescan, Nil, meta)
   }
 }

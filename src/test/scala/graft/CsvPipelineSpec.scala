@@ -17,8 +17,7 @@ class CsvPipelineSpec extends SparkSpec {
     assert(rejected.filter(col("o_orderkey").isNull ||
       col("o_custkey").isNull || col("o_orderdate").isNull).count() == 3)
     // and the JSON side sink actually captured them (K4)
-    val sunk = spark.read.json(
-      s"/tmp/graft_csv/${sf.replaceAll("[^A-Za-z0-9]", "_")}/orders-rejected")
+    val sunk = spark.read.json(Pipelines.ordersCsvRejectedDir(sf))
     assert(sunk.count() == 3)
   }
 

@@ -482,23 +482,9 @@ class DedupIndexSpec extends SparkSpec {
     // the corpus parquet
     val corpusBytes = docs.describeDetail.filter(col("is_current"))
       .select("bytes").as[Long].head()
-    val bytes = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null)
-          { bytes.addAndGet(e.taskMetrics.inputMetrics.bytesRead); () }
-    }
-    org.apache.spark.GraftListenerBridge.drainListenerBus(
-      spark.sparkContext, 30000)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      di.fetchDocs(docs.read, "doc_id", ids).collect()
-      org.apache.spark.GraftListenerBridge.drainListenerBus(
-        spark.sparkContext, 30000)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(bytes.get < corpusBytes / 2,
-      s"pruned fetch read ${bytes.get} of a $corpusBytes-byte corpus")
+    val bytes = bytesReadBy { di.fetchDocs(docs.read, "doc_id", ids).collect() }
+    assert(bytes < corpusBytes / 2,
+      s"pruned fetch read $bytes of a $corpusBytes-byte corpus")
 
     // a mismatched-docParts instance must fail LOUDLY before reading
     // anything (the frozen-meta check — the in-plan assert is provably

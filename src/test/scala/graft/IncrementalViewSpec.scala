@@ -301,28 +301,16 @@ class IncrementalViewSpec extends SparkSpec {
     f.delete(col("id") === 8L)
     val factBytes = f.describeDetail.filter(col("is_current"))
       .select("bytes").as[Long].head()
-    val bytes = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null)
-          { bytes.addAndGet(e.taskMetrics.inputMetrics.bytesRead); () }
-    }
-    org.apache.spark.GraftListenerBridge.drainListenerBus(
-      spark.sparkContext, 30000)
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val bytes = bytesReadBy {
       IncrementalView.maintainJoinSumView(f, d, v,
         Seq("ck"), Seq("seg"), "v", f0, d0)
-      org.apache.spark.GraftListenerBridge.drainListenerBus(
-        spark.sparkContext, 30000)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
     // correctness first, then the cost-shape pin
     val got = jvSnapshot(v)
     assert(got == jvRecomp(f, d))
     assert(factBytes > 200000, s"fixture fact too small to discriminate: $factBytes")
-    assert(bytes.get < factBytes / 2,
-      s"quiet-dim maintenance read ${bytes.get} bytes against a " +
+    assert(bytes < factBytes / 2,
+      s"quiet-dim maintenance read $bytes bytes against a " +
         s"$factBytes-byte fact — the fact was scanned")
   }
 
@@ -705,22 +693,10 @@ class IncrementalViewSpec extends SparkSpec {
     base.delete(col("id") === 300001L) // the planted max, fully gone
     val baseBytes = base.describeDetail.filter(col("is_current"))
       .select("bytes").as[Long].head()
-    val bytes = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null)
-          { bytes.addAndGet(e.taskMetrics.inputMetrics.bytesRead); () }
-    }
-    org.apache.spark.GraftListenerBridge.drainListenerBus(
-      spark.sparkContext, 30000)
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val bytes = bytesReadBy {
       IncrementalView.maintainFullStatsView(base, aux, view,
         Seq("k"), "v", v0)
-      org.apache.spark.GraftListenerBridge.drainListenerBus(
-        spark.sparkContext, 30000)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
     def snap(df: org.apache.spark.sql.DataFrame) =
       df.select(col("k"), col("n"), col("sum_value").cast("string"),
           col("min_value").cast("string"), col("max_value").cast("string"),
@@ -733,9 +709,93 @@ class IncrementalViewSpec extends SparkSpec {
     assert(got.find(_._1 == 3L).get._5.startsWith("99."))
     assert(baseBytes > 200000, s"fixture too small to discriminate: $baseBytes")
     // the budget covers feed + (tiny) aux + view reads only
-    assert(bytes.get < baseBytes / 2,
-      s"maintenance read ${bytes.get} bytes against a $baseBytes-byte " +
+    assert(bytes < baseBytes / 2,
+      s"maintenance read $bytes bytes against a $baseBytes-byte " +
         "base — the base was scanned")
+  }
+
+  test("extremum maintainers rescan the base only when a batch threatens " +
+      "an extremum (bytes-read and plan pins on the zero-threat gate)") {
+    val root = s"$tablesRoot/ivm_gate"
+    val dim = LakeTable(spark, root, "gate_dim", Seq("k"))
+    dim.drop()
+    dim.create(Seq((0L, "A"), (1L, "A"), (2L, "B"), (3L, "B")).toDF("k", "seg"))
+    // one row per maintainer: its view key, its initial view of a base,
+    // and its maintain call over (base, view, since)
+    final case class Gate(name: String, viewKey: String,
+        initial: LakeTable => org.apache.spark.sql.DataFrame,
+        maintain: (LakeTable, LakeTable, Int) => Unit)
+    val gates = Seq(
+      Gate("minmax", "k",
+        b => IncrementalView.minMaxView(b.read, Seq("k"), "v"),
+        (b, v, since) => IncrementalView.maintainMinMaxView(b, v,
+          Seq("k"), "v", since)),
+      Gate("stats", "k",
+        b => IncrementalView.statsView(b.read, Seq("k"), "v"),
+        (b, v, since) => IncrementalView.maintainStatsView(b, v,
+          Seq("k"), "v", since)),
+      Gate("joinminmax", "seg",
+        b => IncrementalView.joinMinMaxView(b.read, dim.read, Seq("k"),
+          Seq("seg"), "v"),
+        (b, v, since) => IncrementalView.maintainJoinMinMaxView(b, dim, v,
+          Seq("k"), Seq("seg"), "v", since, dim.version)))
+    // base deliberately LARGE against feed and view, its bytes mostly
+    // the value column (scrambled doubles barely compress), so a rescan
+    // reads most of them; group k = id % 4, segment B = k in (2, 3)
+    val rows = (1L to 60000L).map(i =>
+      (i, i % 4, ((i * 0x9E3779B97F4A7C15L) >>> 34) / 100.0))
+    val maxB = rows.filter(_._2 >= 2L).maxBy(_._3)
+    val k0 = rows.filter(_._2 == 0L).sortBy(_._3)
+    val mid = k0(k0.size / 2)
+    gates.foreach { g =>
+      val base = LakeTable(spark, root, s"gate_${g.name}_base", Seq("id"),
+        changeFeed = true)
+      val view = LakeTable(spark, root, s"gate_${g.name}_view", Seq(g.viewKey))
+      base.drop(); view.drop()
+      base.create(rows.toDF("id", "k", "v"))
+      view.create(g.initial(base))
+      val baseBytes = base.describeDetail.filter(col("is_current"))
+        .select("bytes").as[Long].head()
+      assert(baseBytes > 200000,
+        s"${g.name}: fixture too small to discriminate: $baseBytes")
+      def check(): Unit = {
+        val cols = view.read.columns.toSeq.sorted.map(c => col(c).cast("string"))
+        assert(view.read.select(cols: _*).collect().toSet ==
+          g.initial(base).select(cols: _*).collect().toSet,
+          s"${g.name}: maintained != recompute")
+      }
+      // (bytes read, whether any action planned the rescan join): AQE
+      // drops a scan behind an EMPTY rescan key set at run time, so the
+      // bytes alone cannot tell the gate from a rescan of nothing
+      def maintain(since: Int): (Long, Boolean) = {
+        var bytes = 0L
+        val (_, runs) = graft.plans.PlanLint.captureExecutions(spark) {
+          bytes = bytesReadBy { g.maintain(base, view, since) }
+        }
+        (bytes, runs.exists(_._2.optimizedPlan.toString.contains("r_min")))
+      }
+      // zero threat: an insert and the delete of a median value tie no
+      // stored extremum
+      val v0 = base.version
+      base.upsert(Seq((60001L, 1L, mid._3)).toDF("id", "k", "v"))
+      base.delete(col("id") === mid._1)
+      val (quiet, quietRescan) = maintain(v0)
+      check()
+      assert(!quietRescan, s"${g.name}: a zero-threat batch planned a rescan")
+      assert(quiet < baseBytes / 2,
+        s"${g.name}: a zero-threat batch read $quiet bytes against a " +
+          s"$baseBytes-byte base — the base was rescanned")
+      // threat: deleting segment B's max (its group's max too) rescans
+      // the group and value columns of the base — most of its bytes
+      val v1 = base.version
+      base.delete(col("id") === maxB._1)
+      val (threat, threatRescan) = maintain(v1)
+      check()
+      assert(threatRescan, s"${g.name}: an extremum delete planned no rescan")
+      assert(threat > baseBytes / 2,
+        s"${g.name}: an extremum delete read only $threat bytes of a " +
+          s"$baseBytes-byte base — the threatened group was not rescanned")
+    }
   }
 
   test("min/max extinction + null values never join the extrema") {

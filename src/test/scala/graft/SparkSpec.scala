@@ -29,6 +29,43 @@ trait SparkSpec extends AnyFunSuite {
     case other => other +: other.children.flatMap(physPlanNodes)
   }
 
+  /** Input bytes read by the tasks `action` runs: the listener bus is
+    * drained before the listener goes on and again before it comes off,
+    * so no other action's tasks are counted. The cost-shape pin of an
+    * O(changes) claim compares it against the bytes of the table that
+    * must NOT be scanned.
+    *
+    * Parquet's vectored reads (on by default in parquet 1.16) fetch
+    * column chunks on threads the task's filesystem statistics don't
+    * see, so a full scan would count only its footers (a 60k-row,
+    * 668 kB table scanned whole read as 11 kB). They are switched off
+    * while `action` runs, so the count includes every column chunk. */
+  def bytesReadBy(action: => Any): Long = {
+    val bytes = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          { bytes.addAndGet(e.taskMetrics.inputMetrics.bytesRead); () }
+    }
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    val vectored = "parquet.hadoop.vectored.io.enabled"
+    val was = Option(hadoopConf.get(vectored))
+    org.apache.spark.GraftListenerBridge.drainListenerBus(
+      spark.sparkContext, 30000)
+    hadoopConf.set(vectored, "false")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      action
+      org.apache.spark.GraftListenerBridge.drainListenerBus(
+        spark.sparkContext, 30000)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      was.fold(hadoopConf.unset(vectored))(hadoopConf.set(vectored, _))
+    }
+    bytes.get
+  }
+
   /** Executed FileSourceScanExec nodes of `df` whose scan path contains
     * `pathPart` — materializes the frame first so AQE's final plan (and
     * its metrics) exist. */
@@ -48,14 +85,8 @@ object SparkSpec {
     * deleted at exit: two processes running specs (or a spec run and a
     * Verify run) never share table dirs and delete each other's files
     * mid-read. */
-  lazy val tablesRoot: String = {
-    import java.nio.file.{Files, Path}
-    val d = Files.createTempDirectory("graft_spec_tables")
-    sys.addShutdownHook(scala.util.Try(Files.walk(d)
-      .sorted(java.util.Comparator.reverseOrder[Path]())
-      .forEach(p => Files.delete(p))))
-    d.toString
-  }
+  lazy val tablesRoot: String =
+    Tables.scratchRoot("graft_spec_tables").toString
 
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
